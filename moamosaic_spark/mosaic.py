@@ -8,7 +8,8 @@ Reference phases -> Spark stages:
   analysis (grid/tiles/join/worklist)  -> Catalyst logical plan:
                                           extent agg + tile relation +
                                           cell-keyed/broadcast spatial join
-  domosaic (threads + queue + cache)   -> ONE shuffle into
+  domosaic (threads + queue + cache)   -> ONE shuffle (a partition per
+                                          core) into
                                           groupBy(band, tile).applyInArrow
   stats / pyramids (single pass)       -> emitted by the same kernel
   ordered write                        -> repartitionByRange + sorted sink
@@ -75,7 +76,9 @@ class MosaicConfig:
     # an explicit grid that mismatches the table fall back to the
     # direct path silently — results are identical either way.
     relayout_table: str | None = None
-    relayout_buckets: int = 128
+    # bucket count of a table built by that routing; None -> one per
+    # core, sized like the direct stitch (plans.grid.stitch_partitions)
+    relayout_buckets: int | None = None
 
 
 @dataclass
@@ -567,7 +570,13 @@ def do_mosaic(
                 work_cold.select(*[f.name for f in pm_schema.fields])
             )
 
-    grouped = work.groupBy("band", "tile_row", "tile_col")
+    # the stitch's ONE Exchange, sized to the cluster: a task per core
+    # folds many groups, so the per-task Python set-up is paid
+    # ~defaultParallelism times instead of once per shuffle partition
+    n_parts = gridmod.stitch_partitions(spark, grid, config.blocksize, tile_row_range)
+    grouped = work.repartition(n_parts, "band", "tile_row", "tile_col").groupBy(
+        "band", "tile_row", "tile_col"
+    )
     if config.stitch_salt > 1 and config.merge_policy == "blend":
         from .operators.stitch import make_blend_stitch_fn_arrow
 

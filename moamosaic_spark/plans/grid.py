@@ -22,6 +22,7 @@ from __future__ import annotations
 import math
 from dataclasses import dataclass
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 
@@ -104,6 +105,44 @@ def n_blocks(n: int, blocksize: int) -> int:
         return 0
     bs = blocksize
     return max(1, math.floor((n - bs // 4) / bs) + 1)
+
+
+def stitch_partitions(
+    spark: SparkSession,
+    grid: OutputGrid,
+    blocksize: int,
+    tile_row_range: tuple[int, int] | None = None,
+) -> int:
+    """Partition count of the stitch (the shuffle into the grouped-map
+    kernel, or the bucket count of a relayout table): one partition per
+    core, fewer when there are fewer (band, tile) groups, more when the
+    estimated stitch bytes need them, never more than the groups.
+
+        n = min(groups, max(defaultParallelism,
+                            ceil(stitch bytes / advisoryPartitionSizeInBytes)))
+
+    Every task that reaches the kernel pays a fixed Python-worker
+    set-up before its first group (importlib cache invalidation over
+    the worker's zip path — ~0.3 s per task on 4 cores, against ~5 ms of
+    kernel per 1024² tile), so a task per core, each folding many
+    groups, is the cheapest shape; the bytes term keeps a task's input
+    bounded as the mosaic grows. The stitch bytes are estimated as the
+    output canvas (groups x blocksize² x pixel size): every
+    contributor pixel lands in exactly one group, so the input is that
+    times the mean overlap depth. ``tile_row_range=(lo, hi)`` counts
+    only the tiles of that half-open row range (do_mosaic's restriction).
+    """
+    nb_r, nb_c = n_blocks(grid.nrows, blocksize), n_blocks(grid.ncols, blocksize)
+    if tile_row_range is not None:
+        lo, hi = tile_row_range
+        nb_r = max(0, min(int(hi), nb_r) - max(int(lo), 0))
+    groups = max(1, nb_r * nb_c * grid.n_bands)
+    sc = spark.sparkContext
+    advisory = sc._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+        spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
+    )
+    est_bytes = groups * blocksize * blocksize * np.dtype(grid.dtype).itemsize
+    return min(groups, max(sc.defaultParallelism, math.ceil(est_bytes / advisory)))
 
 
 def block_edges(n: int, blocksize: int) -> list[tuple[int, int]]:

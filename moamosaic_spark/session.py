@@ -13,6 +13,7 @@ coalescing.
 from __future__ import annotations
 
 import tempfile
+from pathlib import Path
 
 from pyspark.sql import SparkSession
 
@@ -39,20 +40,42 @@ def ensure_workers_can_import(spark: SparkSession) -> None:
     workers' PYTHONPATH (e.g. a driver harness importing by file path)."""
     if getattr(spark, "_moa_pyfiles_added", False):
         return
-    import zipfile
-    from pathlib import Path
-
     pkg_dir = Path(__file__).resolve().parent
-    zip_path = Path(tempfile.gettempdir()) / "moamosaic_spark_pkg.zip"
-    src_mtime = max(p.stat().st_mtime for p in pkg_dir.rglob("*.py"))
-    if not zip_path.exists() or zip_path.stat().st_mtime < src_mtime:
-        tmp = zip_path.with_suffix(".tmp.zip")
-        with zipfile.ZipFile(tmp, "w") as z:
-            for p in sorted(pkg_dir.rglob("*.py")):
-                z.write(p, f"{pkg_dir.name}/{p.relative_to(pkg_dir)}")
-        tmp.replace(zip_path)
+    zip_path = package_zip(pkg_dir, Path(tempfile.gettempdir()))
     spark.sparkContext.addPyFile(str(zip_path))
     spark._moa_pyfiles_added = True
+
+
+def package_zip(pkg_dir: Path, out_dir: Path) -> Path:
+    """Zip the ``*.py`` sources of ``pkg_dir`` into ``out_dir``, named by
+    a hash of the package's path and contents, and return its path.
+
+    The name ties the zip to exactly one checkout at exactly one state:
+    a zip left in a shared temp dir by another checkout (or by an older
+    state of this one) can never be shipped in its place. The zip is
+    written under a temp name unique to this process, then renamed, so
+    concurrent writers never see each other's partial file."""
+    import hashlib
+    import os
+    import zipfile
+
+    sources = sorted(pkg_dir.rglob("*.py"))
+    h = hashlib.sha256(str(pkg_dir).encode())
+    for p in sources:
+        h.update(b"\0" + str(p.relative_to(pkg_dir)).encode() + b"\0")
+        h.update(p.read_bytes())
+    zip_path = out_dir / f"{pkg_dir.name}_pkg-{h.hexdigest()[:16]}.zip"
+    if not zip_path.exists():
+        fd, tmp = tempfile.mkstemp(prefix=zip_path.stem, suffix=".tmp", dir=out_dir)
+        try:
+            with os.fdopen(fd, "wb") as f, zipfile.ZipFile(f, "w") as z:
+                for p in sources:
+                    z.write(p, f"{pkg_dir.name}/{p.relative_to(pkg_dir)}")
+            os.replace(tmp, zip_path)
+        except BaseException:
+            os.unlink(tmp)
+            raise
+    return zip_path
 
 
 def get_spark(

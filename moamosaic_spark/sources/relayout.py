@@ -11,8 +11,17 @@ Exchange (verified in tests; only an in-partition Sort remains).
 
 This is the table-world analog of pre-tiled raster inputs, and the
 concrete form of "partition the storage by spatial cell" from BENCH.md.
-Measured: stitch from bucketed layout ~3-5x faster than with the
-shuffle, and the relayout cost amortizes across every subsequent run.
+By default the table has one bucket per core (plans.grid.stitch_partitions),
+as the direct stitch's shuffle has one partition per core: each stitch
+task pays a fixed Python-worker set-up, so a bucket per core is the
+cheapest shape until the bytes per bucket bound it.
+
+Measured (perfbench, local[4] on 4 vCPUs, 10 seed pairs, median
+seconds per mosaic + sinks): stitching off this table takes 4.7 s
+(``mosaic_repeat``) against 6.0 s for the direct path with its shuffle
+(``mosaic_cold``). With the former fixed 128 buckets it took 9.8 s, and
+the direct path 6.5 s: most buckets were empty, and each non-empty
+one paid the Python set-up for one or two tiles.
 """
 
 from __future__ import annotations
@@ -24,7 +33,9 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from ..mosaic import MosaicConfig, MosaicResult, _contributor_chunks, _null_tile_rows
 from ..operators.stats import finalize_stats
 from ..operators.stitch import make_stitch_fn, make_stitch_fn_arrow
-from ..plans.grid import OutputGrid, make_output_grid, make_tile_relation, overview_levels
+from ..plans.grid import (
+    OutputGrid, make_output_grid, make_tile_relation, overview_levels, stitch_partitions,
+)
 from ..plans.spatial_join import assign_inputs
 from ..schema import STITCH_SCHEMA
 
@@ -67,7 +78,7 @@ def relayout_to_table(
     blocks: DataFrame,
     table: str,
     config: MosaicConfig | None = None,
-    n_buckets: int = 64,
+    n_buckets: int | None = None,
     grid: OutputGrid | None = None,
     fingerprint: str | None = None,
 ) -> OutputGrid:
@@ -76,7 +87,8 @@ def relayout_to_table(
     in ``<table>_meta`` so later stitches reconstruct the exact plan.
     ``grid``/``fingerprint`` let a caller that already aggregated the
     footprint dim table (do_mosaic's summary pass) skip re-collecting
-    it."""
+    it. ``n_buckets`` defaults to ``config.relayout_buckets``, else to
+    the direct stitch's partition count (_bucket_count)."""
     config = config or MosaicConfig()
     if fingerprint is None:
         fingerprint = footprints_fingerprint(footprints)
@@ -85,6 +97,7 @@ def relayout_to_table(
     ensure_workers_can_import(spark)
     if grid is None:
         grid = make_output_grid(footprints, config.nullval)
+    n_buckets = _bucket_count(spark, grid, config, n_buckets)
     tiles = make_tile_relation(spark, grid, config.blocksize)
     assignments = assign_inputs(
         tiles, footprints, grid,
@@ -113,6 +126,21 @@ def relayout_to_table(
     )
     _write_meta(spark, table, grid, config, n_buckets, fingerprint)
     return grid
+
+
+def _bucket_count(
+    spark: SparkSession, grid: OutputGrid, config: MosaicConfig, n_buckets: int | None
+) -> int:
+    """An explicit count wins, then ``config.relayout_buckets``; else one
+    bucket per core (plans.grid.stitch_partitions). The stitch off the
+    table runs one task per bucket, and each task that reaches the
+    kernel pays a fixed Python-worker set-up, so the count that sizes
+    the direct stitch's shuffle sizes the table too."""
+    if n_buckets is None:
+        n_buckets = config.relayout_buckets
+    if n_buckets is None:
+        n_buckets = stitch_partitions(spark, grid, config.blocksize)
+    return n_buckets
 
 
 def _write_meta(
@@ -199,13 +227,14 @@ def ensure_relayout_table(
     grid: OutputGrid,
     blocks: DataFrame,
     config: MosaicConfig,
-    n_buckets: int = 64,
+    n_buckets: int | None = None,
 ) -> None:
     """Create an EMPTY bucketed work table pinned to ``grid`` if it does
     not exist yet — the incremental mosaic appends each micro-batch's
     work rows into it (relayout_append) and stitches touched tiles with
     no Exchange. The schema (including the pixel layout) is derived
-    from a zero-row run of the join+clip plan over ``blocks``.
+    from a zero-row run of the join+clip plan over ``blocks``. The
+    bucket count defaults as in relayout_to_table.
 
     If the catalog does not know the table but its warehouse files
     exist (a restarted session with the default in-memory catalog),
@@ -226,6 +255,7 @@ def ensure_relayout_table(
         _empty_footprints(spark), grid, strategy="broadcast",
     )
     empty = _contributor_chunks(assignments, blocks.limit(0), config.src_blocksize)
+    n_buckets = _bucket_count(spark, grid, config, n_buckets)
     (
         empty.write.mode("overwrite")
         .bucketBy(n_buckets, "band", "tile_row", "tile_col")
@@ -363,7 +393,6 @@ def mosaic_via_relayout(
             return None
         relayout_to_table(
             spark, footprints, blocks, table, config,
-            n_buckets=config.relayout_buckets,
             grid=grid_hint, fingerprint=fp,
         )
     return stitch_from_relayout(

@@ -202,8 +202,12 @@ def test_connected_components_path_graph_log_rounds(spark):
         [(i, i + 1) for i in range(63)], "doc_a long, doc_b long"
     )
     stats = {}
+    # small_graph_edges=0 forces the distributed star loop: the default
+    # solves a graph this small on the driver in 0 rounds, which would
+    # make the round bound below vacuous
     cc = {r.doc_id: r.cluster_id
-          for r in D.connected_components(edges, stats=stats).collect()}
+          for r in D.connected_components(
+              edges, stats=stats, small_graph_edges=0).collect()}
     assert cc == {i: 0 for i in range(64)}
     # ~log2(64), plus batched-alternation granularity (rounds run in
     # fused pairs, so detection can overshoot the fixpoint by up to 3
