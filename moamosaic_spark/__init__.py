@@ -16,7 +16,7 @@ dataflow over tables:
       -> ordered sink + stats finalize + lineage checkpoint
 
 No GDAL dependency; rasters exist only as tables. All per-pixel work is
-vectorized numpy inside Arrow-batched ``applyInPandas`` kernels — no
+vectorized numpy inside Arrow-batched grouped-map kernels — no
 per-row Python anywhere.
 """
 

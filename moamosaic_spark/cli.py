@@ -21,7 +21,7 @@ Option mapping (reference option -> here):
                         (+ --xres/--yres same-CRS rescale)
     --monitorjson    -> --monitorjson
 Extras: --strategy/--cell-size-px/--salt (join physical strategy),
---kernel, --merge-policy, --batches/--resume (lineage checkpointing),
+--merge-policy, --batches/--resume (lineage checkpointing),
 --derived hillshade|terrain|basins (gdaldem-style product tables).
 """
 
@@ -46,7 +46,6 @@ def get_parser() -> argparse.ArgumentParser:
     p.add_argument("--strategy", choices=["broadcast", "cell"], default="broadcast")
     p.add_argument("--cell-size-px", type=int, default=4096)
     p.add_argument("--salt", type=int, default=1)
-    p.add_argument("--kernel", choices=["arrow", "pandas"], default="arrow")
     p.add_argument("--merge-policy", choices=["last", "nearest", "blend"],
                    default="last")
     p.add_argument("--blend-feather", type=int, default=64,
@@ -162,7 +161,6 @@ def main(argv: list[str] | None = None) -> None:
         strategy=args.strategy,
         cell_size_px=args.cell_size_px,
         salt=args.salt,
-        kernel=args.kernel,
         merge_policy=args.merge_policy,
         blend_feather=args.blend_feather,
         stitch_salt=args.stitch_salt,

@@ -29,9 +29,10 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from .plans import grid as gridmod
 from .plans.grid import OutputGrid, make_tile_relation, overview_levels
 from .plans.spatial_join import assign_inputs
-from .operators.stitch import make_stitch_fn
+from .operators.stitch import make_blend_stitch_fn_arrow, make_stitch_fn_arrow
 from .operators.stats import finalize_stats
-from .schema import STITCH_SCHEMA
+from .pixels import pixels_are_binary, repeat_u2
+from .schema import STITCH_SCHEMA, STITCH_SCHEMA_U2
 
 
 class MoaProjectionError(Exception):
@@ -51,17 +52,12 @@ class MosaicConfig:
     check_projections: bool = True
     check_blocks: bool = False         # integrity prepass over the blocks table
     with_overviews: bool = True
-    kernel: str = "arrow"              # 'arrow' (applyInArrow) | 'pandas'
     # 'last' (reference) | 'nearest' (kNN ext) | 'blend' (feathered
     # edge-blending: overlap pixels weighted by distance to each
     # contributor's source edge — nodata-aware, seams fade)
     merge_policy: str = "last"
     blend_feather: int = 64            # feather width (px) for 'blend'
     stitch_salt: int = 1               # >1: two-stage salted merge for hot tiles
-    # tiles with fewer contributors than this skip the two-stage path
-    # (stage 1 only pays off when contributors >> buckets);
-    # None -> 2 * stitch_salt
-    stitch_hot_threshold: int | None = None
     # incremental sink partition count: touched-tile rewrites replace a
     # whole `part=` partition, so each partition holds ~1/sink_parts of
     # the mosaic. Size it so one partition is a bounded rewrite at the
@@ -264,8 +260,6 @@ def _contributor_chunks(assignments: DataFrame, blocks: DataFrame, src_bs: int) 
     rb = F.least(F.col("b_top") + F.col("b_ysize"), F.col("bottom1"))
     cl = F.greatest(F.col("b_left"), F.col("left1"))
     cr = F.least(F.col("b_left") + F.col("b_xsize"), F.col("right1"))
-    from .pixels import pixels_are_binary
-
     binary = pixels_are_binary(blocks)
     cols_untouched = (cl == F.col("b_left")) & (cr == F.col("b_left") + F.col("b_xsize"))
     col_clip = ~cols_untouched & ((cr - cl) * 2 <= F.col("b_xsize"))
@@ -335,8 +329,6 @@ def _null_tile_rows(
     read or merge (reference mosaic.py:351-359) — synthesized JVM-side
     (array_repeat / hex-repeat for the u2 layout), never touching
     Python."""
-    from .pixels import repeat_u2
-
     nullval = int(grid.nullval)
     bands = spark.range(1, grid.n_bands + 1).select(F.col("id").cast("int").alias("band"))
     g = gap_tiles.crossJoin(bands)
@@ -378,6 +370,87 @@ def _null_tile_rows(
             frag = g.where((nr > 0) & (nc > 0)).select(*null_rows(lvl, y_off, x_off, nr, nc))
             out = out.unionByName(frag)
     return out
+
+
+def _restrict_tiles(
+    df: DataFrame,
+    tile_row_range: tuple[int, int] | None = None,
+    tile_keys: DataFrame | None = None,
+) -> DataFrame:
+    """Keep the rows of ``df`` (a tile relation or a work relation)
+    inside the half-open ``tile_row_range`` and/or the (tile_row,
+    tile_col) set ``tile_keys``. The key set is small by construction
+    (a micro-batch's touched tiles), so it is broadcast: the semi-join
+    then keeps a bucketed scan's distribution and adds no Exchange."""
+    if tile_row_range is not None:
+        lo, hi = tile_row_range
+        df = df.where(
+            (F.col("tile_row") >= F.lit(int(lo))) & (F.col("tile_row") < F.lit(int(hi)))
+        )
+    if tile_keys is not None:
+        keys = tile_keys.select("tile_row", "tile_col").distinct()
+        df = df.join(F.broadcast(keys), on=["tile_row", "tile_col"], how="left_semi")
+    return df
+
+
+def _assign(
+    tiles: DataFrame, footprints: DataFrame, grid: OutputGrid, config: MosaicConfig
+) -> DataFrame:
+    """The spatial join under ``config.strategy``; only the 'cell'
+    strategy takes the cell size, salt and tile size."""
+    kw = (
+        {"cell_size_px": config.cell_size_px, "salt": config.salt,
+         "blocksize": config.blocksize}
+        if config.strategy == "cell"
+        else {}
+    )
+    return assign_inputs(tiles, footprints, grid, strategy=config.strategy, **kw)
+
+
+def _stitch_tail(
+    spark: SparkSession,
+    work: DataFrame,
+    tiles: DataFrame,
+    assignments: DataFrame,
+    grid: OutputGrid,
+    levels: list,
+    config: MosaicConfig,
+    blocksize: int,
+) -> MosaicResult:
+    """The stitch and everything after it, shared by the direct path and
+    the relayout path. ``work`` arrives already distributed by (band,
+    tile): the direct path's one Exchange, or a bucketed scan. Its pixel
+    layout sets the output layout; ``wsum`` partials (the salted blend's
+    stage 1) select the blend stage-2 kernel. Tiles of ``tiles`` with no
+    row in ``assignments`` get JVM-side null fill."""
+    binary = pixels_are_binary(work)
+    if "wsum" in work.columns:
+        fn = make_blend_stitch_fn_arrow(grid, levels, config.blend_feather, binary=binary)
+    else:
+        fn = make_stitch_fn_arrow(grid, levels, config.merge_policy, binary=binary,
+                                  feather=config.blend_feather)
+    stitched = work.groupBy("band", "tile_row", "tile_col").applyInArrow(
+        fn, STITCH_SCHEMA_U2 if binary else STITCH_SCHEMA
+    )
+    gap_tiles = tiles.join(
+        assignments.select("tile_row", "tile_col").distinct(),
+        on=["tile_row", "tile_col"],
+        how="left_anti",
+    )
+    stitched = stitched.unionByName(
+        _null_tile_rows(spark, gap_tiles, grid, levels, config.with_overviews,
+                        binary=binary)
+    )
+    return MosaicResult(
+        grid=grid,
+        levels=levels,
+        tiles=stitched.where(F.col("level") == 0),
+        overviews=stitched.where(F.col("level") > 0),
+        stats=finalize_stats(stitched),
+        assignments=assignments,
+        stitched=stitched,
+        blocksize=blocksize,
+    )
 
 
 def do_mosaic(
@@ -451,40 +524,10 @@ def do_mosaic(
         if config.with_overviews
         else []
     )
-    tiles = make_tile_relation(spark, grid, config.blocksize)
-    if tile_row_range is not None:
-        lo, hi = tile_row_range
-        tiles = tiles.where(
-            (F.col("tile_row") >= F.lit(int(lo))) & (F.col("tile_row") < F.lit(int(hi)))
-        )
-    if tile_keys is not None:
-        # semi-join against the requested tile set; left small by
-        # construction (a micro-batch's touched tiles), AQE converts it
-        # to a broadcast join at runtime when it is.
-        tiles = tiles.join(
-            tile_keys.select("tile_row", "tile_col").distinct(),
-            on=["tile_row", "tile_col"],
-            how="left_semi",
-        )
-    assignments = assign_inputs(
-        tiles,
-        footprints,
-        grid,
-        strategy=config.strategy,
-        **({"cell_size_px": config.cell_size_px, "salt": config.salt,
-            "blocksize": config.blocksize}
-           if config.strategy == "cell" else {}),
+    tiles = _restrict_tiles(
+        make_tile_relation(spark, grid, config.blocksize), tile_row_range, tile_keys
     )
-
-    # pixel layout is detected from the blocks table (pixels.py): the
-    # u2 binary layout halves the bytes of the stitch shuffle and the
-    # sink; the stitch output mirrors the input layout.
-    from .pixels import pixels_are_binary
-    from .schema import PARTIAL_MERGE_SCHEMA_U2, STITCH_SCHEMA_U2
-
-    binary = pixels_are_binary(blocks)
-    stitch_schema = STITCH_SCHEMA_U2 if binary else STITCH_SCHEMA
-
+    assignments = _assign(tiles, footprints, grid, config)
     work = _contributor_chunks(assignments, blocks, config.src_blocksize)
 
     if config.stitch_salt > 1:
@@ -498,13 +541,14 @@ def do_mosaic(
             # 'nearest' carries per-pixel arg-min state a value-only
             # partial cannot decompose
             raise ValueError("stitch_salt requires merge_policy 'last' or 'blend'")
-        if config.kernel != "arrow":
-            raise ValueError("stitch_salt requires kernel='arrow'")
         from pyspark.sql import Window
 
         from .operators.stitch import make_partial_merge_fn_arrow
-        from .schema import PARTIAL_MERGE_SCHEMA
+        from .schema import PARTIAL_MERGE_SCHEMA, PARTIAL_MERGE_SCHEMA_U2
 
+        # the u2 binary layout halves the bytes of the stitch shuffle
+        # and the sink; stage 1 mirrors the blocks table's layout
+        binary = pixels_are_binary(blocks)
         # Bucket by ntile over the priority ORDER, not raw priority
         # values: sparse priorities (gaps, timestamps) would otherwise
         # degenerate into one bucket per contributor. ntile keeps
@@ -522,15 +566,12 @@ def do_mosaic(
         # HOT/COLD split: stage 1 only pays off when a tile has many
         # more contributors than buckets — a 2-contributor tile routed
         # through it does a pointless extra kernel pass. Contributor
-        # counts come from the (small) assignments relation; hot rows
-        # take the two-stage path, cold rows go straight to the final
-        # stitch (union is schema-aligned: the stitch kernel consumes
-        # the PARTIAL_MERGE column set either way).
-        threshold = (
-            config.stitch_hot_threshold
-            if config.stitch_hot_threshold is not None
-            else max(2, 2 * config.stitch_salt)
-        )
+        # counts come from the (small) assignments relation; tiles with
+        # at least 2 * stitch_salt contributors take the two-stage
+        # path, cold rows go straight to the final stitch (union is
+        # schema-aligned: the stitch kernel consumes the PARTIAL_MERGE
+        # column set either way).
+        threshold = max(2, 2 * config.stitch_salt)
         counts = assignments.groupBy("tile_row", "tile_col").agg(
             F.count("*").alias("_nc")
         )
@@ -574,56 +615,10 @@ def do_mosaic(
     # folds many groups, so the per-task Python set-up is paid
     # ~defaultParallelism times instead of once per shuffle partition
     n_parts = gridmod.stitch_partitions(spark, grid, config.blocksize, tile_row_range)
-    grouped = work.repartition(n_parts, "band", "tile_row", "tile_col").groupBy(
-        "band", "tile_row", "tile_col"
-    )
-    if config.stitch_salt > 1 and config.merge_policy == "blend":
-        from .operators.stitch import make_blend_stitch_fn_arrow
-
-        stitched = grouped.applyInArrow(
-            make_blend_stitch_fn_arrow(grid, levels, config.blend_feather,
-                                       binary=binary),
-            stitch_schema,
-        )
-    elif config.kernel == "arrow":
-        from .operators.stitch import make_stitch_fn_arrow
-
-        stitched = grouped.applyInArrow(
-            make_stitch_fn_arrow(grid, levels, config.merge_policy, binary=binary,
-                                 feather=config.blend_feather),
-            stitch_schema,
-        )
-    elif config.kernel == "pandas":
-        stitched = grouped.applyInPandas(
-            make_stitch_fn(grid, levels, config.merge_policy, binary=binary,
-                           feather=config.blend_feather),
-            stitch_schema,
-        )
-    else:
-        raise ValueError(f"unknown kernel: {config.kernel}")
-
-    gap_tiles = tiles.join(
-        assignments.select("tile_row", "tile_col").distinct(),
-        on=["tile_row", "tile_col"],
-        how="left_anti",
-    )
-    stitched = stitched.unionByName(
-        _null_tile_rows(spark, gap_tiles, grid, levels, config.with_overviews,
-                        binary=binary)
-    )
-
-    tiles_out = stitched.where(F.col("level") == 0)
-    overviews = stitched.where(F.col("level") > 0)
-    stats = finalize_stats(stitched)
-    return MosaicResult(
-        grid=grid,
-        levels=levels,
-        tiles=tiles_out,
-        overviews=overviews,
-        stats=stats,
-        assignments=assignments,
-        stitched=stitched,
-        blocksize=config.blocksize,
+    return _stitch_tail(
+        spark,
+        work.repartition(n_parts, "band", "tile_row", "tile_col"),
+        tiles, assignments, grid, levels, config, config.blocksize,
     )
 
 

@@ -30,7 +30,6 @@ stitch and the salted stage-1 partial merge.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 
 from ..plans.grid import OutputGrid, overview_shape
@@ -472,56 +471,6 @@ def make_blend_stitch_fn_arrow(
             _pyramid_rows(band, tile_row, tile_col, top, left, canvas, levels, ov_shapes)
         )
         return _rows_to_arrow(rows, out_schema)
-
-    return stitch
-
-
-def _pandas_pixel_arrays(col) -> list[np.ndarray]:
-    """Per-row pixel arrays from a pandas column of either layout
-    (int lists/arrays, or u2-packed bytes)."""
-    return [
-        np.frombuffer(p, dtype="<u2") if isinstance(p, (bytes, bytearray))
-        else np.asarray(p, dtype=np.int32)
-        for p in col
-    ]
-
-
-def make_stitch_fn(
-    grid: OutputGrid, levels: list[int], policy: str = "last", binary: bool = False,
-    feather: int = 64,
-):
-    """pandas (applyInPandas) variant of the stitch kernel — same
-    semantics as make_stitch_fn_arrow; kept for environments where the
-    Arrow grouped-map API is unavailable."""
-    nullval = int(grid.nullval)
-    ov_shapes = {lvl: overview_shape(grid.nrows, grid.ncols, lvl) for lvl in levels}
-
-    def stitch(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        band, tile_row, tile_col = (int(k) for k in key)
-        cols = {name: pdf[name].to_numpy() for name in _WINDOW_COLS}
-        arrays = _pandas_pixel_arrays(pdf["pixels"])
-        lengths = np.fromiter((len(a) for a in arrays), dtype=np.int64, count=len(arrays))
-        offsets = np.concatenate(([0], np.cumsum(lengths)))
-        values = (
-            np.concatenate([a.astype(np.int32, copy=False) for a in arrays])
-            if arrays
-            else np.array([], dtype=np.int32)
-        )
-        top, left = int(cols["top"][0]), int(cols["left"][0])
-        ysize, xsize = int(cols["ysize"][0]), int(cols["xsize"][0])
-        canvas = np.full((ysize, xsize), nullval, dtype=np.int32)
-        best = _policy_state(policy, ysize, xsize, feather)
-        _fold_arrow_group(cols, offsets, values, canvas, nullval, policy, best,
-                          (band, tile_row, tile_col))
-        _finalize_policy(canvas, policy, best)
-        rows = [_base_row(band, tile_row, tile_col, top, left, canvas, nullval)]
-        rows.extend(
-            _pyramid_rows(band, tile_row, tile_col, top, left, canvas, levels, ov_shapes)
-        )
-        if binary:
-            for r in rows:
-                r["pixels"] = np.ascontiguousarray(r["pixels"].astype("<u2")).tobytes()
-        return pd.DataFrame(rows)
 
     return stitch
 

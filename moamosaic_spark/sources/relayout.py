@@ -30,14 +30,13 @@ import json
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..mosaic import MosaicConfig, MosaicResult, _contributor_chunks, _null_tile_rows
-from ..operators.stats import finalize_stats
-from ..operators.stitch import make_stitch_fn, make_stitch_fn_arrow
+from ..mosaic import (
+    MosaicConfig, MosaicResult, _assign, _contributor_chunks, _restrict_tiles, _stitch_tail,
+)
 from ..plans.grid import (
     OutputGrid, make_output_grid, make_tile_relation, overview_levels, stitch_partitions,
 )
 from ..plans.spatial_join import assign_inputs
-from ..schema import STITCH_SCHEMA
 
 
 def fingerprint_agg_cols() -> list:
@@ -99,33 +98,32 @@ def relayout_to_table(
         grid = make_output_grid(footprints, config.nullval)
     n_buckets = _bucket_count(spark, grid, config, n_buckets)
     tiles = make_tile_relation(spark, grid, config.blocksize)
-    assignments = assign_inputs(
-        tiles, footprints, grid,
-        strategy=config.strategy,
-        **({"cell_size_px": config.cell_size_px, "salt": config.salt,
-            "blocksize": config.blocksize}
-           if config.strategy == "cell" else {}),
-    )
+    assignments = _assign(tiles, footprints, grid, config)
     work = _contributor_chunks(assignments, blocks, config.src_blocksize)
     for t in (table, f"{table}_meta"):
         spark.sql(f"DROP TABLE IF EXISTS {t}")
         _drop_stale_location(spark, t)
+    _write_bucketed(work, table, n_buckets, "overwrite")
+    _write_meta(spark, table, grid, config, n_buckets, fingerprint)
+    return grid
+
+
+def _write_bucketed(work: DataFrame, table: str, n_buckets: int, mode: str) -> None:
+    """Write work rows into ``table`` bucketed and sorted by the stitch
+    group keys. Repartition on the bucket key first: without it every
+    write task holds rows of most buckets and emits one file per (task,
+    bucket) pair — hundreds of tiny files whose create/commit overhead
+    dominates the build and whose open overhead taxes every later
+    bucketed scan (guide §6: small files hurt twice). Hash-partitioned
+    n_buckets ways, each task writes exactly its own bucket: n_buckets
+    files total."""
     (
-        # repartition on the bucket key first: without it every write
-        # task holds rows of most buckets and emits one file per
-        # (task, bucket) pair — hundreds of tiny files whose create/
-        # commit overhead dominates the build and whose open overhead
-        # taxes every later bucketed scan (guide §6: small files hurt
-        # twice). Hash-partitioned n_buckets ways, each task writes
-        # exactly its own bucket: n_buckets files total.
         work.repartition(n_buckets, "band", "tile_row", "tile_col")
-        .write.mode("overwrite")
+        .write.mode(mode)
         .bucketBy(n_buckets, "band", "tile_row", "tile_col")
         .sortBy("band", "tile_row", "tile_col")
         .saveAsTable(table)
     )
-    _write_meta(spark, table, grid, config, n_buckets, fingerprint)
-    return grid
 
 
 def _bucket_count(
@@ -256,12 +254,7 @@ def ensure_relayout_table(
     )
     empty = _contributor_chunks(assignments, blocks.limit(0), config.src_blocksize)
     n_buckets = _bucket_count(spark, grid, config, n_buckets)
-    (
-        empty.write.mode("overwrite")
-        .bucketBy(n_buckets, "band", "tile_row", "tile_col")
-        .sortBy("band", "tile_row", "tile_col")
-        .saveAsTable(table)
-    )
+    _write_bucketed(empty, table, n_buckets, "overwrite")
     _write_meta(spark, table, grid, config, n_buckets)
 
 
@@ -284,26 +277,13 @@ def relayout_append(
     pixels within its priority run), so resume semantics hold — compact
     by re-running relayout_to_table when growth matters."""
     m = _load_meta(spark, table)
-    grid = OutputGrid(
-        x_min=m["x_min"], y_max=m["y_max"], x_res=m["x_res"], y_res=m["y_res"],
-        ncols=m["ncols"], nrows=m["nrows"], n_bands=m["n_bands"],
-        nullval=m["nullval"], dtype=m["dtype"], projection=m["projection"],
-    )
-    cfg = MosaicConfig(blocksize=int(m["blocksize"]))
-    tiles = make_tile_relation(spark, grid, cfg.blocksize)
+    grid = _grid_from_meta(m)
+    tiles = make_tile_relation(spark, grid, int(m["blocksize"]))
     assignments = assign_inputs(tiles, footprints_new, grid, strategy="broadcast")
     work = _contributor_chunks(
         assignments, blocks, int(m.get("src_blocksize", 256))
     )
-    nb = int(m.get("n_buckets", 64))
-    (
-        # same one-file-per-bucket discipline as relayout_to_table
-        work.repartition(nb, "band", "tile_row", "tile_col")
-        .write.mode("append")
-        .bucketBy(nb, "band", "tile_row", "tile_col")
-        .sortBy("band", "tile_row", "tile_col")
-        .saveAsTable(table)
-    )
+    _write_bucketed(work, table, int(m.get("n_buckets", 64)), "append")
 
 
 def _drop_stale_location(spark: SparkSession, table: str) -> None:
@@ -408,8 +388,9 @@ def stitch_from_relayout(
     tile_keys: DataFrame | None = None,
 ) -> MosaicResult:
     """Stitch straight off the bucketed work table — no join, no
-    Exchange. ``config`` may override kernel/merge_policy/overviews; the
-    grid and tiling geometry come from the relayout metadata.
+    Exchange. ``config`` supplies merge_policy/blend_feather/
+    with_overviews; the grid and tiling geometry come from the relayout
+    metadata.
 
     ``tile_row_range=(lo, hi)`` restricts the stitch to a tile-row
     range; the predicate lands in the bucketed SCAN (PushedFilters), so
@@ -429,76 +410,17 @@ def stitch_from_relayout(
 
     ensure_workers_can_import(spark)
     m = _load_meta(spark, table)
-    grid = OutputGrid(
-        x_min=m["x_min"], y_max=m["y_max"], x_res=m["x_res"], y_res=m["y_res"],
-        ncols=m["ncols"], nrows=m["nrows"], n_bands=m["n_bands"],
-        nullval=m["nullval"], dtype=m["dtype"], projection=m["projection"],
-    )
+    grid = _grid_from_meta(m)
     blocksize = int(m["blocksize"])
     levels = (
         overview_levels(grid.nrows, grid.ncols, int(m["min_overview_size"]))
         if config.with_overviews
         else []
     )
-    work = spark.table(table)
-    if tile_row_range is not None:
-        lo, hi = tile_row_range
-        work = work.where(
-            (F.col("tile_row") >= F.lit(int(lo))) & (F.col("tile_row") < F.lit(int(hi)))
-        )
-    if tile_keys is not None:
-        keys = tile_keys.select("tile_row", "tile_col").distinct()
-        work = work.join(F.broadcast(keys), on=["tile_row", "tile_col"], how="left_semi")
-    # pixel layout follows the bucketed table (set when it was relaid)
-    from ..pixels import pixels_are_binary
-    from ..schema import STITCH_SCHEMA_U2
-
-    binary = pixels_are_binary(work)
-    stitch_schema = STITCH_SCHEMA_U2 if binary else STITCH_SCHEMA
-    grouped = work.groupBy("band", "tile_row", "tile_col")
-    if config.kernel == "arrow":
-        stitched = grouped.applyInArrow(
-            make_stitch_fn_arrow(grid, levels, config.merge_policy, binary=binary,
-                                 feather=config.blend_feather),
-            stitch_schema,
-        )
-    else:
-        stitched = grouped.applyInPandas(
-            make_stitch_fn(grid, levels, config.merge_policy, binary=binary,
-                           feather=config.blend_feather),
-            stitch_schema,
-        )
-
-    tiles = make_tile_relation(spark, grid, blocksize)
-    if tile_row_range is not None:
-        lo, hi = tile_row_range
-        tiles = tiles.where(
-            (F.col("tile_row") >= F.lit(int(lo))) & (F.col("tile_row") < F.lit(int(hi)))
-        )
-    if tile_keys is not None:
-        tiles = tiles.join(
-            F.broadcast(tile_keys.select("tile_row", "tile_col").distinct()),
-            on=["tile_row", "tile_col"],
-            how="left_semi",
-        )
-    gap_tiles = tiles.join(
-        work.select("tile_row", "tile_col").distinct(),
-        on=["tile_row", "tile_col"],
-        how="left_anti",
+    # the bucketed scan already distributes by (band, tile): no Exchange
+    work = _restrict_tiles(spark.table(table), tile_row_range, tile_keys)
+    tiles = _restrict_tiles(
+        make_tile_relation(spark, grid, blocksize), tile_row_range, tile_keys
     )
-    stitched = stitched.unionByName(
-        _null_tile_rows(spark, gap_tiles, grid, levels, config.with_overviews,
-                        binary=binary)
-    )
-    return MosaicResult(
-        grid=grid,
-        levels=levels,
-        tiles=stitched.where(F.col("level") == 0),
-        overviews=stitched.where(F.col("level") > 0),
-        stats=finalize_stats(stitched),
-        assignments=work.select(
-            "tile_row", "tile_col", "media_ref", "priority"
-        ).distinct(),
-        stitched=stitched,
-        blocksize=blocksize,
-    )
+    assignments = work.select("tile_row", "tile_col", "media_ref", "priority").distinct()
+    return _stitch_tail(spark, work, tiles, assignments, grid, levels, config, blocksize)

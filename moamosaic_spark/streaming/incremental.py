@@ -34,7 +34,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..mosaic import MosaicConfig, do_mosaic
+from ..mosaic import MosaicConfig, _assign, do_mosaic
 from ..sources.docs import dense_global_rank, media_first_seen
 from .lineage import read_parquet_if_exists as _read_parquet_if_exists
 
@@ -213,21 +213,14 @@ def process_batch(
     # extending the extent west/north would otherwise shift every
     # existing tile's (tile_row, tile_col).
     from ..plans.grid import make_output_grid, make_tile_relation
-    from ..plans.spatial_join import assign_inputs
 
     grid = make_output_grid(footprint_meta, config.nullval)
     # touched tiles: the spatial join over the NEW footprints only —
     # small, and it feeds do_mosaic(tile_keys=...) so the full run's
     # tile relation is pruned BELOW the stitch kernel.
     tiles_rel = make_tile_relation(spark, grid, config.blocksize)
-    kw = (
-        {"cell_size_px": config.cell_size_px, "salt": config.salt,
-         "blocksize": config.blocksize}
-        if config.strategy == "cell"
-        else {}
-    )
     touched = (
-        assign_inputs(tiles_rel, new_fp, grid, strategy=config.strategy, **kw)
+        _assign(tiles_rel, new_fp, grid, config)
         .select("tile_row", "tile_col")
         .distinct()
     )

@@ -127,7 +127,7 @@ def test_incremental_over_relayout_table(spark, tmp_path):
     plan = res.stitched._jdf.queryExecution().explainString(
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("simple")
     )
-    kernel = "FlatMapGroupsInArrow" if cfg.kernel == "arrow" else "FlatMapGroupsInPandas"
+    kernel = "FlatMapGroupsInArrow"
     region = plan.split(kernel)[1]
     scan_pos = region.find("FileScan")
     assert "Exchange" not in region[:scan_pos], "touched-tile stitch was shuffled"

@@ -1,7 +1,7 @@
 """Merge policies: 'last' is the reference's filelist-order rule (the
 golden default — tested everywhere else); 'nearest' is the kNN
 nearest-source tie-breaking extension. Verified against an independent
-full-canvas numpy oracle; both kernels must agree."""
+full-canvas numpy oracle."""
 
 import numpy as np
 import pytest
@@ -30,14 +30,14 @@ def nearest_oracle(rasters, grid, nullval=0):
     return canvas
 
 
-@pytest.mark.parametrize("kernel", ["arrow", "pandas"])
+@pytest.mark.parametrize("kernel", ["arrow"])
 def test_nearest_policy_matches_oracle(spark, kernel):
     rasters = synth.grid3x3(120, 120, overlap=40)  # big overlaps
     fp = to_footprints(spark, synth.footprints_pdf(rasters))
     blocks = to_blocks(spark, synth.blocks_pdf(rasters, 256))
     cfg = MosaicConfig(
         blocksize=64, src_blocksize=256, with_overviews=False,
-        merge_policy="nearest", kernel=kernel,
+        merge_policy="nearest",
     )
     res = do_mosaic(spark, fp, blocks, cfg)
     grid = res.grid
@@ -113,8 +113,7 @@ def _collect_canvas(res, grid, binary=False):
     return got
 
 
-@pytest.mark.parametrize("kernel,feather", [("arrow", 64), ("pandas", 64),
-                                            ("arrow", 16)])
+@pytest.mark.parametrize("kernel,feather", [("arrow", 64), ("arrow", 16)])
 def test_blend_policy_matches_oracle(spark, kernel, feather):
     """Feathered edge-blending (north-star 'edge-blending'): engine ==
     the independent full-canvas oracle; seams fade (overlap pixels lie
@@ -124,8 +123,7 @@ def test_blend_policy_matches_oracle(spark, kernel, feather):
     fp = to_footprints(spark, synth.footprints_pdf(rasters))
     blocks = to_blocks(spark, synth.blocks_pdf(rasters, 256))
     cfg = MosaicConfig(blocksize=64, src_blocksize=256, with_overviews=False,
-                       merge_policy="blend", kernel=kernel,
-                       blend_feather=feather)
+                       merge_policy="blend", blend_feather=feather)
     res = do_mosaic(spark, fp, blocks, cfg)
     grid = res.grid
     want = blend_oracle(rasters, grid, feather=feather)

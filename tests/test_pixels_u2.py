@@ -154,22 +154,6 @@ def test_u2_relayout_stitch(spark, tmp_path):
         np.testing.assert_array_equal(a, want.tiles[k])
 
 
-def test_u2_pandas_kernel(spark):
-    """The applyInPandas compat kernel handles packed payloads too."""
-    rasters = synth.golden_pair(96, 96)
-    want = synth.oracle(rasters, blocksize=64, min_overview_size=9999)
-    fp, bl = _fp_blocks(spark, rasters, "u2", sbs=64)
-    res = do_mosaic(
-        spark, fp, bl,
-        MosaicConfig(blocksize=64, src_blocksize=64, with_overviews=False,
-                     kernel="pandas"),
-    )
-    tiles = _tiles_of(res, binary=True)
-    assert set(tiles) == set(want.tiles)
-    for k, a in tiles.items():
-        np.testing.assert_array_equal(a, want.tiles[k])
-
-
 def test_u2_streaming_incremental_over_relayout(spark, tmp_path):
     """The full composition: readStream -> foreachBatch incremental
     mosaic, work rows accumulated in a bucketed relayout table, pixels
