@@ -1123,9 +1123,7 @@ def q_iso_contours(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     res = _mosaic_result_cached(sf_dir, spark)
     t = _level0_tiles(res)
-    px = F.col("pixels")
-    if dict(t.dtypes).get("pixels") == "binary":
-        px = unpack_u2(px)
+    px = unpack_u2(F.col("pixels"))
     thresh = t.select(
         "tile_row", "tile_col", "ysize", "xsize",
         F.transform(px, lambda v: F.when(v >= ISO_T, 1).otherwise(0))
@@ -1798,9 +1796,7 @@ def q_basin_zonal_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     gnc = int(res.grid.ncols)
     basins = _basins_cached(sf_dir, spark)
     tiles = _level0_tiles(res)
-    px = F.col("pixels")
-    if dict(tiles.dtypes).get("pixels") == "binary":
-        px = unpack_u2(px)
+    px = unpack_u2(F.col("pixels"))
     from .plans.grid import global_pixel_index
 
     vals = tiles.select(

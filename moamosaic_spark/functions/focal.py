@@ -19,8 +19,9 @@ tile count — the same unit the rest of the engine scales by. At
 100 TB the strips are ~1.6% of payload at 256px tiles (and shrink
 linearly with blocksize), so halo cost is noise against the scan.
 
-Pixel layouts: accepts both engine layouts (array<int> and packed
-u2 binary, pixels.py); fragments always travel packed u2 (2 B/px).
+Pixels: tiles carry packed uint16 payloads (pixels.py); an
+``array<int>`` tile relation is packed once on entry (pixels.ingest).
+Fragments are slices of the packed payload (2 B/px).
 
 Output convention: one row per input tile, ``pixels`` as array<long>
 in row-major order with -1 at pixels where the op is undefined
@@ -34,6 +35,8 @@ from __future__ import annotations
 
 import numpy as np
 from pyspark.sql import Column, DataFrame, functions as F
+
+from ..pixels import PIXEL_BYTES, decode_column, ingest
 
 FOCAL_STATS_SCHEMA = (
     "band int, tile_row int, tile_col int, ysize int, xsize int, "
@@ -76,8 +79,7 @@ def _emit_fragments(tiles: DataFrame, radius: int = 1) -> DataFrame:
       variant that replaced it shipped every tile's full payload
       through Arrow both ways just to keep O(perimeter) output.
 
-    array<int> input is packed to the wire layout (u2 binary) first,
-    JVM-side.
+    The tiles pass through the ingest adaptor (pixels.ingest) first.
 
     A fragment row (band, tr, tc, dy, dx, ...) is addressed TO tile
     (tr, tc) and was emitted BY tile (tr - dy, tc - dx); the assembler
@@ -88,8 +90,6 @@ def _emit_fragments(tiles: DataFrame, radius: int = 1) -> DataFrame:
     payload fragment) — a wider halo would need pixels from two tiles
     away.
     """
-    from ..pixels import pack_u2, pixels_are_binary
-
     R = int(radius)
     if R < 1:
         raise ValueError(f"radius must be >= 1, got {radius}")
@@ -98,12 +98,11 @@ def _emit_fragments(tiles: DataFrame, radius: int = 1) -> DataFrame:
     src = tiles.select(*cols) if "band" in tiles.columns else tiles.select(
         F.lit(1).alias("band"), "tile_row", "tile_col", "ysize", "xsize", "pixels"
     )
-    if not pixels_are_binary(src):
-        src = src.withColumn("pixels", pack_u2(F.col("pixels")))
+    src = ingest(src)
 
     px = F.col("pixels")
     ys, xs = F.col("ysize"), F.col("xsize")
-    xs2 = xs * 2  # bytes per row (u2)
+    xs2 = xs * PIXEL_BYTES  # bytes per row
     r_ = F.lit(R)
 
     def frag_s(dy, dx, frow, fy, fx, data):
@@ -176,8 +175,8 @@ def _emit_fragments(tiles: DataFrame, radius: int = 1) -> DataFrame:
     )
     j = F.col("j")
     rr = F.col("bt") + j
-    right = F.col("bpx").substr((j * xs + xs - R) * 2 + 1, F.lit(2 * R))
-    left = F.col("bpx").substr(j * xs * 2 + 1, F.lit(2 * R))
+    right = F.col("bpx").substr((j * xs + xs - R) * PIXEL_BYTES + 1, F.lit(PIXEL_BYTES * R))
+    left = F.col("bpx").substr(j * xs * PIXEL_BYTES + 1, F.lit(PIXEL_BYTES * R))
     sides = F.array(
         frag_s(0, F.lit(1), rr, 1, R, right),
         frag_s(0, F.lit(-1), rr, 1, R, left),
@@ -220,17 +219,7 @@ def _assemble_arrow(tbl, nullval: int, radius: int = 1) -> tuple | None:
         c: tbl.column(c).to_numpy()
         for c in ("dy", "dx", "frow", "fysize", "fxsize")
     }
-    frag = tbl.column("frag").combine_chunks()
-    offs = np.frombuffer(
-        frag.buffers()[1], dtype=np.int32, count=len(frag) + 1,
-        offset=frag.offset * 4,
-    ) // 2
-    dbuf = frag.buffers()[2]
-    vals = (
-        np.frombuffer(dbuf, dtype="<u2")
-        if dbuf is not None
-        else np.array([], dtype="<u2")
-    )
+    offs, vals = decode_column(tbl.column("frag").combine_chunks())
     dy, dx, frow = cols["dy"], cols["dx"], cols["frow"]
     center = np.flatnonzero((dy == 0) & (dx == 0))
     if center.size == 0:

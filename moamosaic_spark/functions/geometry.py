@@ -299,7 +299,8 @@ def zonal_stats(
     """Zonal statistics — per-zone count/sum/min/max of mosaic pixel
     values, the classic raster <-> vector aggregate. ``tiles`` is a
     stitched tile relation (level-0 rows: tile_row, tile_col, ysize,
-    xsize, pixels in either layout); ``zone_tiles`` is a zone-id
+    xsize, pixels; ``array<int>`` pixels are packed on entry by
+    pixels.ingest); ``zone_tiles`` is a zone-id
     raster on the SAME tiling (rasterize_polygons output, zone ids as
     burn values, 0 = no zone). Scale shape: equi-join on the tile key
     (zones touch few tiles; mosaic tiles stream), one vectorized
@@ -310,6 +311,9 @@ def zonal_stats(
     import numpy as np
     import pandas as pd
 
+    from ..pixels import decode, ingest
+
+    tiles = ingest(tiles)
     # a multi-band tile relation (MosaicResult.tiles) carries one row
     # per (band, tile): keep band in the group key so bands never mix
     # silently; single-band inputs without the column get band = 1
@@ -329,11 +333,7 @@ def zonal_stats(
         for pdf in batches:
             out = []
             for r in pdf.itertuples(index=False):
-                px = (
-                    np.frombuffer(bytes(r.px_payload), "<u2").astype(np.int64)
-                    if isinstance(r.px_payload, (bytes, bytearray))
-                    else np.asarray(r.px_payload, dtype=np.int64)
-                )
+                px = decode(r.px_payload).astype(np.int64)
                 zones = np.asarray(r.zone_payload, dtype=np.int64)
                 m = (zones > 0) & (px != nullval)
                 if not m.any():
@@ -451,13 +451,8 @@ def make_label_work_fn(W: int, bs: int, nullval: int):
             out = []
             border_frames = []
             for t in pdf.itertuples(index=False):
-                px = (
-                    np.frombuffer(bytes(t.pixels), "<u2").astype(np.int32)
-                    if isinstance(t.pixels, (bytes, bytearray))
-                    else np.asarray(t.pixels, dtype=np.int32)
-                )
                 ysz, xsz = int(t.ysize), int(t.xsize)
-                arr = px.reshape(ysz, xsz)
+                arr = np.asarray(t.pixels, dtype=np.int32).reshape(ysz, xsz)
                 roots, runs, run_of_px = _label_tile_runs(arr, nullval)
                 if roots.size == 0:
                     continue

@@ -83,26 +83,18 @@ RING_SCHEMA = (
 )
 
 
-def _as_arr(pixels, ysize, xsize):
-    import numpy as np
-
-    if isinstance(pixels, (bytes, bytearray)):
-        return np.frombuffer(bytes(pixels), "<u2").astype(np.int32).reshape(
-            ysize, xsize)
-    return np.asarray(pixels, dtype=np.int32).reshape(ysize, xsize)
-
-
 def make_halo_emit_fn():
     """mapInPandas kernel: re-key every tile's border strips to the
     neighbor tiles that need them as halo, alongside the tile's own
     core row. O(perimeter) strip payload per tile."""
+    import numpy as np
     import pandas as pd
 
     def emit(batches):
         for pdf in batches:
             rows = []
             for t in pdf.itertuples(index=False):
-                arr = _as_arr(t.pixels, int(t.ysize), int(t.xsize))
+                arr = np.asarray(t.pixels, np.int32).reshape(int(t.ysize), int(t.xsize))
                 tr, tc = int(t.tile_row), int(t.tile_col)
                 ys, xs = arr.shape
                 rows.append((tr, tc, 0, ys, xs, arr.ravel().tolist()))

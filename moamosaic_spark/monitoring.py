@@ -134,10 +134,10 @@ def observe_gauges(df: DataFrame, name: str = "stitch_input"):
     """
     from pyspark.sql import Observation
 
-    from .pixels import pixel_count, pixels_are_binary
+    from .pixels import pixel_count
 
     obs = Observation(name)
-    npx = pixel_count(F.col("pixels"), pixels_are_binary(df))
+    npx = pixel_count(F.col("pixels"))
     d = df.observe(
         obs,
         F.count(F.lit(1)).alias("rows"),

@@ -31,8 +31,8 @@ from .plans.grid import OutputGrid, make_tile_relation, overview_levels
 from .plans.spatial_join import assign_inputs
 from .operators.stitch import make_blend_stitch_fn_arrow, make_stitch_fn_arrow
 from .operators.stats import finalize_stats
-from .pixels import pixels_are_binary, repeat_u2
-from .schema import STITCH_SCHEMA, STITCH_SCHEMA_U2
+from .pixels import PIXEL_BYTES, PIXEL_MAX, ingest, repeat_u2
+from .schema import STITCH_SCHEMA
 
 
 class MoaProjectionError(Exception):
@@ -203,6 +203,18 @@ def validate_blocks(footprints: DataFrame, blocks: DataFrame) -> None:
         raise ValueError(f"blocks table missing pixel data for: {refs} ...")
 
 
+def check_nullval(value) -> None:
+    """The nodata value fills gaps and pads windows, so it is a pixel
+    like any other: an integer in [0, 65535]. Raise ValueError naming it
+    otherwise — before any plan is built, on every route."""
+    v = float(value)
+    if not (v.is_integer() and 0 <= v <= PIXEL_MAX):
+        raise ValueError(
+            f"nullval {value!r} is not a uint16 pixel value "
+            f"(an integer in [0, {PIXEL_MAX}])"
+        )
+
+
 def _contributor_chunks(assignments: DataFrame, blocks: DataFrame, src_bs: int) -> DataFrame:
     """Explode each (tile, contributor) to its covering source chunks and
     join the pixel payloads.
@@ -244,10 +256,10 @@ def _contributor_chunks(assignments: DataFrame, blocks: DataFrame, src_bs: int) 
     #
     # Clip by ACCESS PATTERN (the focal emitter's lesson, guide §1.2):
     #   * row-range clip — rows are contiguous in the row-major payload,
-    #     so it is ONE substr/slice per chunk; always applied.
+    #     so it is ONE substr per chunk; always applied.
     #   * column clip — strided. A thin kept strip (width <= half the
     #     chunk) is emitted as one ROW PER SOURCE ROW, each a single
-    #     codegen'd substr/slice: linear in the strip bytes, no
+    #     codegen'd substr: linear in the strip bytes, no
     #     interpreted per-element lambda (the previous hex-join bridge
     #     measured ~5 MB/s — 200x below memcpy). Wide chunks keep their
     #     full width (clipping a few edge columns would rebuild the
@@ -260,20 +272,12 @@ def _contributor_chunks(assignments: DataFrame, blocks: DataFrame, src_bs: int) 
     rb = F.least(F.col("b_top") + F.col("b_ysize"), F.col("bottom1"))
     cl = F.greatest(F.col("b_left"), F.col("left1"))
     cr = F.least(F.col("b_left") + F.col("b_xsize"), F.col("right1"))
-    binary = pixels_are_binary(blocks)
     cols_untouched = (cl == F.col("b_left")) & (cr == F.col("b_left") + F.col("b_xsize"))
     col_clip = ~cols_untouched & ((cr - cl) * 2 <= F.col("b_xsize"))
-    if binary:
-        row_clipped = F.col("pixels").substr(
-            (rt - F.col("b_top")) * F.col("b_xsize") * 2 + 1,
-            (rb - rt) * F.col("b_xsize") * 2,
-        )
-    else:
-        row_clipped = F.slice(
-            F.col("pixels"),
-            (rt - F.col("b_top")) * F.col("b_xsize") + 1,
-            (rb - rt) * F.col("b_xsize"),
-        )
+    row_clipped = F.col("pixels").substr(
+        (rt - F.col("b_top")) * F.col("b_xsize") * PIXEL_BYTES + 1,
+        (rb - rt) * F.col("b_xsize") * PIXEL_BYTES,
+    )
     # interior chunks (the vast majority at production tile sizes) pass
     # through untouched; row-only clips are one contiguous slice
     untouched = (
@@ -294,10 +298,8 @@ def _contributor_chunks(assignments: DataFrame, blocks: DataFrame, src_bs: int) 
         ).alias("_sr"),
     )
     src_off = (F.col("_sr") - F.col("b_top")) * F.col("b_xsize") + (cl - F.col("b_left"))
-    strip_px = (
-        F.col("pixels").substr(src_off * 2 + 1, (cr - cl) * 2)
-        if binary
-        else F.slice(F.col("pixels"), src_off + 1, cr - cl)
+    strip_px = F.col("pixels").substr(
+        src_off * PIXEL_BYTES + 1, (cr - cl) * PIXEL_BYTES
     )
     is_strip = F.col("_sr").isNotNull()
     # one withColumns: every expression binds to the ORIGINAL chunk
@@ -323,22 +325,16 @@ def _null_tile_rows(
     grid: OutputGrid,
     levels: list,
     with_overviews: bool,
-    binary: bool = False,
 ) -> DataFrame:
     """Tiles intersecting no input: pure-null fill, written without any
     read or merge (reference mosaic.py:351-359) — synthesized JVM-side
-    (array_repeat / hex-repeat for the u2 layout), never touching
-    Python."""
+    (a repeated packed value), never touching Python."""
     nullval = int(grid.nullval)
     bands = spark.range(1, grid.n_bands + 1).select(F.col("id").cast("int").alias("band"))
     g = gap_tiles.crossJoin(bands)
 
     def null_rows(sel_level, y_off, x_off, nr, nc):
-        n_px = (nr * nc).cast("int")
-        px = (
-            repeat_u2(nullval, n_px) if binary
-            else F.array_repeat(F.lit(nullval), n_px)
-        )
+        px = repeat_u2(nullval, nr * nc)
         return [
             F.lit(sel_level).cast("int").alias("level"),
             F.col("band"),
@@ -419,27 +415,23 @@ def _stitch_tail(
 ) -> MosaicResult:
     """The stitch and everything after it, shared by the direct path and
     the relayout path. ``work`` arrives already distributed by (band,
-    tile): the direct path's one Exchange, or a bucketed scan. Its pixel
-    layout sets the output layout; ``wsum`` partials (the salted blend's
-    stage 1) select the blend stage-2 kernel. Tiles of ``tiles`` with no
-    row in ``assignments`` get JVM-side null fill."""
-    binary = pixels_are_binary(work)
+    tile): the direct path's one Exchange, or a bucketed scan. ``wsum``
+    partials (the salted blend's stage 1) select the blend stage-2
+    kernel. Tiles of ``tiles`` with no row in ``assignments`` get
+    JVM-side null fill."""
     if "wsum" in work.columns:
-        fn = make_blend_stitch_fn_arrow(grid, levels, config.blend_feather, binary=binary)
+        fn = make_blend_stitch_fn_arrow(grid, levels, config.blend_feather)
     else:
-        fn = make_stitch_fn_arrow(grid, levels, config.merge_policy, binary=binary,
+        fn = make_stitch_fn_arrow(grid, levels, config.merge_policy,
                                   feather=config.blend_feather)
-    stitched = work.groupBy("band", "tile_row", "tile_col").applyInArrow(
-        fn, STITCH_SCHEMA_U2 if binary else STITCH_SCHEMA
-    )
+    stitched = work.groupBy("band", "tile_row", "tile_col").applyInArrow(fn, STITCH_SCHEMA)
     gap_tiles = tiles.join(
         assignments.select("tile_row", "tile_col").distinct(),
         on=["tile_row", "tile_col"],
         how="left_anti",
     )
     stitched = stitched.unionByName(
-        _null_tile_rows(spark, gap_tiles, grid, levels, config.with_overviews,
-                        binary=binary)
+        _null_tile_rows(spark, gap_tiles, grid, levels, config.with_overviews)
     )
     return MosaicResult(
         grid=grid,
@@ -476,8 +468,12 @@ def do_mosaic(
     — Catalyst cannot push a filter through FlatMapGroupsInArrow, so
     filtering the kernel's *output* (what resume/incremental previously
     did) re-stitches the entire mosaic and discards most of it. Pruning
-    the input side makes a k-of-n batch cost ~1/n of a full run."""
+    the input side makes a k-of-n batch cost ~1/n of a full run.
+
+    ``blocks`` pixels may be binary (packed uint16) or ``array<int>``;
+    the latter is packed once on entry (pixels.ingest)."""
     config = config or MosaicConfig()
+    blocks = ingest(blocks)
     if config.merge_policy not in ("last", "nearest", "blend"):
         raise ValueError(
             f"unknown merge_policy {config.merge_policy!r} "
@@ -496,6 +492,12 @@ def do_mosaic(
     )
     if config.check_projections:
         _check_projection_row(footprints, row)
+    if grid is not None:
+        check_nullval(grid.nullval)
+    else:
+        check_nullval(
+            _require_first(row)["nullval"] if config.nullval is None else config.nullval
+        )
     if config.check_blocks:
         validate_blocks(footprints, blocks)
 
@@ -544,11 +546,8 @@ def do_mosaic(
         from pyspark.sql import Window
 
         from .operators.stitch import make_partial_merge_fn_arrow
-        from .schema import PARTIAL_MERGE_SCHEMA, PARTIAL_MERGE_SCHEMA_U2
+        from .schema import PARTIAL_MERGE_SCHEMA
 
-        # the u2 binary layout halves the bytes of the stitch shuffle
-        # and the sink; stage 1 mirrors the blocks table's layout
-        binary = pixels_are_binary(blocks)
         # Bucket by ntile over the priority ORDER, not raw priority
         # values: sparse priorities (gaps, timestamps) would otherwise
         # degenerate into one bucket per contributor. ntile keeps
@@ -585,30 +584,26 @@ def do_mosaic(
             # make_blend_partial_fn_arrow); cold rows ride along with
             # null canvases and fold as raw contributors in stage 2
             from .operators.stitch import make_blend_partial_fn_arrow
-            from .schema import BLEND_PARTIAL_SCHEMA, BLEND_PARTIAL_SCHEMA_U2
+            from .schema import BLEND_PARTIAL_SCHEMA
 
-            bp_schema = BLEND_PARTIAL_SCHEMA_U2 if binary else BLEND_PARTIAL_SCHEMA
             merged_hot = salted.groupBy(
                 "band", "tile_row", "tile_col", "_ssalt"
             ).applyInArrow(
-                make_blend_partial_fn_arrow(grid, config.blend_feather, binary=binary),
-                bp_schema,
+                make_blend_partial_fn_arrow(grid, config.blend_feather),
+                BLEND_PARTIAL_SCHEMA,
             )
             cold = work_cold
             for c in ("wsum", "wvsum"):
                 cold = cold.withColumn(c, F.lit(None).cast("array<bigint>"))
             work = merged_hot.unionByName(
-                cold.select(*[f.name for f in bp_schema.fields])
+                cold.select(*BLEND_PARTIAL_SCHEMA.fieldNames())
             )
         else:
-            pm_schema = PARTIAL_MERGE_SCHEMA_U2 if binary else PARTIAL_MERGE_SCHEMA
             merged_hot = salted.groupBy(
                 "band", "tile_row", "tile_col", "_ssalt"
-            ).applyInArrow(
-                make_partial_merge_fn_arrow(grid, binary=binary), pm_schema
-            )
+            ).applyInArrow(make_partial_merge_fn_arrow(grid), PARTIAL_MERGE_SCHEMA)
             work = merged_hot.unionByName(
-                work_cold.select(*[f.name for f in pm_schema.fields])
+                work_cold.select(*PARTIAL_MERGE_SCHEMA.fieldNames())
             )
 
     # the stitch's ONE Exchange, sized to the cluster: a task per core

@@ -50,17 +50,16 @@ def value_histogram(tiles: DataFrame, nullval: int = 0) -> DataFrame:
     ``gdalinfo -hist`` analog the reference's stats sink stops short
     of (mosaic.py:746-794 keeps min/max/mean/stddev only).
 
-    Plan shape: JVM explode of the (unpacked-at-boundary) pixel
-    arrays feeds a partial hash aggregate — each task reduces its
-    pixels to <= 65536 (band, val) partials map-side, so the ONE
-    shuffle carries bin counts, never pixels. No Python anywhere."""
-    from ..pixels import pixels_are_binary, unpack_u2
+    Plan shape: JVM explode of the pixel payloads (unpacked at this
+    boundary; ``array<int>`` tiles are packed first by pixels.ingest)
+    feeds a partial hash aggregate — each task reduces its pixels to
+    <= 65536 (band, val) partials map-side, so the ONE shuffle carries
+    bin counts, never pixels. No Python anywhere."""
+    from ..pixels import ingest, unpack_u2
 
-    px = F.col("pixels")
-    if pixels_are_binary(tiles):
-        px = unpack_u2(px)
+    px = unpack_u2(F.col("pixels"))
     return (
-        tiles.select("band", F.explode(px).alias("val"))
+        ingest(tiles).select("band", F.explode(px).alias("val"))
         .where(F.col("val") != nullval)
         .groupBy("band", "val")
         .agg(F.count("*").alias("n_px"))

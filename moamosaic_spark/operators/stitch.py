@@ -32,56 +32,16 @@ from __future__ import annotations
 import numpy as np
 import pyarrow as pa
 
+from pyspark.sql.pandas.types import to_arrow_schema
+
+from ..pixels import PIXEL_DTYPE, decode_column, encode_column
 from ..plans.grid import OutputGrid, overview_shape
+from ..schema import BLEND_PARTIAL_SCHEMA, PARTIAL_MERGE_SCHEMA, STITCH_SCHEMA
 
-ARROW_STITCH_SCHEMA = pa.schema(
-    [
-        ("level", pa.int32()),
-        ("band", pa.int32()),
-        ("tile_row", pa.int32()),
-        ("tile_col", pa.int32()),
-        ("y_off", pa.int32()),
-        ("x_off", pa.int32()),
-        ("ysize", pa.int32()),
-        ("xsize", pa.int32()),
-        ("pixels", pa.list_(pa.int32())),
-        ("px_count", pa.int64()),
-        ("px_sum", pa.float64()),
-        ("px_ssq", pa.float64()),
-        ("px_min", pa.float64()),
-        ("px_max", pa.float64()),
-    ]
-)
-
-
-def _binary_pixel_schema(schema: pa.Schema) -> pa.Schema:
-    """The u2 layout twin: pixels as packed uint16-LE bytes (2 B/px)."""
-    i = schema.get_field_index("pixels")
-    return schema.set(i, pa.field("pixels", pa.binary()))
-
-PARTIAL_SCHEMA = pa.schema(
-    [
-        ("tile_row", pa.int32()),
-        ("tile_col", pa.int32()),
-        ("band", pa.int32()),
-        ("top", pa.int32()),
-        ("left", pa.int32()),
-        ("ysize", pa.int32()),
-        ("xsize", pa.int32()),
-        ("priority", pa.int32()),   # = salt bucket id (order-preserving)
-        ("in_top", pa.int32()),
-        ("in_left", pa.int32()),
-        ("in_ysize", pa.int32()),
-        ("in_xsize", pa.int32()),
-        ("src_ncols", pa.int32()),
-        ("src_nrows", pa.int32()),
-        ("b_top", pa.int32()),
-        ("b_left", pa.int32()),
-        ("b_ysize", pa.int32()),
-        ("b_xsize", pa.int32()),
-        ("pixels", pa.list_(pa.int32())),
-    ]
-)
+# the Arrow forms of the Spark relations the kernels emit
+ARROW_STITCH_SCHEMA = to_arrow_schema(STITCH_SCHEMA)
+ARROW_PARTIAL_SCHEMA = to_arrow_schema(PARTIAL_MERGE_SCHEMA)
+ARROW_BLEND_PARTIAL_SCHEMA = to_arrow_schema(BLEND_PARTIAL_SCHEMA)
 
 _WINDOW_COLS = (
     "top", "left", "ysize", "xsize", "priority",
@@ -177,30 +137,18 @@ def _finalize_policy(canvas, policy, best) -> None:
         valid = wsum > 0
         canvas[valid] = (
             (2 * wvsum[valid] + wsum[valid]) // (2 * wsum[valid])
-        ).astype(np.int32)
+        ).astype(canvas.dtype)
 
 
 def _extract_arrow_group(tbl: pa.Table):
-    """Column arrays + pixel buffers from one Arrow group, zero-copy
-    where the types allow. Handles both pixel layouts: list<int32>
-    (values = int32 elements) and binary u2 (values = a '<u2' view of
-    the data buffer; byte offsets halved to element offsets)."""
+    """Column arrays + the pixel payloads (element offsets, uint16
+    values) of one Arrow group, zero-copy where the types allow."""
     cols = {
         name: tbl.column(name).to_numpy(zero_copy_only=False)
         for name in _WINDOW_COLS
     }
-    px = tbl.column("pixels").combine_chunks()
-    if pa.types.is_binary(px.type):
-        offsets = np.frombuffer(
-            px.buffers()[1], dtype=np.int32, count=len(px) + 1, offset=px.offset * 4
-        )
-        data = px.buffers()[2]
-        values = (
-            np.frombuffer(data, dtype="<u2") if data is not None
-            else np.array([], dtype="<u2")
-        )
-        return cols, offsets // 2, values
-    return cols, px.offsets.to_numpy(), px.values.to_numpy(zero_copy_only=False)
+    offsets, values = decode_column(tbl.column("pixels").combine_chunks())
+    return cols, offsets, values
 
 
 def _check_run_geometry(cols, idxs, key):
@@ -247,7 +195,7 @@ def _fold_arrow_group(cols, offsets, values, canvas, nullval, policy, best, key)
         if bottom1 <= top1 or right1 <= left1:
             continue
         # padded window (mosaic.py:268-273)
-        win = np.full((in_ys, in_xs), nullval, dtype=np.int32)
+        win = np.full((in_ys, in_xs), nullval, dtype=PIXEL_DTYPE)
         row_off, col_off = max(0, -in_top), max(0, -in_left)
         for ri in idxs:
             b_top, b_left = int(cols["b_top"][ri]), int(cols["b_left"][ri])
@@ -266,23 +214,25 @@ def _fold_arrow_group(cols, offsets, values, canvas, nullval, policy, best, key)
 
 
 def make_stitch_fn_arrow(
-    grid: OutputGrid, levels: list[int], policy: str = "last", binary: bool = False,
+    grid: OutputGrid, levels: list[int], policy: str = "last", binary: bool = True,
     feather: int = 64,
 ):
     """The applyInArrow kernel for groupBy(band, tile_row, tile_col):
-    reads pixel payloads zero-copy from the Arrow list buffers and emits
-    one batched ListArray — no pandas object-column churn. ``binary``
-    emits the u2 packed layout (input layout is auto-detected)."""
+    reads pixel payloads zero-copy from the Arrow binary buffers and
+    emits one batched binary column — no pandas object-column churn.
+    ``binary`` must be True (payloads are always packed uint16, see
+    pixels.py); it stays only for callers that still pass it."""
+    if not binary:
+        raise ValueError("binary must be True: packed uint16 is the only pixel layout")
     nullval = int(grid.nullval)
     ov_shapes = {lvl: overview_shape(grid.nrows, grid.ncols, lvl) for lvl in levels}
-    out_schema = _binary_pixel_schema(ARROW_STITCH_SCHEMA) if binary else ARROW_STITCH_SCHEMA
 
     def stitch(key: tuple, tbl: pa.Table) -> pa.Table:
         band, tile_row, tile_col = (int(k.as_py() if hasattr(k, "as_py") else k) for k in key)
         cols, offsets, values = _extract_arrow_group(tbl)
         top, left = int(cols["top"][0]), int(cols["left"][0])
         ysize, xsize = int(cols["ysize"][0]), int(cols["xsize"][0])
-        canvas = np.full((ysize, xsize), nullval, dtype=np.int32)
+        canvas = np.full((ysize, xsize), nullval, dtype=PIXEL_DTYPE)
         best = _policy_state(policy, ysize, xsize, feather)
         _fold_arrow_group(cols, offsets, values, canvas, nullval, policy, best,
                           (band, tile_row, tile_col))
@@ -291,12 +241,12 @@ def make_stitch_fn_arrow(
         rows.extend(
             _pyramid_rows(band, tile_row, tile_col, top, left, canvas, levels, ov_shapes)
         )
-        return _rows_to_arrow(rows, out_schema)
+        return _rows_to_arrow(rows, ARROW_STITCH_SCHEMA)
 
     return stitch
 
 
-def make_partial_merge_fn_arrow(grid: OutputGrid, binary: bool = False):
+def make_partial_merge_fn_arrow(grid: OutputGrid):
     """Stage-1 kernel of the SALTED stitch: merge a contiguous-priority
     bucket of contributors into one partial canvas, emitted as a
     synthetic contributor row covering the bounding box of its non-null
@@ -313,7 +263,6 @@ def make_partial_merge_fn_arrow(grid: OutputGrid, binary: bool = False):
     state a value-only partial cannot.
     """
     nullval = int(grid.nullval)
-    out_schema = _binary_pixel_schema(PARTIAL_SCHEMA) if binary else PARTIAL_SCHEMA
 
     def partial(key: tuple, tbl: pa.Table) -> pa.Table:
         band, tile_row, tile_col, salt = (
@@ -322,7 +271,7 @@ def make_partial_merge_fn_arrow(grid: OutputGrid, binary: bool = False):
         cols, offsets, values = _extract_arrow_group(tbl)
         top, left = int(cols["top"][0]), int(cols["left"][0])
         ysize, xsize = int(cols["ysize"][0]), int(cols["xsize"][0])
-        canvas = np.full((ysize, xsize), nullval, dtype=np.int32)
+        canvas = np.full((ysize, xsize), nullval, dtype=PIXEL_DTYPE)
         _fold_arrow_group(cols, offsets, values, canvas, nullval, "last", None,
                           (band, tile_row, tile_col, salt))
 
@@ -352,12 +301,12 @@ def make_partial_merge_fn_arrow(grid: OutputGrid, binary: bool = False):
             "b_top": 0, "b_left": 0, "b_ysize": r1 - r0, "b_xsize": c1 - c0,
             "pixels": box.ravel(),
         }
-        return _rows_to_arrow([row], out_schema)
+        return _rows_to_arrow([row], ARROW_PARTIAL_SCHEMA)
 
     return partial
 
 
-def make_blend_partial_fn_arrow(grid: OutputGrid, feather: int, binary: bool = False):
+def make_blend_partial_fn_arrow(grid: OutputGrid, feather: int):
     """Stage-1 kernel of the SALTED BLEND stitch. Blend is a per-pixel
     SUM of (weight, weight*value) over non-null contributors —
     commutative and associative, unlike 'last' (order-dependent) or
@@ -368,11 +317,6 @@ def make_blend_partial_fn_arrow(grid: OutputGrid, feather: int, binary: bool = F
     two int64 payload columns; ``pixels`` is null on partial rows, which
     is how the stage-2 kernel tells them from raw (cold-tile) rows."""
     nullval = int(grid.nullval)
-    base = _binary_pixel_schema(PARTIAL_SCHEMA) if binary else PARTIAL_SCHEMA
-    out_schema = pa.schema(
-        list(base)
-        + [pa.field("wsum", pa.list_(pa.int64())), pa.field("wvsum", pa.list_(pa.int64()))]
-    )
 
     def partial(key: tuple, tbl: pa.Table) -> pa.Table:
         band, tile_row, tile_col, salt = (
@@ -381,7 +325,7 @@ def make_blend_partial_fn_arrow(grid: OutputGrid, feather: int, binary: bool = F
         cols, offsets, values = _extract_arrow_group(tbl)
         top, left = int(cols["top"][0]), int(cols["left"][0])
         ysize, xsize = int(cols["ysize"][0]), int(cols["xsize"][0])
-        canvas = np.full((ysize, xsize), nullval, dtype=np.int32)  # unused sink
+        canvas = np.full((ysize, xsize), nullval, dtype=PIXEL_DTYPE)  # unused sink
         best = _blend_state(ysize, xsize, feather)
         _fold_arrow_group(cols, offsets, values, canvas, nullval, "blend", best,
                           (band, tile_row, tile_col, salt))
@@ -403,7 +347,7 @@ def make_blend_partial_fn_arrow(grid: OutputGrid, feather: int, binary: bool = F
             "b_top": 0, "b_left": 0, "b_ysize": r1 - r0, "b_xsize": c1 - c0,
         }
         arrs = []
-        for field in out_schema:
+        for field in ARROW_BLEND_PARTIAL_SCHEMA:
             if field.name == "pixels":
                 arrs.append(pa.nulls(1, field.type))
             elif field.name in ("wsum", "wvsum"):
@@ -414,14 +358,12 @@ def make_blend_partial_fn_arrow(grid: OutputGrid, feather: int, binary: bool = F
                 ))
             else:
                 arrs.append(pa.array([row[field.name]], field.type))
-        return pa.Table.from_arrays(arrs, schema=out_schema)
+        return pa.Table.from_arrays(arrs, schema=ARROW_BLEND_PARTIAL_SCHEMA)
 
     return partial
 
 
-def make_blend_stitch_fn_arrow(
-    grid: OutputGrid, levels: list[int], feather: int, binary: bool = False,
-):
+def make_blend_stitch_fn_arrow(grid: OutputGrid, levels: list[int], feather: int):
     """Stage-2 kernel of the salted blend stitch: raw rows (cold tiles —
     ``pixels`` non-null) fold through the normal blend accumulate;
     partial rows (hot tiles) add their (wsum, wvsum) canvases at their
@@ -431,7 +373,6 @@ def make_blend_stitch_fn_arrow(
 
     nullval = int(grid.nullval)
     ov_shapes = {lvl: overview_shape(grid.nrows, grid.ncols, lvl) for lvl in levels}
-    out_schema = _binary_pixel_schema(ARROW_STITCH_SCHEMA) if binary else ARROW_STITCH_SCHEMA
 
     def stitch(key: tuple, tbl: pa.Table) -> pa.Table:
         band, tile_row, tile_col = (
@@ -444,7 +385,7 @@ def make_blend_stitch_fn_arrow(
         left = int(tbl.column("left")[0].as_py())
         ysize = int(tbl.column("ysize")[0].as_py())
         xsize = int(tbl.column("xsize")[0].as_py())
-        canvas = np.full((ysize, xsize), nullval, dtype=np.int32)
+        canvas = np.full((ysize, xsize), nullval, dtype=PIXEL_DTYPE)
         best = _blend_state(ysize, xsize, feather)
         if raw_tbl.num_rows:
             cols, offsets, values = _extract_arrow_group(raw_tbl)
@@ -470,28 +411,13 @@ def make_blend_stitch_fn_arrow(
         rows.extend(
             _pyramid_rows(band, tile_row, tile_col, top, left, canvas, levels, ov_shapes)
         )
-        return _rows_to_arrow(rows, out_schema)
+        return _rows_to_arrow(rows, ARROW_STITCH_SCHEMA)
 
     return stitch
 
 
 def _rows_to_arrow(rows: list[dict], schema: pa.Schema) -> pa.Table:
-    pix = [r["pixels"] for r in rows]
-    lengths = np.fromiter((len(p) for p in pix), dtype=np.int64, count=len(pix))
-    offsets = np.concatenate(([0], np.cumsum(lengths)))
-    values = np.concatenate(pix) if pix else np.array([], dtype=np.int32)
-    if pa.types.is_binary(schema.field("pixels").type):
-        # u2 layout: pack the int canvases to uint16-LE bytes (2 B/px)
-        data = np.ascontiguousarray(values.astype("<u2"))
-        pixels = pa.Array.from_buffers(
-            pa.binary(),
-            len(pix),
-            [None, pa.py_buffer((offsets * 2).astype(np.int32)), pa.py_buffer(data)],
-        )
-    else:
-        pixels = pa.ListArray.from_arrays(
-            pa.array(offsets, type=pa.int32()), pa.array(values, type=pa.int32())
-        )
+    pixels = encode_column([r["pixels"] for r in rows])
     arrs = []
     for field in schema:
         if field.name == "pixels":

@@ -1,48 +1,115 @@
-"""Pixel payload layouts.
+"""The pixel payload format — defined here and nowhere else.
 
-The engine's dominant cost at scale is its ONE wide shuffle: pixel
-chunks moving into their (band, tile) stitch groups. Two storage
-layouts for the ``pixels`` column:
+Every pixel payload of the engine (the ``blocks`` table, the work
+relation and relayout table feeding the stitch, the stitch output,
+reprojected blocks, focal halo fragments) is ONE ``binary`` value:
+row-major uint16 little-endian, 2 bytes/px (SURVEY §7.4: the uint16
+rasters the reference targets). Half the bytes of an int32 array on
+every scan, shuffle and spill, and one flat buffer across the Python
+boundary — kernels decode it zero-copy.
 
-* ``array<int>`` ("i4") — 4 bytes/px on the wire; the compatibility
-  layout (plain SQL can aggregate it directly).
-* ``binary`` ("u2") — row-major uint16 little-endian, 2 bytes/px;
-  HALVES the bytes of every pixel shuffle/scan/spill. Valid for the
-  uint16 rasters the reference targets (SURVEY §7.4); kernels decode
-  zero-copy with ``np.frombuffer(buf, '<u2')``.
+This module owns:
 
-The layout is detected from the blocks DataFrame's schema — no config
-knob to keep in sync — and the stitch output uses the same layout as
-its input. Pack/unpack below are JVM-side column expressions (hex
-string bridge; linear, no Python), used at generation and
-correctness-query boundaries, never in the hot path.
+* the element type and byte width (``PIXEL_TYPE``, ``PIXEL_DTYPE``,
+  ``PIXEL_BYTES``, ``PIXEL_MAX``);
+* the numpy pair ``decode`` / ``encode`` (one payload), and its Arrow
+  column form ``decode_column`` / ``encode_column`` (a batch);
+* ``ingest``, the ONE place an ``array<int>`` payload is accepted: it
+  passes a binary column through and packs an integer-array column once,
+  JVM-side, with the range-guarded ``pack_u2``. Every public entry that
+  takes pixels calls it first, so nothing below sees a second layout;
+* the JVM-side column expressions (pack/unpack/repeat) used at
+  generation and correctness-query boundaries, never in the hot path.
+
+To read a tile yourself: ``np.frombuffer(row.pixels, "<u2")`` (that is
+``decode``), or ``unpack_u2`` in SQL.
 """
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import Column, DataFrame, functions as F, types as T
 
+PIXEL_TYPE = T.BinaryType()          # Spark type of every ``pixels`` column
+PIXEL_DTYPE = np.dtype("<u2")        # one pixel: uint16 little-endian
+PIXEL_BYTES = PIXEL_DTYPE.itemsize   # 2
+PIXEL_MAX = 0xFFFF
 
-def pixels_are_binary(df: DataFrame, col: str = "pixels") -> bool:
-    return isinstance(df.schema[col].dataType, T.BinaryType)
+_INT_TYPES = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
 
 
-def hex4_le(value: int) -> str:
-    """The 4-hex-char little-endian encoding of one uint16 value —
-    the unit for JVM-side repeat/concat construction of binary rows."""
-    v = int(value)
-    if not (0 <= v <= 0xFFFF):
-        raise ValueError(f"pixel value {v} outside uint16 range")
-    return f"{v & 0xFF:02X}{v >> 8:02X}"
+def decode(buf) -> np.ndarray:
+    """One payload (bytes-like, or None) -> its uint16 pixels, zero-copy."""
+    if buf is None:
+        return np.empty(0, PIXEL_DTYPE)
+    return np.frombuffer(buf, PIXEL_DTYPE)
+
+
+def _as_pixel_array(values) -> np.ndarray:
+    """Contiguous uint16 pixels; other integer arrays are range-checked
+    first (a uint16 canvas, the kernels' own, needs no check or copy)."""
+    a = np.asarray(values)
+    if a.dtype == PIXEL_DTYPE:
+        return np.ascontiguousarray(a)
+    if a.size:
+        lo, hi = a.min(), a.max()
+        if lo < 0 or hi > PIXEL_MAX:
+            raise ValueError(f"pixel value {lo if lo < 0 else hi} outside uint16 range")
+    return a.astype(PIXEL_DTYPE)
+
+
+def encode(values) -> bytes:
+    """Integer pixels -> one payload. Values outside [0, 65535] raise."""
+    return _as_pixel_array(values).tobytes()
+
+
+def decode_column(arr):
+    """An Arrow binary payload column -> (element offsets, uint16
+    values): payload i is ``values[offsets[i]:offsets[i + 1]]``.
+    Zero-copy: a view of the column's own data buffer."""
+    offsets = np.frombuffer(
+        arr.buffers()[1], dtype=np.int32, count=len(arr) + 1, offset=arr.offset * 4
+    )
+    return offsets // PIXEL_BYTES, decode(arr.buffers()[2])
+
+
+def encode_column(payloads: list):
+    """A non-empty list of integer pixel arrays -> one Arrow binary
+    column."""
+    import pyarrow as pa
+
+    lengths = np.fromiter((len(p) for p in payloads), dtype=np.int64, count=len(payloads))
+    offsets = np.concatenate(([0], np.cumsum(lengths))) * PIXEL_BYTES
+    data = _as_pixel_array(np.concatenate(payloads))
+    return pa.Array.from_buffers(
+        pa.binary(),
+        len(payloads),
+        [None, pa.py_buffer(offsets.astype(np.int32)), pa.py_buffer(data)],
+    )
+
+
+def ingest(df: DataFrame, col: str = "pixels") -> DataFrame:
+    """The one ingest adaptor. A binary ``col`` passes through
+    unchanged; an integer-array ``col`` is packed once, JVM-side
+    (``pack_u2``: a value outside [0, 65535] fails the job instead of
+    wrapping). Any other type raises TypeError."""
+    t = df.schema[col].dataType
+    if t == PIXEL_TYPE:
+        return df
+    if isinstance(t, T.ArrayType) and isinstance(t.elementType, _INT_TYPES):
+        return df.withColumn(col, pack_u2(F.col(col)))
+    raise TypeError(
+        f"column {col!r} must be binary (uint16 LE) or an integer array, "
+        f"got {t.simpleString()}"
+    )
 
 
 def _u2_le_hex(x: Column) -> Column:
     """4-hex-char little-endian encoding of one uint16 column value.
     Values outside [0, 65535] raise at runtime (lpad would otherwise
-    TRUNCATE the high-byte hex and silently corrupt the pixel — the
-    column twin of hex4_le's ValueError)."""
+    TRUNCATE the high-byte hex and silently corrupt the pixel)."""
     guard = F.assert_true(
-        (x >= 0) & (x <= 0xFFFF), F.concat(F.lit("pixel value outside uint16: "), x)
+        (x >= 0) & (x <= PIXEL_MAX), F.concat(F.lit("pixel value outside uint16: "), x)
     )
     lo = F.lpad(F.hex(x % 256), 2, "0")
     hi = F.lpad(F.hex((x / 256).cast("int")), 2, "0")
@@ -108,12 +175,14 @@ def unpack_u2(bin_col: Column, chunk_bytes: int = 512) -> Column:
     return F.when(F.length(bin_col) == 0, empty).otherwise(decoded)
 
 
-def repeat_u2(value: int, count: Column) -> Column:
+def repeat_u2(value: int | Column, count: Column) -> Column:
     """binary of ``count`` repeats of one uint16 value (null-fill rows),
-    synthesized JVM-side."""
-    return F.unhex(F.repeat(F.lit(hex4_le(value)), count.cast("int")))
+    synthesized JVM-side. ``value`` may be a column (per-row nodata); an
+    int is encoded here, a literal costing no per-call expression tree."""
+    unit = _u2_le_hex(value) if isinstance(value, Column) else F.lit(encode([value]).hex())
+    return F.unhex(F.repeat(unit, count.cast("int")))
 
 
-def pixel_count(col: Column, binary: bool) -> Column:
-    """Number of pixels in a payload regardless of layout."""
-    return (F.length(col) / 2).cast("long") if binary else F.size(col).cast("long")
+def pixel_count(col: Column) -> Column:
+    """Number of pixels in a payload column."""
+    return (F.length(col) / PIXEL_BYTES).cast("long")

@@ -22,8 +22,9 @@ from __future__ import annotations
 import math
 from dataclasses import dataclass
 
-import numpy as np
 from pyspark.sql import DataFrame, SparkSession, functions as F
+
+from ..pixels import PIXEL_BYTES
 
 
 @dataclass(frozen=True)
@@ -127,7 +128,7 @@ def stitch_partitions(
     kernel per 1024² tile), so a task per core, each folding many
     groups, is the cheapest shape; the bytes term keeps a task's input
     bounded as the mosaic grows. The stitch bytes are estimated as the
-    output canvas (groups x blocksize² x pixel size): every
+    output canvas (groups x blocksize² x pixels.PIXEL_BYTES): every
     contributor pixel lands in exactly one group, so the input is that
     times the mean overlap depth. ``tile_row_range=(lo, hi)`` counts
     only the tiles of that half-open row range (do_mosaic's restriction).
@@ -141,7 +142,7 @@ def stitch_partitions(
     advisory = sc._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
         spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
     )
-    est_bytes = groups * blocksize * blocksize * np.dtype(grid.dtype).itemsize
+    est_bytes = groups * blocksize * blocksize * PIXEL_BYTES
     return min(groups, max(sc.defaultParallelism, math.ceil(est_bytes / advisory)))
 
 

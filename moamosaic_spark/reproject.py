@@ -36,6 +36,7 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F
 
+from .pixels import decode, encode, ingest, repeat_u2
 from .schema import BLOCKS_SCHEMA
 
 
@@ -174,10 +175,8 @@ def _assemble_window(
     """Fill the bounded source window [sy_lo..sy_hi] x [sx_lo..sx_hi]
     (inclusive) from the covering source chunks, nullval elsewhere —
     shared by the same-CRS resample and the cross-CRS warp kernels.
-    Chunks arrive in either engine layout: packed u2 bytes decode
-    zero-copy with np.frombuffer (the blocks table is never unpacked
-    JVM-side — guide §4.2: decode at the native kernel, not through
-    interpreted per-pixel expressions), int arrays as before."""
+    Packed chunks decode zero-copy here (guide §4.2: decode at the
+    native kernel, not through interpreted per-pixel expressions)."""
     win = np.full((sy_hi - sy_lo + 1, sx_hi - sx_lo + 1), nullval, dtype=np.int32)
     for r in rows:
         bt, bl = int(r.b_top), int(r.b_left)
@@ -186,12 +185,7 @@ def _assemble_window(
         x0c, x1c = max(bl, sx_lo), min(bl + bxs, sx_hi + 1)
         if y1c <= y0c or x1c <= x0c:
             continue
-        p = r.pixels
-        chunk = (
-            np.frombuffer(p, dtype="<u2").astype(np.int32)
-            if isinstance(p, (bytes, bytearray))
-            else np.asarray(p, dtype=np.int32)
-        ).reshape(bys, bxs)
+        chunk = decode(r.pixels).reshape(bys, bxs)
         win[y0c - sy_lo: y1c - sy_lo, x0c - sx_lo: x1c - sx_lo] = chunk[
             y0c - bt: y1c - bt, x0c - bl: x1c - bl
         ]
@@ -357,7 +351,7 @@ def resample_blocks(
     from .session import ensure_workers_can_import
 
     ensure_workers_can_import(footprints.sparkSession)
-    blocks = _as_array_blocks(blocks)
+    blocks = ingest(blocks)
     vfp = plan_rescaled_footprints(footprints, out_xres, out_yres)
     meta = vfp.select(
         "media_ref", "n_bands", "s_x0", "s_y0", "s_x_res", "s_y_res",
@@ -393,7 +387,7 @@ def resample_blocks(
                     "b_left": int(g.tb_left),
                     "b_ysize": int(g.tb_ysize),
                     "b_xsize": int(g.tb_xsize),
-                    "pixels": dst.ravel(),
+                    "pixels": encode(dst.ravel()),
                 }
             ],
             columns=[f.name for f in BLOCKS_SCHEMA.fields],
@@ -415,16 +409,6 @@ def _split_covered(t: DataFrame) -> tuple[DataFrame, DataFrame]:
         & (F.col("_sx_hi") >= 0) & (F.col("_sx_lo") <= F.col("s_ncols") - 1)
     )
     return t.where(covered_pred), t.where(~covered_pred)
-
-
-def _as_array_blocks(blocks: DataFrame) -> DataFrame:
-    """Both engine pixel layouts pass through UNCHANGED: the window
-    assembler (_assemble_window) decodes packed u2 bytes zero-copy with
-    np.frombuffer inside the kernel, so a binary blocks table keeps its
-    2 B/px layout through the chunk join (half the shuffle bytes) and
-    never pays the interpreted JVM per-pixel decode that the previous
-    unpack-at-entry did (measured ~1 s/Mpx)."""
-    return blocks
 
 
 def _join_source_chunks(covered: DataFrame, blocks: DataFrame, sbs: int) -> DataFrame:
@@ -452,7 +436,7 @@ def _join_source_chunks(covered: DataFrame, blocks: DataFrame, sbs: int) -> Data
 
 def _null_margin_chunks(margin: DataFrame) -> DataFrame:
     """Pure-margin chunks (outside the source after grid snap): nullval
-    arrays synthesized JVM-side, matching the warp's dstNodata fill."""
+    payloads synthesized JVM-side, matching the warp's dstNodata fill."""
     return margin.select(
         "media_ref",
         F.col("band").cast("int").alias("band"),
@@ -462,8 +446,8 @@ def _null_margin_chunks(margin: DataFrame) -> DataFrame:
         F.col("tb_left").cast("int").alias("b_left"),
         F.col("tb_ysize").cast("int").alias("b_ysize"),
         F.col("tb_xsize").cast("int").alias("b_xsize"),
-        F.array_repeat(
-            F.col("nullval").cast("int"), (F.col("tb_ysize") * F.col("tb_xsize")).cast("int")
+        repeat_u2(
+            F.col("nullval").cast("int"), F.col("tb_ysize") * F.col("tb_xsize")
         ).alias("pixels"),
     )
 
@@ -701,7 +685,7 @@ def warp_blocks(
     from .session import ensure_workers_can_import
 
     ensure_workers_can_import(footprints.sparkSession)
-    blocks = _as_array_blocks(blocks)
+    blocks = ingest(blocks)
     dst_epsg = parse_epsg(dst_crs)
     sbs = int(src_blocksize)
     ox, oy = float(out_xres), float(out_yres)
@@ -809,7 +793,7 @@ def warp_blocks(
                     "b_left": int(g.tb_left),
                     "b_ysize": int(g.tb_ysize),
                     "b_xsize": int(g.tb_xsize),
-                    "pixels": dst.ravel(),
+                    "pixels": encode(dst.ravel()),
                 }
             ],
             columns=[f.name for f in BLOCKS_SCHEMA.fields],

@@ -8,14 +8,13 @@ dimension table (the analog of the reference's ImageInfo metadata scan,
 fact table of chunked pixel payloads (the analog of windowed
 band.ReadAsArray, /root/reference/moamosaic/mosaic.py:264).
 
-Pixel payloads come in two layouts (see pixels.py): ``array<int>``
-(int32-widened — Spark has no unsigned types; uint16 values are exactly
-representable) and the ``binary`` u2 layout (packed uint16 LE, 2 B/px)
-that halves the bytes of the stitch shuffle. The layout is detected
-from the blocks table and mirrored in the stitch output.
+Every ``pixels`` column is ``pixels.PIXEL_TYPE``: packed uint16 LE,
+2 B/px — the one payload format, owned by pixels.py.
 """
 
 from pyspark.sql import types as T
+
+from .pixels import PIXEL_TYPE
 
 # ---------------------------------------------------------------------------
 # documents — interleaved text + media spans (engine input surface)
@@ -71,7 +70,7 @@ BLOCKS_SCHEMA = T.StructType(
         T.StructField("b_left", T.IntegerType()),
         T.StructField("b_ysize", T.IntegerType()),
         T.StructField("b_xsize", T.IntegerType()),
-        T.StructField("pixels", T.ArrayType(T.IntegerType())),  # row-major
+        T.StructField("pixels", PIXEL_TYPE),  # row-major
     ]
 )
 
@@ -88,7 +87,7 @@ STITCH_SCHEMA = T.StructType(
         T.StructField("x_off", T.IntegerType()),
         T.StructField("ysize", T.IntegerType()),
         T.StructField("xsize", T.IntegerType()),
-        T.StructField("pixels", T.ArrayType(T.IntegerType())),
+        T.StructField("pixels", PIXEL_TYPE),
         # single-pass stats partials (level 0 only; ref mosaic.py:758-777)
         T.StructField("px_count", T.LongType()),
         T.StructField("px_sum", T.DoubleType()),
@@ -120,46 +119,21 @@ PARTIAL_MERGE_SCHEMA = T.StructType(
         T.StructField("b_left", T.IntegerType()),
         T.StructField("b_ysize", T.IntegerType()),
         T.StructField("b_xsize", T.IntegerType()),
-        T.StructField("pixels", T.ArrayType(T.IntegerType())),
+        T.StructField("pixels", PIXEL_TYPE),
     ]
 )
 
-# ---------------------------------------------------------------------------
-# u2 binary pixel layout (pixels = uint16 LE bytes, 2 B/px — see pixels.py):
-# same relations with the payload column swapped to BinaryType. The layout
-# is detected from the blocks table; stitch output mirrors its input.
-# ---------------------------------------------------------------------------
-
-def _with_binary_pixels(schema: T.StructType) -> T.StructType:
-    return T.StructType(
-        [
-            T.StructField(f.name, T.BinaryType() if f.name == "pixels" else f.dataType)
-            for f in schema.fields
-        ]
-    )
-
-
-BLOCKS_SCHEMA_U2 = _with_binary_pixels(BLOCKS_SCHEMA)
-STITCH_SCHEMA_U2 = _with_binary_pixels(STITCH_SCHEMA)
-PARTIAL_MERGE_SCHEMA_U2 = _with_binary_pixels(PARTIAL_MERGE_SCHEMA)
-
-
-def _with_blend_partials(schema: T.StructType) -> T.StructType:
-    """Salted-BLEND stage-1 output: the partial-merge relation plus the
-    two int64 partial canvases (weight sum, weighted value sum). On raw
-    (cold-tile) rows the canvases are null; on partial rows ``pixels``
-    is null — how the stage-2 kernel tells them apart."""
-    return T.StructType(
-        list(schema.fields)
-        + [
-            T.StructField("wsum", T.ArrayType(T.LongType())),
-            T.StructField("wvsum", T.ArrayType(T.LongType())),
-        ]
-    )
-
-
-BLEND_PARTIAL_SCHEMA = _with_blend_partials(PARTIAL_MERGE_SCHEMA)
-BLEND_PARTIAL_SCHEMA_U2 = _with_blend_partials(PARTIAL_MERGE_SCHEMA_U2)
+# salted-BLEND stage-1 output: the partial-merge relation plus the two
+# int64 partial canvases (weight sum, weighted value sum). On raw
+# (cold-tile) rows the canvases are null; on partial rows ``pixels`` is
+# null — how the stage-2 kernel tells them apart.
+BLEND_PARTIAL_SCHEMA = T.StructType(
+    list(PARTIAL_MERGE_SCHEMA.fields)
+    + [
+        T.StructField("wsum", T.ArrayType(T.LongType())),
+        T.StructField("wvsum", T.ArrayType(T.LongType())),
+    ]
+)
 
 STATS_SCHEMA = T.StructType(
     [

@@ -32,7 +32,9 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..mosaic import (
     MosaicConfig, MosaicResult, _assign, _contributor_chunks, _restrict_tiles, _stitch_tail,
+    check_nullval,
 )
+from ..pixels import PIXEL_TYPE, ingest
 from ..plans.grid import (
     OutputGrid, make_output_grid, make_tile_relation, overview_levels, stitch_partitions,
 )
@@ -87,8 +89,10 @@ def relayout_to_table(
     ``grid``/``fingerprint`` let a caller that already aggregated the
     footprint dim table (do_mosaic's summary pass) skip re-collecting
     it. ``n_buckets`` defaults to ``config.relayout_buckets``, else to
-    the direct stitch's partition count (_bucket_count)."""
+    the direct stitch's partition count (_bucket_count). ``array<int>``
+    blocks are packed once on entry (pixels.ingest)."""
     config = config or MosaicConfig()
+    blocks = ingest(blocks)
     if fingerprint is None:
         fingerprint = footprints_fingerprint(footprints)
     from ..session import ensure_workers_can_import
@@ -96,6 +100,7 @@ def relayout_to_table(
     ensure_workers_can_import(spark)
     if grid is None:
         grid = make_output_grid(footprints, config.nullval)
+    check_nullval(grid.nullval)
     n_buckets = _bucket_count(spark, grid, config, n_buckets)
     tiles = make_tile_relation(spark, grid, config.blocksize)
     assignments = _assign(tiles, footprints, grid, config)
@@ -230,8 +235,8 @@ def ensure_relayout_table(
     """Create an EMPTY bucketed work table pinned to ``grid`` if it does
     not exist yet — the incremental mosaic appends each micro-batch's
     work rows into it (relayout_append) and stitches touched tiles with
-    no Exchange. The schema (including the pixel layout) is derived
-    from a zero-row run of the join+clip plan over ``blocks``. The
+    no Exchange. The schema is derived from a zero-row run of the
+    join+clip plan over ``blocks``. The
     bucket count defaults as in relayout_to_table.
 
     If the catalog does not know the table but its warehouse files
@@ -252,7 +257,7 @@ def ensure_relayout_table(
         tiles,
         _empty_footprints(spark), grid, strategy="broadcast",
     )
-    empty = _contributor_chunks(assignments, blocks.limit(0), config.src_blocksize)
+    empty = _contributor_chunks(assignments, ingest(blocks).limit(0), config.src_blocksize)
     n_buckets = _bucket_count(spark, grid, config, n_buckets)
     _write_bucketed(empty, table, n_buckets, "overwrite")
     _write_meta(spark, table, grid, config, n_buckets)
@@ -281,7 +286,7 @@ def relayout_append(
     tiles = make_tile_relation(spark, grid, int(m["blocksize"]))
     assignments = assign_inputs(tiles, footprints_new, grid, strategy="broadcast")
     work = _contributor_chunks(
-        assignments, blocks, int(m.get("src_blocksize", 256))
+        assignments, ingest(blocks), int(m.get("src_blocksize", 256))
     )
     _write_bucketed(work, table, int(m.get("n_buckets", 64)), "append")
 
@@ -318,6 +323,13 @@ def _table_accessible(spark: SparkSession, table: str) -> bool:
         except Exception:
             return False
     return False
+
+
+def _packed(work: DataFrame) -> bool:
+    """Whether a relayout table holds packed pixels — a schema read, no
+    job. Tables built from ``array<int>`` blocks by older versions do
+    not."""
+    return work.schema["pixels"].dataType == PIXEL_TYPE
 
 
 def _grid_from_meta(m: dict) -> OutputGrid:
@@ -367,6 +379,7 @@ def mosaic_via_relayout(
             and int(m.get("src_blocksize", 256)) == config.src_blocksize
             and int(m["min_overview_size"]) == config.min_overview_size
             and (grid is None or _grid_from_meta(m) == grid)
+            and _packed(spark.table(table))
         )
     if not usable:
         if grid is not None:
@@ -409,6 +422,12 @@ def stitch_from_relayout(
     from ..session import ensure_workers_can_import
 
     ensure_workers_can_import(spark)
+    src = spark.table(table)
+    if not _packed(src):
+        raise ValueError(
+            f"relayout table {table!r} does not hold packed uint16 pixels "
+            "(built from array<int> blocks?); rebuild it with relayout_to_table"
+        )
     m = _load_meta(spark, table)
     grid = _grid_from_meta(m)
     blocksize = int(m["blocksize"])
@@ -418,7 +437,7 @@ def stitch_from_relayout(
         else []
     )
     # the bucketed scan already distributes by (band, tile): no Exchange
-    work = _restrict_tiles(spark.table(table), tile_row_range, tile_keys)
+    work = _restrict_tiles(src, tile_row_range, tile_keys)
     tiles = _restrict_tiles(
         make_tile_relation(spark, grid, blocksize), tile_row_range, tile_keys
     )

@@ -21,6 +21,7 @@ from dataclasses import dataclass, field
 import numpy as np
 import pandas as pd
 
+from ..pixels import encode
 from ..plans.grid import OutputGrid, block_edges, overview_shape
 
 PROJECTION = "EPSG:32756"
@@ -162,11 +163,8 @@ def footprints_pdf(rasters: list[SynthRaster]) -> pd.DataFrame:
     )
 
 
-def blocks_pdf(
-    rasters: list[SynthRaster], src_blocksize: int = 256, layout: str = "i4"
-) -> pd.DataFrame:
-    """``layout='i4'`` -> pixels as int32 arrays; ``'u2'`` -> packed
-    uint16-LE bytes (the 2 B/px shuffle layout, pixels.py)."""
+def blocks_pdf(rasters: list[SynthRaster], src_blocksize: int = 256) -> pd.DataFrame:
+    """The blocks fact table, pixels packed (pixels.encode)."""
     rows = []
     sbs = src_blocksize
     for r in rasters:
@@ -175,7 +173,6 @@ def blocks_pdf(
                 for bc in range((r.ncols + sbs - 1) // sbs):
                     top, left = br * sbs, bc * sbs
                     chunk = arr[top: top + sbs, left: left + sbs]
-                    px = chunk.ravel()
                     rows.append(
                         dict(
                             media_ref=r.media_ref,
@@ -186,11 +183,7 @@ def blocks_pdf(
                             b_left=left,
                             b_ysize=chunk.shape[0],
                             b_xsize=chunk.shape[1],
-                            pixels=(
-                                px.astype("<u2").tobytes()
-                                if layout == "u2"
-                                else px.astype("int32")
-                            ),
+                            pixels=encode(chunk.ravel()),
                         )
                     )
     return pd.DataFrame(rows)
@@ -235,26 +228,19 @@ def corpus_to_spark(
     rasters: list[SynthRaster],
     src_blocksize: int = 256,
     seed: int = 42,
-    layout: str = "i4",
 ):
     """Build the (documents, footprints, blocks) Spark DataFrames for a
     synthetic corpus. Requires an Arrow-enabled session
-    (moamosaic_spark.session.get_spark). ``layout`` picks the blocks
-    pixel layout ('i4' arrays | 'u2' packed binary)."""
-    from ..schema import (
-        BLOCKS_SCHEMA, BLOCKS_SCHEMA_U2, DOCUMENTS_SCHEMA, FOOTPRINTS_SCHEMA,
-    )
+    (moamosaic_spark.session.get_spark)."""
+    from ..schema import BLOCKS_SCHEMA, DOCUMENTS_SCHEMA, FOOTPRINTS_SCHEMA
 
     docs = spark.createDataFrame(
         documents_pdf(rasters, seed=seed).to_dict("records"), schema=DOCUMENTS_SCHEMA
     )
     fp = spark.createDataFrame(footprints_pdf(rasters), schema=FOOTPRINTS_SCHEMA)
-    bl = blocks_pdf(rasters, src_blocksize, layout=layout)
-    if layout == "u2":
-        blocks = spark.createDataFrame(bl, schema=BLOCKS_SCHEMA_U2)
-    else:
-        bl["pixels"] = bl["pixels"].map(lambda a: np.asarray(a, dtype="int32"))
-        blocks = spark.createDataFrame(bl, schema=BLOCKS_SCHEMA)
+    blocks = spark.createDataFrame(
+        blocks_pdf(rasters, src_blocksize), schema=BLOCKS_SCHEMA
+    )
     return docs, fp, blocks
 
 

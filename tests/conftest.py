@@ -1,4 +1,3 @@
-import numpy as np
 import pytest
 from pyspark.sql import SparkSession
 
@@ -27,8 +26,6 @@ def to_footprints(spark, pdf):
 
 
 def to_blocks(spark, pdf):
-    pdf = pdf.copy()
-    pdf["pixels"] = pdf["pixels"].map(lambda a: np.asarray(a, dtype="int32"))
     return spark.createDataFrame(pdf, schema=BLOCKS_SCHEMA)
 
 

@@ -14,6 +14,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from moamosaic_spark.mosaic import MosaicConfig, do_mosaic
+from moamosaic_spark.pixels import decode
 from moamosaic_spark.sources import synth
 from moamosaic_spark.streaming.incremental import process_batch, read_seen
 from moamosaic_spark.streaming.lineage import resumable_mosaic
@@ -31,7 +32,7 @@ def corpus(spark):
 
 def _tiles_map(df):
     return {
-        (r.band, r.tile_row, r.tile_col): np.asarray(r.pixels, dtype=np.int32)
+        (r.band, r.tile_row, r.tile_col): decode(r.pixels)
         for r in df.collect()
     }
 
@@ -172,7 +173,7 @@ def test_incremental_midbatch_failure_replay(spark, tmp_path):
     for r in spark.read.parquet(f"{out}/tiles").collect():
         key = (r.band, r.tile_row, r.tile_col)
         assert key not in got, f"duplicate tile {key}"
-        got[key] = np.asarray(r.pixels, dtype=np.int32).reshape(r.ysize, r.xsize)
+        got[key] = decode(r.pixels).reshape(r.ysize, r.xsize)
     covered = {(1, ti, tj) for (ti, tj, _ref) in want.assignments}
     assert set(got.keys()) == covered
     for key, arr in got.items():

@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from moamosaic_spark.mosaic import MosaicConfig, do_mosaic, validate_blocks
+from moamosaic_spark.pixels import decode
 from moamosaic_spark.sources import synth
 from tests.conftest import to_blocks, to_footprints
 
@@ -46,7 +47,7 @@ def test_check_blocks_passes_complete_corpus(spark, corpus):
     res = do_mosaic(spark, fp, blocks, MosaicConfig(**CFG, check_blocks=True))
     want = synth.oracle(rasters, blocksize=64, min_overview_size=9999)
     got = {
-        (r.band, r.tile_row, r.tile_col): np.asarray(r.pixels).reshape(r.ysize, r.xsize)
+        (r.band, r.tile_row, r.tile_col): decode(r.pixels).reshape(r.ysize, r.xsize)
         for r in res.tiles.collect()
     }
     assert set(got) == set(want.tiles)

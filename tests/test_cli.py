@@ -8,6 +8,7 @@ import numpy as np
 import pytest
 
 from moamosaic_spark.cli import main
+from moamosaic_spark.pixels import decode
 from moamosaic_spark.sources import synth
 from tests.conftest import to_blocks, to_footprints
 
@@ -43,7 +44,7 @@ def test_cli_plain_mosaic(spark, staged):
     rasters = synth.grid3x3(150, 150)
     want = synth.oracle(rasters, blocksize=64, min_overview_size=9999)
     for r in tiles:
-        arr = np.asarray(r.pixels, dtype=np.int32).reshape(r.ysize, r.xsize)
+        arr = decode(r.pixels).reshape(r.ysize, r.xsize)
         np.testing.assert_array_equal(arr, want.tiles[(r.band, r.tile_row, r.tile_col)])
 
 
@@ -107,7 +108,7 @@ def test_cli_relayout_reuse(spark, staged):
     want = synth.oracle(rasters, blocksize=64, min_overview_size=9999)
     for out in (out1, out2):
         for r in _canvas(spark, out):
-            arr = np.asarray(r.pixels, dtype=np.int32).reshape(r.ysize, r.xsize)
+            arr = decode(r.pixels).reshape(r.ysize, r.xsize)
             np.testing.assert_array_equal(
                 arr, want.tiles[(r.band, r.tile_row, r.tile_col)])
     spark.sql("DROP TABLE IF EXISTS cli_relayout_t")

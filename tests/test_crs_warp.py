@@ -9,6 +9,7 @@ import pytest
 from moamosaic_spark import crs
 from moamosaic_spark import reproject as RP
 from moamosaic_spark.mosaic import MosaicConfig, do_mosaic
+from moamosaic_spark.pixels import decode
 from moamosaic_spark.sources import synth
 from tests.conftest import to_blocks, to_footprints
 
@@ -69,9 +70,7 @@ def _collect_canvas(nfp, nblocks, ref="r000"):
     meta = [r for r in nfp.collect() if r.media_ref == ref][0]
     got = np.full((meta.nrows, meta.ncols), -1, dtype=np.int32)
     for r in nblocks.where(f"media_ref = '{ref}'").collect():
-        got[r.b_top: r.b_top + r.b_ysize, r.b_left: r.b_left + r.b_xsize] = np.asarray(
-            r.pixels, dtype=np.int32
-        ).reshape(r.b_ysize, r.b_xsize)
+        got[r.b_top: r.b_top + r.b_ysize, r.b_left: r.b_left + r.b_xsize] = decode(r.pixels).reshape(r.b_ysize, r.b_xsize)
     assert (got != -1).all()
     return meta, got
 

@@ -6,6 +6,7 @@ pipeline untouched."""
 import numpy as np
 
 from moamosaic_spark.mosaic import MosaicConfig, do_mosaic
+from moamosaic_spark.pixels import decode
 from moamosaic_spark.sources import synth
 from moamosaic_spark.sources.docs import (
     footprints_from_docs,
@@ -34,11 +35,11 @@ def test_docs_driven_mosaic_equals_direct(spark):
     direct = do_mosaic(spark, fp_meta, blocks, cfg)
 
     a = {
-        (r.band, r.tile_row, r.tile_col): np.asarray(r.pixels, dtype=np.int32)
+        (r.band, r.tile_row, r.tile_col): decode(r.pixels)
         for r in via_docs.tiles.collect()
     }
     b = {
-        (r.band, r.tile_row, r.tile_col): np.asarray(r.pixels, dtype=np.int32)
+        (r.band, r.tile_row, r.tile_col): decode(r.pixels)
         for r in direct.tiles.collect()
     }
     assert set(a) == set(b)

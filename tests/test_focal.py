@@ -3,8 +3,9 @@
 Truth model: assemble the full raster in numpy, compute every output
 pixel from the whole raster directly (no tiling), and compare against
 the distributed tiled computation pixel-for-pixel — so the cross-tile
-halo exchange is what the test exercises. Both pixel layouts
-(array<int> and packed u2 binary) must agree bit-for-bit.
+halo exchange is what the test exercises. array<int> tiles (packed by
+the ingest adaptor, pixels.ingest) and binary tiles must give
+identical output.
 """
 
 import numpy as np
@@ -18,6 +19,7 @@ from moamosaic_spark.functions.focal import (
     D8_DIAG_W, D8_DIRS, D8_FLAT, HS_LX, HS_LY, HS_LZ, SLOPE_Q,
     focal_stats, hillshade, terrain,
 )
+from moamosaic_spark.pixels import encode
 
 # 3x3 tile grid, ragged last row/col: full raster 8+8+5 = 21 rows,
 # 8+8+6 = 22 cols — every interior tile border and both ragged edges
@@ -44,8 +46,7 @@ def _tiles_df(spark, grid, packed: bool):
         x = 0
         for tc, xs in enumerate(TILE_COLS):
             arr = grid[y:y + ys, x:x + xs]
-            px = (arr.astype("<u2").tobytes() if packed
-                  else [int(v) for v in arr.ravel()])
+            px = encode(arr.ravel()) if packed else [int(v) for v in arr.ravel()]
             rows.append((1, tr, tc, ys, xs, px))
             x += xs
         y += ys
@@ -156,12 +157,21 @@ def test_focal_radius_exceeding_tile_raises(spark):
 
 
 def test_focal_layouts_agree(spark):
+    """Every focal product is row-for-row identical for array<int>
+    tiles and binary tiles."""
     grid = _make_raster(np.random.default_rng(11))
-    a = _collect_grids(
-        focal_stats(_tiles_df(spark, grid, False), nullval=NULL), ["f_sum"])
-    b = _collect_grids(
-        focal_stats(_tiles_df(spark, grid, True), nullval=NULL), ["f_sum"])
-    np.testing.assert_array_equal(a["f_sum"], b["f_sum"])
+    products = (
+        lambda t: focal_stats(t, nullval=NULL),
+        lambda t: focal_majority(t, nullval=NULL),
+        lambda t: hillshade(t, xres=10.0, yres=10.0, nullval=NULL),
+        lambda t: terrain(t, xres=10.0, yres=10.0, nullval=NULL),
+    )
+    for product in products:
+        a, b = (
+            sorted(tuple(r) for r in product(_tiles_df(spark, grid, packed)).collect())
+            for packed in (False, True)
+        )
+        assert a == b
 
 
 @pytest.mark.parametrize("packed", [False, True])

@@ -292,11 +292,12 @@ def test_label_regions_cross_tile_merge(spark):
 
 def test_zonal_stats_both_layouts(spark):
     """zonal_stats over hand-built tiles: per-zone count/sum/min/max
-    with the null mask applied, identical for array<int> and packed-u2
-    mosaic payloads."""
+    with the null mask applied, identical for binary mosaic payloads
+    and array<int> ones (packed by the ingest adaptor)."""
     import numpy as np
 
     from moamosaic_spark.functions.geometry import zonal_stats
+    from moamosaic_spark.pixels import encode
 
     mosaic = np.array([[5, 0, 7, 7],
                        [5, 5, 0, 9],
@@ -319,8 +320,7 @@ def test_zonal_stats_both_layouts(spark):
             zsub = zones[tr * 2:(tr + 1) * 2, tc * 2:(tc + 1) * 2].ravel()
             zrows.append((tr, tc, 2, 2, [int(x) for x in zsub]))
             mrows_i4.append((tr, tc, 2, 2, [int(x) for x in msub]))
-            mrows_u2.append((tr, tc, 2, 2,
-                             bytearray(msub.astype("<u2").tobytes())))
+            mrows_u2.append((tr, tc, 2, 2, encode(msub)))
     ztiles = spark.createDataFrame(
         zrows, "tile_row int, tile_col int, ysize int, xsize int, pixels array<int>")
     for rows, schema in ((mrows_i4, "pixels array<int>"),

@@ -1,5 +1,6 @@
-"""value_histogram: exact bins vs numpy bincount, both pixel layouts,
-and the plan shape (partial agg before the shuffle, no Python)."""
+"""value_histogram: exact bins vs numpy bincount, for binary tiles and
+array<int> tiles (packed by the ingest adaptor), and the plan shape
+(partial agg before the shuffle, no Python)."""
 
 import numpy as np
 import pytest
@@ -8,6 +9,7 @@ from pyspark.sql.types import (
 )
 
 from moamosaic_spark.operators.stats import value_histogram
+from moamosaic_spark.pixels import encode
 
 NULL = 0
 
@@ -15,7 +17,7 @@ NULL = 0
 def _tiles(spark, arrays, packed):
     rows = []
     for i, a in enumerate(arrays):
-        px = a.astype("<u2").tobytes() if packed else [int(v) for v in a.ravel()]
+        px = encode(a.ravel()) if packed else [int(v) for v in a.ravel()]
         rows.append((1, 0, i, a.shape[0], a.shape[1], px))
     schema = StructType([
         StructField("band", IntegerType()),

@@ -7,6 +7,7 @@ import numpy as np
 import pytest
 
 from moamosaic_spark.mosaic import MosaicConfig, do_mosaic
+from moamosaic_spark.pixels import decode
 from moamosaic_spark.sources import synth
 from tests.conftest import to_blocks, to_footprints
 
@@ -45,9 +46,7 @@ def test_nearest_policy_matches_oracle(spark, kernel):
 
     got = np.full((grid.nrows, grid.ncols), -1, dtype=np.int32)
     for r in res.tiles.collect():
-        got[r.y_off: r.y_off + r.ysize, r.x_off: r.x_off + r.xsize] = np.asarray(
-            r.pixels, dtype=np.int32
-        ).reshape(r.ysize, r.xsize)
+        got[r.y_off: r.y_off + r.ysize, r.x_off: r.x_off + r.xsize] = decode(r.pixels).reshape(r.ysize, r.xsize)
     np.testing.assert_array_equal(got, want)
 
     # and it actually differs from last-wins in the overlap bands
@@ -72,7 +71,7 @@ def test_nearest_equal_distance_falls_back_to_last(spark):
     cfg = MosaicConfig(blocksize=64, src_blocksize=256, with_overviews=False,
                        merge_policy="nearest")
     res = do_mosaic(spark, fp, blocks, cfg)
-    arr = np.asarray(res.tiles.collect()[0].pixels, dtype=np.int32).reshape(64, 64)
+    arr = decode(res.tiles.collect()[0].pixels).reshape(64, 64)
     np.testing.assert_array_equal(arr, r1.bands[0])
 
 
@@ -102,11 +101,10 @@ def blend_oracle(rasters, grid, feather=64, nullval=0):
     return canvas
 
 
-def _collect_canvas(res, grid, binary=False):
+def _collect_canvas(res, grid):
     got = np.full((grid.nrows, grid.ncols), -1, dtype=np.int32)
     for r in res.tiles.collect():
-        arr = (np.frombuffer(bytes(r.pixels), "<u2").astype(np.int32)
-               if binary else np.asarray(r.pixels, dtype=np.int32))
+        arr = decode(r.pixels)
         got[r.y_off: r.y_off + r.ysize, r.x_off: r.x_off + r.xsize] = arr.reshape(
             r.ysize, r.xsize
         )
@@ -135,18 +133,20 @@ def test_blend_policy_matches_oracle(spark, kernel, feather):
 
 
 def test_blend_u2_layout_matches_i4(spark):
-    """The packed uint16 layout blends pixel-identically."""
+    """array<int> blocks (packed by the ingest adaptor) and binary
+    blocks blend to byte-identical tiles."""
     from tests.test_pixels_u2 import _fp_blocks
 
     rasters = synth.grid3x3(100, 100, overlap=30)
     out = {}
-    for layout in ("i4", "u2"):
-        fp, bl = _fp_blocks(spark, rasters, layout)
+    for as_array in (False, True):
+        fp, bl = _fp_blocks(spark, rasters, as_array=as_array)
         cfg = MosaicConfig(blocksize=64, src_blocksize=256, with_overviews=False,
                            merge_policy="blend")
         res = do_mosaic(spark, fp, bl, cfg)
-        out[layout] = _collect_canvas(res, res.grid, binary=(layout == "u2"))
-    np.testing.assert_array_equal(out["u2"], out["i4"])
+        out[as_array] = {(r.band, r.tile_row, r.tile_col): bytes(r.pixels)
+                         for r in res.tiles.collect()}
+    assert out[True] == out[False]
 
 
 def test_blend_is_nodata_aware(spark):

@@ -62,9 +62,11 @@ def test_observe_gauges(spark):
     from moamosaic_spark.monitoring import observe_gauges
     import pyspark.sql.functions as F
 
+    from moamosaic_spark.pixels import encode
+
     df = spark.createDataFrame(
-        [(1, list(range(4))), (2, list(range(7))), (3, list(range(2)))],
-        "id int, pixels array<int>",
+        [(1, encode(range(4))), (2, encode(range(7))), (3, encode(range(2)))],
+        "id int, pixels binary",
     )
     d, obs = observe_gauges(df, "t")
     d.agg(F.count("*")).collect()

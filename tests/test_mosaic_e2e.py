@@ -7,6 +7,7 @@ import numpy as np
 import pytest
 
 from moamosaic_spark.mosaic import MoaProjectionError, MosaicConfig, do_mosaic, validate_projections
+from moamosaic_spark.pixels import decode
 from moamosaic_spark.plans.grid import overview_shape
 from moamosaic_spark.sources import synth
 from tests.conftest import to_blocks, to_footprints
@@ -31,7 +32,7 @@ def check_tiles_equal(want, got):
     rows = got.tiles.collect()
     seen = set()
     for r in rows:
-        arr = np.asarray(r.pixels, dtype=np.int32).reshape(r.ysize, r.xsize)
+        arr = decode(r.pixels).reshape(r.ysize, r.xsize)
         key = (r.band, r.tile_row, r.tile_col)
         assert key not in seen
         seen.add(key)
@@ -60,7 +61,7 @@ def check_overviews_equal(want, got):
         if key not in grids:
             shape = overview_shape(want.grid.nrows, want.grid.ncols, lvl)
             grids[key] = np.full(shape, -1, dtype=np.int32)
-        arr = np.asarray(r.pixels, dtype=np.int32).reshape(r.ysize, r.xsize)
+        arr = decode(r.pixels).reshape(r.ysize, r.xsize)
         tgt = grids[key][r.y_off: r.y_off + r.ysize, r.x_off: r.x_off + r.xsize]
         assert tgt.shape == arr.shape, f"fragment overflow at {key} off=({r.y_off},{r.x_off})"
         # fragments must tile the overview without overlap

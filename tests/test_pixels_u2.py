@@ -1,41 +1,52 @@
-"""u2 binary pixel layout (pixels.py / SURVEY §7.4): packed uint16-LE
-payloads must be pixel-identical to the array<int> layout everywhere —
-mosaic, overviews, gap tiles, salted stitch, relayout — while halving
-the bytes of the work relation that feeds the stitch shuffle."""
+"""The one pixel format (pixels.py / SURVEY §7.4): packed uint16-LE
+payloads end to end — mosaic, overviews, gap tiles, salted stitch,
+relayout — with ``array<int>`` accepted only at the ingest adaptor
+(pixels.ingest), which must give byte-identical results."""
+
+import pathlib
+import re
 
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from moamosaic_spark.mosaic import MosaicConfig, do_mosaic, _contributor_chunks
-from moamosaic_spark.pixels import pack_u2, pixel_count, unpack_u2
-from moamosaic_spark.schema import BLOCKS_SCHEMA, BLOCKS_SCHEMA_U2, FOOTPRINTS_SCHEMA
+from moamosaic_spark.pixels import (
+    PIXEL_BYTES, decode, ingest, pack_u2, pixel_count, unpack_u2,
+)
+from moamosaic_spark.schema import BLOCKS_SCHEMA, FOOTPRINTS_SCHEMA
 from moamosaic_spark.sources import synth
 
 
-def _fp_blocks(spark, rasters, layout, sbs=256):
+def _as_array_input(df):
+    """The same relation with ``pixels`` as array<int> (decoded by
+    pixels.decode) — the input the ingest adaptor packs."""
+    schema = T.StructType([
+        T.StructField(f.name, T.ArrayType(T.IntegerType()) if f.name == "pixels"
+                      else f.dataType)
+        for f in df.schema.fields
+    ])
+    pdf = df.toPandas()
+    pdf["pixels"] = pdf["pixels"].map(lambda b: decode(b).astype(np.int32))
+    return df.sparkSession.createDataFrame(pdf, schema=schema)
+
+
+def _fp_blocks(spark, rasters, sbs=256, as_array=False):
     fp = spark.createDataFrame(synth.footprints_pdf(rasters), schema=FOOTPRINTS_SCHEMA)
-    pdf = synth.blocks_pdf(rasters, sbs, layout=layout)
-    if layout == "u2":
-        blocks = spark.createDataFrame(pdf, schema=BLOCKS_SCHEMA_U2)
-    else:
-        pdf["pixels"] = pdf["pixels"].map(lambda a: np.asarray(a, dtype="int32"))
-        blocks = spark.createDataFrame(pdf, schema=BLOCKS_SCHEMA)
-    return fp, blocks
+    blocks = spark.createDataFrame(synth.blocks_pdf(rasters, sbs), schema=BLOCKS_SCHEMA)
+    return fp, (_as_array_input(blocks) if as_array else blocks)
 
 
-def _tiles_of(res, binary):
-    out = {}
-    for r in res.tiles.collect():
-        arr = (
-            np.frombuffer(bytes(r.pixels), "<u2")
-            if binary
-            else np.asarray(r.pixels, dtype=np.int64)
-        )
-        out[(r.band, r.tile_row, r.tile_col)] = arr.astype(np.int64).reshape(
-            r.ysize, r.xsize
-        )
-    return out
+def _tiles_of(res):
+    return {
+        (r.band, r.tile_row, r.tile_col): decode(r.pixels).reshape(r.ysize, r.xsize)
+        for r in res.tiles.collect()
+    }
+
+
+def _payloads(df, key):
+    return {tuple(r[k] for k in key): bytes(r.pixels) for r in df.collect()}
 
 
 def test_pack_unpack_roundtrip(spark):
@@ -45,29 +56,34 @@ def test_pack_unpack_roundtrip(spark):
         pack_u2(F.col("parr")).alias("b")
     ).select(unpack_u2(F.col("b")).alias("u"), "b").collect()[0]
     assert r.u == vals
-    assert np.frombuffer(bytes(r.b), "<u2").tolist() == vals
+    assert decode(r.b).tolist() == vals
 
 
 def test_u2_mosaic_equals_i4_and_oracle(spark):
+    """array<int> blocks (packed by the ingest adaptor) and binary
+    blocks give byte-identical tiles and overviews, equal to the
+    oracle."""
     rasters = synth.grid3x3(150, 150)
     want = synth.oracle(rasters, blocksize=64, min_overview_size=64)
     cfg = MosaicConfig(blocksize=64, src_blocksize=256, min_overview_size=64)
 
-    fp_a, bl_a = _fp_blocks(spark, rasters, "i4")
-    fp_b, bl_b = _fp_blocks(spark, rasters, "u2")
-    t_a = _tiles_of(do_mosaic(spark, fp_a, bl_a, cfg), binary=False)
+    fp_a, bl_a = _fp_blocks(spark, rasters, as_array=True)
+    fp_b, bl_b = _fp_blocks(spark, rasters)
+    assert bl_a.schema["pixels"].dataType == T.ArrayType(T.IntegerType())
+    res_a = do_mosaic(spark, fp_a, bl_a, cfg)
     res_b = do_mosaic(spark, fp_b, bl_b, cfg)
-    t_b = _tiles_of(res_b, binary=True)
+    key = ("level", "band", "tile_row", "tile_col")
+    assert _payloads(res_a.stitched, key) == _payloads(res_b.stitched, key)
 
-    assert set(t_a) == set(t_b) == set(want.tiles)
-    for k in t_a:
-        np.testing.assert_array_equal(t_a[k], t_b[k], err_msg=f"layouts differ {k}")
+    t_b = _tiles_of(res_b)
+    assert set(t_b) == set(want.tiles)
+    for k in t_b:
         np.testing.assert_array_equal(t_b[k], want.tiles[k], err_msg=f"oracle {k}")
 
     # overview fragments also ride packed and assemble to the oracle
     by_lvl = {}
     for r in res_b.overviews.collect():
-        arr = np.frombuffer(bytes(r.pixels), "<u2").reshape(r.ysize, r.xsize)
+        arr = decode(r.pixels).reshape(r.ysize, r.xsize)
         c = by_lvl.setdefault(
             r.level, np.full(want.overviews[(1, r.level)].shape, -1, dtype=np.int64)
         )
@@ -81,11 +97,11 @@ def test_u2_gap_and_salted(spark):
     # null-fill tiles synthesized JVM-side in the packed layout
     rasters = synth.with_gap(200, 200)
     want = synth.oracle(rasters, blocksize=64, min_overview_size=9999)
-    fp, bl = _fp_blocks(spark, rasters, "u2")
+    fp, bl = _fp_blocks(spark, rasters)
     res = do_mosaic(
         spark, fp, bl, MosaicConfig(blocksize=64, src_blocksize=256, with_overviews=False)
     )
-    tiles = _tiles_of(res, binary=True)
+    tiles = _tiles_of(res)
     assert set(tiles) == set(want.tiles)
     for k, a in tiles.items():
         np.testing.assert_array_equal(a, want.tiles[k])
@@ -93,41 +109,40 @@ def test_u2_gap_and_salted(spark):
     # two-stage salted merge over packed partials
     rasters = synth.hot_cell(12, 128, 128)
     want = synth.oracle(rasters, blocksize=64, min_overview_size=9999)
-    fp, bl = _fp_blocks(spark, rasters, "u2")
+    fp, bl = _fp_blocks(spark, rasters)
     res = do_mosaic(
         spark, fp, bl,
         MosaicConfig(blocksize=64, src_blocksize=256, with_overviews=False, stitch_salt=3),
     )
-    tiles = _tiles_of(res, binary=True)
+    tiles = _tiles_of(res)
     assert set(tiles) == set(want.tiles)
     for k, a in tiles.items():
         np.testing.assert_array_equal(a, want.tiles[k])
 
 
 def test_u2_halves_shuffle_payload_bytes(spark):
-    """The point of the layout: the work relation entering the stitch
-    shuffle carries the same pixel COUNT but half the payload BYTES."""
+    """The work relation entering the stitch shuffle carries 2 bytes
+    per pixel — half an int32 array — whichever layout came in."""
     from moamosaic_spark.plans.grid import make_output_grid, make_tile_relation
     from moamosaic_spark.plans.spatial_join import assign_inputs
 
     rasters = synth.grid3x3(150, 150)
     rows = {}
-    for layout in ("i4", "u2"):
-        fp, bl = _fp_blocks(spark, rasters, layout)
+    for as_array in (False, True):
+        fp, bl = _fp_blocks(spark, rasters, as_array=as_array)
         grid = make_output_grid(fp, None)
         tiles = make_tile_relation(spark, grid, 64)
         asg = assign_inputs(tiles, fp, grid, strategy="broadcast")
-        work = _contributor_chunks(asg, bl, 256)
-        binary = layout == "u2"
+        work = _contributor_chunks(asg, ingest(bl), 256)
         r = work.agg(
-            F.sum(pixel_count(F.col("pixels"), binary)).alias("n_px"),
-            F.sum(
-                F.length("pixels") if binary else F.size("pixels") * 4
-            ).alias("n_bytes"),
+            F.sum(pixel_count(F.col("pixels"))).alias("n_px"),
+            F.sum(F.col("b_ysize") * F.col("b_xsize")).alias("n_geom"),
+            F.sum(F.length("pixels")).alias("n_bytes"),
         ).collect()[0]
-        rows[layout] = (int(r.n_px), int(r.n_bytes))
-    assert rows["i4"][0] == rows["u2"][0], "same pixels either layout"
-    assert rows["u2"][1] * 2 == rows["i4"][1], rows
+        assert int(r.n_px) == int(r.n_geom) > 0, r
+        assert int(r.n_bytes) == 2 * int(r.n_px) == PIXEL_BYTES * int(r.n_px), r
+        rows[as_array] = (int(r.n_px), int(r.n_bytes))
+    assert rows[False] == rows[True], rows
 
 
 def test_u2_relayout_stitch(spark, tmp_path):
@@ -137,7 +152,7 @@ def test_u2_relayout_stitch(spark, tmp_path):
 
     rasters = synth.grid3x3(150, 150)
     want = synth.oracle(rasters, blocksize=64, min_overview_size=9999)
-    fp, bl = _fp_blocks(spark, rasters, "u2")
+    fp, bl = _fp_blocks(spark, rasters)
     cfg = MosaicConfig(blocksize=64, src_blocksize=256, with_overviews=False)
     relayout_to_table(spark, fp, bl, "work_u2", cfg, n_buckets=8)
 
@@ -148,7 +163,7 @@ def test_u2_relayout_stitch(spark, tmp_path):
     flatmap_region = plan.split("FlatMapGroupsInArrow")[1]
     scan_pos = flatmap_region.find("FileScan")
     assert "Exchange" not in flatmap_region[:scan_pos], "stitch input was shuffled"
-    tiles = _tiles_of(res, binary=True)
+    tiles = _tiles_of(res)
     assert set(tiles) == set(want.tiles)
     for k, a in tiles.items():
         np.testing.assert_array_equal(a, want.tiles[k])
@@ -162,7 +177,7 @@ def test_u2_streaming_incremental_over_relayout(spark, tmp_path):
     from moamosaic_spark.streaming.incremental import incremental_mosaic_stream
 
     rasters = synth.grid3x3(150, 150)
-    docs, fp, blocks = synth.corpus_to_spark(spark, rasters, layout="u2")
+    docs, fp, blocks = synth.corpus_to_spark(spark, rasters)
     want = synth.oracle(rasters, blocksize=64, min_overview_size=9999)
     cfg = MosaicConfig(blocksize=64, src_blocksize=256, with_overviews=False)
 
@@ -183,9 +198,7 @@ def test_u2_streaming_incremental_over_relayout(spark, tmp_path):
 
     got = {}
     for r in spark.read.parquet(f"{out}/tiles").collect():
-        got[(r.band, r.tile_row, r.tile_col)] = np.frombuffer(
-            bytes(r.pixels), "<u2"
-        ).reshape(r.ysize, r.xsize)
+        got[(r.band, r.tile_row, r.tile_col)] = decode(r.pixels).reshape(r.ysize, r.xsize)
     covered = {(1, ti, tj) for (ti, tj, _ref) in want.assignments}
     assert set(got) == covered
     for k, a in got.items():
@@ -200,7 +213,7 @@ def test_u2_no_per_pixel_decode_below_stitch(spark):
     substr clip is linear and allowed; the distinctive per-pixel
     marker is conv(.., 16, 10)."""
     rasters = synth.grid3x3(100, 100)
-    fp, bl = _fp_blocks(spark, rasters, "u2")
+    fp, bl = _fp_blocks(spark, rasters)
     res = do_mosaic(spark, fp, bl, MosaicConfig(blocksize=64, src_blocksize=256,
                                                 with_overviews=False))
     plan = res.tiles._jdf.queryExecution().executedPlan().toString()
@@ -211,3 +224,74 @@ def test_u2_no_per_pixel_decode_below_stitch(spark):
     # and the decode trap is absent from the WHOLE tiles plan (packed
     # output stays packed)
     assert "conv(" not in plan
+
+
+def test_pixel_format_lives_in_one_module():
+    """Fence for the one-format design: the payload's numpy dtype, the
+    layout test and the per-layout schema twins must not reappear
+    outside pixels.py — every other module goes through its names
+    (PIXEL_TYPE, PIXEL_BYTES, decode/encode, ingest). driver_contract.py
+    needs no exemption: its SQL strings never spell the dtype."""
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "moamosaic_spark"
+    banned = re.compile(r"<u2|pixels_are_binary|\w+_SCHEMA_U2\b")
+    hits = [
+        f"{path.relative_to(pkg)}:{i}: {line.strip()}"
+        for path in sorted(pkg.rglob("*.py"))
+        if path.name != "pixels.py" or path.parent != pkg
+        for i, line in enumerate(path.read_text().splitlines(), 1)
+        if banned.search(line)
+    ]
+    assert not hits, "pixel format outside pixels.py:\n" + "\n".join(hits)
+
+
+@pytest.mark.parametrize("bad", [70000, -1])
+def test_array_input_out_of_range_raises(spark, bad):
+    """The ingest adaptor packs array<int> with the range-guarded
+    pack_u2: a value outside uint16 fails the job instead of wrapping,
+    at every entry that takes pixels."""
+    from moamosaic_spark.functions.focal import focal_stats
+    from moamosaic_spark.reproject import resample_blocks
+
+    rasters = synth.golden_pair(64, 64)
+    fp, bl = _fp_blocks(spark, rasters, sbs=32, as_array=True)
+    hit = (F.col("media_ref") == "r000") & (F.col("b_row") == 0) & (F.col("b_col") == 0)
+    bl = bl.withColumn(
+        "pixels",
+        F.when(hit, F.array_insert(F.slice("pixels", 2, 32 * 32 - 1), 1, F.lit(bad)))
+        .otherwise(F.col("pixels")),
+    )
+    cfg = MosaicConfig(blocksize=32, src_blocksize=32, with_overviews=False)
+    with pytest.raises(Exception, match="outside uint16"):
+        do_mosaic(spark, fp, bl, cfg).tiles.collect()
+    with pytest.raises(Exception, match="outside uint16"):
+        resample_blocks(fp, bl, 2.0, 2.0, src_blocksize=32)[1].collect()
+    tiles = bl.where(F.col("media_ref") == "r000").select(
+        "band", F.col("b_row").alias("tile_row"), F.col("b_col").alias("tile_col"),
+        F.col("b_ysize").alias("ysize"), F.col("b_xsize").alias("xsize"), "pixels",
+    )
+    with pytest.raises(Exception, match="outside uint16"):
+        focal_stats(tiles).collect()
+
+
+@pytest.mark.parametrize("route", ["direct", "relayout"])
+def test_nullval_must_be_a_uint16_pixel(spark, route):
+    """One nodata contract on both routes: an effective nullval (the
+    config override here) outside the integers [0, 65535] raises
+    ValueError naming it, before any plan is built; 65535 runs."""
+    rasters = synth.golden_pair(64, 64)
+    fp, bl = _fp_blocks(spark, rasters, sbs=32)
+    table = "nullval_contract_rl" if route == "relayout" else None
+    for bad in (-1, 65536, 2.5):
+        cfg = MosaicConfig(blocksize=32, src_blocksize=32, with_overviews=False,
+                           nullval=bad, relayout_table=table)
+        with pytest.raises(ValueError, match=re.escape(repr(bad))):
+            do_mosaic(spark, fp, bl, cfg)
+    cfg = MosaicConfig(blocksize=32, src_blocksize=32, with_overviews=False,
+                       nullval=65535, relayout_table=table)
+    res = do_mosaic(spark, fp, bl, cfg)
+    assert res.grid.nullval == 65535
+    want = synth.oracle(rasters, blocksize=32, min_overview_size=9999, nullval=65535)
+    tiles = _tiles_of(res)
+    assert set(tiles) == set(want.tiles)
+    for k, a in tiles.items():
+        np.testing.assert_array_equal(a, want.tiles[k], err_msg=str(k))

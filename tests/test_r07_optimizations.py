@@ -22,7 +22,7 @@ from moamosaic_spark.mosaic import MosaicConfig, _contributor_chunks
 from moamosaic_spark.plans.grid import make_output_grid, make_tile_relation
 from moamosaic_spark.plans.spatial_join import assign_inputs
 from moamosaic_spark.functions import similarity as S
-from moamosaic_spark.schema import BLOCKS_SCHEMA_U2, FOOTPRINTS_SCHEMA
+from moamosaic_spark.schema import FOOTPRINTS_SCHEMA
 from moamosaic_spark.sources import synth
 from moamosaic_spark.sources.relayout import _table_location, relayout_to_table
 from tests.conftest import to_blocks, to_footprints
@@ -37,8 +37,7 @@ def test_chunk_clip_access_pattern_invariants(spark):
     (b_top, b_left, b_ysize, b_xsize) and trusts the byte count."""
     rasters = synth.grid3x3(150, 150)
     fp = spark.createDataFrame(synth.footprints_pdf(rasters), schema=FOOTPRINTS_SCHEMA)
-    pdf = synth.blocks_pdf(rasters, 64, layout="u2")
-    blocks = spark.createDataFrame(pdf, schema=BLOCKS_SCHEMA_U2)
+    blocks = to_blocks(spark, synth.blocks_pdf(rasters, 64))
 
     grid = make_output_grid(fp, None)
     tiles = make_tile_relation(spark, grid, 96)

@@ -4,6 +4,7 @@ the stitch plan off the bucketed table contains NO Exchange."""
 import numpy as np
 
 from moamosaic_spark.mosaic import MosaicConfig, do_mosaic
+from moamosaic_spark.pixels import decode
 from moamosaic_spark.sources import synth
 from moamosaic_spark.sources.relayout import relayout_to_table, stitch_from_relayout
 from tests.conftest import to_blocks, to_footprints
@@ -28,11 +29,11 @@ def test_relayout_equals_direct_and_no_exchange(spark, tmp_path):
 
     direct = do_mosaic(spark, fp, blocks, cfg)
     a = {
-        (r.band, r.tile_row, r.tile_col): np.asarray(r.pixels, dtype=np.int32)
+        (r.band, r.tile_row, r.tile_col): decode(r.pixels)
         for r in res.tiles.collect()
     }
     b = {
-        (r.band, r.tile_row, r.tile_col): np.asarray(r.pixels, dtype=np.int32)
+        (r.band, r.tile_row, r.tile_col): decode(r.pixels)
         for r in direct.tiles.collect()
     }
     assert set(a) == set(b)
@@ -56,11 +57,11 @@ def test_relayout_equals_direct_and_no_exchange(spark, tmp_path):
                      merge_policy="nearest"),
     )
     ann = {
-        (r.band, r.tile_row, r.tile_col): np.asarray(r.pixels, dtype=np.int32)
+        (r.band, r.tile_row, r.tile_col): decode(r.pixels)
         for r in res_nn.tiles.collect()
     }
     bnn = {
-        (r.band, r.tile_row, r.tile_col): np.asarray(r.pixels, dtype=np.int32)
+        (r.band, r.tile_row, r.tile_col): decode(r.pixels)
         for r in direct_nn.tiles.collect()
     }
     assert set(ann) == set(bnn)
@@ -80,7 +81,7 @@ def test_relayout_tile_range_pruned_scan(spark):
     relayout_to_table(spark, fp, blocks, "work_rng", cfg, n_buckets=8)
     full = stitch_from_relayout(spark, "work_rng", cfg)
     full_tiles = {
-        (r.band, r.tile_row, r.tile_col): np.asarray(r.pixels, dtype=np.int32)
+        (r.band, r.tile_row, r.tile_col): decode(r.pixels)
         for r in full.tiles.collect()
     }
     rows = sorted({tr for (_b, tr, _tc) in full_tiles})
@@ -97,12 +98,12 @@ def test_relayout_tile_range_pruned_scan(spark):
     assert "tile_row" in scan_line and "PushedFilters" in scan_line, scan_line
 
     got = {
-        (r.band, r.tile_row, r.tile_col): np.asarray(r.pixels, dtype=np.int32)
+        (r.band, r.tile_row, r.tile_col): decode(r.pixels)
         for r in part.tiles.collect()
     }
     rest = stitch_from_relayout(spark, "work_rng", cfg, tile_row_range=(mid, rows[-1] + 1))
     got.update({
-        (r.band, r.tile_row, r.tile_col): np.asarray(r.pixels, dtype=np.int32)
+        (r.band, r.tile_row, r.tile_col): decode(r.pixels)
         for r in rest.tiles.collect()
     })
     assert set(got) == set(full_tiles)
@@ -168,7 +169,7 @@ def test_do_mosaic_auto_relayout(spark):
         MosaicConfig(blocksize=64, src_blocksize=256, min_overview_size=64),
     )
     want = {
-        (r.band, r.tile_row, r.tile_col): np.asarray(r.pixels, dtype=np.int32)
+        (r.band, r.tile_row, r.tile_col): decode(r.pixels)
         for r in baseline.tiles.collect()
     }
 
@@ -177,7 +178,7 @@ def test_do_mosaic_auto_relayout(spark):
     assert spark.catalog.tableExists("work_auto")
     assert _no_stitch_exchange(r1, spark)
     got1 = {
-        (r.band, r.tile_row, r.tile_col): np.asarray(r.pixels, dtype=np.int32)
+        (r.band, r.tile_row, r.tile_col): decode(r.pixels)
         for r in r1.tiles.collect()
     }
     assert set(got1) == set(want)
@@ -203,9 +204,9 @@ def test_do_mosaic_auto_relayout(spark):
         spark, fp2, blocks,
         MosaicConfig(blocksize=64, src_blocksize=256, min_overview_size=64),
     )
-    a = {(r.band, r.tile_row, r.tile_col): np.asarray(r.pixels, dtype=np.int32)
+    a = {(r.band, r.tile_row, r.tile_col): decode(r.pixels)
          for r in r3.tiles.collect()}
-    b = {(r.band, r.tile_row, r.tile_col): np.asarray(r.pixels, dtype=np.int32)
+    b = {(r.band, r.tile_row, r.tile_col): decode(r.pixels)
          for r in direct3.tiles.collect()}
     assert set(a) == set(b)
     for k in a:
@@ -233,3 +234,48 @@ def test_do_mosaic_auto_relayout(spark):
     )["fingerprint"]
     for t in ("work_auto", "work_auto_meta"):
         spark.sql(f"DROP TABLE IF EXISTS {t}")
+
+
+def _make_stale(spark, table, fp, blocks, cfg):
+    """A relayout table as an older version left it: same meta and
+    fingerprint, but ``pixels`` stored as array<int>."""
+    from pyspark.sql import functions as F
+
+    from moamosaic_spark.pixels import unpack_u2
+    from moamosaic_spark.sources.relayout import _write_bucketed
+
+    relayout_to_table(spark, fp, blocks, table, cfg, n_buckets=4)
+    stale = spark.table(table).withColumn(
+        "pixels", unpack_u2(F.col("pixels"))
+    ).localCheckpoint(eager=True)
+    _write_bucketed(stale, table, 4, "overwrite")
+    assert spark.table(table).schema["pixels"].dataType.simpleString() == "array<int>"
+
+
+def test_stale_array_relayout_table_rejected_and_rebuilt(spark):
+    """A relayout table holding array<int> pixels is never stitched:
+    stitch_from_relayout raises a ValueError naming it, and do_mosaic's
+    routing (fingerprint and geometry still match) rebuilds it packed."""
+    import pytest
+
+    from moamosaic_spark.pixels import PIXEL_TYPE
+
+    rasters = synth.grid3x3(150, 150)
+    fp = to_footprints(spark, synth.footprints_pdf(rasters))
+    blocks = to_blocks(spark, synth.blocks_pdf(rasters, 256))
+    cfg = MosaicConfig(blocksize=64, src_blocksize=256, with_overviews=False)
+    _make_stale(spark, "work_stale", fp, blocks, cfg)
+
+    with pytest.raises(ValueError, match="work_stale"):
+        stitch_from_relayout(spark, "work_stale", cfg)
+
+    res = do_mosaic(spark, fp, blocks, MosaicConfig(
+        blocksize=64, src_blocksize=256, with_overviews=False,
+        relayout_table="work_stale"))
+    assert spark.table("work_stale").schema["pixels"].dataType == PIXEL_TYPE
+    want = synth.oracle(rasters, blocksize=64, min_overview_size=9999)
+    got = {(r.band, r.tile_row, r.tile_col): decode(r.pixels).reshape(r.ysize, r.xsize)
+           for r in res.tiles.collect()}
+    assert set(got) == set(want.tiles)
+    for k, a in got.items():
+        np.testing.assert_array_equal(a, want.tiles[k], err_msg=str(k))

@@ -7,6 +7,7 @@ import pytest
 
 from moamosaic_spark import reproject as RP
 from moamosaic_spark.mosaic import MosaicConfig, do_mosaic
+from moamosaic_spark.pixels import decode
 from moamosaic_spark.sources import synth
 from tests.conftest import to_blocks, to_footprints
 
@@ -75,7 +76,7 @@ def test_resample_blocks_matches_oracle(spark, out_res):
     for r in nblocks.collect():
         got[
             r.b_top: r.b_top + r.b_ysize, r.b_left: r.b_left + r.b_xsize
-        ] = np.asarray(r.pixels, dtype=np.int32).reshape(r.b_ysize, r.b_xsize)
+        ] = decode(r.pixels).reshape(r.b_ysize, r.b_xsize)
     assert (got != -1).all()
     np.testing.assert_array_equal(got, want)
 
@@ -105,9 +106,7 @@ def test_mixed_resolution_mosaic(spark):
 
     canvas = np.full((grid.nrows, grid.ncols), -1, dtype=np.int32)
     for r in res.tiles.collect():
-        canvas[r.y_off: r.y_off + r.ysize, r.x_off: r.x_off + r.xsize] = np.asarray(
-            r.pixels, dtype=np.int32
-        ).reshape(r.ysize, r.xsize)
+        canvas[r.y_off: r.y_off + r.ysize, r.x_off: r.x_off + r.xsize] = decode(r.pixels).reshape(r.ysize, r.xsize)
     assert (canvas != -1).all()
 
     # left part: raster A passthrough (same res)

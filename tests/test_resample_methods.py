@@ -7,6 +7,7 @@ import numpy as np
 import pytest
 
 from moamosaic_spark import reproject as RP
+from moamosaic_spark.pixels import decode
 from moamosaic_spark.sources import synth
 from tests.conftest import to_blocks, to_footprints
 
@@ -91,9 +92,7 @@ def _run(spark, rasters, out_res, method):
     meta = nfp.collect()[0]
     got = np.full((meta.nrows, meta.ncols), -1, dtype=np.int32)
     for r in nblocks.collect():
-        got[r.b_top: r.b_top + r.b_ysize, r.b_left: r.b_left + r.b_xsize] = np.asarray(
-            r.pixels, dtype=np.int32
-        ).reshape(r.b_ysize, r.b_xsize)
+        got[r.b_top: r.b_top + r.b_ysize, r.b_left: r.b_left + r.b_xsize] = decode(r.pixels).reshape(r.b_ysize, r.b_xsize)
     assert (got != -1).all()
     return meta, got
 

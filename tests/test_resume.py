@@ -6,6 +6,7 @@ import numpy as np
 import pytest
 
 from moamosaic_spark.mosaic import MosaicConfig
+from moamosaic_spark.pixels import decode
 from moamosaic_spark.sources import synth
 from moamosaic_spark.streaming.lineage import completed_batches, resumable_mosaic
 from tests.conftest import to_blocks, to_footprints
@@ -27,7 +28,7 @@ def _read_tiles(spark, path):
     for r in df.collect():
         key = (r.band, r.tile_row, r.tile_col)
         assert key not in out, f"duplicate tile {key} in sink"
-        out[key] = np.asarray(r.pixels, dtype=np.int32).reshape(r.ysize, r.xsize)
+        out[key] = decode(r.pixels).reshape(r.ysize, r.xsize)
     return out
 
 

@@ -6,13 +6,14 @@ import numpy as np
 import pytest
 
 from moamosaic_spark.mosaic import MosaicConfig, do_mosaic
+from moamosaic_spark.pixels import decode
 from moamosaic_spark.sources import synth
 from tests.conftest import to_blocks, to_footprints
 
 
 def tiles_of(res):
     return {
-        (r.band, r.tile_row, r.tile_col): np.asarray(r.pixels, dtype=np.int32).reshape(
+        (r.band, r.tile_row, r.tile_col): decode(r.pixels).reshape(
             r.ysize, r.xsize
         )
         for r in res.tiles.collect()
@@ -198,24 +199,17 @@ def test_salted_blend_hot_cold_mix_and_overviews(spark):
 
 
 def test_salted_blend_u2_layout(spark):
-    """Salted blend on the packed u2 layout equals the i4 run."""
-    from moamosaic_spark.schema import BLOCKS_SCHEMA_U2, FOOTPRINTS_SCHEMA
+    """Salted blend: array<int> blocks (packed by the ingest adaptor)
+    and binary blocks give byte-identical tiles."""
+    from tests.test_pixels_u2 import _fp_blocks
 
     rasters = synth.hot_cell(10, 128, 128)
-    fp = spark.createDataFrame(synth.footprints_pdf(rasters),
-                               schema=FOOTPRINTS_SCHEMA)
-    pdf_u2 = synth.blocks_pdf(rasters, 256, layout="u2")
-    blocks_u2 = spark.createDataFrame(pdf_u2, schema=BLOCKS_SCHEMA_U2)
-    blocks_i4 = to_blocks(spark, synth.blocks_pdf(rasters, 256))
     base = dict(blocksize=64, src_blocksize=256, with_overviews=False,
                 merge_policy="blend", blend_feather=16, stitch_salt=3)
-
-    i4 = tiles_of(do_mosaic(spark, fp, blocks_i4, MosaicConfig(**base)))
-    got = {}
-    for r in do_mosaic(spark, fp, blocks_u2, MosaicConfig(**base)).tiles.collect():
-        got[(r.band, r.tile_row, r.tile_col)] = np.frombuffer(
-            bytes(r.pixels), "<u2"
-        ).astype(np.int32).reshape(r.ysize, r.xsize)
-    assert set(i4) == set(got)
-    for k in i4:
-        np.testing.assert_array_equal(got[k], i4[k], err_msg=f"tile {k}")
+    out = {}
+    for as_array in (False, True):
+        fp, bl = _fp_blocks(spark, rasters, as_array=as_array)
+        res = do_mosaic(spark, fp, bl, MosaicConfig(**base))
+        out[as_array] = {(r.band, r.tile_row, r.tile_col): bytes(r.pixels)
+                         for r in res.tiles.collect()}
+    assert out[True] == out[False] and len(out[False]) > 0

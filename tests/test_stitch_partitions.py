@@ -8,6 +8,7 @@ import re
 from contextlib import contextmanager
 
 from moamosaic_spark.mosaic import MosaicConfig, do_mosaic
+from moamosaic_spark.pixels import decode
 from moamosaic_spark.plans.grid import OutputGrid, stitch_partitions
 from moamosaic_spark.sources import synth
 from moamosaic_spark.sources.relayout import (
@@ -21,10 +22,10 @@ STITCH_EXCHANGE = re.compile(
 )
 
 
-def _grid(n_px: int, n_bands: int = 1) -> OutputGrid:
+def _grid(n_px: int, n_bands: int = 1, dtype: str = "uint16") -> OutputGrid:
     return OutputGrid(
         x_min=0.0, y_max=0.0, x_res=1.0, y_res=1.0, ncols=n_px, nrows=n_px,
-        n_bands=n_bands, nullval=0.0, dtype="uint16", projection="p",
+        n_bands=n_bands, nullval=0.0, dtype=dtype, projection="p",
     )
 
 
@@ -66,6 +67,9 @@ def test_stitch_partitions_branches(spark):
     assert stitch_partitions(spark, _grid(64, n_bands=3), 64) == 3
     # groups > cores, few bytes: 16 tiles of 8 KB -> one task per core
     assert stitch_partitions(spark, _grid(256), 64) == cores
+    # the payload width, not the footprint's dtype name, sizes the bytes:
+    # GDAL's "UInt16" is no numpy dtype name
+    assert stitch_partitions(spark, _grid(256, dtype="UInt16"), 64) == cores
     # a tile-row range counts only its own groups: 1 row of 2 tiles
     assert stitch_partitions(spark, _grid(128), 64, tile_row_range=(1, 5)) == 2
     # bytes-bound: 16 groups x 8 KB = 128 KB over 16 KB -> 8 > cores
@@ -78,12 +82,22 @@ def test_stitch_partitions_branches(spark):
 
 def test_direct_stitch_one_exchange_sized_to_cores(spark):
     rasters = synth.grid3x3(150, 150)
-    fp = to_footprints(spark, synth.footprints_pdf(rasters))
+    # GDAL's type name: the stitch is sized by the payload width, so a
+    # dtype string numpy does not know plans and mosaics like "uint16"
+    pdf = synth.footprints_pdf(rasters)
+    pdf["dtype"] = "UInt16"
+    fp = to_footprints(spark, pdf)
     blocks = to_blocks(spark, synth.blocks_pdf(rasters, 256))
     base = dict(blocksize=64, src_blocksize=256, min_overview_size=64)
     res = do_mosaic(spark, fp, blocks, MosaicConfig(**base))
     n = stitch_partitions(spark, res.grid, 64)
     assert n == spark.sparkContext.defaultParallelism
+    want = synth.oracle(rasters, blocksize=64, min_overview_size=64)
+    got = {(r.band, r.tile_row, r.tile_col): decode(r.pixels).reshape(r.ysize, r.xsize)
+           for r in res.tiles.collect()}
+    assert set(got) == set(want.tiles)
+    for k, a in got.items():
+        assert (a == want.tiles[k]).all(), k
     # the salted stage 2 goes through the same sized Exchange
     for cfg in (MosaicConfig(**base), MosaicConfig(**base, stitch_salt=2)):
         plan = _plan(spark, do_mosaic(spark, fp, blocks, cfg).stitched)
