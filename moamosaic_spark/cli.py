@@ -57,7 +57,8 @@ def get_parser() -> argparse.ArgumentParser:
     p.add_argument("--relayout-table", default=None,
                    help="bucketed work table (sources/relayout.py): built on "
                         "first use (pays the wide shuffle once), then every "
-                        "run stitches off it with no Exchange — the "
+                        "run over the same corpus and tiling stitches off it "
+                        "with no Exchange; a stale table is rebuilt — the "
                         "repeated-run production pattern")
     p.add_argument("--rebuild-relayout", action="store_true",
                    help="force re-materializing --relayout-table")
@@ -165,6 +166,7 @@ def main(argv: list[str] | None = None) -> None:
         blend_feather=args.blend_feather,
         stitch_salt=args.stitch_salt,
         with_overviews=not args.no_overviews,
+        relayout_table=args.relayout_table,
     )
 
     with mon.ctx("domosaic"):
@@ -175,18 +177,14 @@ def main(argv: list[str] | None = None) -> None:
                 spark, fp, blocks, args.out, cfg, n_batches=args.batches
             )
             print(json.dumps({k: v for k, v in info.items() if k != "grid"}))
-        elif args.relayout_table:
-            from .sources.relayout import relayout_to_table, stitch_from_relayout
-
-            if args.rebuild_relayout or not spark.catalog.tableExists(
-                args.relayout_table
-            ):
-                with mon.ctx("relayout_build"):
-                    relayout_to_table(spark, fp, blocks, args.relayout_table, cfg)
-            with mon.ctx("relayout_stitch"):
-                res = stitch_from_relayout(spark, args.relayout_table, cfg)
-                write_mosaic(res, args.out)
         else:
+            if args.relayout_table and args.rebuild_relayout:
+                from .sources.relayout import relayout_to_table
+
+                relayout_to_table(spark, fp, blocks, args.relayout_table, cfg)
+            # do_mosaic routes through cfg.relayout_table: it stitches off
+            # the table when it holds exactly this corpus and tiling, and
+            # (re)builds it first when it is absent or stale
             res = do_mosaic(spark, fp, blocks, cfg)
             write_mosaic(res, args.out)
 

@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from .plans import grid as gridmod
 from .plans.grid import OutputGrid, make_tile_relation, overview_levels
 from .plans.spatial_join import assign_inputs
-from .operators.stitch import make_blend_stitch_fn_arrow, make_stitch_fn_arrow
+from .operators.stitch import make_stitch_fn_arrow
 from .operators.stats import finalize_stats
 from .pixels import PIXEL_BYTES, PIXEL_MAX, ingest, repeat_u2
 from .schema import STITCH_SCHEMA
@@ -57,7 +57,10 @@ class MosaicConfig:
     # contributor's source edge — nodata-aware, seams fade)
     merge_policy: str = "last"
     blend_feather: int = 64            # feather width (px) for 'blend'
-    stitch_salt: int = 1               # >1: two-stage salted merge for hot tiles
+    # >1: two-stage salted merge for hot tiles ('last' and 'blend'):
+    # stage 1 folds this many contiguous priority buckets per tile into
+    # partials, stage 2 (the normal stitch kernel) composes them
+    stitch_salt: int = 1
     # incremental sink partition count: touched-tile rewrites replace a
     # whole `part=` partition, so each partition holds ~1/sink_parts of
     # the mosaic. Size it so one partition is a bounded rewrite at the
@@ -95,27 +98,16 @@ class MosaicResult:
 
 def _summary_row(footprints: DataFrame, with_fingerprint: bool = False):
     """ONE aggregate over the footprint dim table carrying everything
-    do_mosaic needs up front: P6/P7 agreement counts, the
-    priority-first struct, the A1 extent, and (optionally) the relayout
-    fingerprint — one driver round trip where validate + grid +
+    do_mosaic needs up front: P6/P7 agreement counts, the A1 extent and
+    priority-first struct (plans.grid.extent_cols), and (optionally) the
+    relayout fingerprint — one driver round trip where validate + grid +
     fingerprint used to be three (guide §5: collects are full driver
     round trips; batch them)."""
-    first = F.min_by(
-        F.struct(
-            "projection", "x_res", "y_res", "x0", "y0",
-            "n_bands", "nullval", "dtype",
-        ),
-        F.col("priority"),
-    )
     aggs = [
         F.countDistinct("projection").alias("n_proj"),
         F.countDistinct("x_res").alias("n_xres"),
         F.countDistinct("y_res").alias("n_yres"),
-        first.alias("first"),
-        F.min(F.col("x0")).alias("x_min"),
-        F.max(F.col("x0") + F.col("ncols") * F.col("x_res")).alias("x_max"),
-        F.min(F.col("y0") - F.col("nrows") * F.col("y_res")).alias("y_min"),
-        F.max(F.col("y0")).alias("y_max"),
+        *gridmod.extent_cols(),
     ]
     if with_fingerprint:
         from .sources.relayout import fingerprint_agg_cols
@@ -124,20 +116,11 @@ def _summary_row(footprints: DataFrame, with_fingerprint: bool = False):
     return footprints.agg(*aggs).collect()[0]
 
 
-def _require_first(row):
-    if row["first"] is None:
-        raise ValueError(
-            "no media footprints found — the documents table has no media "
-            "spans (or the footprints table is empty)"
-        )
-    return row["first"]
-
-
 def _check_projection_row(footprints: DataFrame, row) -> None:
     """P6/P7 checks over a collected summary row + the one residual
     alignment scan (which needs the first input's origin, so it cannot
     fold into the same aggregate)."""
-    f = _require_first(row)
+    f = gridmod.require_first(row)
     if row["n_proj"] > 1:
         raise MoaProjectionError("Projection mis-match between inputs")
     if row["n_xres"] > 1 or row["n_yres"] > 1:
@@ -152,25 +135,6 @@ def _check_projection_row(footprints: DataFrame, row) -> None:
     ).limit(1).count()
     if bad:
         raise MoaProjectionError("Grid mis-alignment between inputs")
-
-
-def _grid_from_summary(row, nullval: float | None) -> OutputGrid:
-    """OutputGrid from a collected summary row — the same int(round())
-    derivation as plans.grid.make_output_grid (A1)."""
-    f = _require_first(row)
-    x_res, y_res = float(f["x_res"]), float(f["y_res"])
-    return OutputGrid(
-        x_min=float(row["x_min"]),
-        y_max=float(row["y_max"]),
-        x_res=x_res,
-        y_res=y_res,
-        ncols=int(round((row["x_max"] - row["x_min"]) / x_res)),
-        nrows=int(round((row["y_max"] - row["y_min"]) / y_res)),
-        n_bands=int(f["n_bands"]),
-        nullval=float(f["nullval"]) if nullval is None else float(nullval),
-        dtype=str(f["dtype"]),
-        projection=str(f["projection"]),
-    )
 
 
 def validate_projections(footprints: DataFrame) -> None:
@@ -415,15 +379,11 @@ def _stitch_tail(
 ) -> MosaicResult:
     """The stitch and everything after it, shared by the direct path and
     the relayout path. ``work`` arrives already distributed by (band,
-    tile): the direct path's one Exchange, or a bucketed scan. ``wsum``
-    partials (the salted blend's stage 1) select the blend stage-2
-    kernel. Tiles of ``tiles`` with no row in ``assignments`` get
-    JVM-side null fill."""
-    if "wsum" in work.columns:
-        fn = make_blend_stitch_fn_arrow(grid, levels, config.blend_feather)
-    else:
-        fn = make_stitch_fn_arrow(grid, levels, config.merge_policy,
-                                  feather=config.blend_feather)
+    tile): the direct path's one Exchange, or a bucketed scan. The one
+    stitch kernel also composes the salted path's partials. Tiles of
+    ``tiles`` with no row in ``assignments`` get JVM-side null fill."""
+    fn = make_stitch_fn_arrow(grid, levels, config.merge_policy,
+                              feather=config.blend_feather)
     stitched = work.groupBy("band", "tile_row", "tile_col").applyInArrow(fn, STITCH_SCHEMA)
     gap_tiles = tiles.join(
         assignments.select("tile_row", "tile_col").distinct(),
@@ -496,7 +456,7 @@ def do_mosaic(
         check_nullval(grid.nullval)
     else:
         check_nullval(
-            _require_first(row)["nullval"] if config.nullval is None else config.nullval
+            gridmod.require_first(row)["nullval"] if config.nullval is None else config.nullval
         )
     if config.check_blocks:
         validate_blocks(footprints, blocks)
@@ -513,14 +473,14 @@ def do_mosaic(
             grid=grid, tile_row_range=tile_row_range, tile_keys=tile_keys,
             fingerprint=footprints_fingerprint(footprints, row=row),
             grid_hint=(
-                _grid_from_summary(row, config.nullval) if grid is None else None
+                gridmod.grid_from_row(row, config.nullval) if grid is None else None
             ),
         )
         if res is not None:
             return res
 
     if grid is None:
-        grid = _grid_from_summary(row, config.nullval)
+        grid = gridmod.grid_from_row(row, config.nullval)
     levels = (
         overview_levels(grid.nrows, grid.ncols, config.min_overview_size)
         if config.with_overviews
@@ -535,18 +495,17 @@ def do_mosaic(
     if config.stitch_salt > 1:
         # Two-stage salted merge for hot tiles (many contributors): the
         # writer-serialization analog the reference cannot split. Stage
-        # 1 partial-merges CONTIGUOUS priority buckets per tile (the
-        # fold is associative given order preservation — see
-        # operators/stitch.py:make_partial_merge_fn_arrow); stage 2 is
-        # the normal stitch over one synthetic contributor per bucket.
-        if config.merge_policy not in ("last", "blend"):
-            # 'nearest' carries per-pixel arg-min state a value-only
-            # partial cannot decompose
+        # 1 partial-merges CONTIGUOUS priority buckets per tile into one
+        # partial row each (operators/stitch.py:make_partial_fn_arrow);
+        # stage 2 is the normal stitch kernel over those partials.
+        if config.merge_policy == "nearest":
+            # 'nearest' carries per-pixel arg-min state a partial cannot
+            # decompose
             raise ValueError("stitch_salt requires merge_policy 'last' or 'blend'")
         from pyspark.sql import Window
 
-        from .operators.stitch import make_partial_merge_fn_arrow
-        from .schema import PARTIAL_MERGE_SCHEMA
+        from .operators.stitch import make_partial_fn_arrow
+        from .schema import PARTIAL_SCHEMA
 
         # Bucket by ntile over the priority ORDER, not raw priority
         # values: sparse priorities (gaps, timestamps) would otherwise
@@ -567,9 +526,8 @@ def do_mosaic(
         # through it does a pointless extra kernel pass. Contributor
         # counts come from the (small) assignments relation; tiles with
         # at least 2 * stitch_salt contributors take the two-stage
-        # path, cold rows go straight to the final stitch (union is
-        # schema-aligned: the stitch kernel consumes the PARTIAL_MERGE
-        # column set either way).
+        # path, cold rows go straight to the final stitch with null
+        # partial canvases (the union is aligned on PARTIAL_SCHEMA).
         threshold = max(2, 2 * config.stitch_salt)
         counts = assignments.groupBy("tile_row", "tile_col").agg(
             F.count("*").alias("_nc")
@@ -577,34 +535,18 @@ def do_mosaic(
         work_c = work.join(counts, on=["tile_row", "tile_col"], how="inner")
         work_hot = work_c.where(F.col("_nc") >= threshold).drop("_nc")
         work_cold = work_c.where(F.col("_nc") < threshold).drop("_nc")
-        salted = work_hot.join(F.broadcast(buckets), on="priority", how="inner")
-        if config.merge_policy == "blend":
-            # blend partials are (wsum, wvsum) int64 canvases — the
-            # commutative decomposition (stitch.py:
-            # make_blend_partial_fn_arrow); cold rows ride along with
-            # null canvases and fold as raw contributors in stage 2
-            from .operators.stitch import make_blend_partial_fn_arrow
-            from .schema import BLEND_PARTIAL_SCHEMA
-
-            merged_hot = salted.groupBy(
-                "band", "tile_row", "tile_col", "_ssalt"
-            ).applyInArrow(
-                make_blend_partial_fn_arrow(grid, config.blend_feather),
-                BLEND_PARTIAL_SCHEMA,
+        merged_hot = (
+            work_hot.join(F.broadcast(buckets), on="priority", how="inner")
+            .groupBy("band", "tile_row", "tile_col", "_ssalt")
+            .applyInArrow(
+                make_partial_fn_arrow(grid, config.merge_policy, config.blend_feather),
+                PARTIAL_SCHEMA,
             )
-            cold = work_cold
-            for c in ("wsum", "wvsum"):
-                cold = cold.withColumn(c, F.lit(None).cast("array<bigint>"))
-            work = merged_hot.unionByName(
-                cold.select(*BLEND_PARTIAL_SCHEMA.fieldNames())
-            )
-        else:
-            merged_hot = salted.groupBy(
-                "band", "tile_row", "tile_col", "_ssalt"
-            ).applyInArrow(make_partial_merge_fn_arrow(grid), PARTIAL_MERGE_SCHEMA)
-            work = merged_hot.unionByName(
-                work_cold.select(*PARTIAL_MERGE_SCHEMA.fieldNames())
-            )
+        )
+        cold = work_cold.withColumns(
+            {c: F.lit(None).cast("array<bigint>") for c in ("wsum", "wvsum")}
+        )
+        work = merged_hot.unionByName(cold.select(*PARTIAL_SCHEMA.fieldNames()))
 
     # the stitch's ONE Exchange, sized to the cluster: a task per core
     # folds many groups, so the per-task Python set-up is paid

@@ -23,8 +23,13 @@ Reference semantics replicated exactly:
 
 All pixel math is numpy over Arrow-delivered batches; the only Python
 loop is per source *chunk* (a ~64K-pixel array), never per pixel/row.
-One fold implementation (`_fold_arrow_group`) serves both the full
-stitch and the salted stage-1 partial merge.
+
+The salted stitch (hot tiles, ``stitch_salt > 1``) has one kernel per
+stage, shared by the 'last' and 'blend' merge policies:
+``make_partial_fn_arrow`` folds a priority bucket into one
+PARTIAL_SCHEMA row, and ``make_stitch_fn_arrow`` — the same kernel as
+the unsalted stitch — composes the partials. One fold implementation
+(`_fold_arrow_group`) serves all of them.
 """
 
 from __future__ import annotations
@@ -36,12 +41,11 @@ from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..pixels import PIXEL_DTYPE, decode_column, encode_column
 from ..plans.grid import OutputGrid, overview_shape
-from ..schema import BLEND_PARTIAL_SCHEMA, PARTIAL_MERGE_SCHEMA, STITCH_SCHEMA
+from ..schema import PARTIAL_SCHEMA, STITCH_SCHEMA
 
 # the Arrow forms of the Spark relations the kernels emit
 ARROW_STITCH_SCHEMA = to_arrow_schema(STITCH_SCHEMA)
-ARROW_PARTIAL_SCHEMA = to_arrow_schema(PARTIAL_MERGE_SCHEMA)
-ARROW_BLEND_PARTIAL_SCHEMA = to_arrow_schema(BLEND_PARTIAL_SCHEMA)
+ARROW_PARTIAL_SCHEMA = to_arrow_schema(PARTIAL_SCHEMA)
 
 _WINDOW_COLS = (
     "top", "left", "ysize", "xsize", "priority",
@@ -213,6 +217,10 @@ def _fold_arrow_group(cols, offsets, values, canvas, nullval, policy, best, key)
                       in_top, in_left, src_nrows, src_ncols)
 
 
+def _key_ints(key) -> tuple:
+    return tuple(int(k.as_py() if hasattr(k, "as_py") else k) for k in key)
+
+
 def make_stitch_fn_arrow(
     grid: OutputGrid, levels: list[int], policy: str = "last", binary: bool = True,
     feather: int = 64,
@@ -221,21 +229,39 @@ def make_stitch_fn_arrow(
     reads pixel payloads zero-copy from the Arrow binary buffers and
     emits one batched binary column — no pandas object-column churn.
     ``binary`` must be True (payloads are always packed uint16, see
-    pixels.py); it stays only for callers that still pass it."""
+    pixels.py); it stays only for callers that still pass it.
+
+    It is also stage 2 of the salted stitch. A group whose input has a
+    ``wsum`` column (PARTIAL_SCHEMA) folds its rows with non-null
+    ``pixels`` as contributors — raw cold rows and 'last' partials —
+    and adds the canvases of its rows with non-null ``wsum`` ('blend'
+    partials) into the blend state before finalize. Finalize is the same
+    exact integer half-up division either way, so salted == unsalted
+    bit-for-bit. Any other group (every unsalted run) folds as is."""
     if not binary:
         raise ValueError("binary must be True: packed uint16 is the only pixel layout")
+    import pyarrow.compute as pc
+
     nullval = int(grid.nullval)
     ov_shapes = {lvl: overview_shape(grid.nrows, grid.ncols, lvl) for lvl in levels}
 
     def stitch(key: tuple, tbl: pa.Table) -> pa.Table:
-        band, tile_row, tile_col = (int(k.as_py() if hasattr(k, "as_py") else k) for k in key)
-        cols, offsets, values = _extract_arrow_group(tbl)
-        top, left = int(cols["top"][0]), int(cols["left"][0])
-        ysize, xsize = int(cols["ysize"][0]), int(cols["xsize"][0])
+        band, tile_row, tile_col = _key_ints(key)
+        top, left, ysize, xsize = (
+            int(tbl.column(c)[0].as_py()) for c in ("top", "left", "ysize", "xsize")
+        )
+        parts = None
+        if "wsum" in tbl.column_names:
+            parts = tbl.filter(pc.is_valid(tbl.column("wsum")))
+            tbl = tbl.filter(pc.is_valid(tbl.column("pixels")))
         canvas = np.full((ysize, xsize), nullval, dtype=PIXEL_DTYPE)
         best = _policy_state(policy, ysize, xsize, feather)
-        _fold_arrow_group(cols, offsets, values, canvas, nullval, policy, best,
-                          (band, tile_row, tile_col))
+        if tbl.num_rows:
+            cols, offsets, values = _extract_arrow_group(tbl)
+            _fold_arrow_group(cols, offsets, values, canvas, nullval, policy, best,
+                              (band, tile_row, tile_col))
+        if parts is not None and parts.num_rows:
+            _add_blend_partials(best, parts)
         _finalize_policy(canvas, policy, best)
         rows = [_base_row(band, tile_row, tile_col, top, left, canvas, nullval)]
         rows.extend(
@@ -246,47 +272,67 @@ def make_stitch_fn_arrow(
     return stitch
 
 
-def make_partial_merge_fn_arrow(grid: OutputGrid):
-    """Stage-1 kernel of the SALTED stitch: merge a contiguous-priority
-    bucket of contributors into one partial canvas, emitted as a
-    synthetic contributor row covering the bounding box of its non-null
-    pixels (not the whole tile — partially covered tiles would otherwise
-    inflate the stage-2 shuffle).
+def _add_blend_partials(best, parts: pa.Table) -> None:
+    """Add each 'blend' partial's (wsum, wvsum) box into the tile's
+    blend state at the box's offset (in_top = -r0, in_left = -c0)."""
+    geo = {
+        c: parts.column(c).to_numpy(zero_copy_only=False)
+        for c in ("in_top", "in_left", "src_nrows", "src_ncols")
+    }
+    for name, acc in (("wsum", best[0]), ("wvsum", best[1])):
+        arr = parts.column(name).combine_chunks()
+        off, val = arr.offsets.to_numpy(), arr.values.to_numpy(zero_copy_only=False)
+        for i in range(parts.num_rows):
+            r0, c0 = -int(geo["in_top"][i]), -int(geo["in_left"][i])
+            h, w = int(geo["src_nrows"][i]), int(geo["src_ncols"][i])
+            acc[r0: r0 + h, c0: c0 + w] += val[off[i]: off[i + 1]].reshape(h, w)
 
-    Correctness (SURVEY.md §7.5 "ordered merge under salting"): the
-    per-pixel fold op(a,b) = (b if b != nullval else a) is associative,
-    so partial canvases built over contiguous priority ranges and
-    composed in bucket order equal the unsalted fold exactly. Partial
-    rows re-enter the NORMAL stitch kernel (priority = bucket id), so
-    stage 2 shares this module's single fold implementation. Only valid
-    for merge_policy='last' — 'nearest' carries per-pixel best-distance
-    state a value-only partial cannot.
-    """
+
+def make_partial_fn_arrow(grid: OutputGrid, policy: str = "last", feather: int = 64):
+    """Stage-1 kernel of the SALTED stitch, for groupBy(band, tile_row,
+    tile_col, salt): fold a contiguous-priority bucket of a hot tile's
+    contributors, then emit ONE PARTIAL_SCHEMA row covering the bounding
+    box of what the bucket wrote (not the whole tile — partially covered
+    tiles would otherwise inflate the stage-2 shuffle).
+
+    Correctness (SURVEY.md §7.5 "ordered merge under salting"):
+
+    * 'last': the per-pixel fold op(a,b) = (b if b != nullval else a) is
+      associative, so partial canvases built over contiguous priority
+      ranges and composed in bucket order (priority = bucket id) equal
+      the unsalted fold exactly. The box is the written pixels
+      (``canvas != nullval``) and rides in ``pixels``.
+    * 'blend': a per-pixel SUM of (weight, weight*value) over non-null
+      contributors — commutative and associative — so each bucket emits
+      the box of its integer (wsum, wvsum) canvases (``wsum > 0``) and
+      stage 2 adds them in any order; ``pixels`` is null.
+
+    'nearest' carries per-pixel arg-min state a partial cannot
+    decompose; do_mosaic rejects it before planning."""
     nullval = int(grid.nullval)
 
     def partial(key: tuple, tbl: pa.Table) -> pa.Table:
-        band, tile_row, tile_col, salt = (
-            int(k.as_py() if hasattr(k, "as_py") else k) for k in key
-        )
+        band, tile_row, tile_col, salt = _key_ints(key)
         cols, offsets, values = _extract_arrow_group(tbl)
         top, left = int(cols["top"][0]), int(cols["left"][0])
         ysize, xsize = int(cols["ysize"][0]), int(cols["xsize"][0])
         canvas = np.full((ysize, xsize), nullval, dtype=PIXEL_DTYPE)
-        _fold_arrow_group(cols, offsets, values, canvas, nullval, "last", None,
+        best = _policy_state(policy, ysize, xsize, feather)
+        _fold_arrow_group(cols, offsets, values, canvas, nullval, policy, best,
                           (band, tile_row, tile_col, salt))
-
-        # bounding box of written (non-null) pixels. An all-null bucket
-        # still emits a 1x1 null box: dropping it entirely could drop the
-        # TILE from stage 2 when every bucket is all-null, whereas the
-        # unsalted path emits a null tile for assigned-but-all-null input.
-        nn_rows = np.flatnonzero((canvas != nullval).any(axis=1))
-        nn_cols = np.flatnonzero((canvas != nullval).any(axis=0))
+        # bounding box of written pixels. An all-null bucket still emits
+        # a 1x1 null box: dropping it entirely could drop the TILE from
+        # stage 2 when every bucket is all-null, whereas the unsalted
+        # path emits a null tile for assigned-but-all-null input.
+        written = canvas != nullval if best is None else best[0] > 0
+        nn_rows = np.flatnonzero(written.any(axis=1))
+        nn_cols = np.flatnonzero(written.any(axis=0))
         if nn_rows.size == 0:
             r0, r1, c0, c1 = 0, 1, 0, 1
         else:
             r0, r1 = int(nn_rows[0]), int(nn_rows[-1]) + 1
             c0, c1 = int(nn_cols[0]), int(nn_cols[-1]) + 1
-        box = canvas[r0:r1, c0:c1]
+        box = np.s_[r0:r1, c0:c1]
         row = {
             "tile_row": tile_row, "tile_col": tile_col, "band": band,
             "top": top, "left": left, "ysize": ysize, "xsize": xsize,
@@ -299,131 +345,23 @@ def make_partial_merge_fn_arrow(grid: OutputGrid):
             "in_ysize": ysize, "in_xsize": xsize,
             "src_nrows": r1 - r0, "src_ncols": c1 - c0,
             "b_top": 0, "b_left": 0, "b_ysize": r1 - r0, "b_xsize": c1 - c0,
-            "pixels": box.ravel(),
+            "pixels": canvas[box].ravel() if best is None else None,
+            "wsum": None if best is None else best[0][box].ravel(),
+            "wvsum": None if best is None else best[1][box].ravel(),
         }
         return _rows_to_arrow([row], ARROW_PARTIAL_SCHEMA)
 
     return partial
 
 
-def make_blend_partial_fn_arrow(grid: OutputGrid, feather: int):
-    """Stage-1 kernel of the SALTED BLEND stitch. Blend is a per-pixel
-    SUM of (weight, weight*value) over non-null contributors —
-    commutative and associative, unlike 'last' (order-dependent) or
-    'nearest' (arg-min state) — so each priority bucket can emit its
-    integer (wsum, wvsum) partial canvases and stage 2 just adds them:
-    exact under any bucket composition order. Partials ride the
-    PARTIAL_MERGE geometry convention (bbox placed via in_top=-r0) with
-    two int64 payload columns; ``pixels`` is null on partial rows, which
-    is how the stage-2 kernel tells them from raw (cold-tile) rows."""
-    nullval = int(grid.nullval)
-
-    def partial(key: tuple, tbl: pa.Table) -> pa.Table:
-        band, tile_row, tile_col, salt = (
-            int(k.as_py() if hasattr(k, "as_py") else k) for k in key
-        )
-        cols, offsets, values = _extract_arrow_group(tbl)
-        top, left = int(cols["top"][0]), int(cols["left"][0])
-        ysize, xsize = int(cols["ysize"][0]), int(cols["xsize"][0])
-        canvas = np.full((ysize, xsize), nullval, dtype=PIXEL_DTYPE)  # unused sink
-        best = _blend_state(ysize, xsize, feather)
-        _fold_arrow_group(cols, offsets, values, canvas, nullval, "blend", best,
-                          (band, tile_row, tile_col, salt))
-        wsum, wvsum, _ = best
-        nz_rows = np.flatnonzero((wsum > 0).any(axis=1))
-        nz_cols = np.flatnonzero((wsum > 0).any(axis=0))
-        if nz_rows.size == 0:
-            r0, r1, c0, c1 = 0, 1, 0, 1
-        else:
-            r0, r1 = int(nz_rows[0]), int(nz_rows[-1]) + 1
-            c0, c1 = int(nz_cols[0]), int(nz_cols[-1]) + 1
-        row = {
-            "tile_row": tile_row, "tile_col": tile_col, "band": band,
-            "top": top, "left": left, "ysize": ysize, "xsize": xsize,
-            "priority": salt,
-            "in_top": -r0, "in_left": -c0,
-            "in_ysize": ysize, "in_xsize": xsize,
-            "src_nrows": r1 - r0, "src_ncols": c1 - c0,
-            "b_top": 0, "b_left": 0, "b_ysize": r1 - r0, "b_xsize": c1 - c0,
-        }
-        arrs = []
-        for field in ARROW_BLEND_PARTIAL_SCHEMA:
-            if field.name == "pixels":
-                arrs.append(pa.nulls(1, field.type))
-            elif field.name in ("wsum", "wvsum"):
-                payload = (wsum if field.name == "wsum" else wvsum)[r0:r1, c0:c1].ravel()
-                arrs.append(pa.ListArray.from_arrays(
-                    pa.array([0, payload.size], pa.int32()),
-                    pa.array(payload, pa.int64()),
-                ))
-            else:
-                arrs.append(pa.array([row[field.name]], field.type))
-        return pa.Table.from_arrays(arrs, schema=ARROW_BLEND_PARTIAL_SCHEMA)
-
-    return partial
-
-
-def make_blend_stitch_fn_arrow(grid: OutputGrid, levels: list[int], feather: int):
-    """Stage-2 kernel of the salted blend stitch: raw rows (cold tiles —
-    ``pixels`` non-null) fold through the normal blend accumulate;
-    partial rows (hot tiles) add their (wsum, wvsum) canvases at their
-    bbox offsets. Finalize is the same exact integer half-up division
-    as the unsalted path, so salted == unsalted bit-for-bit."""
-    import pyarrow.compute as pc
-
-    nullval = int(grid.nullval)
-    ov_shapes = {lvl: overview_shape(grid.nrows, grid.ncols, lvl) for lvl in levels}
-
-    def stitch(key: tuple, tbl: pa.Table) -> pa.Table:
-        band, tile_row, tile_col = (
-            int(k.as_py() if hasattr(k, "as_py") else k) for k in key
-        )
-        mask = pc.is_valid(tbl.column("wsum").combine_chunks())
-        raw_tbl = tbl.filter(pc.invert(mask))
-        part_tbl = tbl.filter(mask)
-        top = int(tbl.column("top")[0].as_py())
-        left = int(tbl.column("left")[0].as_py())
-        ysize = int(tbl.column("ysize")[0].as_py())
-        xsize = int(tbl.column("xsize")[0].as_py())
-        canvas = np.full((ysize, xsize), nullval, dtype=PIXEL_DTYPE)
-        best = _blend_state(ysize, xsize, feather)
-        if raw_tbl.num_rows:
-            cols, offsets, values = _extract_arrow_group(raw_tbl)
-            _fold_arrow_group(cols, offsets, values, canvas, nullval, "blend", best,
-                              (band, tile_row, tile_col))
-        if part_tbl.num_rows:
-            wsum_t, wvsum_t, _ = best
-            geo = {
-                c: part_tbl.column(c).to_numpy(zero_copy_only=False)
-                for c in ("in_top", "in_left", "src_nrows", "src_ncols")
-            }
-            ws = part_tbl.column("wsum").combine_chunks()
-            wv = part_tbl.column("wvsum").combine_chunks()
-            ws_off, ws_val = ws.offsets.to_numpy(), ws.values.to_numpy(zero_copy_only=False)
-            wv_off, wv_val = wv.offsets.to_numpy(), wv.values.to_numpy(zero_copy_only=False)
-            for i in range(part_tbl.num_rows):
-                r0, c0 = -int(geo["in_top"][i]), -int(geo["in_left"][i])
-                h, w = int(geo["src_nrows"][i]), int(geo["src_ncols"][i])
-                wsum_t[r0: r0 + h, c0: c0 + w] += ws_val[ws_off[i]: ws_off[i + 1]].reshape(h, w)
-                wvsum_t[r0: r0 + h, c0: c0 + w] += wv_val[wv_off[i]: wv_off[i + 1]].reshape(h, w)
-        _finalize_policy(canvas, "blend", best)
-        rows = [_base_row(band, tile_row, tile_col, top, left, canvas, nullval)]
-        rows.extend(
-            _pyramid_rows(band, tile_row, tile_col, top, left, canvas, levels, ov_shapes)
-        )
-        return _rows_to_arrow(rows, ARROW_STITCH_SCHEMA)
-
-    return stitch
-
-
 def _rows_to_arrow(rows: list[dict], schema: pa.Schema) -> pa.Table:
-    pixels = encode_column([r["pixels"] for r in rows])
     arrs = []
     for field in schema:
-        if field.name == "pixels":
-            arrs.append(pixels)
+        vals = [r[field.name] for r in rows]
+        if field.name == "pixels" and not any(v is None for v in vals):
+            arrs.append(encode_column(vals))
         else:
-            arrs.append(pa.array([r[field.name] for r in rows], type=field.type))
+            arrs.append(pa.array(vals, type=field.type))
     return pa.Table.from_arrays(arrs, schema=schema)
 
 

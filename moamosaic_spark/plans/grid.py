@@ -48,46 +48,62 @@ class OutputGrid:
         return (self.x_min, self.x_res, 0.0, self.y_max, 0.0, -self.y_res)
 
 
-def make_output_grid(footprints: DataFrame, nullval: float | None = None) -> OutputGrid:
-    """Global extent aggregate (A1). One tiny all-reduce over the footprint
-    dim table; projection/res/dtype/bands/null default from the
-    priority-0 (first) input, exactly as ref mosaic.py:442-455.
-    """
-    row = (
-        footprints.agg(
-            F.min(F.col("x0")).alias("x_min"),
-            F.max(F.col("x0") + F.col("ncols") * F.col("x_res")).alias("x_max"),
-            F.min(F.col("y0") - F.col("nrows") * F.col("y_res")).alias("y_min"),
-            F.max(F.col("y0")).alias("y_max"),
-            F.min_by(
-                F.struct("x_res", "y_res", "n_bands", "nullval", "dtype", "projection"),
-                F.col("priority"),
-            ).alias("first"),
-        )
-    ).collect()[0]
+def extent_cols() -> list:
+    """The global extent aggregate (A1) plus the priority-first input's
+    struct ``first``, as aggregate columns — so a caller (do_mosaic's
+    one summary pass) can fold them into a wider aggregate."""
+    first = F.min_by(
+        F.struct(
+            "projection", "x_res", "y_res", "x0", "y0",
+            "n_bands", "nullval", "dtype",
+        ),
+        F.col("priority"),
+    )
+    return [
+        first.alias("first"),
+        F.min(F.col("x0")).alias("x_min"),
+        F.max(F.col("x0") + F.col("ncols") * F.col("x_res")).alias("x_max"),
+        F.min(F.col("y0") - F.col("nrows") * F.col("y_res")).alias("y_min"),
+        F.max(F.col("y0")).alias("y_max"),
+    ]
+
+
+def require_first(row):
+    """The priority-first input of a collected ``extent_cols`` row;
+    raises when the footprint table was empty."""
     if row["first"] is None:
         raise ValueError(
             "no media footprints found — the documents table has no media "
             "spans (or the footprints table is empty)"
         )
-    first = row["first"]
+    return row["first"]
+
+
+def grid_from_row(row, nullval: float | None = None) -> OutputGrid:
+    """OutputGrid from a collected ``extent_cols`` row: projection/res/
+    dtype/bands/null default from the priority-0 (first) input, exactly
+    as ref mosaic.py:442-455."""
+    first = require_first(row)
     x_res, y_res = float(first["x_res"]), float(first["y_res"])
-    # int(round(...)) as in ref mosaic.py:446-447
-    ncols = int(round((row["x_max"] - row["x_min"]) / x_res))
-    nrows = int(round((row["y_max"] - row["y_min"]) / y_res))
-    nv = float(first["nullval"]) if nullval is None else float(nullval)
     return OutputGrid(
         x_min=float(row["x_min"]),
         y_max=float(row["y_max"]),
         x_res=x_res,
         y_res=y_res,
-        ncols=ncols,
-        nrows=nrows,
+        # int(round(...)) as in ref mosaic.py:446-447
+        ncols=int(round((row["x_max"] - row["x_min"]) / x_res)),
+        nrows=int(round((row["y_max"] - row["y_min"]) / y_res)),
         n_bands=int(first["n_bands"]),
-        nullval=nv,
+        nullval=float(first["nullval"]) if nullval is None else float(nullval),
         dtype=str(first["dtype"]),
         projection=str(first["projection"]),
     )
+
+
+def make_output_grid(footprints: DataFrame, nullval: float | None = None) -> OutputGrid:
+    """Global extent aggregate (A1). One tiny all-reduce over the footprint
+    dim table."""
+    return grid_from_row(footprints.agg(*extent_cols()).collect()[0], nullval)
 
 
 def n_blocks(n: int, blocksize: int) -> int:

@@ -97,39 +97,23 @@ STITCH_SCHEMA = T.StructType(
     ]
 )
 
-# salted-stitch stage-1 output: one synthetic contributor row per
-# (tile, priority-bucket) — re-enters the normal stitch kernel
-PARTIAL_MERGE_SCHEMA = T.StructType(
+# salted-stitch stage-1 output: one row per (tile, priority bucket),
+# placed as a synthetic contributor covering the box of what the bucket
+# wrote; it re-enters the stitch kernel. A 'last' partial carries that
+# box in ``pixels``; a 'blend' partial carries the box's int64 (weight
+# sum, weighted value sum) canvases in ``wsum``/``wvsum`` and a null
+# ``pixels``. Cold (unsalted) rows ride along with null ``wsum``/``wvsum``.
+PARTIAL_SCHEMA = T.StructType(
     [
-        T.StructField("tile_row", T.IntegerType()),
-        T.StructField("tile_col", T.IntegerType()),
-        T.StructField("band", T.IntegerType()),
-        T.StructField("top", T.IntegerType()),
-        T.StructField("left", T.IntegerType()),
-        T.StructField("ysize", T.IntegerType()),
-        T.StructField("xsize", T.IntegerType()),
-        T.StructField("priority", T.IntegerType()),
-        T.StructField("in_top", T.IntegerType()),
-        T.StructField("in_left", T.IntegerType()),
-        T.StructField("in_ysize", T.IntegerType()),
-        T.StructField("in_xsize", T.IntegerType()),
-        T.StructField("src_ncols", T.IntegerType()),
-        T.StructField("src_nrows", T.IntegerType()),
-        T.StructField("b_top", T.IntegerType()),
-        T.StructField("b_left", T.IntegerType()),
-        T.StructField("b_ysize", T.IntegerType()),
-        T.StructField("b_xsize", T.IntegerType()),
-        T.StructField("pixels", PIXEL_TYPE),
+        T.StructField(name, T.IntegerType())
+        for name in (
+            "tile_row", "tile_col", "band", "top", "left", "ysize", "xsize",
+            "priority", "in_top", "in_left", "in_ysize", "in_xsize",
+            "src_ncols", "src_nrows", "b_top", "b_left", "b_ysize", "b_xsize",
+        )
     ]
-)
-
-# salted-BLEND stage-1 output: the partial-merge relation plus the two
-# int64 partial canvases (weight sum, weighted value sum). On raw
-# (cold-tile) rows the canvases are null; on partial rows ``pixels`` is
-# null — how the stage-2 kernel tells them apart.
-BLEND_PARTIAL_SCHEMA = T.StructType(
-    list(PARTIAL_MERGE_SCHEMA.fields)
     + [
+        T.StructField("pixels", PIXEL_TYPE),
         T.StructField("wsum", T.ArrayType(T.LongType())),
         T.StructField("wvsum", T.ArrayType(T.LongType())),
     ]

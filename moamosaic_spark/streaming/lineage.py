@@ -112,16 +112,10 @@ def resumable_mosaic(
     run_id = run_id or uuid.uuid4().hex[:12]
 
     if relayout_table is not None:
-        from ..sources.relayout import _load_meta
-        from ..plans.grid import OutputGrid
+        from ..sources.relayout import _grid_from_meta, _load_meta
 
         m = _load_meta(spark, relayout_table)
-        grid = OutputGrid(
-            x_min=m["x_min"], y_max=m["y_max"], x_res=m["x_res"],
-            y_res=m["y_res"], ncols=m["ncols"], nrows=m["nrows"],
-            n_bands=m["n_bands"], nullval=m["nullval"], dtype=m["dtype"],
-            projection=m["projection"],
-        )
+        grid = _grid_from_meta(m)
         blocksize = int(m["blocksize"])
     else:
         grid = make_output_grid(footprints, config.nullval)

@@ -89,30 +89,52 @@ def test_cli_rejects_bad_args(staged):
 
 def test_cli_relayout_reuse(spark, staged):
     """--relayout-table builds the bucketed work table on first use and
-    stitches off it on the second run (monitor shows no rebuild); both
-    outputs equal the plain run."""
-    out1 = str(staged / "out_rel1")
-    out2 = str(staged / "out_rel2")
+    stitches off it on the second run (the table's files are unchanged);
+    both outputs equal the plain run. A rerun with the same table name
+    on another corpus and another -b rebuilds the table, and its output
+    equals that corpus's oracle."""
+    table = "cli_relayout_t"
+    opts = ["--src-blocksize", "64", "--no-overviews", "--relayout-table", table]
     base = [
         "--footprints", str(staged / "fp"), "--blocks", str(staged / "blocks"),
-        "-b", "64", "--src-blocksize", "64", "--no-overviews",
-        "--relayout-table", "cli_relayout_t",
+        "-b", "64", *opts,
     ]
-    main(base + ["-o", out1, "--monitorjson", str(staged / "m1.json")])
-    main(base + ["-o", out2, "--monitorjson", str(staged / "m2.json")])
-    m1 = json.loads((staged / "m1.json").read_text())
-    m2 = json.loads((staged / "m2.json").read_text())
-    assert "relayout_build" in m1["total_by_name"]
-    assert "relayout_build" not in m2["total_by_name"]  # reused
+    outs = [str(staged / "out_rel1"), str(staged / "out_rel2")]
+    files = []
+    for out in outs:
+        main(base + ["-o", out])
+        files.append(sorted(spark.table(table).inputFiles()))
+    assert files[0] == files[1]  # reused, not rebuilt
     rasters = synth.grid3x3(150, 150)
     want = synth.oracle(rasters, blocksize=64, min_overview_size=9999)
-    for out in (out1, out2):
+    for out in outs:
         for r in _canvas(spark, out):
             arr = decode(r.pixels).reshape(r.ysize, r.xsize)
             np.testing.assert_array_equal(
                 arr, want.tiles[(r.band, r.tile_row, r.tile_col)])
-    spark.sql("DROP TABLE IF EXISTS cli_relayout_t")
-    spark.sql("DROP TABLE IF EXISTS cli_relayout_t_meta")
+
+    # a different corpus and tiling under the same table name: rebuilt
+    other = synth.golden_pair(200, 200)
+    to_footprints(spark, synth.footprints_pdf(other)).write.mode(
+        "overwrite").parquet(str(staged / "fp_b"))
+    to_blocks(spark, synth.blocks_pdf(other, 64)).write.mode(
+        "overwrite").parquet(str(staged / "blocks_b"))
+    out_b = str(staged / "out_rel_b")
+    main([
+        "--footprints", str(staged / "fp_b"), "--blocks", str(staged / "blocks_b"),
+        "-b", "96", *opts, "-o", out_b,
+    ])
+    assert sorted(spark.table(table).inputFiles()) != files[0]
+    want_b = synth.oracle(other, blocksize=96, min_overview_size=9999)
+    got = {
+        (r.band, r.tile_row, r.tile_col): decode(r.pixels).reshape(r.ysize, r.xsize)
+        for r in _canvas(spark, out_b)
+    }
+    assert set(got) == set(want_b.tiles)
+    for k, arr in got.items():
+        np.testing.assert_array_equal(arr, want_b.tiles[k], err_msg=f"tile {k}")
+    spark.sql(f"DROP TABLE IF EXISTS {table}")
+    spark.sql(f"DROP TABLE IF EXISTS {table}_meta")
 
 
 def test_cli_relayout_batches_exclusive(staged):

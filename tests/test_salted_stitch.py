@@ -168,8 +168,9 @@ def test_salted_blend_equals_unsalted(spark, salt):
         np.testing.assert_array_equal(salted[k], plain[k], err_msg=f"tile {k}")
 
 
-def test_salted_blend_hot_cold_mix_and_overviews(spark):
-    """Blend two-stage with a hot stack + a far cold raster: cold rows
+@pytest.mark.parametrize("merge_policy", ["last", "blend"])
+def test_salted_blend_hot_cold_mix_and_overviews(spark, merge_policy):
+    """Two-stage stitch with a hot stack + a far cold raster: cold rows
     ride the union with null partial canvases and fold as raw
     contributors in stage 2; overviews flow through too."""
     hot = synth.hot_cell(12, 128, 128)
@@ -183,7 +184,7 @@ def test_salted_blend_hot_cold_mix_and_overviews(spark):
     fp = to_footprints(spark, pdf)
     blocks = to_blocks(spark, synth.blocks_pdf(rasters, 256))
     base = dict(blocksize=64, src_blocksize=256, min_overview_size=32,
-                merge_policy="blend", blend_feather=16)
+                merge_policy=merge_policy, blend_feather=16)
 
     plain_res = do_mosaic(spark, fp, blocks, MosaicConfig(**base))
     salt_res = do_mosaic(spark, fp, blocks, MosaicConfig(**base, stitch_salt=3))
@@ -196,6 +197,29 @@ def test_salted_blend_hot_cold_mix_and_overviews(spark):
     ov_s = {(r.level, r.band, r.tile_row, r.tile_col): list(r.pixels)
             for r in salt_res.overviews.collect()}
     assert ov_p == ov_s and len(ov_p) > 0
+
+
+@pytest.mark.parametrize("merge_policy", ["last", "blend"])
+def test_salted_all_null_hot_tile(spark, merge_policy):
+    """A hot stack whose every band is nodata: each stage-1 bucket
+    writes nothing and emits its 1x1 null box, and the salted tiles
+    still equal the unsalted ones — same keys, all null, px_count 0."""
+    rasters = synth.hot_cell(8, 96, 96)
+    for r in rasters:
+        r.bands = [np.full_like(b, r.nullval) for b in r.bands]
+    fp = to_footprints(spark, synth.footprints_pdf(rasters))
+    blocks = to_blocks(spark, synth.blocks_pdf(rasters, 256))
+    base = dict(blocksize=64, src_blocksize=256, with_overviews=False,
+                merge_policy=merge_policy, blend_feather=16)
+    out = {}
+    for salt in (1, 2):
+        res = do_mosaic(spark, fp, blocks, MosaicConfig(**base, stitch_salt=salt))
+        out[salt] = {
+            (r.band, r.tile_row, r.tile_col): (bytes(r.pixels), r.px_count)
+            for r in res.tiles.collect()
+        }
+    assert out[2] == out[1] and len(out[1]) > 0
+    assert all(n == 0 for _, n in out[2].values())
 
 
 def test_salted_blend_u2_layout(spark):

@@ -99,7 +99,11 @@ def test_direct_stitch_one_exchange_sized_to_cores(spark):
     for k, a in got.items():
         assert (a == want.tiles[k]).all(), k
     # the salted stage 2 goes through the same sized Exchange
-    for cfg in (MosaicConfig(**base), MosaicConfig(**base, stitch_salt=2)):
+    for cfg in (
+        MosaicConfig(**base),
+        MosaicConfig(**base, stitch_salt=2),
+        MosaicConfig(**base, stitch_salt=2, merge_policy="blend"),
+    ):
         plan = _plan(spark, do_mosaic(spark, fp, blocks, cfg).stitched)
         below = plan.split("FlatMapGroupsInArrow", 1)[1]
         assert [int(m) for m in STITCH_EXCHANGE.findall(below)] == [n], plan
