@@ -14,11 +14,11 @@ Option mapping (reference option -> here):
     --nullval        -> --nullval
     --minoverviewsize-> --minoverviewsize
     -d/--driver,--co -> (dropped: table formats replace GDAL drivers)
-    --outprojepsg    -> --out-epsg (cross-CRS warp; built-in WGS84 TM
-                        subset, pyproj for other CRSes)
-    --outprojwktfile -> (dropped: EPSG codes only without pyproj)
-    --resample       -> --resample near|bilinear|average
-                        (+ --xres/--yres same-CRS rescale)
+    --outprojepsg    -> --out-epsg (cross-CRS warp; the built-in CRS
+                        subset of crs.py: 4326, 3857, WGS84 UTM zones)
+    --outprojwktfile -> (dropped: EPSG codes only)
+    --resample       -> --resample near|bilinear|average, for the warp
+                        and for the --xres/--yres same-CRS rescale
     --monitorjson    -> --monitorjson
 Extras: --strategy/--cell-size-px/--salt (join physical strategy),
 --merge-policy, --batches/--resume (lineage checkpointing),
@@ -64,12 +64,12 @@ def get_parser() -> argparse.ArgumentParser:
                    help="force re-materializing --relayout-table")
     p.add_argument("--out-epsg", type=int, default=None,
                    help="warp inputs to this EPSG before mosaicking "
-                        "(built-in: 4326 + WGS84 UTM zones; others need pyproj)")
+                        "(built-in subset only: 4326, 3857 and WGS84 UTM zones)")
     p.add_argument("--xres", type=float, default=None)
     p.add_argument("--yres", type=float, default=None)
     p.add_argument("--resample", default="near",
                    choices=["near", "bilinear", "average"],
-                   help="resampling method for --xres/--yres")
+                   help="resampling method for --out-epsg and --xres/--yres")
     p.add_argument("--derived", action="append", default=None,
                    choices=["hillshade", "terrain", "basins"],
                    help="also write gdaldem-style derived products "
@@ -125,12 +125,12 @@ def main(argv: list[str] | None = None) -> None:
             # otherwise build a ~10^4x denser grid.
             import math
 
-            from .reproject import _corner_transform
+            from .crs import make_transform
 
             first = fp.orderBy("priority").select(
                 "x0", "y0", "x_res", "y_res", "projection"
             ).first()
-            tr = _corner_transform(first.projection, f"EPSG:{args.out_epsg}")
+            tr = make_transform(first.projection, args.out_epsg)
             x0, y0 = (float(v) for v in tr(first.x0, first.y0))
             xs, ys = (float(v) for v in tr(first.x0 + first.x_res, first.y0))
             xres = math.hypot(xs - x0, ys - y0)

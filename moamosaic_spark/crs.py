@@ -2,9 +2,9 @@
 Mercator).
 
 The reference delegates coordinate transforms to GDAL/osr
-(/root/reference/moamosaic/reproj.py:221-234, corner reprojection) —
-neither GDAL nor pyproj exists in this container, so the supported-CRS
-subset needed by the engine (EPSG:4326, EPSG:3857 and WGS84 UTM zones
+(reproj.py:221-234, corner reprojection). This engine uses neither
+GDAL nor pyproj: every reprojection goes through ``make_transform``,
+and the supported-CRS subset (EPSG:4326, EPSG:3857 and WGS84 UTM zones
 EPSG:326zz/327zz) is implemented directly from public definitions: the
 USGS ellipsoidal Transverse Mercator series (Snyder, *Map Projections —
 A Working Manual*, USGS PP 1395, pp. 60-64) and the spherical
@@ -152,6 +152,13 @@ def tm_inverse(x, y, lon0: float, fn: float):
     return np.rad2deg(lam), np.rad2deg(phi)
 
 
+def _unsupported(epsg: int) -> MoaCrsError:
+    return MoaCrsError(
+        f"EPSG:{epsg} not in the built-in subset (4326, 3857, WGS84 UTM "
+        "326zz/327zz), the only CRSes reprojection supports (pyproj is not used)"
+    )
+
+
 def make_transform(src_crs: str | int, dst_crs: str | int):
     """Vectorized (x, y) -> (x', y') between two supported CRSes.
     Raises MoaCrsError for unsupported codes."""
@@ -168,10 +175,7 @@ def make_transform(src_crs: str | int, dst_crs: str | int):
             return merc_inverse
         p = utm_params(epsg)
         if p is None:
-            raise MoaCrsError(
-                f"EPSG:{epsg} not in the built-in subset (4326, 3857, WGS84 "
-                "UTM 326zz/327zz); install pyproj for the general path"
-            )
+            raise _unsupported(epsg)
         return lambda x, y: tm_inverse(x, y, p[0], p[1])
 
     def from_geodetic(epsg):
@@ -181,10 +185,7 @@ def make_transform(src_crs: str | int, dst_crs: str | int):
             return merc_forward
         p = utm_params(epsg)
         if p is None:
-            raise MoaCrsError(
-                f"EPSG:{epsg} not in the built-in subset (4326, 3857, WGS84 "
-                "UTM 326zz/327zz); install pyproj for the general path"
-            )
+            raise _unsupported(epsg)
         return lambda lon, lat: tm_forward(lon, lat, p[0], p[1])
 
     inv = to_geodetic(src)

@@ -6,21 +6,28 @@ target grid at read time; otherwise inputs are validated for agreement.
 Spark rebuild:
 
 * agreement validation (P6/P7)  -> mosaic.validate_projections
+* reprojection requested (P8)   -> the CLI's --out-epsg / --xres branch
 * grid snap (P9, reproj.py:237-261)         -> snap_value / align_grid
 * corner envelope (P10, reproj.py:221-234)  -> reproject_corners
-  (pyproj when available; otherwise the built-in pure-numpy WGS84 TM
-  subset in crs.py — EPSG:4326 + UTM zones)
-* cross-CRS warp (reproj.py:130-218)        -> warp_blocks: the full
-  VRT-warp path as a windowed relation (see the warp section below)
-* resolution change, same CRS (the common mosaic-of-mixed-res case) ->
-  resample_blocks: a WINDOWED regrid — the unit of work is one target
-  chunk, whose needed source window is derived in closed-form column
-  math, exploded to source chunk keys, equi-joined, and resampled by a
-  grouped pandas kernel over a bounded window (the reference's
-  warp-at-windowed-read, reproj.py:209-213, as a relation). Produces a
-  NEW lazy (footprints, blocks) pair on the target grid that feeds
-  straight into do_mosaic; the mosaic join prunes it by chunk keys.
-  Methods: near (exact reference rule), bilinear, average.
+* same-CRS resolution change -> resample_blocks; cross-CRS warp
+  (reproj.py:130-218) -> warp_blocks
+
+Every transform is ``crs.make_transform``: the built-in pure-numpy
+subset (EPSG:4326, 3857 and WGS84 UTM zones); pyproj is not used.
+
+Both reprojections are ONE windowed pipeline — the reference's
+warp-at-windowed-read (reproj.py:209-213) as a relation. The unit of
+work is one TARGET chunk: the chunk relation is generated JVM-side,
+each chunk's source window is exploded to source chunk keys and
+equi-joined, and one grouped Arrow kernel assembles the bounded window
+and resamples it (``_sample``: near, bilinear, average). Pure-margin
+chunks never reach Python. The routes differ only in their footprint
+planner and window bounds (closed-form columns for the resample, a
+sampled transform map for the warp) and in the index-map builder that
+feeds the kernel: ``_affine_maps`` (separable row/column vectors) or
+``_warp_maps`` (2-D maps through the transform). Each returns a NEW lazy
+(footprints, blocks) pair on the target grid that feeds straight into
+do_mosaic; the mosaic join prunes it by chunk keys.
 
 Nearest semantics (center-based, floor):
     src_idx(dst_idx) = floor(((dst_idx + 0.5) * dst_res + dst_origin
@@ -33,21 +40,22 @@ import math
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
-from .pixels import decode, encode, ingest, repeat_u2
+from .crs import MoaCrsError, make_transform, parse_epsg
+from .operators.stitch import _rows_to_arrow
+from .pixels import decode_column, ingest, repeat_u2
 from .schema import BLOCKS_SCHEMA
+
+METHODS = ("near", "bilinear", "average")
+_ARROW_BLOCKS_SCHEMA = to_arrow_schema(BLOCKS_SCHEMA)
 
 
 class MoaReprojectionError(Exception):
     pass
-
-
-def reprojection_requested(out_epsg=None, out_wkt=None, out_xres=None, out_yres=None) -> bool:
-    """P8 (reference reproj.py:62-69, extended: a bare resolution change
-    also routes through the resample path)."""
-    return any(v is not None for v in (out_epsg, out_wkt, out_xres, out_yres))
 
 
 def snap_value(val: float, res: float, ceil: bool) -> float:
@@ -67,41 +75,22 @@ def align_grid(x_min, x_max, y_min, y_max, xres, yres):
     )
 
 
-def _corner_transform(src_crs: str, dst_crs: str):
-    """(x, y) -> (x', y') callable. pyproj when available (any CRS);
-    otherwise the built-in pure-numpy WGS84 TM subset (crs.py:
-    EPSG:4326 + UTM 326zz/327zz). Axis order is always (x, y) — the
-    P11 axis-swap guard (reference reproj.py:264-271)."""
-    try:
-        from pyproj import Transformer
-
-        return Transformer.from_crs(src_crs, dst_crs, always_xy=True).transform
-    except ImportError:
-        from .crs import MoaCrsError, make_transform
-
-        try:
-            return make_transform(src_crs, dst_crs)
-        except MoaCrsError as e:
-            raise MoaReprojectionError(
-                f"{e} — cross-CRS reprojection outside the built-in "
-                "EPSG subset requires pyproj, which is not available "
-                "in this environment"
-            ) from e
-
-
 def reproject_corners(x_min, x_max, y_min, y_max, src_crs: str, dst_crs: str):
     """P10 (reference reproj.py:221-234): transform the 4 corners, take
-    the envelope."""
-    tr = _corner_transform(src_crs, dst_crs)
-    xs, ys = zip(
-        tr(x_min, y_max),
-        tr(x_max, y_max),
-        tr(x_min, y_min),
-        tr(x_max, y_min),
-    )
-    xs = [float(v) for v in xs]
-    ys = [float(v) for v in ys]
-    return (min(xs), max(xs), min(ys), max(ys))
+    the envelope. Axis order is always (x, y) — the P11 axis-swap guard
+    (reference reproj.py:264-271)."""
+    try:
+        tr = make_transform(src_crs, dst_crs)
+    except MoaCrsError as e:
+        raise MoaReprojectionError(str(e)) from e
+    xs, ys = tr(np.array([x_min, x_max, x_min, x_max], np.float64),
+                np.array([y_max, y_max, y_min, y_min], np.float64))
+    return (float(xs.min()), float(xs.max()), float(ys.min()), float(ys.max()))
+
+
+def _check_method(method: str) -> None:
+    if method not in METHODS:
+        raise ValueError(f"unknown resample method {method!r}; supported: {METHODS}")
 
 
 def plan_rescaled_footprints(
@@ -140,9 +129,6 @@ def plan_rescaled_footprints(
     )
 
 
-RESAMPLE_METHODS = ("near", "bilinear", "average")
-
-
 def _target_chunk_relation(meta: DataFrame, sbs: int) -> DataFrame:
     """Explode per-footprint metadata to the target chunk relation
     (band, tb_row, tb_col, tb_top, tb_left, tb_ysize, tb_xsize) —
@@ -167,238 +153,6 @@ def _target_chunk_relation(meta: DataFrame, sbs: int) -> DataFrame:
         .withColumn("tb_xsize", F.least(F.lit(sbs), F.col("ncols") - F.col("tb_left")))
         .where((F.col("tb_ysize") > 0) & (F.col("tb_xsize") > 0))
     )
-
-
-def _assemble_window(
-    rows, sy_lo: int, sy_hi: int, sx_lo: int, sx_hi: int, nullval: int
-) -> np.ndarray:
-    """Fill the bounded source window [sy_lo..sy_hi] x [sx_lo..sx_hi]
-    (inclusive) from the covering source chunks, nullval elsewhere —
-    shared by the same-CRS resample and the cross-CRS warp kernels.
-    Packed chunks decode zero-copy here (guide §4.2: decode at the
-    native kernel, not through interpreted per-pixel expressions)."""
-    win = np.full((sy_hi - sy_lo + 1, sx_hi - sx_lo + 1), nullval, dtype=np.int32)
-    for r in rows:
-        bt, bl = int(r.b_top), int(r.b_left)
-        bys, bxs = int(r.b_ysize), int(r.b_xsize)
-        y0c, y1c = max(bt, sy_lo), min(bt + bys, sy_hi + 1)
-        x0c, x1c = max(bl, sx_lo), min(bl + bxs, sx_hi + 1)
-        if y1c <= y0c or x1c <= x0c:
-            continue
-        chunk = decode(r.pixels).reshape(bys, bxs)
-        win[y0c - sy_lo: y1c - sy_lo, x0c - sx_lo: x1c - sx_lo] = chunk[
-            y0c - bt: y1c - bt, x0c - bl: x1c - bl
-        ]
-    return win
-
-
-def _resample_window(g, rows, method: str, ox: float, oy: float) -> np.ndarray:
-    """Resample ONE target chunk from its covering source chunks.
-
-    ``g`` carries the chunk/grid metadata; ``rows`` the source chunk
-    records. Assembles only the needed source WINDOW (size ~ chunk size
-    x resolution ratio — bounded, never the whole raster) and applies
-    the method. Returns the (tb_ysize, tb_xsize) int32 pixel array.
-
-    Method semantics (deterministic analogs of the reference's GDAL
-    ``resamplemethod``, reproj.py:209-213 — GDAL itself is not in this
-    container):
-      near     — center-based floor gather (exact reference rule).
-      bilinear — 4-neighbor interpolation at the center-aligned
-                 fractional source coordinate, edge-replicated; if any
-                 contributing neighbor is nullval the output is nullval
-                 (conservative nodata); banker's rounding to int.
-      average  — mean of source pixels whose centers fall inside the
-                 target cell, ignoring nullval; cells containing no
-                 source center (e.g. upsampling) are nullval.
-    """
-    nullval = int(g.nullval)
-    tb_top, tb_left = int(g.tb_top), int(g.tb_left)
-    tb_ys, tb_xs = int(g.tb_ysize), int(g.tb_xsize)
-    s_nrows, s_ncols = int(g.s_nrows), int(g.s_ncols)
-    # source window actually needed (superset across methods), clamped
-    def win_bounds(t0, tsz, o_res, s_orig_off, s_res, s_n):
-        lo = math.floor((t0 * o_res + s_orig_off) / s_res) - 2
-        hi = math.floor(((t0 + tsz) * o_res + s_orig_off) / s_res) + 2
-        return max(0, lo), min(s_n - 1, hi)
-
-    sy_lo, sy_hi = win_bounds(tb_top, tb_ys, oy, g.s_y0 - g.y0, g.s_y_res, s_nrows)
-    sx_lo, sx_hi = win_bounds(tb_left, tb_xs, ox, g.x0 - g.s_x0, g.s_x_res, s_ncols)
-    win = _assemble_window(rows, sy_lo, sy_hi, sx_lo, sx_hi, nullval)
-
-    vr = np.arange(tb_top, tb_top + tb_ys, dtype=np.float64)
-    vc = np.arange(tb_left, tb_left + tb_xs, dtype=np.float64)
-    dst = np.full((tb_ys, tb_xs), nullval, dtype=np.int32)
-
-    if method == "near":
-        sy = np.floor(((vr + 0.5) * oy + (g.s_y0 - g.y0)) / g.s_y_res).astype(np.int64)
-        sx = np.floor(((vc + 0.5) * ox + (g.x0 - g.s_x0)) / g.s_x_res).astype(np.int64)
-        vy = (sy >= 0) & (sy < s_nrows)
-        vx = (sx >= 0) & (sx < s_ncols)
-        dst[np.ix_(vy, vx)] = win[np.ix_(sy[vy] - sy_lo, sx[vx] - sx_lo)]
-        return dst
-
-    if method == "bilinear":
-        fy = ((vr + 0.5) * oy + (g.s_y0 - g.y0)) / g.s_y_res - 0.5
-        fx = ((vc + 0.5) * ox + (g.x0 - g.s_x0)) / g.s_x_res - 0.5
-        # validity matches 'near': the center-nearest pixel must exist
-        vy = (np.floor(fy + 0.5) >= 0) & (np.floor(fy + 0.5) < s_nrows)
-        vx = (np.floor(fx + 0.5) >= 0) & (np.floor(fx + 0.5) < s_ncols)
-        fyv, fxv = fy[vy], fx[vx]
-        y0i = np.floor(fyv).astype(np.int64)
-        x0i = np.floor(fxv).astype(np.int64)
-        wy = (fyv - y0i)[:, None]
-        wx = (fxv - x0i)[None, :]
-        y0c = np.clip(y0i, 0, s_nrows - 1) - sy_lo
-        y1c = np.clip(y0i + 1, 0, s_nrows - 1) - sy_lo
-        x0c = np.clip(x0i, 0, s_ncols - 1) - sx_lo
-        x1c = np.clip(x0i + 1, 0, s_ncols - 1) - sx_lo
-        p00 = win[np.ix_(y0c, x0c)].astype(np.float64)
-        p01 = win[np.ix_(y0c, x1c)].astype(np.float64)
-        p10 = win[np.ix_(y1c, x0c)].astype(np.float64)
-        p11 = win[np.ix_(y1c, x1c)].astype(np.float64)
-        val = (
-            p00 * (1 - wy) * (1 - wx)
-            + p01 * (1 - wy) * wx
-            + p10 * wy * (1 - wx)
-            + p11 * wy * wx
-        )
-        any_null = (
-            (p00 == nullval) | (p01 == nullval) | (p10 == nullval) | (p11 == nullval)
-        )
-        out = np.rint(val).astype(np.int32)
-        out[any_null] = nullval
-        sub = np.full((tb_ys, tb_xs), nullval, dtype=np.int32)
-        sub[np.ix_(vy, vx)] = out
-        return sub
-
-    if method == "average":
-        # inclusive source-index box per target cell: centers inside it
-        def box(t, o_res, s_orig_off, s_res, s_n):
-            d_lo = (t * o_res + s_orig_off) / s_res
-            d_hi = ((t + 1) * o_res + s_orig_off) / s_res
-            a = np.ceil(d_lo - 0.5).astype(np.int64)
-            b = (np.ceil(d_hi - 0.5) - 1).astype(np.int64)
-            return np.clip(a, 0, s_n - 1), np.clip(b, a, s_n), b >= a, a <= s_n - 1, b >= 0
-
-        ya, yb, ynz, ylo_ok, yhi_ok = box(vr, oy, g.s_y0 - g.y0, g.s_y_res, s_nrows)
-        xa, xb, xnz, xlo_ok, xhi_ok = box(vc, ox, g.x0 - g.s_x0, g.s_x_res, s_ncols)
-        yb = np.minimum(yb, s_nrows - 1)
-        xb = np.minimum(xb, s_ncols - 1)
-        vy = ynz & ylo_ok & yhi_ok
-        vx = xnz & xlo_ok & xhi_ok
-        valid = win != nullval
-        data = np.where(valid, win, 0).astype(np.float64)
-        # 2D prefix sums with a zero border for O(1) box queries
-        ps = np.zeros((win.shape[0] + 1, win.shape[1] + 1))
-        pc = np.zeros_like(ps)
-        ps[1:, 1:] = data.cumsum(0).cumsum(1)
-        pc[1:, 1:] = valid.astype(np.float64).cumsum(0).cumsum(1)
-        ya_, yb_ = ya[vy] - sy_lo, yb[vy] - sy_lo + 1
-        xa_, xb_ = xa[vx] - sx_lo, xb[vx] - sx_lo + 1
-
-        def boxsum(p):
-            return (
-                p[np.ix_(yb_, xb_)]
-                - p[np.ix_(ya_, xb_)]
-                - p[np.ix_(yb_, xa_)]
-                + p[np.ix_(ya_, xa_)]
-            )
-
-        s = boxsum(ps)
-        n = boxsum(pc)
-        out = np.full(s.shape, nullval, dtype=np.int32)
-        nz = n > 0
-        out[nz] = np.rint(s[nz] / n[nz]).astype(np.int32)
-        sub = np.full((tb_ys, tb_xs), nullval, dtype=np.int32)
-        sub[np.ix_(vy, vx)] = out
-        return sub
-
-    raise ValueError(f"unknown resample method: {method}")
-
-
-def resample_blocks(
-    footprints: DataFrame,
-    blocks: DataFrame,
-    out_xres: float,
-    out_yres: float,
-    src_blocksize: int = 256,
-    method: str = "near",
-) -> tuple[DataFrame, DataFrame]:
-    """Windowed regrid of every raster onto the target resolution.
-    Returns (new_footprints, new_blocks) matching the standard engine
-    schemas — feed straight into do_mosaic.
-
-    Scale shape (replaces round-1's whole-raster-per-task kernel, which
-    assembled the ENTIRE source in one Python group — 40 GB for a
-    100k^2 source): the unit of work is one TARGET chunk. The target
-    chunk relation is generated JVM-side; each chunk's needed source
-    window is derived in closed-form column math and exploded to source
-    chunk keys (the reference's windowed warp-at-read, reproj.py:209-213,
-    as a relation); the equi-join pulls exactly those chunks; a grouped
-    pandas kernel assembles the bounded window (chunk size x resolution
-    ratio) and resamples. Pure-margin chunks (outside the source after
-    grid snap) never reach Python — synthesized as nullval arrays
-    JVM-side, matching the warp's dstNodata fill.
-
-    Assumes the blocks table is keyed b_row = b_top // src_blocksize
-    (the same contract _contributor_chunks uses for the mosaic join).
-    """
-    if method not in RESAMPLE_METHODS:
-        raise ValueError(
-            f"unknown resample method {method!r}; supported: {RESAMPLE_METHODS}"
-        )
-    from .session import ensure_workers_can_import
-
-    ensure_workers_can_import(footprints.sparkSession)
-    blocks = ingest(blocks)
-    vfp = plan_rescaled_footprints(footprints, out_xres, out_yres)
-    meta = vfp.select(
-        "media_ref", "n_bands", "s_x0", "s_y0", "s_x_res", "s_y_res",
-        "s_ncols", "s_nrows", "x0", "y0", "ncols", "nrows", "nullval",
-    )
-    sbs = int(src_blocksize)
-    ox, oy = float(out_xres), float(out_yres)
-
-    t = _target_chunk_relation(meta, sbs)
-    # needed source-index window per chunk (superset across methods)
-    sy_lo = F.floor((F.col("tb_top") * oy + (F.col("s_y0") - F.col("y0"))) / F.col("s_y_res")) - 2
-    sy_hi = F.floor(((F.col("tb_top") + F.col("tb_ysize")) * oy + (F.col("s_y0") - F.col("y0"))) / F.col("s_y_res")) + 2
-    sx_lo = F.floor((F.col("tb_left") * ox + (F.col("x0") - F.col("s_x0"))) / F.col("s_x_res")) - 2
-    sx_hi = F.floor(((F.col("tb_left") + F.col("tb_xsize")) * ox + (F.col("x0") - F.col("s_x0"))) / F.col("s_x_res")) + 2
-    t = (
-        t.withColumn("_sy_lo", sy_lo).withColumn("_sy_hi", sy_hi)
-        .withColumn("_sx_lo", sx_lo).withColumn("_sx_hi", sx_hi)
-    )
-    covered, margin = _split_covered(t)
-    joined = _join_source_chunks(covered, blocks, sbs)
-
-    def resample_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        g = pdf.iloc[0]
-        dst = _resample_window(g, list(pdf.itertuples(index=False)), method, ox, oy)
-        return pd.DataFrame(
-            [
-                {
-                    "media_ref": g.media_ref,
-                    "band": int(g.band),
-                    "b_row": int(g.tb_row),
-                    "b_col": int(g.tb_col),
-                    "b_top": int(g.tb_top),
-                    "b_left": int(g.tb_left),
-                    "b_ysize": int(g.tb_ysize),
-                    "b_xsize": int(g.tb_xsize),
-                    "pixels": encode(dst.ravel()),
-                }
-            ],
-            columns=[f.name for f in BLOCKS_SCHEMA.fields],
-        )
-
-    resampled = joined.groupBy("media_ref", "band", "tb_row", "tb_col").applyInPandas(
-        resample_group, BLOCKS_SCHEMA
-    )
-    new_blocks = resampled.unionByName(_null_margin_chunks(margin))
-    new_fp = vfp.drop("s_x0", "s_y0", "s_x_res", "s_y_res", "s_ncols", "s_nrows")
-    return new_fp, new_blocks
 
 
 def _split_covered(t: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -452,13 +206,224 @@ def _null_margin_chunks(margin: DataFrame) -> DataFrame:
     )
 
 
+def _affine_maps(c: dict, ox: float, oy: float, boxes: bool):
+    """Index maps of a same-CRS rescale, separable: centres
+    ``((t + 0.5) * o + off) / s`` and cell edges ``(t * o + off) / s``
+    over the chunk's integer target rows (a column vector) and columns
+    (a row vector). ``boxes`` is unused: the edges cost nothing."""
+    def axis(t0, n, o, off, s, shape):
+        t = np.arange(t0, t0 + n + 1, dtype=np.float64)
+        edges = (t * o + off) / s
+        centres = ((t[:-1] + 0.5) * o + off) / s
+        return centres.reshape(shape), edges[:-1].reshape(shape), edges[1:].reshape(shape)
+
+    fy, y_lo, y_hi = axis(c["tb_top"], c["tb_ysize"], oy, c["s_y0"] - c["y0"], c["s_y_res"], (-1, 1))
+    fx, x_lo, x_hi = axis(c["tb_left"], c["tb_xsize"], ox, c["x0"] - c["s_x0"], c["s_x_res"], (1, -1))
+    return fy, fx, (y_lo, y_hi, x_lo, x_hi)
+
+
+def _warp_maps(c: dict, tr, ox: float, oy: float, boxes: bool):
+    """Index maps of a cross-CRS warp, 2-D: target pixel centres (and,
+    if ``boxes``, cell corners) in world coordinates, through ``tr``
+    (target CRS -> source CRS), onto the source grid. A cell's box is
+    the axis-aligned bounding box of its four mapped corners — the
+    deterministic analog of GDAL's average for a locally-affine
+    transform."""
+    def src_index(extra: int, d: float):
+        u = c["tb_left"] + np.arange(c["tb_xsize"] + extra, dtype=np.float64) + d
+        v = c["tb_top"] + np.arange(c["tb_ysize"] + extra, dtype=np.float64) + d
+        xw, yw = np.broadcast_arrays((c["x0"] + u * ox)[None, :], (c["y0"] - v * oy)[:, None])
+        xs, ys = tr(xw.ravel(), yw.ravel())
+        return (
+            ((c["s_y0"] - ys) / c["s_y_res"]).reshape(xw.shape),
+            ((xs - c["s_x0"]) / c["s_x_res"]).reshape(xw.shape),
+        )
+
+    fy, fx = src_index(0, 0.5)
+    if not boxes:
+        return fy, fx, None
+    corners = src_index(1, 0.0)
+    box = tuple(
+        f(f(a[:-1, :-1], a[:-1, 1:]), f(a[1:, :-1], a[1:, 1:]))
+        for a in corners for f in (np.minimum, np.maximum)
+    )
+    return fy, fx, box
+
+
+def _sample(win, y_lo: int, x_lo: int, fy, fx, box, method: str, nullval: int):
+    """Resample ONE target chunk from its bounded source window — the
+    one kernel behind both reprojections.
+
+    ``win`` holds source rows ``y_lo..`` and columns ``x_lo..``; ``fy``/
+    ``fx`` are the fractional source indices of the target pixel centres
+    and ``box`` = (row_lo, row_hi, col_lo, col_hi) the fractional source
+    bounds of each target cell (average only), all broadcastable to the
+    chunk. Every index is clamped to the window. Method semantics
+    (deterministic analogs of the reference's GDAL ``resamplemethod``,
+    reproj.py:209-213):
+      near     — centre-based floor gather (exact reference rule);
+                 nullval where the centre pixel is outside the window.
+      bilinear — 4-neighbour interpolation at the centre-aligned index
+                 (f - 0.5), edge-replicated; valid where 'near' is;
+                 nullval if any neighbour is nullval; banker's rounding.
+      average  — mean of the non-null source pixels whose centres fall
+                 in the cell's [lo, hi) box; nullval if there are none
+                 (e.g. upsampling).
+    """
+    y_hi, x_hi = y_lo + win.shape[0] - 1, x_lo + win.shape[1] - 1
+
+    def at(i, lo, hi):
+        return np.clip(i, lo, hi) - lo
+
+    if method == "average":
+        ya, yb, xa, xb = (
+            (np.ceil(e - 0.5) - k).astype(np.int64) for e, k in zip(box, (0, 1, 0, 1))
+        )
+        ok = (
+            (yb >= ya) & (xb >= xa)
+            & (yb >= y_lo) & (ya <= y_hi) & (xb >= x_lo) & (xa <= x_hi)
+        )
+        valid = win != nullval
+        ps = np.zeros((win.shape[0] + 1, win.shape[1] + 1))
+        pc = np.zeros_like(ps)
+        ps[1:, 1:] = np.where(valid, win, 0).astype(np.float64).cumsum(0).cumsum(1)
+        pc[1:, 1:] = valid.astype(np.float64).cumsum(0).cumsum(1)
+        ya, xa = at(ya, y_lo, y_hi), at(xa, x_lo, x_hi)
+        yb, xb = at(yb, y_lo, y_hi) + 1, at(xb, x_lo, x_hi) + 1
+
+        def boxsum(p):
+            return p[yb, xb] - p[ya, xb] - p[yb, xa] + p[ya, xa]
+
+        s, n = boxsum(ps), boxsum(pc)
+        dst = np.full(s.shape, nullval, dtype=np.int32)
+        nz = ok & (n > 0)
+        dst[nz] = np.rint(s[nz] / n[nz]).astype(np.int32)
+        return dst
+
+    ri, ci = np.floor(fy).astype(np.int64), np.floor(fx).astype(np.int64)
+    valid = (ri >= y_lo) & (ri <= y_hi) & (ci >= x_lo) & (ci <= x_hi)
+    if method == "near":
+        out = win[at(ri, y_lo, y_hi), at(ci, x_lo, x_hi)]
+        return np.where(valid, out, np.int32(nullval))
+    fy, fx = fy - 0.5, fx - 0.5
+    y0, x0 = np.floor(fy).astype(np.int64), np.floor(fx).astype(np.int64)
+    wy, wx = fy - y0, fx - x0
+    y0c, y1c = at(y0, y_lo, y_hi), at(y0 + 1, y_lo, y_hi)
+    x0c, x1c = at(x0, x_lo, x_hi), at(x0 + 1, x_lo, x_hi)
+    p00, p01 = win[y0c, x0c].astype(np.float64), win[y0c, x1c].astype(np.float64)
+    p10, p11 = win[y1c, x0c].astype(np.float64), win[y1c, x1c].astype(np.float64)
+    val = (
+        p00 * (1 - wy) * (1 - wx)
+        + p01 * (1 - wy) * wx
+        + p10 * wy * (1 - wx)
+        + p11 * wy * wx
+    )
+    any_null = (p00 == nullval) | (p01 == nullval) | (p10 == nullval) | (p11 == nullval)
+    dst = np.rint(val).astype(np.int32)
+    dst[any_null | ~valid] = nullval
+    return dst
+
+
+def _assemble_window(tbl: pa.Table, c: dict):
+    """Fill the chunk's source window (its ``_sy_lo.._sx_hi`` columns,
+    clamped to the source) from the joined source chunks, nullval
+    elsewhere. Payloads decode zero-copy from the Arrow buffer."""
+    y_lo, y_hi = max(0, c["_sy_lo"]), min(c["s_nrows"] - 1, c["_sy_hi"])
+    x_lo, x_hi = max(0, c["_sx_lo"]), min(c["s_ncols"] - 1, c["_sx_hi"])
+    win = np.full((y_hi - y_lo + 1, x_hi - x_lo + 1), int(c["nullval"]), dtype=np.int32)
+    offsets, values = decode_column(tbl.column("pixels").combine_chunks())
+    geo = zip(*(tbl.column(n).to_pylist() for n in ("b_top", "b_left", "b_ysize", "b_xsize")))
+    for i, (bt, bl, bys, bxs) in enumerate(geo):
+        y0, y1 = max(bt, y_lo), min(bt + bys, y_hi + 1)
+        x0, x1 = max(bl, x_lo), min(bl + bxs, x_hi + 1)
+        if y1 > y0 and x1 > x0:
+            chunk = values[offsets[i]: offsets[i + 1]].reshape(bys, bxs)
+            win[y0 - y_lo: y1 - y_lo, x0 - x_lo: x1 - x_lo] = chunk[y0 - bt: y1 - bt, x0 - bl: x1 - bl]
+    return win, y_lo, x_lo
+
+
+def _reproject_chunks(t: DataFrame, blocks: DataFrame, sbs: int, method: str, index_maps):
+    """The one reprojection pipeline, from the target chunk relation
+    ``t`` (carrying its ``_sy_lo.._sx_hi`` source window) to blocks:
+    covered chunks join their source chunks and run the grouped Arrow
+    kernel (window -> ``index_maps(c, boxes)`` -> ``_sample``); margin
+    chunks are synthesized as nullval JVM-side, matching the warp's
+    dstNodata fill."""
+    from .session import ensure_workers_can_import
+
+    ensure_workers_can_import(t.sparkSession)
+    covered, margin = _split_covered(t)
+    joined = _join_source_chunks(covered, ingest(blocks), sbs)
+
+    def kernel(tbl: pa.Table) -> pa.Table:
+        c = tbl.slice(0, 1).drop_columns(["pixels"]).to_pylist()[0]
+        win, y_lo, x_lo = _assemble_window(tbl, c)
+        fy, fx, box = index_maps(c, method == "average")
+        dst = _sample(win, y_lo, x_lo, fy, fx, box, method, int(c["nullval"]))
+        row = {
+            "media_ref": c["media_ref"], "band": c["band"],
+            "b_row": c["tb_row"], "b_col": c["tb_col"],
+            "b_top": c["tb_top"], "b_left": c["tb_left"],
+            "b_ysize": c["tb_ysize"], "b_xsize": c["tb_xsize"],
+            "pixels": dst.ravel(),
+        }
+        return _rows_to_arrow([row], _ARROW_BLOCKS_SCHEMA)
+
+    out = joined.groupBy("media_ref", "band", "tb_row", "tb_col").applyInArrow(
+        kernel, BLOCKS_SCHEMA
+    )
+    return out.unionByName(_null_margin_chunks(margin))
+
+
+def resample_blocks(
+    footprints: DataFrame,
+    blocks: DataFrame,
+    out_xres: float,
+    out_yres: float,
+    src_blocksize: int = 256,
+    method: str = "near",
+) -> tuple[DataFrame, DataFrame]:
+    """Windowed regrid of every raster onto the target resolution.
+    Returns (new_footprints, new_blocks) matching the standard engine
+    schemas — feed straight into do_mosaic.
+
+    The unit of work is one TARGET chunk (never the whole raster): its
+    needed source window is derived in closed-form column math — a
+    superset across methods — and the shared pipeline resamples it
+    through the separable affine index maps.
+
+    Assumes the blocks table is keyed b_row = b_top // src_blocksize
+    (the same contract _contributor_chunks uses for the mosaic join).
+    """
+    _check_method(method)
+    vfp = plan_rescaled_footprints(footprints, out_xres, out_yres)
+    meta = vfp.select(
+        "media_ref", "n_bands", "s_x0", "s_y0", "s_x_res", "s_y_res",
+        "s_ncols", "s_nrows", "x0", "y0", "ncols", "nrows", "nullval",
+    )
+    sbs = int(src_blocksize)
+    ox, oy = float(out_xres), float(out_yres)
+
+    t = _target_chunk_relation(meta, sbs)
+    sy_lo = F.floor((F.col("tb_top") * oy + (F.col("s_y0") - F.col("y0"))) / F.col("s_y_res")) - 2
+    sy_hi = F.floor(((F.col("tb_top") + F.col("tb_ysize")) * oy + (F.col("s_y0") - F.col("y0"))) / F.col("s_y_res")) + 2
+    sx_lo = F.floor((F.col("tb_left") * ox + (F.col("x0") - F.col("s_x0"))) / F.col("s_x_res")) - 2
+    sx_hi = F.floor(((F.col("tb_left") + F.col("tb_xsize")) * ox + (F.col("x0") - F.col("s_x0"))) / F.col("s_x_res")) + 2
+    t = (
+        t.withColumn("_sy_lo", sy_lo).withColumn("_sy_hi", sy_hi)
+        .withColumn("_sx_lo", sx_lo).withColumn("_sx_hi", sx_hi)
+    )
+    new_blocks = _reproject_chunks(
+        t, blocks, sbs, method, lambda c, boxes: _affine_maps(c, ox, oy, boxes)
+    )
+    new_fp = vfp.drop("s_x0", "s_y0", "s_x_res", "s_y_res", "s_ncols", "s_nrows")
+    return new_fp, new_blocks
+
+
 # ---------------------------------------------------------------------------
 # Cross-CRS warp (the reference's full VRT-warp path, reproj.py:130-218,
-# as a windowed relation — no GDAL/pyproj needed for the built-in EPSG
-# subset; see crs.py)
+# as a windowed relation over the built-in transforms of crs.py)
 # ---------------------------------------------------------------------------
-
-WARP_METHODS = ("near", "bilinear", "average")
 
 _WARPED_FP_EXTRA = [
     ("s_x0", "double"), ("s_y0", "double"),
@@ -476,8 +441,6 @@ def plan_warped_footprints(
     vectorized pandas map over the dim table — transforms are numpy
     array ops, distributed, never a driver loop. Source geometry rides
     along in s_* columns for the warp kernel."""
-    from .crs import make_transform, parse_epsg
-
     dst_epsg = parse_epsg(dst_crs)
     dst_name = f"EPSG:{dst_epsg}"
     ox, oy = float(out_xres), float(out_yres)
@@ -541,120 +504,6 @@ def plan_warped_footprints(
     return footprints.mapInPandas(plan, out_fields)
 
 
-def _warp_window(g, rows, method: str, tr, ox: float, oy: float) -> np.ndarray:
-    """Warp ONE target chunk: per-pixel inverse transform (dst centers
-    -> src CRS, vectorized numpy over the chunk grid) + gather from the
-    bounded source window."""
-    nullval = int(g.nullval)
-    tb_top, tb_left = int(g.tb_top), int(g.tb_left)
-    tb_ys, tb_xs = int(g.tb_ysize), int(g.tb_xsize)
-    s_nrows, s_ncols = int(g.s_nrows), int(g.s_ncols)
-    sy_lo = max(0, int(g._sy_lo))
-    sy_hi = min(s_nrows - 1, int(g._sy_hi))
-    sx_lo = max(0, int(g._sx_lo))
-    sx_hi = min(s_ncols - 1, int(g._sx_hi))
-    win = _assemble_window(rows, sy_lo, sy_hi, sx_lo, sx_hi, nullval)
-
-    # dst pixel centers -> src CRS -> fractional src indices (2D maps)
-    xw = g.x0 + (tb_left + np.arange(tb_xs, dtype=np.float64) + 0.5) * ox
-    yw = g.y0 - (tb_top + np.arange(tb_ys, dtype=np.float64) + 0.5) * oy
-    XW = np.broadcast_to(xw[None, :], (tb_ys, tb_xs))
-    YW = np.broadcast_to(yw[:, None], (tb_ys, tb_xs))
-    xs, ys = tr(XW.ravel(), YW.ravel())
-    colf = ((xs - g.s_x0) / g.s_x_res).reshape(tb_ys, tb_xs)
-    rowf = ((g.s_y0 - ys) / g.s_y_res).reshape(tb_ys, tb_xs)
-    dst = np.full((tb_ys, tb_xs), nullval, dtype=np.int32)
-
-    ci = np.floor(colf).astype(np.int64)
-    ri = np.floor(rowf).astype(np.int64)
-    # validity also clamps to the joined window (curvature beyond the
-    # sampled-bounds margin would otherwise index outside it)
-    valid = (
-        (ci >= 0) & (ci < s_ncols) & (ri >= 0) & (ri < s_nrows)
-        & (ci >= sx_lo) & (ci <= sx_hi) & (ri >= sy_lo) & (ri <= sy_hi)
-    )
-    if method == "near":
-        dst[valid] = win[ri[valid] - sy_lo, ci[valid] - sx_lo]
-        return dst
-    if method == "bilinear":
-        fy = rowf - 0.5
-        fx = colf - 0.5
-        y0i = np.floor(fy).astype(np.int64)
-        x0i = np.floor(fx).astype(np.int64)
-        wy = fy - y0i
-        wx = fx - x0i
-        y0c = np.clip(y0i, sy_lo, sy_hi) - sy_lo
-        y1c = np.clip(y0i + 1, sy_lo, sy_hi) - sy_lo
-        x0c = np.clip(x0i, sx_lo, sx_hi) - sx_lo
-        x1c = np.clip(x0i + 1, sx_lo, sx_hi) - sx_lo
-        p00 = win[y0c, x0c].astype(np.float64)
-        p01 = win[y0c, x1c].astype(np.float64)
-        p10 = win[y1c, x0c].astype(np.float64)
-        p11 = win[y1c, x1c].astype(np.float64)
-        val = (
-            p00 * (1 - wy) * (1 - wx)
-            + p01 * (1 - wy) * wx
-            + p10 * wy * (1 - wx)
-            + p11 * wy * wx
-        )
-        any_null = (
-            (p00 == nullval) | (p01 == nullval) | (p10 == nullval) | (p11 == nullval)
-        )
-        out = np.rint(val).astype(np.int32)
-        out[any_null | ~valid] = nullval
-        return np.where(valid, out, nullval).astype(np.int32)
-    if method == "average":
-        # area-style average across CRSes: map each target CELL's four
-        # corners into source index space; average the source pixels
-        # whose centers fall in the axis-aligned bounding box of the
-        # mapped cell (the deterministic analog of GDAL's average for a
-        # locally-affine transform), ignoring nullval; empty box ->
-        # nullval. Same center-in-[lo,hi) rule as the same-CRS average.
-        xw_c = g.x0 + (tb_left + np.arange(tb_xs + 1, dtype=np.float64)) * ox
-        yw_c = g.y0 - (tb_top + np.arange(tb_ys + 1, dtype=np.float64)) * oy
-        XC = np.broadcast_to(xw_c[None, :], (tb_ys + 1, tb_xs + 1))
-        YC = np.broadcast_to(yw_c[:, None], (tb_ys + 1, tb_xs + 1))
-        cxs, cys = tr(XC.ravel(), YC.ravel())
-        colc = ((cxs - g.s_x0) / g.s_x_res).reshape(tb_ys + 1, tb_xs + 1)
-        rowc = ((g.s_y0 - cys) / g.s_y_res).reshape(tb_ys + 1, tb_xs + 1)
-
-        def corner_box(cc):
-            c00, c01 = cc[:-1, :-1], cc[:-1, 1:]
-            c10, c11 = cc[1:, :-1], cc[1:, 1:]
-            lo = np.minimum(np.minimum(c00, c01), np.minimum(c10, c11))
-            hi = np.maximum(np.maximum(c00, c01), np.maximum(c10, c11))
-            a = np.ceil(lo - 0.5).astype(np.int64)
-            b = (np.ceil(hi - 0.5) - 1).astype(np.int64)
-            return a, b
-
-        xa, xb = corner_box(colc)
-        ya, yb = corner_box(rowc)
-        ok = (
-            (xb >= xa) & (yb >= ya)
-            & (xb >= 0) & (xa < s_ncols) & (yb >= 0) & (ya < s_nrows)
-        )
-        ya_ = np.clip(ya, sy_lo, sy_hi) - sy_lo
-        yb_ = np.clip(yb, sy_lo, sy_hi) - sy_lo + 1
-        xa_ = np.clip(xa, sx_lo, sx_hi) - sx_lo
-        xb_ = np.clip(xb, sx_lo, sx_hi) - sx_lo + 1
-        valid_px = win != nullval
-        data = np.where(valid_px, win, 0).astype(np.float64)
-        ps = np.zeros((win.shape[0] + 1, win.shape[1] + 1))
-        pc = np.zeros_like(ps)
-        ps[1:, 1:] = data.cumsum(0).cumsum(1)
-        pc[1:, 1:] = valid_px.astype(np.float64).cumsum(0).cumsum(1)
-
-        def boxsum(p):
-            return p[yb_, xb_] - p[ya_, xb_] - p[yb_, xa_] + p[ya_, xa_]
-
-        s = boxsum(ps)
-        n = boxsum(pc)
-        nz = ok & (n > 0)
-        dst[nz] = np.rint(s[nz] / n[nz]).astype(np.int32)
-        return dst
-    raise ValueError(f"unknown warp method: {method}")
-
-
 def warp_blocks(
     footprints: DataFrame,
     blocks: DataFrame,
@@ -667,25 +516,14 @@ def warp_blocks(
     """Full cross-CRS warp: returns (new_footprints, new_blocks) on the
     target CRS/resolution grid — feed straight into do_mosaic.
 
-    Same windowed shape as resample_blocks (the reference's
-    warp-at-windowed-read, reproj.py:209-213): target chunks are
-    JVM-generated; each chunk's source window is found by transforming
-    a 3x3 boundary sample of the chunk into the source CRS (vectorized
-    pandas map, margin derived per chunk from the sampled curvature
-    residual); the
-    equi-join pulls exactly those source chunks; a grouped kernel
-    builds the 2D per-pixel index maps with the same transforms and
-    gathers. Margin chunks never reach Python.
+    The same pipeline as resample_blocks: each chunk's source window is
+    found by transforming a 3x3 boundary sample of the chunk into the
+    source CRS (vectorized pandas map, margin derived per chunk from the
+    sampled curvature residual), and the kernel resamples through 2-D
+    index maps built with the same transforms — for every footprint,
+    same-CRS ones included.
     """
-    if method not in WARP_METHODS:
-        raise ValueError(
-            f"unknown warp method {method!r}; supported: {WARP_METHODS}"
-        )
-    from .crs import make_transform, parse_epsg
-    from .session import ensure_workers_can_import
-
-    ensure_workers_can_import(footprints.sparkSession)
-    blocks = ingest(blocks)
+    _check_method(method)
     dst_epsg = parse_epsg(dst_crs)
     sbs = int(src_blocksize)
     ox, oy = float(out_xres), float(out_yres)
@@ -775,33 +613,10 @@ def warp_blocks(
     # same: the bounds relation feeds covered AND margin AND the join —
     # three subtrees that would each re-run the per-chunk transform map
     tb = t.mapInPandas(bounds, bounds_fields).localCheckpoint(eager=False)
-    covered, margin = _split_covered(tb)
-    joined = _join_source_chunks(covered, blocks, sbs)
 
-    def warp_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        g = pdf.iloc[0]
-        tr = make_transform(dst_epsg, g.s_projection)
-        dst = _warp_window(g, list(pdf.itertuples(index=False)), method, tr, ox, oy)
-        return pd.DataFrame(
-            [
-                {
-                    "media_ref": g.media_ref,
-                    "band": int(g.band),
-                    "b_row": int(g.tb_row),
-                    "b_col": int(g.tb_col),
-                    "b_top": int(g.tb_top),
-                    "b_left": int(g.tb_left),
-                    "b_ysize": int(g.tb_ysize),
-                    "b_xsize": int(g.tb_xsize),
-                    "pixels": encode(dst.ravel()),
-                }
-            ],
-            columns=[f.name for f in BLOCKS_SCHEMA.fields],
-        )
+    def index_maps(c, boxes):
+        return _warp_maps(c, make_transform(dst_epsg, c["s_projection"]), ox, oy, boxes)
 
-    warped = joined.groupBy("media_ref", "band", "tb_row", "tb_col").applyInPandas(
-        warp_group, BLOCKS_SCHEMA
-    )
-    new_blocks = warped.unionByName(_null_margin_chunks(margin))
+    new_blocks = _reproject_chunks(tb, blocks, sbs, method, index_maps)
     new_fp = vfp.drop(*[n for n, _ in _WARPED_FP_EXTRA])
     return new_fp, new_blocks

@@ -264,3 +264,89 @@ def test_warp_utm_to_web_mercator_matches_golden(spark):
     _, got_back = _collect_canvas(bfp, bblocks)
     # resampling round trip is lossy at edges; interior must carry data
     assert (got_back != 0).sum() > 0.4 * arr.size
+
+
+def test_warp_bilinear_identity_crs_equals_resample(spark):
+    """Same-CRS warp with method='bilinear' must equal the resample
+    path's bilinear (under an identity transform the 2-D centre maps
+    reduce to the separable affine ones), and both the per-pixel loop
+    golden of the documented rule."""
+    from tests.test_resample_methods import _oracle_bilinear
+
+    rasters = synth.make_rasters(
+        [dict(media_ref="r000", x0=300000.0, y0=7000000.0, nrows=100, ncols=130)]
+    )
+    fp = to_footprints(spark, synth.footprints_pdf(rasters))
+    blocks = to_blocks(spark, synth.blocks_pdf(rasters, 64))
+    _, w_blocks = RP.warp_blocks(fp, blocks, "EPSG:32756", 15.0, 15.0,
+                                 src_blocksize=64, method="bilinear")
+    nfp, r_blocks = RP.resample_blocks(fp, blocks, 15.0, 15.0,
+                                       src_blocksize=64, method="bilinear")
+    meta, got_w = _collect_canvas(nfp, w_blocks)
+    _, got_r = _collect_canvas(nfp, r_blocks)
+    np.testing.assert_array_equal(got_w, got_r)
+    want = _oracle_bilinear(rasters[0].bands[0], 300000.0, 7000000.0, 10.0,
+                            meta.x0, meta.y0, 15.0, meta.ncols, meta.nrows, 0)
+    np.testing.assert_array_equal(got_w, want)
+
+
+def _oracle_warp_bilinear(src, s_x0, s_y0, s_res, src_epsg, meta, out_res,
+                          dst_epsg, nullval):
+    """Per-pixel loop golden of the warp 'bilinear' semantics: the 4
+    neighbours at the centre-aligned fractional source index (clamped to
+    the source), nullval if the centre-nearest pixel is outside the
+    source or any neighbour is nullval, banker's rounding."""
+    tr = crs.make_transform(dst_epsg, src_epsg)
+    nrows, ncols = meta.nrows, meta.ncols
+    u = np.arange(ncols) + 0.5
+    v = np.arange(nrows) + 0.5
+    XW = meta.x0 + np.broadcast_to(u[None, :] * out_res, (nrows, ncols))
+    YW = meta.y0 - np.broadcast_to(v[:, None] * out_res, (nrows, ncols))
+    xs, ys = tr(XW.ravel(), YW.ravel())
+    colf = ((xs - s_x0) / s_res).reshape(nrows, ncols)
+    rowf = ((s_y0 - ys) / s_res).reshape(nrows, ncols)
+    snr, snc = src.shape
+    dst = np.full((nrows, ncols), nullval, dtype=np.int32)
+    for i in range(nrows):
+        for j in range(ncols):
+            r, c = float(rowf[i, j]), float(colf[i, j])
+            if not (0 <= int(np.floor(r)) < snr and 0 <= int(np.floor(c)) < snc):
+                continue
+            fy, fx = r - 0.5, c - 0.5
+            y0i, x0i = int(np.floor(fy)), int(np.floor(fx))
+            wy, wx = fy - y0i, fx - x0i
+            y0c, y1c = min(max(y0i, 0), snr - 1), min(max(y0i + 1, 0), snr - 1)
+            x0c, x1c = min(max(x0i, 0), snc - 1), min(max(x0i + 1, 0), snc - 1)
+            ps = [src[y0c, x0c], src[y0c, x1c], src[y1c, x0c], src[y1c, x1c]]
+            if nullval in ps:
+                continue
+            val = (
+                ps[0] * (1 - wy) * (1 - wx)
+                + ps[1] * (1 - wy) * wx
+                + ps[2] * wy * (1 - wx)
+                + ps[3] * wy * wx
+            )
+            dst[i, j] = int(np.rint(val))
+    return dst
+
+
+def test_warp_bilinear_cross_zone_matches_golden(spark):
+    """UTM 56S -> 55S warp with method='bilinear' (a nodata hole inside)
+    against a per-pixel loop golden."""
+    rasters = synth.make_rasters(
+        [dict(media_ref="r000", x0=300000.0, y0=6300000.0, nrows=100, ncols=130)]
+    )
+    rng = np.random.default_rng(7)
+    arr = rng.integers(1, 500, size=(100, 130)).astype(np.int32)
+    arr[40:44, 50:61] = 0  # nodata hole
+    rasters[0].bands = [arr]
+    fp = to_footprints(spark, synth.footprints_pdf(rasters))
+    blocks = to_blocks(spark, synth.blocks_pdf(rasters, 64))
+
+    nfp, nblocks = RP.warp_blocks(fp, blocks, "EPSG:32755", 12.0, 12.0,
+                                  src_blocksize=64, method="bilinear")
+    meta, got = _collect_canvas(nfp, nblocks)
+    want = _oracle_warp_bilinear(arr, 300000.0, 6300000.0, 10.0, 32756,
+                                 meta, 12.0, 32755, 0)
+    np.testing.assert_array_equal(got, want)
+    assert (got != 0).sum() > 0.4 * got.size

@@ -119,3 +119,53 @@ def test_mixed_resolution_mosaic(spark):
     region = canvas[:, 100:220]
     mask = b_up != 0
     np.testing.assert_array_equal(region[mask], b_up[mask])
+
+
+def test_reprojected_footprints_pass_projection_checks(spark):
+    """Both reprojection routes plan every output footprint onto one
+    snapped grid, so the P6/P7 checks (alignment scan included) hold by
+    construction — which is why the resample and warp checksum queries
+    may skip them. Pin that: inputs that fail the checks (origins off
+    the target grid by a fraction of a pixel, two source resolutions,
+    two UTM zones) come out passing them."""
+    import pandas as pd
+
+    from moamosaic_spark.mosaic import MoaProjectionError, validate_projections
+
+    rasters = synth.make_rasters(
+        [
+            dict(media_ref="r000", x0=300003.7, y0=7000001.3, nrows=40, ncols=50),
+            dict(media_ref="r001", x0=300204.0, y0=6999897.6, nrows=40, ncols=30),
+            dict(media_ref="r002", x0=300412.9, y0=6999876.1, nrows=30, ncols=30,
+                 x_res=7.5, y_res=7.5),
+        ]
+    )
+    fp = to_footprints(spark, synth.footprints_pdf(rasters))
+    blocks = to_blocks(spark, synth.blocks_pdf(rasters, 64))
+    with pytest.raises(MoaProjectionError, match="Pixel size"):
+        validate_projections(fp)
+    with pytest.raises(MoaProjectionError, match="mis-alignment"):
+        validate_projections(fp.where("x_res = 10.0"))
+    for res in (10.0, 12.5):
+        nfp, _ = RP.resample_blocks(fp, blocks, res, res, src_blocksize=64)
+        validate_projections(nfp)
+
+    a = synth.make_rasters(
+        [dict(media_ref="r000", x0=300003.7, y0=6300001.3, nrows=40, ncols=40)]
+    )
+    b = synth.make_rasters(
+        [dict(media_ref="r001", x0=840000.0, y0=6300000.0, nrows=40, ncols=40)]
+    )
+    pdf_a, pdf_b = synth.footprints_pdf(a), synth.footprints_pdf(b)
+    pdf_b["projection"] = "EPSG:32755"
+    pdf_b["priority"] = 1
+    fp = to_footprints(spark, pd.concat([pdf_a, pdf_b], ignore_index=True))
+    blocks = to_blocks(
+        spark, pd.concat([synth.blocks_pdf(a, 64), synth.blocks_pdf(b, 64)],
+                         ignore_index=True)
+    )
+    with pytest.raises(MoaProjectionError, match="Projection"):
+        validate_projections(fp)
+    nfp, _ = RP.warp_blocks(fp, blocks, "EPSG:32756", 12.5, 12.5, src_blocksize=64)
+    assert {r.projection for r in nfp.collect()} == {"EPSG:32756"}
+    validate_projections(nfp)
