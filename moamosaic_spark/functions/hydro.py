@@ -209,8 +209,9 @@ def flow_accumulation(
 
 def _accumulate_inmem_trees(labeled: DataFrame) -> DataFrame:
     """Per-tree reverse-topological accumulation: group all (gid, dst,
-    dist) rows of one basin and sweep dist levels high-to-low with
-    vectorized scatter-adds. dist (hops to the absorbing root, from
+    dist) rows of one basin, sort them by dist once, and sweep the
+    levels high-to-low as contiguous slices with vectorized
+    scatter-adds. dist (hops to the absorbing root, from
     flow_basins) makes parent_dist = dist - 1 exact, so the level sweep
     is a valid topological order. Emits every cell's acc plus one
     is_cell=False row for a virtual-outlet root (a sink root is itself
@@ -231,18 +232,24 @@ def _accumulate_inmem_trees(labeled: DataFrame) -> DataFrame:
         gid, dst, dist = gid[order], dst[order], dist[order]
         acc = np.ones(n, dtype=np.int64)
         root_extra = 0  # inflow into a root that is not a cell (outlet)
-        dmax = int(dist.max()) if n else 0
-        for d in range(dmax, 0, -1):
-            sel = dist == d
-            if not sel.any():
-                continue
-            parents = dst[sel]
-            vals = acc[sel]
-            pidx = np.searchsorted(gid, parents)
-            pidx_c = np.minimum(pidx, n - 1)
-            found = gid[pidx_c] == parents
-            np.add.at(acc, pidx_c[found], vals[found])
-            root_extra += int(vals[~found].sum())
+        # every row's parent index, resolved once; a parent with no row
+        # here is the virtual-outlet root
+        pidx = np.minimum(np.searchsorted(gid, dst), n - 1)
+        found = gid[pidx] == dst
+        # ONE sort by dist, then each level is a contiguous slice,
+        # deepest first: O(n log n) for any tree shape (a full-array
+        # ``dist == d`` mask per level is O(n * depth) — quadratic on a
+        # chain-shaped tree)
+        by_level = np.argsort(-dist, kind="stable")
+        lv = dist[by_level]
+        cuts = np.flatnonzero(np.diff(lv)) + 1
+        for lo, hi in zip(np.r_[0, cuts], np.r_[cuts, n]):
+            if lv[lo] <= 0:
+                break
+            sel = by_level[lo:hi]
+            up, out = sel[found[sel]], sel[~found[sel]]
+            np.add.at(acc, pidx[up], acc[up])
+            root_extra += int(acc[out].sum())
         out_gid, out_acc, out_cell = [gid], [acc], [np.ones(n, dtype=bool)]
         root_is_cell = bool(
             n and gid[np.minimum(np.searchsorted(gid, basin), n - 1)] == basin

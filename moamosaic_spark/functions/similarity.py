@@ -12,7 +12,7 @@
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F, types as T
 
 
 
@@ -118,6 +118,9 @@ def neardup_pairs(
     loose thresholds (t <= 0.5 on unit vectors) most of the sphere is
     "near" and any candidate generator degrades toward all-pairs —
     that is inherent to the query, not the plan.
+
+    ``id_a``/``id_b`` keep the type of ``id_col`` (long, string, ...),
+    with ``id_a < id_b`` in that type's order.
     """
     import math
 
@@ -179,9 +182,9 @@ def neardup_pairs(
         ]
         grids.append(F.struct(F.lit(g).alias("_g"), *cells))
     keyed = base.select(
-        F.col("vec_id").cast("long").alias("vec_id"), "vec", "_n",
-        F.explode(F.array(*grids)).alias("_k"),
+        "vec_id", "vec", "_n", F.explode(F.array(*grids)).alias("_k"),
     ).select("vec_id", "vec", "_n", "_k.*")
+    id_type = base.schema["vec_id"].dataType
 
     join_keys = ["_g"] + [f"_c{d}" for d in range(n_grid_dims)]
     thr = float(threshold)
@@ -190,19 +193,19 @@ def neardup_pairs(
         import numpy as np
         import pyarrow as pa
 
-        ids = tbl.column("vec_id").to_numpy()
+        id_arr = tbl.column("vec_id").combine_chunks()
+        ids = id_arr.to_numpy(zero_copy_only=False)
         nrm = tbl.column("_n").to_numpy()
         v = tbl.column("vec").combine_chunks()
         offs = v.offsets.to_numpy()
         vals = v.values.to_numpy(zero_copy_only=False)
         n = len(ids)
-        empty = pa.table({
-            "id_a": pa.array([], pa.int64()),
-            "id_b": pa.array([], pa.int64()),
-            "cos_sim": pa.array([], pa.float64()),
-        })
         if n < 2:
-            return empty
+            return pa.table({
+                "id_a": id_arr.slice(0, 0),
+                "id_b": id_arr.slice(0, 0),
+                "cos_sim": pa.array([], pa.float64()),
+            })
         widths = np.diff(offs)
         if not (widths == widths[0]).all():
             raise ValueError("ragged embedding dimensions within one cell")
@@ -211,7 +214,7 @@ def neardup_pairs(
         )
         # sort by id so id_a < id_b is exactly the upper triangle
         order = np.argsort(ids, kind="stable")
-        ids, nrm, mat = ids[order], nrm[order], mat[order]
+        nrm, mat = nrm[order], mat[order]
         out_a, out_b, out_c = [], [], []
         B = 2048  # row block: bounds the (B, n) score panel
         for s in range(0, n, B):
@@ -223,20 +226,21 @@ def neardup_pairs(
             ri, cj = np.nonzero(hit)
             keep = cj > (ri + s)  # strict upper triangle
             ri, cj = ri[keep], cj[keep]
-            out_a.append(ids[ri + s])
-            out_b.append(ids[cj])
+            out_a.append(order[ri + s])
+            out_b.append(order[cj])
             out_c.append(cpan[ri, cj])
-        id_a = np.concatenate(out_a) if out_a else np.array([], np.int64)
-        id_b = np.concatenate(out_b) if out_b else np.array([], np.int64)
-        cs = np.concatenate(out_c) if out_c else np.array([], np.float64)
         return pa.table({
-            "id_a": pa.array(id_a, pa.int64()),
-            "id_b": pa.array(id_b, pa.int64()),
-            "cos_sim": pa.array(cs, pa.float64()),
+            "id_a": id_arr.take(np.concatenate(out_a)),
+            "id_b": id_arr.take(np.concatenate(out_b)),
+            "cos_sim": pa.array(np.concatenate(out_c), pa.float64()),
         })
 
     pairs = keyed.groupBy(*join_keys).applyInArrow(
-        score_cell, "id_a long, id_b long, cos_sim double"
+        score_cell,
+        T.StructType([
+            T.StructField("id_a", id_type), T.StructField("id_b", id_type),
+            T.StructField("cos_sim", T.DoubleType()),
+        ]),
     )
     # a pair found in several shifted grids scores identically in each
     # (same float expression on the same inputs) — keep one copy

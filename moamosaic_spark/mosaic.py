@@ -11,6 +11,9 @@ Reference phases -> Spark stages:
   domosaic (threads + queue + cache)   -> ONE shuffle (a partition per
                                           core) into
                                           groupBy(band, tile).applyInArrow
+  null block (mosaic.py:351-359)       -> a group holding only the tile's
+                                          placeholder row (one per band and
+                                          tile): the same kernel emits it
   stats / pyramids (single pass)       -> emitted by the same kernel
   ordered write                        -> repartitionByRange + sorted sink
 
@@ -31,7 +34,7 @@ from .plans.grid import OutputGrid, make_tile_relation, overview_levels
 from .plans.spatial_join import assign_inputs
 from .operators.stitch import make_stitch_fn_arrow
 from .operators.stats import finalize_stats
-from .pixels import PIXEL_BYTES, PIXEL_MAX, ingest, repeat_u2
+from .pixels import PIXEL_BYTES, PIXEL_MAX, ingest
 from .schema import STITCH_SCHEMA
 
 
@@ -283,53 +286,16 @@ def _contributor_chunks(assignments: DataFrame, blocks: DataFrame, src_bs: int) 
     )
 
 
-def _null_tile_rows(
-    spark: SparkSession,
-    gap_tiles: DataFrame,
-    grid: OutputGrid,
-    levels: list,
-    with_overviews: bool,
-) -> DataFrame:
-    """Tiles intersecting no input: pure-null fill, written without any
-    read or merge (reference mosaic.py:351-359) — synthesized JVM-side
-    (a repeated packed value), never touching Python."""
-    nullval = int(grid.nullval)
-    bands = spark.range(1, grid.n_bands + 1).select(F.col("id").cast("int").alias("band"))
-    g = gap_tiles.crossJoin(bands)
-
-    def null_rows(sel_level, y_off, x_off, nr, nc):
-        px = repeat_u2(nullval, nr * nc)
-        return [
-            F.lit(sel_level).cast("int").alias("level"),
-            F.col("band"),
-            F.col("tile_row"),
-            F.col("tile_col"),
-            y_off.cast("int").alias("y_off"),
-            x_off.cast("int").alias("x_off"),
-            nr.cast("int").alias("ysize"),
-            nc.cast("int").alias("xsize"),
-            px.alias("pixels"),
-            F.lit(0).cast("long").alias("px_count"),
-            F.lit(0.0).alias("px_sum"),
-            F.lit(0.0).alias("px_ssq"),
-            F.lit(None).cast("double").alias("px_min"),
-            F.lit(None).cast("double").alias("px_max"),
-        ]
-
-    out = g.select(*null_rows(0, F.col("top"), F.col("left"), F.col("ysize"), F.col("xsize")))
-    if with_overviews:
-        for lvl in levels:
-            o = lvl // 2
-            ov_nr, ov_nc = gridmod.overview_shape(grid.nrows, grid.ncols, lvl)
-            frag_nr = F.when(F.col("ysize") > o, ((F.col("ysize") - 1 - o) / lvl + 1).cast("int")).otherwise(F.lit(0))
-            frag_nc = F.when(F.col("xsize") > o, ((F.col("xsize") - 1 - o) / lvl + 1).cast("int")).otherwise(F.lit(0))
-            y_off = (F.col("top") / lvl).cast("int")
-            x_off = (F.col("left") / lvl).cast("int")
-            nr = F.least(frag_nr, F.lit(ov_nr) - y_off)
-            nc = F.least(frag_nc, F.lit(ov_nc) - x_off)
-            frag = g.where((nr > 0) & (nc > 0)).select(*null_rows(lvl, y_off, x_off, nr, nc))
-            out = out.unionByName(frag)
-    return out
+def _with_placeholders(work: DataFrame, tiles: DataFrame, n_bands: int) -> DataFrame:
+    """``work`` plus one placeholder row per (band, tile) of ``tiles``:
+    the tile's key and geometry, every contributor column null. It makes
+    every output (band, tile) a group of the one stitch kernel, so a tile
+    no input covers comes out as pure nullval (reference
+    mosaic.py:351-359) through the same path as every other tile."""
+    placeholders = tiles.select(
+        "*", F.explode(F.sequence(F.lit(1), F.lit(n_bands))).alias("band")
+    )
+    return work.unionByName(placeholders, allowMissingColumns=True)
 
 
 def _restrict_tiles(
@@ -368,9 +334,7 @@ def _assign(
 
 
 def _stitch_tail(
-    spark: SparkSession,
     work: DataFrame,
-    tiles: DataFrame,
     assignments: DataFrame,
     grid: OutputGrid,
     levels: list,
@@ -379,20 +343,12 @@ def _stitch_tail(
 ) -> MosaicResult:
     """The stitch and everything after it, shared by the direct path and
     the relayout path. ``work`` arrives already distributed by (band,
-    tile): the direct path's one Exchange, or a bucketed scan. The one
-    stitch kernel also composes the salted path's partials. Tiles of
-    ``tiles`` with no row in ``assignments`` get JVM-side null fill."""
+    tile) — the direct path's one Exchange, or a bucketed scan — and
+    holds a placeholder row per output (band, tile) (_with_placeholders).
+    The one stitch kernel also composes the salted path's partials."""
     fn = make_stitch_fn_arrow(grid, levels, config.merge_policy,
                               feather=config.blend_feather)
     stitched = work.groupBy("band", "tile_row", "tile_col").applyInArrow(fn, STITCH_SCHEMA)
-    gap_tiles = tiles.join(
-        assignments.select("tile_row", "tile_col").distinct(),
-        on=["tile_row", "tile_col"],
-        how="left_anti",
-    )
-    stitched = stitched.unionByName(
-        _null_tile_rows(spark, gap_tiles, grid, levels, config.with_overviews)
-    )
     return MosaicResult(
         grid=grid,
         levels=levels,
@@ -550,12 +506,14 @@ def do_mosaic(
 
     # the stitch's ONE Exchange, sized to the cluster: a task per core
     # folds many groups, so the per-task Python set-up is paid
-    # ~defaultParallelism times instead of once per shuffle partition
+    # ~defaultParallelism times instead of once per shuffle partition.
+    # The placeholders join after the salted block: they never enter
+    # stage 1.
     n_parts = gridmod.stitch_partitions(spark, grid, config.blocksize, tile_row_range)
+    work = _with_placeholders(work, tiles, grid.n_bands)
     return _stitch_tail(
-        spark,
         work.repartition(n_parts, "band", "tile_row", "tile_col"),
-        tiles, assignments, grid, levels, config, config.blocksize,
+        assignments, grid, levels, config, config.blocksize,
     )
 
 

@@ -20,6 +20,8 @@ Reference semantics replicated exactly:
 * pyramid fragments ``arr[lvl//2::lvl, lvl//2::lvl]`` written at
   ``(top//lvl, left//lvl)``, clipped to the overview raster shape
   — mosaic.py:720-743
+* a block no input covers is pure nullval, with no read or merge —
+  mosaic.py:351-359: its group holds only its placeholder row
 
 All pixel math is numpy over Arrow-delivered batches; the only Python
 loop is per source *chunk* (a ~64K-pixel array), never per pixel/row.
@@ -145,14 +147,14 @@ def _finalize_policy(canvas, policy, best) -> None:
 
 
 def _extract_arrow_group(tbl: pa.Table):
-    """Column arrays + the pixel payloads (element offsets, uint16
-    values) of one Arrow group, zero-copy where the types allow."""
-    cols = {
-        name: tbl.column(name).to_numpy(zero_copy_only=False)
-        for name in _WINDOW_COLS
-    }
-    offsets, values = decode_column(tbl.column("pixels").combine_chunks())
-    return cols, offsets, values
+    """Column arrays, the pixel payloads (element offsets, uint16
+    values) and the indices of the rows that carry a payload of one
+    Arrow group, zero-copy where the types allow: placeholder rows are
+    skipped by index, never filtered out by copying the payloads."""
+    pix = tbl.column("pixels").combine_chunks()
+    cols = {name: tbl.column(name).to_numpy(zero_copy_only=False) for name in _WINDOW_COLS}
+    offsets, values = decode_column(pix)
+    return cols, offsets, values, np.flatnonzero(pix.is_valid())
 
 
 def _check_run_geometry(cols, idxs, key):
@@ -171,12 +173,12 @@ def _check_run_geometry(cols, idxs, key):
                 )
 
 
-def _fold_arrow_group(cols, offsets, values, canvas, nullval, policy, best, key):
-    """The ordered merge over one Arrow group: for each contiguous
-    priority run (one contributor), clamp + pad + paste its chunks into
-    a window, then fold the window into the canvas. Shared by the full
-    stitch and the salted stage-1 partial merge."""
-    order = np.argsort(cols["priority"], kind="stable")
+def _fold_arrow_group(cols, offsets, values, rows, canvas, nullval, policy, best, key):
+    """The ordered merge over the payload ``rows`` of one Arrow group:
+    for each contiguous priority run (one contributor), clamp + pad +
+    paste its chunks into a window, then fold the window into the
+    canvas. Shared by the full stitch and the salted stage-1 merge."""
+    order = rows[np.argsort(cols["priority"][rows], kind="stable")]
     n = len(order)
     i = 0
     while i < n:
@@ -231,13 +233,19 @@ def make_stitch_fn_arrow(
     ``binary`` must be True (payloads are always packed uint16, see
     pixels.py); it stays only for callers that still pass it.
 
+    Every output (band, tile) is a group: it holds the tile's
+    placeholder row (mosaic._with_placeholders; null ``pixels``), and
+    only rows with a payload fold. A group with no such row is a tile
+    no input covers: it emits the null canvas, ``px_count`` 0 and its
+    pyramid fragments.
+
     It is also stage 2 of the salted stitch. A group whose input has a
     ``wsum`` column (PARTIAL_SCHEMA) folds its rows with non-null
     ``pixels`` as contributors — raw cold rows and 'last' partials —
     and adds the canvases of its rows with non-null ``wsum`` ('blend'
     partials) into the blend state before finalize. Finalize is the same
     exact integer half-up division either way, so salted == unsalted
-    bit-for-bit. Any other group (every unsalted run) folds as is."""
+    bit-for-bit."""
     if not binary:
         raise ValueError("binary must be True: packed uint16 is the only pixel layout")
     import pyarrow.compute as pc
@@ -250,16 +258,14 @@ def make_stitch_fn_arrow(
         top, left, ysize, xsize = (
             int(tbl.column(c)[0].as_py()) for c in ("top", "left", "ysize", "xsize")
         )
+        canvas = np.full((ysize, xsize), nullval, dtype=PIXEL_DTYPE)
+        best = _policy_state(policy, ysize, xsize, feather)
+        cols, offsets, values, rows = _extract_arrow_group(tbl)
+        _fold_arrow_group(cols, offsets, values, rows, canvas, nullval, policy, best,
+                          (band, tile_row, tile_col))
         parts = None
         if "wsum" in tbl.column_names:
             parts = tbl.filter(pc.is_valid(tbl.column("wsum")))
-            tbl = tbl.filter(pc.is_valid(tbl.column("pixels")))
-        canvas = np.full((ysize, xsize), nullval, dtype=PIXEL_DTYPE)
-        best = _policy_state(policy, ysize, xsize, feather)
-        if tbl.num_rows:
-            cols, offsets, values = _extract_arrow_group(tbl)
-            _fold_arrow_group(cols, offsets, values, canvas, nullval, policy, best,
-                              (band, tile_row, tile_col))
         if parts is not None and parts.num_rows:
             _add_blend_partials(best, parts)
         _finalize_policy(canvas, policy, best)
@@ -293,7 +299,8 @@ def make_partial_fn_arrow(grid: OutputGrid, policy: str = "last", feather: int =
     tile_col, salt): fold a contiguous-priority bucket of a hot tile's
     contributors, then emit ONE PARTIAL_SCHEMA row covering the bounding
     box of what the bucket wrote (not the whole tile — partially covered
-    tiles would otherwise inflate the stage-2 shuffle).
+    tiles would otherwise inflate the stage-2 shuffle) — no row when it
+    wrote nothing: the tile's placeholder keeps its stage-2 group.
 
     Correctness (SURVEY.md §7.5 "ordered merge under salting"):
 
@@ -313,25 +320,21 @@ def make_partial_fn_arrow(grid: OutputGrid, policy: str = "last", feather: int =
 
     def partial(key: tuple, tbl: pa.Table) -> pa.Table:
         band, tile_row, tile_col, salt = _key_ints(key)
-        cols, offsets, values = _extract_arrow_group(tbl)
+        cols, offsets, values, rows = _extract_arrow_group(tbl)
         top, left = int(cols["top"][0]), int(cols["left"][0])
         ysize, xsize = int(cols["ysize"][0]), int(cols["xsize"][0])
         canvas = np.full((ysize, xsize), nullval, dtype=PIXEL_DTYPE)
         best = _policy_state(policy, ysize, xsize, feather)
-        _fold_arrow_group(cols, offsets, values, canvas, nullval, policy, best,
+        _fold_arrow_group(cols, offsets, values, rows, canvas, nullval, policy, best,
                           (band, tile_row, tile_col, salt))
-        # bounding box of written pixels. An all-null bucket still emits
-        # a 1x1 null box: dropping it entirely could drop the TILE from
-        # stage 2 when every bucket is all-null, whereas the unsalted
-        # path emits a null tile for assigned-but-all-null input.
+        # bounding box of written pixels
         written = canvas != nullval if best is None else best[0] > 0
         nn_rows = np.flatnonzero(written.any(axis=1))
         nn_cols = np.flatnonzero(written.any(axis=0))
         if nn_rows.size == 0:
-            r0, r1, c0, c1 = 0, 1, 0, 1
-        else:
-            r0, r1 = int(nn_rows[0]), int(nn_rows[-1]) + 1
-            c0, c1 = int(nn_cols[0]), int(nn_cols[-1]) + 1
+            return ARROW_PARTIAL_SCHEMA.empty_table()
+        r0, r1 = int(nn_rows[0]), int(nn_rows[-1]) + 1
+        c0, c1 = int(nn_cols[0]), int(nn_cols[-1]) + 1
         box = np.s_[r0:r1, c0:c1]
         row = {
             "tile_row": tile_row, "tile_col": tile_col, "band": band,

@@ -175,12 +175,10 @@ def unpack_u2(bin_col: Column, chunk_bytes: int = 512) -> Column:
     return F.when(F.length(bin_col) == 0, empty).otherwise(decoded)
 
 
-def repeat_u2(value: int | Column, count: Column) -> Column:
-    """binary of ``count`` repeats of one uint16 value (null-fill rows),
-    synthesized JVM-side. ``value`` may be a column (per-row nodata); an
-    int is encoded here, a literal costing no per-call expression tree."""
-    unit = _u2_le_hex(value) if isinstance(value, Column) else F.lit(encode([value]).hex())
-    return F.unhex(F.repeat(unit, count.cast("int")))
+def repeat_u2(value: Column, count: Column) -> Column:
+    """binary of ``count`` repeats of one uint16 value column (per-row
+    nodata fill), synthesized JVM-side."""
+    return F.unhex(F.repeat(_u2_le_hex(value), count.cast("int")))
 
 
 def pixel_count(col: Column) -> Column:

@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..mosaic import (
     MosaicConfig, MosaicResult, _assign, _contributor_chunks, _restrict_tiles, _stitch_tail,
-    check_nullval,
+    _with_placeholders, check_nullval,
 )
 from ..pixels import PIXEL_TYPE, ingest
 from ..plans.grid import (
@@ -84,8 +84,10 @@ def relayout_to_table(
     fingerprint: str | None = None,
 ) -> OutputGrid:
     """Materialize the tile-aligned work relation as a bucketed table
-    (pays the wide shuffle once). Also stores the output grid + config
-    in ``<table>_meta`` so later stitches reconstruct the exact plan.
+    (pays the wide shuffle once), with one placeholder row per (band,
+    tile) of the grid (mosaic._with_placeholders). Also stores the
+    output grid + config in ``<table>_meta`` so later stitches
+    reconstruct the exact plan.
     ``grid``/``fingerprint`` let a caller that already aggregated the
     footprint dim table (do_mosaic's summary pass) skip re-collecting
     it. ``n_buckets`` defaults to ``config.relayout_buckets``, else to
@@ -108,7 +110,8 @@ def relayout_to_table(
     for t in (table, f"{table}_meta"):
         spark.sql(f"DROP TABLE IF EXISTS {t}")
         _drop_stale_location(spark, t)
-    _write_bucketed(work, table, n_buckets, "overwrite")
+    _write_bucketed(_with_placeholders(work, tiles, grid.n_bands), table, n_buckets,
+                    "overwrite")
     _write_meta(spark, table, grid, config, n_buckets, fingerprint)
     return grid
 
@@ -156,7 +159,7 @@ def _write_meta(
         nullval=grid.nullval, dtype=grid.dtype, projection=grid.projection,
         blocksize=config.blocksize, min_overview_size=config.min_overview_size,
         n_buckets=n_buckets, src_blocksize=config.src_blocksize,
-        fingerprint=fingerprint,
+        fingerprint=fingerprint, placeholders=True,
     )
     spark.createDataFrame([(json.dumps(meta),)], "meta string").write.mode(
         "overwrite"
@@ -232,12 +235,12 @@ def ensure_relayout_table(
     config: MosaicConfig,
     n_buckets: int | None = None,
 ) -> None:
-    """Create an EMPTY bucketed work table pinned to ``grid`` if it does
-    not exist yet — the incremental mosaic appends each micro-batch's
-    work rows into it (relayout_append) and stitches touched tiles with
-    no Exchange. The schema is derived from a zero-row run of the
-    join+clip plan over ``blocks``. The
-    bucket count defaults as in relayout_to_table.
+    """Create a bucketed work table pinned to ``grid`` if it does not
+    exist yet, holding only the placeholder row of every (band, tile) —
+    the incremental mosaic appends each micro-batch's work rows into it
+    (relayout_append) and stitches touched tiles with no Exchange. The
+    schema is derived from a zero-row run of the join+clip plan over
+    ``blocks``. The bucket count defaults as in relayout_to_table.
 
     If the catalog does not know the table but its warehouse files
     exist (a restarted session with the default in-memory catalog),
@@ -252,14 +255,15 @@ def ensure_relayout_table(
     if loc is not None and os.path.isdir(loc) and os.listdir(loc):
         _reregister_relayout(spark, table, loc)
         return
-    tiles = make_tile_relation(spark, grid, config.blocksize).limit(0)
+    tiles = make_tile_relation(spark, grid, config.blocksize)
     assignments = assign_inputs(
-        tiles,
+        tiles.limit(0),
         _empty_footprints(spark), grid, strategy="broadcast",
     )
     empty = _contributor_chunks(assignments, ingest(blocks).limit(0), config.src_blocksize)
     n_buckets = _bucket_count(spark, grid, config, n_buckets)
-    _write_bucketed(empty, table, n_buckets, "overwrite")
+    _write_bucketed(_with_placeholders(empty, tiles, grid.n_bands), table, n_buckets,
+                    "overwrite")
     _write_meta(spark, table, grid, config, n_buckets)
 
 
@@ -325,11 +329,13 @@ def _table_accessible(spark: SparkSession, table: str) -> bool:
     return False
 
 
-def _packed(work: DataFrame) -> bool:
-    """Whether a relayout table holds packed pixels — a schema read, no
-    job. Tables built from ``array<int>`` blocks by older versions do
-    not."""
-    return work.schema["pixels"].dataType == PIXEL_TYPE
+def _current(work: DataFrame, meta: dict) -> bool:
+    """Whether a relayout table has this version's layout — a schema
+    and meta read, no job: packed pixels (tables built from
+    ``array<int>`` blocks by older versions hold none) and a placeholder
+    row per (band, tile) (the meta's ``placeholders`` mark; without
+    those rows a tile no input covers would be missing)."""
+    return meta.get("placeholders") is True and work.schema["pixels"].dataType == PIXEL_TYPE
 
 
 def _grid_from_meta(m: dict) -> OutputGrid:
@@ -379,7 +385,7 @@ def mosaic_via_relayout(
             and int(m.get("src_blocksize", 256)) == config.src_blocksize
             and int(m["min_overview_size"]) == config.min_overview_size
             and (grid is None or _grid_from_meta(m) == grid)
-            and _packed(spark.table(table))
+            and _current(spark.table(table), m)
         )
     if not usable:
         if grid is not None:
@@ -423,12 +429,12 @@ def stitch_from_relayout(
 
     ensure_workers_can_import(spark)
     src = spark.table(table)
-    if not _packed(src):
-        raise ValueError(
-            f"relayout table {table!r} does not hold packed uint16 pixels "
-            "(built from array<int> blocks?); rebuild it with relayout_to_table"
-        )
     m = _load_meta(spark, table)
+    if not _current(src, m):
+        raise ValueError(
+            f"relayout table {table!r} was built by an older version (array<int> "
+            "pixels or no placeholder rows); rebuild it with relayout_to_table"
+        )
     grid = _grid_from_meta(m)
     blocksize = int(m["blocksize"])
     levels = (
@@ -438,8 +444,9 @@ def stitch_from_relayout(
     )
     # the bucketed scan already distributes by (band, tile): no Exchange
     work = _restrict_tiles(src, tile_row_range, tile_keys)
-    tiles = _restrict_tiles(
-        make_tile_relation(spark, grid, blocksize), tile_row_range, tile_keys
+    assignments = (
+        work.where(F.col("media_ref").isNotNull())
+        .select("tile_row", "tile_col", "media_ref", "priority")
+        .distinct()
     )
-    assignments = work.select("tile_row", "tile_col", "media_ref", "priority").distinct()
-    return _stitch_tail(spark, work, tiles, assignments, grid, levels, config, blocksize)
+    return _stitch_tail(work, assignments, grid, levels, config, blocksize)

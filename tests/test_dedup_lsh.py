@@ -108,6 +108,37 @@ def test_neardup_pairs_exact_vs_crossjoin(spark):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
+def test_neardup_pairs_string_ids(spark):
+    """Ids keep their own type: string ids give the long-id pairs
+    mapped to their names, typed string (a cast to long would turn
+    every id into one null group)."""
+    from pyspark.sql import types as T
+
+    rng = np.random.default_rng(13)
+    n, dim = 120, 8
+    base = rng.normal(size=(n, dim))
+    base[1] = base[0] + 0.01 * rng.normal(size=dim)
+    base[41] = base[40] + 0.01 * rng.normal(size=dim)
+    vecs = [[float(x) for x in base[i]] for i in range(n)]
+    name = {i: f"doc-{i:04d}" for i in range(n)}  # order-preserving names
+    by_long = spark.createDataFrame(
+        [(i, vecs[i]) for i in range(n)], "vec_id long, embedding array<float>"
+    )
+    by_name = spark.createDataFrame(
+        [(name[i], vecs[i]) for i in range(n)], "vec_id string, embedding array<float>"
+    )
+    want = {
+        (name[r.id_a], name[r.id_b]): r.cos_sim
+        for r in S.neardup_pairs(by_long, threshold=0.6).collect()
+    }
+    pairs = S.neardup_pairs(by_name, threshold=0.6)
+    assert pairs.schema["id_a"].dataType == T.StringType()
+    assert pairs.schema["id_b"].dataType == T.StringType()
+    got = {(r.id_a, r.id_b): r.cos_sim for r in pairs.collect()}
+    assert got == want
+    assert (name[0], name[1]) in got and (name[40], name[41]) in got
+
+
 def test_ngram_doc_freq_cap(spark):
     boiler = "copyright footer text all rights reserved"
     rows = [(i, f"{boiler} unique{i} filler{i} words{i}") for i in range(20)]

@@ -211,3 +211,25 @@ def test_flow_accumulation_long_chain(spark):
             assert got[rr * ncols + cc] == (xs - 1 - cc, True)
         # outlet just west of the defined region drains the whole row
         assert got[rr * ncols + 0] == (xs - 2, False)
+
+
+def test_flow_accumulation_deep_chain_matches_euler(spark):
+    """A 24k-cell chain (one cell per level) through the in-memory
+    kernel equals the distributed Euler-tour path, and both give the
+    closed form: cell i drains the n - i cells at or upstream of it."""
+    from moamosaic_spark.functions.hydro import (
+        _flow_accumulation_euler, flow_accumulation,
+    )
+
+    n = 24_000
+    # cell i flows into i - 1; cell 0 is a sink (self-loop root)
+    edges = spark.range(n).selectExpr(
+        "1 AS band", "id AS gid", "greatest(id - 1, 0) AS dst"
+    )
+
+    def rowset(df):
+        return {(r.band, r.gid, r.acc, r.is_cell) for r in df.collect()}
+
+    inmem = rowset(flow_accumulation(edges))
+    assert inmem == rowset(_flow_accumulation_euler(edges))
+    assert inmem == {(1, i, n - i, True) for i in range(n)}

@@ -108,6 +108,38 @@ def test_gap_null_fill(spark):
     check_overviews_equal(want, got)
 
 
+@pytest.mark.parametrize("route", ["direct", "relayout"])
+def test_every_band_of_every_tile(spark, route):
+    """Every band 1..n_bands of every tile has a row. The priority-0
+    input has 2 bands (so the grid has 2); the other input, far to the
+    east, has 1. Tiles it alone covers get a null band-2 tile and null
+    band-2 fragments — its band 2 reads as nodata, as in the oracle of
+    the same corpus with that band filled with nullval."""
+    import copy
+
+    rasters = synth.with_gap(200, 200)
+    rasters[0].n_bands = 2
+    rasters[0].bands.append(rasters[0].bands[0] + 1)
+    padded = copy.deepcopy(rasters)
+    padded[1].n_bands = 2
+    padded[1].bands.append(np.full_like(padded[1].bands[0], padded[1].nullval))
+    cfg = MosaicConfig(blocksize=64, src_blocksize=256, min_overview_size=32,
+                       relayout_table="work_bands" if route == "relayout" else None)
+    fp = to_footprints(spark, synth.footprints_pdf(rasters))
+    blocks = to_blocks(spark, synth.blocks_pdf(rasters, cfg.src_blocksize))
+    want = synth.oracle(padded, blocksize=64, min_overview_size=32)
+    got = do_mosaic(spark, fp, blocks, cfg)
+    check_tiles_equal(want, got)
+    check_overviews_equal(want, got)
+    east = {(ti, tj) for (ti, tj, ref) in want.assignments if ref == "r001"}
+    band2 = {(r.tile_row, r.tile_col): r.px_count
+             for r in got.tiles.where("band = 2").collect()}
+    assert east and all(band2[k] == 0 for k in east)
+    if route == "relayout":
+        for t in ("work_bands", "work_bands_meta"):
+            spark.sql(f"DROP TABLE IF EXISTS {t}")
+
+
 def test_multiband(spark):
     want, got = run_case(spark, synth.golden_pair(200, 200, n_bands=2))
     check_tiles_equal(want, got)

@@ -2,6 +2,7 @@
 the stitch plan off the bucketed table contains NO Exchange."""
 
 import numpy as np
+import pytest
 
 from moamosaic_spark.mosaic import MosaicConfig, do_mosaic
 from moamosaic_spark.pixels import decode
@@ -279,3 +280,112 @@ def test_stale_array_relayout_table_rejected_and_rebuilt(spark):
     assert set(got) == set(want.tiles)
     for k, a in got.items():
         np.testing.assert_array_equal(a, want.tiles[k], err_msg=str(k))
+
+
+def test_unmarked_relayout_table_rejected_and_rebuilt(spark):
+    """A relayout table whose meta lacks the placeholder mark (built
+    before every (band, tile) carried a placeholder row) is never
+    stitched: it would drop the tiles no input covers. stitch_from_relayout
+    raises a ValueError naming it; do_mosaic's routing rebuilds it, and
+    the gap tiles come back."""
+    import json
+
+    import pytest
+    from pyspark.sql import functions as F
+
+    from moamosaic_spark.sources.relayout import _load_meta, _write_bucketed
+
+    rasters = synth.with_gap(200, 200)
+    fp = to_footprints(spark, synth.footprints_pdf(rasters))
+    blocks = to_blocks(spark, synth.blocks_pdf(rasters, 256))
+    cfg = MosaicConfig(blocksize=64, src_blocksize=256, with_overviews=False)
+    relayout_to_table(spark, fp, blocks, "work_unmarked", cfg, n_buckets=4)
+    m = _load_meta(spark, "work_unmarked")
+    del m["placeholders"]
+    spark.createDataFrame([(json.dumps(m),)], "meta string").write.mode(
+        "overwrite").saveAsTable("work_unmarked_meta")
+    old = spark.table("work_unmarked").where(F.col("pixels").isNotNull())
+    _write_bucketed(old.localCheckpoint(eager=True), "work_unmarked", 4, "overwrite")
+
+    with pytest.raises(ValueError, match="work_unmarked"):
+        stitch_from_relayout(spark, "work_unmarked", cfg)
+
+    res = do_mosaic(spark, fp, blocks, MosaicConfig(
+        blocksize=64, src_blocksize=256, with_overviews=False,
+        relayout_table="work_unmarked"))
+    assert _load_meta(spark, "work_unmarked")["placeholders"] is True
+    want = synth.oracle(rasters, blocksize=64, min_overview_size=9999)
+    got = {(r.band, r.tile_row, r.tile_col): decode(r.pixels).reshape(r.ysize, r.xsize)
+           for r in res.tiles.collect()}
+    assert set(got) == set(want.tiles)
+    for k, a in got.items():
+        np.testing.assert_array_equal(a, want.tiles[k], err_msg=str(k))
+    for t in ("work_unmarked", "work_unmarked_meta"):
+        spark.sql(f"DROP TABLE IF EXISTS {t}")
+
+
+def _stitched_rows(res) -> dict:
+    """Every stitched row (tiles and fragments), bytes and stats."""
+    return {
+        (r.level, r.band, r.tile_row, r.tile_col): (
+            r.y_off, r.x_off, r.ysize, r.xsize, bytes(r.pixels),
+            r.px_count, r.px_sum, r.px_ssq, r.px_min, r.px_max,
+        )
+        for r in res.stitched.collect()
+    }
+
+
+@pytest.mark.parametrize("layout", ["side", "stacked"])
+def test_relayout_gap_tiles_equal_direct_and_oracle(spark, layout):
+    """Tiles no input covers go through the one stitch kernel on both
+    routes: the relayout route (do_mosaic with relayout_table, and
+    stitch_from_relayout restricted to gap tiles only) gives the direct
+    path's rows byte for byte — tiles, overview fragments and stats
+    partials — and both equal the numpy oracle. 'side' is
+    synth.with_gap; 'stacked' moves its second raster below the first,
+    so whole tile rows hold only gap tiles (a tile_row_range)."""
+    from tests.test_mosaic_e2e import (
+        check_overviews_equal, check_stats_equal, check_tiles_equal,
+    )
+
+    rasters = synth.with_gap(200, 200)
+    if layout == "stacked":
+        rasters[1].x0 = rasters[0].x0
+        rasters[1].y0 = rasters[0].y0 - 3 * rasters[0].nrows * rasters[0].y_res
+    fp = to_footprints(spark, synth.footprints_pdf(rasters))
+    blocks = to_blocks(spark, synth.blocks_pdf(rasters, 256))
+    base = dict(blocksize=64, src_blocksize=256, min_overview_size=32)
+    table = f"work_gap_{layout}"
+    want = synth.oracle(rasters, blocksize=64, min_overview_size=32)
+    assert want.overviews, "the corpus must have a pyramid level"
+
+    direct = do_mosaic(spark, fp, blocks, MosaicConfig(**base))
+    routed = do_mosaic(spark, fp, blocks, MosaicConfig(**base, relayout_table=table))
+    for res in (direct, routed):
+        check_tiles_equal(want, res)
+        check_stats_equal(want, res)
+        check_overviews_equal(want, res)
+    full = _stitched_rows(direct)
+    assert _stitched_rows(routed) == full
+
+    covered = {(ti, tj) for (ti, tj, _ref) in want.assignments}
+    gap = {(ti, tj) for (ti, tj, *_geo) in want.tile_index} - covered
+    assert gap
+    if layout == "side":
+        keys = spark.createDataFrame(sorted(gap), "tile_row int, tile_col int")
+        part = stitch_from_relayout(spark, table, MosaicConfig(**base), tile_keys=keys)
+        keep = gap
+    else:
+        rows = sorted({ti for (ti, _tj) in gap if not any(t == ti for (t, _) in covered)})
+        lo, hi = rows[0], rows[-1] + 1
+        assert rows == list(range(lo, hi)) and hi - lo >= 2
+        part = stitch_from_relayout(spark, table, MosaicConfig(**base),
+                                    tile_row_range=(lo, hi))
+        keep = {(ti, tj) for (ti, tj) in gap if lo <= ti < hi}
+    got = _stitched_rows(part)
+    assert got == {k: v for k, v in full.items() if (k[2], k[3]) in keep}
+    assert {(k[2], k[3]) for k in got} == keep
+    assert all(v[5] == 0 and v[8] is None for v in got.values())
+    assert part.assignments.count() == 0
+    for t in (table, f"{table}_meta"):
+        spark.sql(f"DROP TABLE IF EXISTS {t}")
