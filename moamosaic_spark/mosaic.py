@@ -4,10 +4,13 @@ mosaic.py:111-224, re-planned as one declarative Spark job).
 Reference phases -> Spark stages:
 
   imginfodict (serial metadata scan)   -> footprints dim table (given)
-  projection (agreement check)         -> validate_projections()
-  analysis (grid/tiles/join/worklist)  -> Catalyst logical plan:
-                                          extent agg + tile relation +
-                                          cell-keyed/broadcast spatial join
+  projection (agreement check)         -> ONE footprint probe (_summary_row):
+                                          checks + extent + fingerprint
+                                          in one driver action
+  analysis (grid/tiles/join/worklist)  -> Catalyst logical plan, written
+                                          as SQL strings the JVM parses
+                                          once per relation: tile relation
+                                          + cell-keyed/broadcast spatial join
   domosaic (threads + queue + cache)   -> ONE shuffle (a partition per
                                           core) into
                                           groupBy(band, tile).applyInArrow
@@ -100,52 +103,56 @@ class MosaicResult:
 
 
 def _summary_row(footprints: DataFrame, with_fingerprint: bool = False):
-    """ONE aggregate over the footprint dim table carrying everything
-    do_mosaic needs up front: P6/P7 agreement counts, the A1 extent and
-    priority-first struct (plans.grid.extent_cols), and (optionally) the
-    relayout fingerprint — one driver round trip where validate + grid +
-    fingerprint used to be three (guide §5: collects are full driver
-    round trips; batch them)."""
+    """THE footprint probe: one driver action over the footprint dim
+    table carrying everything do_mosaic needs up front — the P6 checks
+    (``min(c) != max(c)``: more than one distinct projection or pixel
+    size), the P7 alignment check, the A1 extent and priority-first
+    struct (plans.grid.extent_cols) and, optionally, the relayout
+    fingerprint (guide §5: collects are full driver round trips; batch
+    them). The alignment check needs the priority-first input's origin
+    on every row, so that struct is a window over the (small) dim
+    table, and the aggregate reads ``first`` off the same column."""
+    def misaligned(c: str, res: str) -> str:
+        # isAligned (reproj.py:117-127): |round(d/res) - d/res| >= 1e-4
+        factor = f"(abs({c} - _first.{c}) / _first.{res})"
+        return f"abs(round({factor}) - {factor}) >= 0.0001D"
+
     aggs = [
-        F.countDistinct("projection").alias("n_proj"),
-        F.countDistinct("x_res").alias("n_xres"),
-        F.countDistinct("y_res").alias("n_yres"),
-        *gridmod.extent_cols(),
+        "min(projection) != max(projection) AS bad_proj",
+        "min(x_res) != max(x_res) OR min(y_res) != max(y_res) AS bad_res",
+        f"bool_or({misaligned('x0', 'x_res')} OR {misaligned('y0', 'y_res')}) AS bad_align",
+        *gridmod.extent_cols(first="any_value(_first)"),
     ]
     if with_fingerprint:
         from .sources.relayout import fingerprint_agg_cols
 
         aggs.extend(fingerprint_agg_cols())
-    return footprints.agg(*aggs).collect()[0]
+    return (
+        footprints.selectExpr("*", f"{gridmod.FIRST} OVER () AS _first")
+        .selectExpr(*aggs)
+        .collect()[0]
+    )
 
 
-def _check_projection_row(footprints: DataFrame, row) -> None:
-    """P6/P7 checks over a collected summary row + the one residual
-    alignment scan (which needs the first input's origin, so it cannot
-    fold into the same aggregate)."""
-    f = gridmod.require_first(row)
-    if row["n_proj"] > 1:
+def _check_projection_row(row) -> None:
+    """Raise on a probe row (_summary_row) that fails P6/P7, in the
+    reference's order: projection, pixel size, alignment."""
+    gridmod.require_first(row)
+    if row["bad_proj"]:
         raise MoaProjectionError("Projection mis-match between inputs")
-    if row["n_xres"] > 1 or row["n_yres"] > 1:
+    if row["bad_res"]:
         raise MoaProjectionError("Pixel size mis-match between inputs")
-    # isAligned (reproj.py:117-127): |round(d/res) - d/res| < 1e-4
-    def misaligned(coord, origin, res):
-        factor = F.abs(F.col(coord) - F.lit(origin)) / F.lit(res)
-        return F.abs(F.round(factor) - factor) >= 0.0001
-
-    bad = footprints.where(
-        misaligned("x0", f["x0"], f["x_res"]) | misaligned("y0", f["y0"], f["y_res"])
-    ).limit(1).count()
-    if bad:
+    if row["bad_align"]:
         raise MoaProjectionError("Grid mis-alignment between inputs")
 
 
 def validate_projections(footprints: DataFrame) -> None:
     """P6/P7 — all inputs must agree on projection and pixel size, and be
-    grid-aligned to the first input (reference reproj.py:72-127).
-    One tiny aggregate over the dim table; raises MoaProjectionError.
+    grid-aligned to the priority-first input (reference
+    reproj.py:72-127). One driver action, the footprint probe
+    (_summary_row); raises MoaProjectionError.
     """
-    _check_projection_row(footprints, _summary_row(footprints))
+    _check_projection_row(_summary_row(footprints))
 
 
 def validate_blocks(footprints: DataFrame, blocks: DataFrame) -> None:
@@ -191,29 +198,21 @@ def _contributor_chunks(assignments: DataFrame, blocks: DataFrame, src_bs: int) 
     partition-pruning analog — the join keys (media_ref, b_row, b_col)
     push down to the blocks table's partitioning at scale.
     """
-    a = assignments.select(
+    a = assignments.selectExpr(
         "*",
-        F.greatest(F.col("in_top"), F.lit(0)).alias("top1"),
-        F.greatest(F.col("in_left"), F.lit(0)).alias("left1"),
-        F.least(F.col("in_top") + F.col("in_ysize"), F.col("src_nrows")).alias("bottom1"),
-        F.least(F.col("in_left") + F.col("in_xsize"), F.col("src_ncols")).alias("right1"),
-    ).where((F.col("bottom1") > F.col("top1")) & (F.col("right1") > F.col("left1")))
-    a = a.select(
+        "greatest(in_top, 0) AS top1",
+        "greatest(in_left, 0) AS left1",
+        "least(in_top + in_ysize, src_nrows) AS bottom1",
+        "least(in_left + in_xsize, src_ncols) AS right1",
+    ).where("bottom1 > top1 AND right1 > left1")
+    a = a.selectExpr(
         "*",
-        F.explode(
-            F.sequence(
-                (F.col("top1") / src_bs).cast("int"),
-                ((F.col("bottom1") - 1) / src_bs).cast("int"),
-            )
-        ).alias("b_row"),
-    ).select(
+        f"explode(sequence(CAST(top1 / {src_bs} AS INT), "
+        f"CAST((bottom1 - 1) / {src_bs} AS INT))) AS b_row",
+    ).selectExpr(
         "*",
-        F.explode(
-            F.sequence(
-                (F.col("left1") / src_bs).cast("int"),
-                ((F.col("right1") - 1) / src_bs).cast("int"),
-            )
-        ).alias("b_col"),
+        f"explode(sequence(CAST(left1 / {src_bs} AS INT), "
+        f"CAST((right1 - 1) / {src_bs} AS INT))) AS b_col",
     )
     joined = a.join(blocks, on=["media_ref", "b_row", "b_col"], how="inner")
     # Clip each chunk to its tile's read window JVM-side BEFORE the big
@@ -235,52 +234,46 @@ def _contributor_chunks(assignments: DataFrame, blocks: DataFrame, src_bs: int) 
     #     the spare columns on paste. Measured on the bench corpus:
     #     216 MB shipped vs 210 MB under the full per-pixel clip (+3%)
     #     at ~5x less clip CPU.
-    rt = F.greatest(F.col("b_top"), F.col("top1"))
-    rb = F.least(F.col("b_top") + F.col("b_ysize"), F.col("bottom1"))
-    cl = F.greatest(F.col("b_left"), F.col("left1"))
-    cr = F.least(F.col("b_left") + F.col("b_xsize"), F.col("right1"))
-    cols_untouched = (cl == F.col("b_left")) & (cr == F.col("b_left") + F.col("b_xsize"))
-    col_clip = ~cols_untouched & ((cr - cl) * 2 <= F.col("b_xsize"))
-    row_clipped = F.col("pixels").substr(
-        (rt - F.col("b_top")) * F.col("b_xsize") * PIXEL_BYTES + 1,
-        (rb - rt) * F.col("b_xsize") * PIXEL_BYTES,
+    rt = "greatest(b_top, top1)"
+    rb = "least(b_top + b_ysize, bottom1)"
+    cl = "greatest(b_left, left1)"
+    cr = "least(b_left + b_xsize, right1)"
+    cols_untouched = f"({cl} = b_left AND {cr} = b_left + b_xsize)"
+    col_clip = f"(NOT {cols_untouched} AND ({cr} - {cl}) * 2 <= b_xsize)"
+    row_clipped = (
+        f"substr(pixels, ({rt} - b_top) * b_xsize * {PIXEL_BYTES} + 1, "
+        f"({rb} - {rt}) * b_xsize * {PIXEL_BYTES})"
     )
     # interior chunks (the vast majority at production tile sizes) pass
     # through untouched; row-only clips are one contiguous slice
-    untouched = (
-        (rt == F.col("b_top"))
-        & (rb == F.col("b_top") + F.col("b_ysize"))
-        & cols_untouched
-    )
+    untouched = f"({rt} = b_top AND {rb} = b_top + b_ysize AND {cols_untouched})"
     # ONE subtree: a conditional generate fans thin-strip chunks out to
     # their per-row slices (_sr = source row) and passes every other
     # chunk through once (_sr null) — a where/union split here would
     # duplicate the whole join subtree (blocks scanned and joined twice
     # per action; observed in the physical plan)
-    alive = joined.where((rb > rt) & (cr > cl)).select(
+    alive = joined.where(f"{rb} > {rt} AND {cr} > {cl}").selectExpr(
         "*",
-        F.explode(
-            F.when(col_clip, F.sequence(rt, rb - 1))
-            .otherwise(F.array(F.lit(None).cast("int")))
-        ).alias("_sr"),
+        f"explode(CASE WHEN {col_clip} THEN sequence({rt}, {rb} - 1) "
+        "ELSE array(CAST(NULL AS INT)) END) AS _sr",
     )
-    src_off = (F.col("_sr") - F.col("b_top")) * F.col("b_xsize") + (cl - F.col("b_left"))
-    strip_px = F.col("pixels").substr(
-        src_off * PIXEL_BYTES + 1, (cr - cl) * PIXEL_BYTES
-    )
-    is_strip = F.col("_sr").isNotNull()
+    src_off = f"((_sr - b_top) * b_xsize + ({cl} - b_left))"
+    strip_px = f"substr(pixels, {src_off} * {PIXEL_BYTES} + 1, ({cr} - {cl}) * {PIXEL_BYTES})"
     # one withColumns: every expression binds to the ORIGINAL chunk
     # geometry columns (sequential withColumn would rebind cl/cr to
     # already-replaced b_left/b_xsize)
+    strip = "_sr IS NOT NULL"
     return (
         alive.withColumns({
-            "pixels": F.when(
-                is_strip, strip_px
-            ).otherwise(F.when(untouched, F.col("pixels")).otherwise(row_clipped)),
-            "b_xsize": F.when(is_strip, cr - cl).otherwise(F.col("b_xsize")),
-            "b_left": F.when(is_strip, cl).otherwise(F.col("b_left")),
-            "b_ysize": F.when(is_strip, F.lit(1)).otherwise(rb - rt),
-            "b_top": F.when(is_strip, F.col("_sr")).otherwise(rt),
+            name: F.expr(f"CASE WHEN {strip} THEN {strip_v} ELSE {chunk_v} END")
+            for name, strip_v, chunk_v in (
+                ("pixels", strip_px,
+                 f"CASE WHEN {untouched} THEN pixels ELSE {row_clipped} END"),
+                ("b_xsize", f"{cr} - {cl}", "b_xsize"),
+                ("b_left", cl, "b_left"),
+                ("b_ysize", "1", f"{rb} - {rt}"),
+                ("b_top", "_sr", rt),
+            )
         })
         .drop("top1", "left1", "bottom1", "right1", "_sr")
     )
@@ -292,9 +285,7 @@ def _with_placeholders(work: DataFrame, tiles: DataFrame, n_bands: int) -> DataF
     every output (band, tile) a group of the one stitch kernel, so a tile
     no input covers comes out as pure nullval (reference
     mosaic.py:351-359) through the same path as every other tile."""
-    placeholders = tiles.select(
-        "*", F.explode(F.sequence(F.lit(1), F.lit(n_bands))).alias("band")
-    )
+    placeholders = tiles.selectExpr("*", f"explode(sequence(1, {n_bands})) AS band")
     return work.unionByName(placeholders, allowMissingColumns=True)
 
 
@@ -310,9 +301,7 @@ def _restrict_tiles(
     then keeps a bucketed scan's distribution and adds no Exchange."""
     if tile_row_range is not None:
         lo, hi = tile_row_range
-        df = df.where(
-            (F.col("tile_row") >= F.lit(int(lo))) & (F.col("tile_row") < F.lit(int(hi)))
-        )
+        df = df.where(f"tile_row >= {int(lo)} AND tile_row < {int(hi)}")
     if tile_keys is not None:
         keys = tile_keys.select("tile_row", "tile_col").distinct()
         df = df.join(F.broadcast(keys), on=["tile_row", "tile_col"], how="left_semi")
@@ -352,8 +341,8 @@ def _stitch_tail(
     return MosaicResult(
         grid=grid,
         levels=levels,
-        tiles=stitched.where(F.col("level") == 0),
-        overviews=stitched.where(F.col("level") > 0),
+        tiles=stitched.where("level = 0"),
+        overviews=stitched.where("level > 0"),
         stats=finalize_stats(stitched),
         assignments=assignments,
         stitched=stitched,
@@ -399,15 +388,15 @@ def do_mosaic(
 
     ensure_workers_can_import(spark)
     routable = config.relayout_table is not None and config.stitch_salt == 1
-    # ONE summary collect covers validation + grid derivation + the
-    # relayout fingerprint; only the alignment scan needs a second job
+    # ONE footprint probe covers validation + grid derivation + the
+    # relayout fingerprint
     row = (
         _summary_row(footprints, with_fingerprint=routable)
         if (config.check_projections or grid is None or routable)
         else None
     )
     if config.check_projections:
-        _check_projection_row(footprints, row)
+        _check_projection_row(row)
     if grid is not None:
         check_nullval(grid.nullval)
     else:

@@ -21,27 +21,27 @@ def finalize_stats(stitch_out: DataFrame) -> DataFrame:
     mosaic.py:389).
     """
     agg = (
-        stitch_out.where(F.col("level") == 0)
+        stitch_out.where("level = 0")
         .groupBy("band")
-        .agg(
-            F.sum("px_count").alias("count"),
-            F.sum("px_sum").alias("s"),
-            F.sum("px_ssq").alias("ssq"),
-            F.min("px_min").alias("minval"),
-            F.max("px_max").alias("maxval"),
-        )
+        .agg(*[F.expr(e) for e in (
+            "sum(px_count) AS count",
+            "sum(px_sum) AS s",
+            "sum(px_ssq) AS ssq",
+            "min(px_min) AS minval",
+            "max(px_max) AS maxval",
+        )])
     )
-    mean = F.col("s") / F.col("count")
-    variance = F.col("ssq") / F.col("count") - mean * mean
-    stddev = F.when(variance >= 0, F.sqrt(variance)).otherwise(F.lit(0.0))
-    has = F.col("count") > 0
-    return agg.select(
+    mean = "s / `count`"
+    variance = f"ssq / `count` - ({mean}) * ({mean})"
+    has = "`count` > 0"
+    return agg.selectExpr(
         "band",
-        F.when(has, F.col("minval")).alias("minval"),
-        F.when(has, F.col("maxval")).alias("maxval"),
-        F.when(has, mean).alias("meanval"),
-        F.when(has, stddev).alias("stddev"),
-        F.col("count").cast("long").alias("count"),
+        f"CASE WHEN {has} THEN minval END AS minval",
+        f"CASE WHEN {has} THEN maxval END AS maxval",
+        f"CASE WHEN {has} THEN {mean} END AS meanval",
+        f"CASE WHEN {has} THEN CASE WHEN {variance} >= 0 THEN sqrt({variance}) "
+        "ELSE 0.0D END END AS stddev",
+        "CAST(`count` AS BIGINT) AS count",
     )
 
 

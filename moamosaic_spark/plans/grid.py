@@ -48,23 +48,28 @@ class OutputGrid:
         return (self.x_min, self.x_res, 0.0, self.y_max, 0.0, -self.y_res)
 
 
-def extent_cols() -> list:
+def sql_double(x) -> str:
+    """``x`` as a Spark SQL double literal (a bare ``1.5`` parses as a
+    decimal): the same value ``F.lit(float(x))`` carries."""
+    return f"{float(x)!r}D"
+
+
+# the priority-first input's struct (ref mosaic.py:442-455)
+FIRST = "min_by(struct(projection, x_res, y_res, x0, y0, n_bands, nullval, dtype), priority)"
+
+
+def extent_cols(first: str = FIRST) -> list[str]:
     """The global extent aggregate (A1) plus the priority-first input's
-    struct ``first``, as aggregate columns — so a caller (do_mosaic's
-    one summary pass) can fold them into a wider aggregate."""
-    first = F.min_by(
-        F.struct(
-            "projection", "x_res", "y_res", "x0", "y0",
-            "n_bands", "nullval", "dtype",
-        ),
-        F.col("priority"),
-    )
+    struct ``first``, as SQL aggregate expressions — so a caller
+    (do_mosaic's one footprint probe) can fold them into a wider
+    aggregate. ``first`` replaces the struct's aggregate (the probe
+    reads it off a window column)."""
     return [
-        first.alias("first"),
-        F.min(F.col("x0")).alias("x_min"),
-        F.max(F.col("x0") + F.col("ncols") * F.col("x_res")).alias("x_max"),
-        F.min(F.col("y0") - F.col("nrows") * F.col("y_res")).alias("y_min"),
-        F.max(F.col("y0")).alias("y_max"),
+        f"{first} AS first",
+        "min(x0) AS x_min",
+        "max(x0 + ncols * x_res) AS x_max",
+        "min(y0 - nrows * y_res) AS y_min",
+        "max(y0) AS y_max",
     ]
 
 
@@ -103,7 +108,7 @@ def grid_from_row(row, nullval: float | None = None) -> OutputGrid:
 def make_output_grid(footprints: DataFrame, nullval: float | None = None) -> OutputGrid:
     """Global extent aggregate (A1). One tiny all-reduce over the footprint
     dim table."""
-    return grid_from_row(footprints.agg(*extent_cols()).collect()[0], nullval)
+    return grid_from_row(footprints.selectExpr(*extent_cols()).collect()[0], nullval)
 
 
 def n_blocks(n: int, blocksize: int) -> int:
@@ -186,23 +191,18 @@ def make_tile_relation(
     nb_r = n_blocks(grid.nrows, blocksize)
     nb_c = n_blocks(grid.ncols, blocksize)
     bs = blocksize
-    t = spark.range(nb_r * nb_c).select(
-        (F.col("id") / nb_c).cast("int").alias("tile_row"),
-        (F.col("id") % nb_c).cast("int").alias("tile_col"),
-    )
-    return t.select(
+    return spark.range(nb_r * nb_c).selectExpr(
+        f"CAST(id / {nb_c} AS INT) AS tile_row",
+        f"CAST(id % {nb_c} AS INT) AS tile_col",
+    ).selectExpr(
         "tile_row",
         "tile_col",
-        (F.col("tile_row") * bs).alias("top"),
-        (F.col("tile_col") * bs).alias("left"),
-        F.when(F.col("tile_row") < nb_r - 1, F.lit(bs))
-        .otherwise(F.lit(grid.nrows - (nb_r - 1) * bs))
-        .cast("int")
-        .alias("ysize"),
-        F.when(F.col("tile_col") < nb_c - 1, F.lit(bs))
-        .otherwise(F.lit(grid.ncols - (nb_c - 1) * bs))
-        .cast("int")
-        .alias("xsize"),
+        f"tile_row * {bs} AS top",
+        f"tile_col * {bs} AS `left`",
+        f"CAST(CASE WHEN tile_row < {nb_r - 1} THEN {bs} "
+        f"ELSE {grid.nrows - (nb_r - 1) * bs} END AS INT) AS ysize",
+        f"CAST(CASE WHEN tile_col < {nb_c - 1} THEN {bs} "
+        f"ELSE {grid.ncols - (nb_c - 1) * bs} END AS INT) AS xsize",
     )
 
 

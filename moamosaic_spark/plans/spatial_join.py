@@ -30,61 +30,56 @@ Output columns:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F
 
-from .grid import OutputGrid, morton_expr
+from .grid import OutputGrid, morton_expr, sql_double
 
 
-def _file_coords(grid: OutputGrid, fp_prefix: str = "f.") -> dict[str, Column]:
-    """Tile bounds in a footprint's pixel coords (structures.py:86-99).
+def _file_coords(grid: OutputGrid, fp_prefix: str = "f.") -> dict[str, str]:
+    """Tile bounds in a footprint's pixel coords (structures.py:86-99),
+    as SQL expressions.
 
     World coords of the tile's outer bounds under the output transform,
     pushed through the footprint's inverse affine. Grids are validated
     same-res/aligned (reproj.py:72-114), the transform has no rotation
-    terms, so the closed forms below are exact. ``F.bround`` = round
+    terms, so the closed forms below are exact. ``bround`` = round
     half-even, matching Python's ``int(round(...))`` banker's rounding.
     """
-    f = lambda c: F.col(fp_prefix + c)  # noqa: E731
-    x_left = F.lit(grid.x_min) + F.col("left") * F.lit(grid.x_res)
-    y_top = F.lit(grid.y_max) - F.col("top") * F.lit(grid.y_res)
-    x_right = F.lit(grid.x_min) + (F.col("left") + F.col("xsize")) * F.lit(grid.x_res)
-    y_bottom = F.lit(grid.y_max) - (F.col("top") + F.col("ysize")) * F.lit(grid.y_res)
-
-    file_left = F.bround((x_left - f("x0")) / f("x_res")).cast("int")
-    file_top = F.bround((f("y0") - y_top) / f("y_res")).cast("int")
-    file_right = F.bround((x_right - f("x0")) / f("x_res")).cast("int")
-    file_bottom = F.bround((f("y0") - y_bottom) / f("y_res")).cast("int")
+    f = fp_prefix
+    x_min, x_res = sql_double(grid.x_min), sql_double(grid.x_res)
+    y_max, y_res = sql_double(grid.y_max), sql_double(grid.y_res)
+    x_left = f"{x_min} + `left` * {x_res}"
+    y_top = f"{y_max} - top * {y_res}"
+    x_right = f"{x_min} + (`left` + xsize) * {x_res}"
+    y_bottom = f"{y_max} - (top + ysize) * {y_res}"
     return {
-        "file_left": file_left,
-        "file_top": file_top,
-        "file_right": file_right,
-        "file_bottom": file_bottom,
+        "file_left": f"CAST(bround(({x_left} - {f}x0) / {f}x_res) AS INT)",
+        "file_top": f"CAST(bround(({f}y0 - ({y_top})) / {f}y_res) AS INT)",
+        "file_right": f"CAST(bround(({x_right} - {f}x0) / {f}x_res) AS INT)",
+        "file_bottom": f"CAST(bround(({f}y0 - ({y_bottom})) / {f}y_res) AS INT)",
     }
 
 
 def _select_assignment(joined: DataFrame, grid: OutputGrid) -> DataFrame:
     c = _file_coords(grid)
-    intersects = (
-        (c["file_right"] > 0)
-        & (c["file_bottom"] > 0)
-        & (c["file_left"] < F.col("f.ncols"))
-        & (c["file_top"] < F.col("f.nrows"))
-    )
-    return joined.where(intersects).select(
+    return joined.where(
+        f"{c['file_right']} > 0 AND {c['file_bottom']} > 0 "
+        f"AND {c['file_left']} < f.ncols AND {c['file_top']} < f.nrows"
+    ).selectExpr(
         "tile_row",
         "tile_col",
         "top",
-        "left",
+        "`left`",
         "ysize",
         "xsize",
-        F.col("f.media_ref").alias("media_ref"),
-        F.col("f.priority").alias("priority"),
-        c["file_top"].alias("in_top"),
-        c["file_left"].alias("in_left"),
-        (c["file_bottom"] - c["file_top"]).alias("in_ysize"),
-        (c["file_right"] - c["file_left"]).alias("in_xsize"),
-        F.col("f.ncols").alias("src_ncols"),
-        F.col("f.nrows").alias("src_nrows"),
+        "f.media_ref AS media_ref",
+        "f.priority AS priority",
+        f"{c['file_top']} AS in_top",
+        f"{c['file_left']} AS in_left",
+        f"{c['file_bottom']} - {c['file_top']} AS in_ysize",
+        f"{c['file_right']} - {c['file_left']} AS in_xsize",
+        "f.ncols AS src_ncols",
+        "f.nrows AS src_nrows",
     )
 
 

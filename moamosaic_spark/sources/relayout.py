@@ -28,7 +28,7 @@ from __future__ import annotations
 
 import json
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 from ..mosaic import (
     MosaicConfig, MosaicResult, _assign, _contributor_chunks, _restrict_tiles, _stitch_tail,
@@ -41,22 +41,20 @@ from ..plans.grid import (
 from ..plans.spatial_join import assign_inputs
 
 
-def fingerprint_agg_cols() -> list:
-    """The two aggregate columns of the catalog fingerprint, exposed so
-    do_mosaic can fold them into its single footprint-summary pass
-    (one collect for validation + extent + fingerprint instead of
-    three — guide §5: the driver should do almost no data work, and
-    every collect is a full driver round trip)."""
+def fingerprint_agg_cols() -> list[str]:
+    """The two aggregate columns of the catalog fingerprint, as SQL
+    expressions, exposed so do_mosaic can fold them into its single
+    footprint probe (one collect for validation + extent + fingerprint
+    instead of three — guide §5: the driver should do almost no data
+    work, and every collect is a full driver round trip)."""
     cols = [
         "media_ref", "priority", "x0", "y0", "x_res", "y_res",
         "ncols", "nrows", "n_bands", "dtype", "nullval", "projection",
     ]
-    h = F.md5(F.concat_ws("|", *[F.col(c).cast("string") for c in cols]))
+    h = "md5(concat_ws('|', {}))".format(", ".join(f"CAST({c} AS STRING)" for c in cols))
     return [
-        F.count("*").alias("_fp_n"),
-        F.sum(
-            F.conv(F.substring(h, 1, 14), 16, 10).cast("decimal(38,0)")
-        ).alias("_fp_s"),
+        "count(*) AS _fp_n",
+        f"sum(CAST(conv(substring({h}, 1, 14), 16, 10) AS DECIMAL(38,0))) AS _fp_s",
     ]
 
 
@@ -69,7 +67,7 @@ def footprints_fingerprint(footprints: DataFrame, row=None) -> str:
     prove a relayout table holds EXACTLY the corpus it was asked to
     mosaic before trusting the stored layout."""
     if row is None:
-        row = footprints.agg(*fingerprint_agg_cols()).collect()[0]
+        row = footprints.selectExpr(*fingerprint_agg_cols()).collect()[0]
     return f"{row['_fp_n']}:{row['_fp_s']}"
 
 
@@ -376,24 +374,24 @@ def mosaic_via_relayout(
         if fingerprint is not None
         else footprints_fingerprint(footprints)
     )
-    usable = False
     if _table_accessible(spark, table):
-        m = _load_meta(spark, table)
-        usable = (
+        m, src = _load_meta(spark, table), spark.table(table)
+        if (
             m.get("fingerprint") == fp
             and int(m["blocksize"]) == config.blocksize
             and int(m.get("src_blocksize", 256)) == config.src_blocksize
             and int(m["min_overview_size"]) == config.min_overview_size
             and (grid is None or _grid_from_meta(m) == grid)
-            and _current(spark.table(table), m)
-        )
-    if not usable:
-        if grid is not None:
-            return None
-        relayout_to_table(
-            spark, footprints, blocks, table, config,
-            grid=grid_hint, fingerprint=fp,
-        )
+            and _current(src, m)
+        ):
+            # the meta read above is the route's one read of it
+            return _stitch_table(src, m, config, tile_row_range, tile_keys)
+    if grid is not None:
+        return None
+    relayout_to_table(
+        spark, footprints, blocks, table, config,
+        grid=grid_hint, fingerprint=fp,
+    )
     return stitch_from_relayout(
         spark, table, config, tile_row_range=tile_row_range, tile_keys=tile_keys
     )
@@ -435,8 +433,19 @@ def stitch_from_relayout(
             f"relayout table {table!r} was built by an older version (array<int> "
             "pixels or no placeholder rows); rebuild it with relayout_to_table"
         )
+    return _stitch_table(src, m, config, tile_row_range, tile_keys)
+
+
+def _stitch_table(
+    src: DataFrame,
+    m: dict,
+    config: MosaicConfig,
+    tile_row_range: tuple[int, int] | None,
+    tile_keys: DataFrame | None,
+) -> MosaicResult:
+    """stitch_from_relayout's plan over the table ``src`` and its
+    already-read meta ``m``: no action."""
     grid = _grid_from_meta(m)
-    blocksize = int(m["blocksize"])
     levels = (
         overview_levels(grid.nrows, grid.ncols, int(m["min_overview_size"]))
         if config.with_overviews
@@ -445,8 +454,8 @@ def stitch_from_relayout(
     # the bucketed scan already distributes by (band, tile): no Exchange
     work = _restrict_tiles(src, tile_row_range, tile_keys)
     assignments = (
-        work.where(F.col("media_ref").isNotNull())
+        work.where("media_ref IS NOT NULL")
         .select("tile_row", "tile_col", "media_ref", "priority")
         .distinct()
     )
-    return _stitch_tail(work, assignments, grid, levels, config, blocksize)
+    return _stitch_tail(work, assignments, grid, levels, config, int(m["blocksize"]))

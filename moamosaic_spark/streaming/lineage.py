@@ -29,8 +29,8 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..mosaic import MosaicConfig, do_mosaic
-from ..plans.grid import n_blocks
+from ..mosaic import MosaicConfig, _check_projection_row, _summary_row, do_mosaic
+from ..plans.grid import grid_from_row, n_blocks
 
 
 def _lineage_path(out_path: str) -> str:
@@ -106,8 +106,6 @@ def resumable_mosaic(
 
     Returns {"run_id", "batches_run", "batches_skipped", "grid"}.
     """
-    from ..plans.grid import make_output_grid
-
     config = config or MosaicConfig()
     run_id = run_id or uuid.uuid4().hex[:12]
 
@@ -118,7 +116,12 @@ def resumable_mosaic(
         grid = _grid_from_meta(m)
         blocksize = int(m["blocksize"])
     else:
-        grid = make_output_grid(footprints, config.nullval)
+        # one footprint probe: the grid, and the projection agreement
+        # (batch-invariant, so the per-batch pruned plans skip it)
+        row = _summary_row(footprints)
+        if config.check_projections:
+            _check_projection_row(row)
+        grid = grid_from_row(row, config.nullval)
         blocksize = config.blocksize
     nb_r = n_blocks(grid.nrows, blocksize)
     n_batches = min(n_batches, nb_r)
@@ -146,12 +149,6 @@ def resumable_mosaic(
 
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
 
-    # Projection agreement is batch-invariant: validate once up front,
-    # then skip it inside the per-batch pruned plans.
-    if relayout_table is None and config.check_projections:
-        from ..mosaic import validate_projections
-
-        validate_projections(footprints)
     batch_config = dataclasses.replace(config, check_projections=False)
 
     from pyspark.sql import Observation

@@ -1,3 +1,6 @@
+from contextlib import contextmanager
+
+import py4j.clientserver
 import pytest
 from pyspark.sql import SparkSession
 
@@ -32,3 +35,68 @@ def to_blocks(spark, pdf):
 def to_documents(spark, pdf):
     recs = pdf.to_dict("records")
     return spark.createDataFrame(recs, schema=DOCUMENTS_SCHEMA)
+
+
+def fresh_table(spark, table) -> str:
+    """Drop ``table`` and its meta, files included, and return its name:
+    the warehouse is shared across runs, and ensure_relayout_table
+    re-attaches surviving files instead of creating a table."""
+    from moamosaic_spark.sources.relayout import _drop_stale_location
+
+    for t in (table, f"{table}_meta"):
+        spark.sql(f"DROP TABLE IF EXISTS {t}")
+        _drop_stale_location(spark, t)
+    return table
+
+
+@pytest.fixture
+def py4j_calls():
+    """``with py4j_calls() as n:`` counts the py4j commands the block
+    sends into ``n[0]``. Releases of freed proxies ("m" commands) are
+    not counted: Python's garbage collector sends them whenever it runs,
+    not where a plan is built."""
+    conn = py4j.clientserver.ClientServerConnection
+    send = conn.send_command
+
+    @contextmanager
+    def counting():
+        n = [0]
+
+        def counted(self, command, *args, **kwargs):
+            if not command.startswith("m\n"):
+                n[0] += 1
+            return send(self, command, *args, **kwargs)
+
+        conn.send_command = counted
+        try:
+            yield n
+        finally:
+            conn.send_command = send
+
+    return counting
+
+
+@pytest.fixture
+def sql_executions(spark):
+    """``with sql_executions() as n:`` puts the number of SQL executions
+    (driver actions) the block started into ``n[0]``: the growth of the
+    highest execution id in the status store, read once the listener
+    bus has delivered every event. (The store's ``executionsCount()``
+    stops growing at ``spark.sql.ui.retainedExecutions``, which a long
+    test session passes.)"""
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+
+    def last_id():
+        bus.waitUntilEmpty()
+        execs = store.executionsList()
+        return execs.last().executionId() if execs.nonEmpty() else -1
+
+    @contextmanager
+    def counting():
+        n = [0]
+        before = last_id()
+        yield n
+        n[0] = last_id() - before
+
+    return counting

@@ -12,7 +12,7 @@ from moamosaic_spark.streaming.incremental import (
     incremental_mosaic_stream,
     process_batch,
 )
-from tests.conftest import to_blocks, to_documents, to_footprints
+from tests.conftest import fresh_table, to_blocks, to_documents, to_footprints
 
 
 def make_corpus(spark):
@@ -99,13 +99,11 @@ def test_incremental_over_relayout_table(spark, tmp_path):
     (round-2 verdict item 5): identical tiles to the direct path, and
     the touched-tile re-stitch plan has NO Exchange below the kernel
     (broadcast semi-join preserves the bucketed distribution)."""
-    from moamosaic_spark.sources.relayout import _drop_stale_location, stitch_from_relayout
+    from moamosaic_spark.sources.relayout import stitch_from_relayout
 
     # start from no table: the warehouse outlives the session, and a
     # surviving table would be re-attached with its old rows and schema
-    for t in ("work_inc", "work_inc_meta"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        _drop_stale_location(spark, t)
+    fresh_table(spark, "work_inc")
     rasters, fp_meta, blocks, docs_pdf, want, cfg = make_corpus(spark)
     out = str(tmp_path / "inc_rl")
 

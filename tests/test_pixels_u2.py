@@ -17,6 +17,7 @@ from moamosaic_spark.pixels import (
 )
 from moamosaic_spark.schema import BLOCKS_SCHEMA, FOOTPRINTS_SCHEMA
 from moamosaic_spark.sources import synth
+from tests.conftest import fresh_table
 
 
 def _as_array_input(df):
@@ -176,6 +177,9 @@ def test_u2_streaming_incremental_over_relayout(spark, tmp_path):
     from moamosaic_spark.schema import DOCUMENTS_SCHEMA
     from moamosaic_spark.streaming.incremental import incremental_mosaic_stream
 
+    # start from no table: a table an earlier run left in the shared
+    # warehouse would be re-attached instead of built
+    fresh_table(spark, "work_u2_inc")
     rasters = synth.grid3x3(150, 150)
     docs, fp, blocks = synth.corpus_to_spark(spark, rasters)
     want = synth.oracle(rasters, blocksize=64, min_overview_size=9999)

@@ -12,9 +12,9 @@ from moamosaic_spark.pixels import decode
 from moamosaic_spark.plans.grid import OutputGrid, stitch_partitions
 from moamosaic_spark.sources import synth
 from moamosaic_spark.sources.relayout import (
-    _drop_stale_location, ensure_relayout_table, relayout_to_table, stitch_from_relayout,
+    ensure_relayout_table, relayout_to_table, stitch_from_relayout,
 )
-from tests.conftest import to_blocks, to_footprints
+from tests.conftest import fresh_table, to_blocks, to_footprints
 
 ADVISORY = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
 STITCH_EXCHANGE = re.compile(
@@ -43,16 +43,6 @@ def _plan(spark, df) -> str:
     return df._jdf.queryExecution().explainString(
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("simple")
     )
-
-
-def _fresh(spark, table) -> str:
-    """Drop ``table`` and its meta, files included: the warehouse is
-    shared across runs, and ensure_relayout_table re-attaches surviving
-    files instead of creating a table."""
-    for t in (table, f"{table}_meta"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        _drop_stale_location(spark, t)
-    return table
 
 
 def _num_buckets(spark, table) -> int:
@@ -125,10 +115,10 @@ def test_relayout_buckets_default_to_stitch_partitions(spark):
 
     # the incremental path's empty table takes the same default; explicit
     # counts (argument, then config) are still honoured
-    ensure_relayout_table(spark, _fresh(spark, "inc_sized"), grid, blocks, cfg)
+    ensure_relayout_table(spark, fresh_table(spark, "inc_sized"), grid, blocks, cfg)
     assert _num_buckets(spark, "inc_sized") == n
-    ensure_relayout_table(spark, _fresh(spark, "inc_arg"), grid, blocks, cfg, n_buckets=3)
+    ensure_relayout_table(spark, fresh_table(spark, "inc_arg"), grid, blocks, cfg, n_buckets=3)
     assert _num_buckets(spark, "inc_arg") == 3
     cfg5 = MosaicConfig(blocksize=64, src_blocksize=256, relayout_buckets=5)
-    ensure_relayout_table(spark, _fresh(spark, "inc_cfg"), grid, blocks, cfg5)
+    ensure_relayout_table(spark, fresh_table(spark, "inc_cfg"), grid, blocks, cfg5)
     assert _num_buckets(spark, "inc_cfg") == 5

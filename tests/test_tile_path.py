@@ -1,23 +1,28 @@
 """One tile path: every output (band, tile) is a group of the one stitch
 kernel — gap tiles included — so the stitched plan holds one
 FlatMapGroupsInArrow and no gap anti-join or union above it, and a
-warm, lazy do_mosaic stays inside a py4j-call budget."""
+warm, lazy do_mosaic stays inside a py4j-call budget and runs one
+driver action (two on the relayout route)."""
 
 import re
 
-import py4j.clientserver
 import pytest
 
 from moamosaic_spark.mosaic import MosaicConfig, do_mosaic
 from moamosaic_spark.sources import synth
-from tests.conftest import to_blocks, to_footprints
+from tests.conftest import fresh_table, to_blocks, to_footprints
 
 # py4j calls of one warm, lazy do_mosaic on grid3x3(900, 900),
 # blocksize 256, min_overview_size 128 (3 pyramid levels), releases of
-# freed proxies not counted. It was 6,266 while tiles no input covers
-# were synthesized column by column per pyramid level and joined in by
-# an anti-join; lower it when the plan gets cheaper to build.
-PY4J_BUDGET = 3_810
+# freed proxies not counted. With every plan node built as a Column
+# (one py4j round trip per node) they were 3,810 on the direct route and
+# 1,498 on the relayout route; the plans are SQL strings now, parsed
+# once per relation by the JVM. Lower them when the plan gets cheaper
+# to build.
+PY4J_BUDGET = {"direct": 762, "relayout": 300}
+# driver actions of the same call: the one footprint probe, plus the
+# one read of the relayout table's meta on that route
+SQL_EXECUTIONS = {"direct": 1, "relayout": 2}
 
 
 @pytest.fixture(scope="module")
@@ -30,27 +35,29 @@ def grid3x3(spark):
     fp.unpersist(), blocks.unpersist()
 
 
-def test_warm_do_mosaic_py4j_budget(spark, grid3x3, monkeypatch):
-    fp, blocks = grid3x3
-    cfg = MosaicConfig(blocksize=256, min_overview_size=128)
-    do_mosaic(spark, fp, blocks, cfg)  # warm
-    calls = [0]
-    send = py4j.clientserver.ClientServerConnection.send_command
-
-    def counted(self, command, *args, **kwargs):
-        # a release of a freed py4j proxy ("m" command) is sent whenever
-        # Python's garbage collector runs, not where the plan is built
-        if not command.startswith("m\n"):
-            calls[0] += 1
-        return send(self, command, *args, **kwargs)
-
-    monkeypatch.setattr(py4j.clientserver.ClientServerConnection, "send_command", counted)
-    try:
+def _warm_counts(spark, fp, blocks, route, py4j_calls, sql_executions):
+    """py4j calls and SQL executions of one warm, lazy do_mosaic."""
+    table = fresh_table(spark, "work_py4j") if route == "relayout" else None
+    cfg = MosaicConfig(blocksize=256, min_overview_size=128, relayout_table=table)
+    do_mosaic(spark, fp, blocks, cfg)  # warm (and builds the relayout table)
+    with sql_executions() as actions, py4j_calls() as calls:
         res = do_mosaic(spark, fp, blocks, cfg)
-    finally:
-        monkeypatch.undo()
     assert len(res.levels) == 3
-    assert 0 < calls[0] <= PY4J_BUDGET, calls[0]
+    if table:
+        fresh_table(spark, table)
+    return calls[0], actions[0]
+
+
+def test_warm_do_mosaic_py4j_budget(spark, grid3x3, py4j_calls, sql_executions):
+    calls, actions = _warm_counts(spark, *grid3x3, "direct", py4j_calls, sql_executions)
+    assert 0 < calls <= PY4J_BUDGET["direct"], calls
+    assert actions == SQL_EXECUTIONS["direct"], actions
+
+
+def test_warm_relayout_do_mosaic_py4j_budget(spark, grid3x3, py4j_calls, sql_executions):
+    calls, actions = _warm_counts(spark, *grid3x3, "relayout", py4j_calls, sql_executions)
+    assert 0 < calls <= PY4J_BUDGET["relayout"], calls
+    assert actions == SQL_EXECUTIONS["relayout"], actions
 
 
 @pytest.mark.parametrize("route", ["direct", "relayout"])
@@ -73,8 +80,7 @@ def test_stitched_plan_one_kernel_no_gap_path(spark, route):
     assert "Union" not in above_kernel, plan
     if route == "relayout":
         assert "Union" not in plan and "Exchange" not in plan, plan
-        for t in ("work_plan", "work_plan_meta"):
-            spark.sql(f"DROP TABLE IF EXISTS {t}")
+        fresh_table(spark, "work_plan")
     else:
         stitch_exchange = re.findall(
             r"Exchange hashpartitioning\(band#\d+, tile_row#\d+, tile_col#\d+", plan
