@@ -50,8 +50,6 @@ def get_parser() -> argparse.ArgumentParser:
                    default="last")
     p.add_argument("--blend-feather", type=int, default=64,
                    help="feather width (px) for --merge-policy blend")
-    p.add_argument("--stitch-salt", type=int, default=1,
-                   help=">1: two-stage salted merge for hot tiles")
     p.add_argument("--batches", type=int, default=1,
                    help=">1 enables lineage-checkpointed batched execution")
     p.add_argument("--relayout-table", default=None,
@@ -164,7 +162,6 @@ def main(argv: list[str] | None = None) -> None:
         salt=args.salt,
         merge_policy=args.merge_policy,
         blend_feather=args.blend_feather,
-        stitch_salt=args.stitch_salt,
         with_overviews=not args.no_overviews,
         relayout_table=args.relayout_table,
     )

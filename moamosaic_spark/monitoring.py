@@ -119,6 +119,19 @@ def interval_union_seconds(
     return closes.agg(*agg_cols)
 
 
+@contextmanager
+def named_action(spark: SparkSession, description: str):
+    """Give the block's driver actions (jobs, SQL executions) this
+    ``description``, then restore the caller's: a traced span sets its own."""
+    sc = spark.sparkContext
+    caller = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(description)
+    try:
+        yield
+    finally:
+        sc.setLocalProperty("spark.job.description", caller)
+
+
 def observe_gauges(df: DataFrame, name: str = "stitch_input"):
     """A5 analog of the reference's MinMax cache/queue gauges
     (monitoring.py:33-49): those measured reader->writer backpressure

@@ -35,10 +35,11 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from .plans import grid as gridmod
 from .plans.grid import OutputGrid, make_tile_relation, overview_levels
 from .plans.spatial_join import assign_inputs
-from .operators.stitch import make_stitch_fn_arrow
+from .operators.stitch import make_partial_fn_arrow, make_stitch_fn_arrow
 from .operators.stats import finalize_stats
+from .monitoring import named_action
 from .pixels import PIXEL_BYTES, PIXEL_MAX, ingest
-from .schema import STITCH_SCHEMA
+from .schema import PARTIAL_SCHEMA, STITCH_SCHEMA
 
 
 class MoaProjectionError(Exception):
@@ -63,10 +64,6 @@ class MosaicConfig:
     # contributor's source edge — nodata-aware, seams fade)
     merge_policy: str = "last"
     blend_feather: int = 64            # feather width (px) for 'blend'
-    # >1: two-stage salted merge for hot tiles ('last' and 'blend'):
-    # stage 1 folds this many contiguous priority buckets per tile into
-    # partials, stage 2 (the normal stitch kernel) composes them
-    stitch_salt: int = 1
     # incremental sink partition count: touched-tile rewrites replace a
     # whole `part=` partition, so each partition holds ~1/sink_parts of
     # the mosaic. Size it so one partition is a bounded rewrite at the
@@ -77,9 +74,9 @@ class MosaicConfig:
     # EXACTLY this corpus (footprint fingerprint + geometry match, see
     # mosaic_via_relayout) — the repeated-run path with zero stitch
     # Exchange. Absent/stale table: it is (re)built first, which makes
-    # that do_mosaic call eager (one write action). stitch_salt > 1 or
-    # an explicit grid that mismatches the table fall back to the
-    # direct path silently — results are identical either way.
+    # that do_mosaic call eager (one write action). An explicit grid
+    # that mismatches the table falls back to the direct path silently
+    # — results are identical either way. Hot tiles stay unsplit here.
     relayout_table: str | None = None
     # bucket count of a table built by that routing; None -> one per
     # core, sized like the direct stitch (plans.grid.stitch_partitions)
@@ -111,7 +108,8 @@ def _summary_row(footprints: DataFrame, with_fingerprint: bool = False):
     fingerprint (guide §5: collects are full driver round trips; batch
     them). The alignment check needs the priority-first input's origin
     on every row, so that struct is a window over the (small) dim
-    table, and the aggregate reads ``first`` off the same column."""
+    table, and the aggregate reads ``first`` off the same column.
+    ``n_inputs`` gates the hot-tile split (do_mosaic)."""
     def misaligned(c: str, res: str) -> str:
         # isAligned (reproj.py:117-127): |round(d/res) - d/res| >= 1e-4
         factor = f"(abs({c} - _first.{c}) / _first.{res})"
@@ -122,16 +120,18 @@ def _summary_row(footprints: DataFrame, with_fingerprint: bool = False):
         "min(x_res) != max(x_res) OR min(y_res) != max(y_res) AS bad_res",
         f"bool_or({misaligned('x0', 'x_res')} OR {misaligned('y0', 'y_res')}) AS bad_align",
         *gridmod.extent_cols(first="any_value(_first)"),
+        "count(*) AS n_inputs",
     ]
     if with_fingerprint:
         from .sources.relayout import fingerprint_agg_cols
 
         aggs.extend(fingerprint_agg_cols())
-    return (
-        footprints.selectExpr("*", f"{gridmod.FIRST} OVER () AS _first")
-        .selectExpr(*aggs)
-        .collect()[0]
-    )
+    with named_action(footprints.sparkSession, "moamosaic: footprint probe"):
+        return (
+            footprints.selectExpr("*", f"{gridmod.FIRST} OVER () AS _first")
+            .selectExpr(*aggs)
+            .collect()[0]
+        )
 
 
 def _check_projection_row(row) -> None:
@@ -322,6 +322,58 @@ def _assign(
     return assign_inputs(tiles, footprints, grid, strategy=config.strategy, **kw)
 
 
+def _work_relation(
+    tiles: DataFrame,
+    footprints: DataFrame,
+    blocks: DataFrame,
+    grid: OutputGrid,
+    config: MosaicConfig,
+    split_budget: int | None = None,
+) -> tuple[DataFrame, DataFrame]:
+    """(assignments, work) of every route: tiles -> spatial join
+    (_assign) -> contributor chunks. With a ``split_budget`` (bytes), one
+    named action looks for hot tiles (_hot_runs); if there is one, stage
+    1 of the two-stage merge the reference cannot split folds each
+    (band, tile, run) into a partial row (make_partial_fn_arrow). The one
+    stitch kernel composes those with the cold rows, which carry null
+    partial canvases (a union on PARTIAL_SCHEMA)."""
+    assignments = runs = _assign(tiles, footprints, grid, config)
+    if split_budget is not None:
+        with named_action(tiles.sparkSession, "moamosaic: hot-tile probe"):
+            runs = _hot_runs(assignments, split_budget)
+            if runs.where("_run IS NOT NULL").isEmpty():
+                runs = assignments
+    work = _contributor_chunks(runs, blocks, config.src_blocksize)
+    if runs is assignments:
+        return assignments, work
+    hot = work.where("_run IS NOT NULL").groupBy("band", "tile_row", "tile_col", "_run")
+    cold = work.where("_run IS NULL").selectExpr(*(
+        f"CAST(NULL AS array<bigint>) AS {c}" if c in ("wsum", "wvsum") else f"`{c}`"
+        for c in PARTIAL_SCHEMA.fieldNames()
+    ))
+    return assignments, hot.applyInArrow(
+        make_partial_fn_arrow(grid, config.merge_policy, config.blend_feather), PARTIAL_SCHEMA
+    ).unionByName(cold)
+
+
+def _hot_runs(assignments: DataFrame, budget: int) -> DataFrame:
+    """``assignments`` plus ``_run``, null on cold tiles. A tile is hot
+    when its contributors' clamped read windows exceed ``budget`` bytes
+    in sum; its contributors then fall into contiguous priority runs of
+    ``budget // largest window`` (at most the budget's bytes)."""
+    tile = "OVER (PARTITION BY tile_row, tile_col"
+    return assignments.selectExpr(
+        "*",
+        "CAST(least(in_top + in_ysize, src_nrows) - greatest(in_top, 0) AS BIGINT)"
+        f" * (least(in_left + in_xsize, src_ncols) - greatest(in_left, 0)) * {PIXEL_BYTES} AS _b",
+    ).selectExpr(
+        "*",
+        f"CASE WHEN sum(_b) {tile}) > {budget} THEN CAST((row_number() {tile} "
+        f"ORDER BY priority, media_ref) - 1) DIV greatest(1, {budget} DIV max(_b) {tile})) "
+        "AS INT) END AS _run",
+    ).drop("_b")
+
+
 def _stitch_tail(
     work: DataFrame,
     assignments: DataFrame,
@@ -387,7 +439,7 @@ def do_mosaic(
     from .session import ensure_workers_can_import
 
     ensure_workers_can_import(spark)
-    routable = config.relayout_table is not None and config.stitch_salt == 1
+    routable = config.relayout_table is not None
     # ONE footprint probe covers validation + grid derivation + the
     # relayout fingerprint
     row = (
@@ -434,70 +486,21 @@ def do_mosaic(
     tiles = _restrict_tiles(
         make_tile_relation(spark, grid, config.blocksize), tile_row_range, tile_keys
     )
-    assignments = _assign(tiles, footprints, grid, config)
-    work = _contributor_chunks(assignments, blocks, config.src_blocksize)
-
-    if config.stitch_salt > 1:
-        # Two-stage salted merge for hot tiles (many contributors): the
-        # writer-serialization analog the reference cannot split. Stage
-        # 1 partial-merges CONTIGUOUS priority buckets per tile into one
-        # partial row each (operators/stitch.py:make_partial_fn_arrow);
-        # stage 2 is the normal stitch kernel over those partials.
-        if config.merge_policy == "nearest":
-            # 'nearest' carries per-pixel arg-min state a partial cannot
-            # decompose
-            raise ValueError("stitch_salt requires merge_policy 'last' or 'blend'")
-        from pyspark.sql import Window
-
-        from .operators.stitch import make_partial_fn_arrow
-        from .schema import PARTIAL_SCHEMA
-
-        # Bucket by ntile over the priority ORDER, not raw priority
-        # values: sparse priorities (gaps, timestamps) would otherwise
-        # degenerate into one bucket per contributor. ntile keeps
-        # buckets contiguous in priority order (the exactness condition)
-        # and evenly sized. Window over the footprints dim table only
-        # (tiny); broadcast-joined onto the work relation.
-        # NOTE: the window below is one eager-free narrow plan, but
-        # do_mosaic stays lazy — no action is triggered here.
-        buckets = footprints.select(
-            "priority",
-            (F.ntile(config.stitch_salt).over(Window.orderBy("priority")) - 1).alias(
-                "_ssalt"
-            ),
-        )
-        # HOT/COLD split: stage 1 only pays off when a tile has many
-        # more contributors than buckets — a 2-contributor tile routed
-        # through it does a pointless extra kernel pass. Contributor
-        # counts come from the (small) assignments relation; tiles with
-        # at least 2 * stitch_salt contributors take the two-stage
-        # path, cold rows go straight to the final stitch with null
-        # partial canvases (the union is aligned on PARTIAL_SCHEMA).
-        threshold = max(2, 2 * config.stitch_salt)
-        counts = assignments.groupBy("tile_row", "tile_col").agg(
-            F.count("*").alias("_nc")
-        )
-        work_c = work.join(counts, on=["tile_row", "tile_col"], how="inner")
-        work_hot = work_c.where(F.col("_nc") >= threshold).drop("_nc")
-        work_cold = work_c.where(F.col("_nc") < threshold).drop("_nc")
-        merged_hot = (
-            work_hot.join(F.broadcast(buckets), on="priority", how="inner")
-            .groupBy("band", "tile_row", "tile_col", "_ssalt")
-            .applyInArrow(
-                make_partial_fn_arrow(grid, config.merge_policy, config.blend_feather),
-                PARTIAL_SCHEMA,
-            )
-        )
-        cold = work_cold.withColumns(
-            {c: F.lit(None).cast("array<bigint>") for c in ("wsum", "wvsum")}
-        )
-        work = merged_hot.unionByName(cold.select(*PARTIAL_SCHEMA.fieldNames()))
-
+    # the hot-tile gate: no tile can exceed the byte budget when every
+    # input's window in the largest tile (< (blocksize * 5/4)² px) fits.
+    # 'nearest' is never split: a partial cannot carry its arg-min state.
+    budget = gridmod.advisory_bytes(spark)
+    bs = config.blocksize
+    closed = config.merge_policy == "nearest" or (
+        row is not None and row["n_inputs"] * (bs + bs // 4) ** 2 * PIXEL_BYTES <= budget
+    )
+    assignments, work = _work_relation(
+        tiles, footprints, blocks, grid, config, split_budget=None if closed else budget
+    )
     # the stitch's ONE Exchange, sized to the cluster: a task per core
     # folds many groups, so the per-task Python set-up is paid
     # ~defaultParallelism times instead of once per shuffle partition.
-    # The placeholders join after the salted block: they never enter
-    # stage 1.
+    # The placeholders join after the split: they never enter stage 1.
     n_parts = gridmod.stitch_partitions(spark, grid, config.blocksize, tile_row_range)
     work = _with_placeholders(work, tiles, grid.n_bands)
     return _stitch_tail(

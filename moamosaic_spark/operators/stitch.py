@@ -26,11 +26,11 @@ Reference semantics replicated exactly:
 All pixel math is numpy over Arrow-delivered batches; the only Python
 loop is per source *chunk* (a ~64K-pixel array), never per pixel/row.
 
-The salted stitch (hot tiles, ``stitch_salt > 1``) has one kernel per
-stage, shared by the 'last' and 'blend' merge policies:
-``make_partial_fn_arrow`` folds a priority bucket into one
-PARTIAL_SCHEMA row, and ``make_stitch_fn_arrow`` — the same kernel as
-the unsalted stitch — composes the partials. One fold implementation
+The split stitch (hot tiles: contributors' bytes over the stitch byte
+budget, mosaic._hot_runs) has one kernel per stage, shared by the
+'last' and 'blend' merge policies: ``make_partial_fn_arrow`` folds a
+priority run into one PARTIAL_SCHEMA row, and ``make_stitch_fn_arrow``
+— the same kernel as the unsplit stitch — composes the partials. One fold implementation
 (`_fold_arrow_group`) serves all of them.
 """
 
@@ -177,7 +177,7 @@ def _fold_arrow_group(cols, offsets, values, rows, canvas, nullval, policy, best
     """The ordered merge over the payload ``rows`` of one Arrow group:
     for each contiguous priority run (one contributor), clamp + pad +
     paste its chunks into a window, then fold the window into the
-    canvas. Shared by the full stitch and the salted stage-1 merge."""
+    canvas. Shared by the full stitch and the split stitch's stage-1 merge."""
     order = rows[np.argsort(cols["priority"][rows], kind="stable")]
     n = len(order)
     i = 0
@@ -239,12 +239,12 @@ def make_stitch_fn_arrow(
     no input covers: it emits the null canvas, ``px_count`` 0 and its
     pyramid fragments.
 
-    It is also stage 2 of the salted stitch. A group whose input has a
+    It is also stage 2 of the split stitch. A group whose input has a
     ``wsum`` column (PARTIAL_SCHEMA) folds its rows with non-null
     ``pixels`` as contributors — raw cold rows and 'last' partials —
     and adds the canvases of its rows with non-null ``wsum`` ('blend'
     partials) into the blend state before finalize. Finalize is the same
-    exact integer half-up division either way, so salted == unsalted
+    exact integer half-up division either way, so split == unsplit
     bit-for-bit."""
     if not binary:
         raise ValueError("binary must be True: packed uint16 is the only pixel layout")
@@ -295,10 +295,10 @@ def _add_blend_partials(best, parts: pa.Table) -> None:
 
 
 def make_partial_fn_arrow(grid: OutputGrid, policy: str = "last", feather: int = 64):
-    """Stage-1 kernel of the SALTED stitch, for groupBy(band, tile_row,
-    tile_col, salt): fold a contiguous-priority bucket of a hot tile's
+    """Stage-1 kernel of the SPLIT stitch, for groupBy(band, tile_row,
+    tile_col, run): fold a contiguous-priority run of a hot tile's
     contributors, then emit ONE PARTIAL_SCHEMA row covering the bounding
-    box of what the bucket wrote (not the whole tile — partially covered
+    box of what the run wrote (not the whole tile — partially covered
     tiles would otherwise inflate the stage-2 shuffle) — no row when it
     wrote nothing: the tile's placeholder keeps its stage-2 group.
 
@@ -306,27 +306,27 @@ def make_partial_fn_arrow(grid: OutputGrid, policy: str = "last", feather: int =
 
     * 'last': the per-pixel fold op(a,b) = (b if b != nullval else a) is
       associative, so partial canvases built over contiguous priority
-      ranges and composed in bucket order (priority = bucket id) equal
-      the unsalted fold exactly. The box is the written pixels
+      ranges and composed in run order (priority = run id) equal
+      the unsplit fold exactly. The box is the written pixels
       (``canvas != nullval``) and rides in ``pixels``.
     * 'blend': a per-pixel SUM of (weight, weight*value) over non-null
-      contributors — commutative and associative — so each bucket emits
+      contributors — commutative and associative — so each run emits
       the box of its integer (wsum, wvsum) canvases (``wsum > 0``) and
       stage 2 adds them in any order; ``pixels`` is null.
 
     'nearest' carries per-pixel arg-min state a partial cannot
-    decompose; do_mosaic rejects it before planning."""
+    decompose; do_mosaic never splits its tiles."""
     nullval = int(grid.nullval)
 
     def partial(key: tuple, tbl: pa.Table) -> pa.Table:
-        band, tile_row, tile_col, salt = _key_ints(key)
+        band, tile_row, tile_col, run = _key_ints(key)
         cols, offsets, values, rows = _extract_arrow_group(tbl)
         top, left = int(cols["top"][0]), int(cols["left"][0])
         ysize, xsize = int(cols["ysize"][0]), int(cols["xsize"][0])
         canvas = np.full((ysize, xsize), nullval, dtype=PIXEL_DTYPE)
         best = _policy_state(policy, ysize, xsize, feather)
         _fold_arrow_group(cols, offsets, values, rows, canvas, nullval, policy, best,
-                          (band, tile_row, tile_col, salt))
+                          (band, tile_row, tile_col, run))
         # bounding box of written pixels
         written = canvas != nullval if best is None else best[0] > 0
         nn_rows = np.flatnonzero(written.any(axis=1))
@@ -339,7 +339,7 @@ def make_partial_fn_arrow(grid: OutputGrid, policy: str = "last", feather: int =
         row = {
             "tile_row": tile_row, "tile_col": tile_col, "band": band,
             "top": top, "left": left, "ysize": ysize, "xsize": xsize,
-            "priority": salt,
+            "priority": run,
             # window geometry: the bbox as a synthetic source placed so
             # that src px (0,0) lands at tile-local (r0, c0):
             # in_top = -r0 => pad offset row_off = r0; clamp keeps the

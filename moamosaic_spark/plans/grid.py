@@ -159,12 +159,17 @@ def stitch_partitions(
         lo, hi = tile_row_range
         nb_r = max(0, min(int(hi), nb_r) - max(int(lo), 0))
     groups = max(1, nb_r * nb_c * grid.n_bands)
-    sc = spark.sparkContext
-    advisory = sc._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+    est_bytes = groups * blocksize * blocksize * PIXEL_BYTES
+    return min(groups, max(spark.sparkContext.defaultParallelism,
+                           math.ceil(est_bytes / advisory_bytes(spark))))
+
+
+def advisory_bytes(spark: SparkSession) -> int:
+    """``spark.sql.adaptive.advisoryPartitionSizeInBytes`` in bytes: the one
+    stitch byte budget, for its partitions and hot tiles (mosaic._hot_runs)."""
+    return spark.sparkContext._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
         spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
     )
-    est_bytes = groups * blocksize * blocksize * PIXEL_BYTES
-    return min(groups, max(sc.defaultParallelism, math.ceil(est_bytes / advisory)))
 
 
 def block_edges(n: int, blocksize: int) -> list[tuple[int, int]]:

@@ -26,19 +26,22 @@ one paid the Python set-up for one or two tiles.
 
 from __future__ import annotations
 
+import dataclasses
 import json
+import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..monitoring import named_action
 from ..mosaic import (
-    MosaicConfig, MosaicResult, _assign, _contributor_chunks, _restrict_tiles, _stitch_tail,
-    _with_placeholders, check_nullval,
+    MosaicConfig, MosaicResult, _restrict_tiles, _stitch_tail, _with_placeholders,
+    _work_relation, check_nullval,
 )
 from ..pixels import PIXEL_TYPE, ingest
 from ..plans.grid import (
     OutputGrid, make_output_grid, make_tile_relation, overview_levels, stitch_partitions,
 )
-from ..plans.spatial_join import assign_inputs
+from ..schema import FOOTPRINTS_SCHEMA
 
 
 def fingerprint_agg_cols() -> list[str]:
@@ -103,8 +106,7 @@ def relayout_to_table(
     check_nullval(grid.nullval)
     n_buckets = _bucket_count(spark, grid, config, n_buckets)
     tiles = make_tile_relation(spark, grid, config.blocksize)
-    assignments = _assign(tiles, footprints, grid, config)
-    work = _contributor_chunks(assignments, blocks, config.src_blocksize)
+    _, work = _work_relation(tiles, footprints, blocks, grid, config)
     for t in (table, f"{table}_meta"):
         spark.sql(f"DROP TABLE IF EXISTS {t}")
         _drop_stale_location(spark, t)
@@ -200,20 +202,18 @@ def _reregister_relayout(spark: SparkSession, table: str, loc: str) -> None:
     """Re-attach a relayout table whose files survived a session restart
     (the default in-memory catalog forgets managed tables; the warehouse
     directory does NOT — deleting it would silently lose every
-    pre-restart batch's work rows). Recreates the catalog entries over
-    the existing files, bucket spec from the surviving meta json."""
-    import json as _json
-    import os
-
+    pre-restart batch's work rows). Recreates the missing catalog entries
+    over the existing files, bucket spec from the surviving meta json."""
     meta_loc = f"{loc}_meta"
-    m = _json.loads(
-        spark.read.parquet(meta_loc).collect()[0].meta
-    )
+    with named_action(spark, f"moamosaic: relayout meta {table} (files)"):
+        m = json.loads(spark.read.parquet(meta_loc).collect()[0].meta)
     if not spark.catalog.tableExists(f"{table}_meta"):
         spark.sql(
             f"CREATE TABLE {table}_meta (meta string) USING parquet "
             f"LOCATION '{os.path.abspath(meta_loc)}'"
         )
+    if spark.catalog.tableExists(table):
+        return
     df = spark.read.parquet(loc)
     ddl = ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields)
     nb = int(m.get("n_buckets", 64))
@@ -240,35 +240,18 @@ def ensure_relayout_table(
     schema is derived from a zero-row run of the join+clip plan over
     ``blocks``. The bucket count defaults as in relayout_to_table.
 
-    If the catalog does not know the table but its warehouse files
-    exist (a restarted session with the default in-memory catalog),
-    the table is RE-REGISTERED over the surviving files — never
-    truncated: those files are the accumulated incremental state, and
+    Files that survived a session restart are re-attached (_attach),
+    never truncated: they are the accumulated incremental state, and
     the seen-refs checkpoint would prevent re-appending them."""
-    import os
-
-    if spark.catalog.tableExists(table):
-        return
-    loc = _table_location(spark, table)
-    if loc is not None and os.path.isdir(loc) and os.listdir(loc):
-        _reregister_relayout(spark, table, loc)
+    if _attach(spark, table):
         return
     tiles = make_tile_relation(spark, grid, config.blocksize)
-    assignments = assign_inputs(
-        tiles.limit(0),
-        _empty_footprints(spark), grid, strategy="broadcast",
-    )
-    empty = _contributor_chunks(assignments, ingest(blocks).limit(0), config.src_blocksize)
+    no_footprints = spark.createDataFrame([], FOOTPRINTS_SCHEMA)
+    _, empty = _work_relation(tiles, no_footprints, ingest(blocks).limit(0), grid, config)
     n_buckets = _bucket_count(spark, grid, config, n_buckets)
     _write_bucketed(_with_placeholders(empty, tiles, grid.n_bands), table, n_buckets,
                     "overwrite")
     _write_meta(spark, table, grid, config, n_buckets)
-
-
-def _empty_footprints(spark: SparkSession):
-    from ..schema import FOOTPRINTS_SCHEMA
-
-    return spark.createDataFrame([], FOOTPRINTS_SCHEMA)
 
 
 def relayout_append(
@@ -276,20 +259,23 @@ def relayout_append(
     footprints_new: DataFrame,
     blocks: DataFrame,
     table: str,
+    config: MosaicConfig | None = None,
 ) -> None:
     """Append the work rows of NEW footprints into an existing bucketed
-    relayout table (same grid, same bucket spec — from the table meta).
-    Replaying an append after a crash duplicates rows; the stitch is
-    idempotent under duplicates (a duplicate row re-pastes the same
-    pixels within its priority run), so resume semantics hold — compact
-    by re-running relayout_to_table when growth matters."""
+    relayout table (same grid, tiling and bucket spec — from the table
+    meta; ``config`` supplies the join strategy). Replaying an append
+    after a crash duplicates rows; the stitch is idempotent under
+    duplicates (a duplicate row re-pastes the same pixels within its
+    priority run), so resume semantics hold — compact by re-running
+    relayout_to_table when growth matters."""
     m = _load_meta(spark, table)
     grid = _grid_from_meta(m)
-    tiles = make_tile_relation(spark, grid, int(m["blocksize"]))
-    assignments = assign_inputs(tiles, footprints_new, grid, strategy="broadcast")
-    work = _contributor_chunks(
-        assignments, ingest(blocks), int(m.get("src_blocksize", 256))
+    config = dataclasses.replace(
+        config or MosaicConfig(), blocksize=int(m["blocksize"]),
+        src_blocksize=int(m.get("src_blocksize", 256)),
     )
+    tiles = make_tile_relation(spark, grid, config.blocksize)
+    _, work = _work_relation(tiles, footprints_new, ingest(blocks), grid, config)
     _write_bucketed(work, table, int(m.get("n_buckets", 64)), "append")
 
 
@@ -306,25 +292,22 @@ def _drop_stale_location(spark: SparkSession, table: str) -> None:
 
 
 def _load_meta(spark: SparkSession, table: str) -> dict:
-    return json.loads(spark.table(f"{table}_meta").collect()[0].meta)
+    with named_action(spark, f"moamosaic: relayout meta {table}"):
+        return json.loads(spark.table(f"{table}_meta").collect()[0].meta)
 
 
-def _table_accessible(spark: SparkSession, table: str) -> bool:
-    """True when ``table`` (and its meta) can be read — either already
-    registered, or re-registered here over files that survived a
-    session restart (same recovery path as ensure_relayout_table)."""
-    import os
-
+def _attach(spark: SparkSession, table: str) -> bool:
+    """Whether ``table`` and its meta are in the catalog, re-registered
+    here (_reregister_relayout) when only their files survived a
+    session restart. False when there are no such files; raises when
+    there are but they cannot be re-attached."""
     if spark.catalog.tableExists(table) and spark.catalog.tableExists(f"{table}_meta"):
         return True
     loc = _table_location(spark, table)
-    if loc is not None and os.path.isdir(loc) and os.listdir(loc):
-        try:
-            _reregister_relayout(spark, table, loc)
-            return True
-        except Exception:
-            return False
-    return False
+    if loc is None or not (os.path.isdir(loc) and os.listdir(loc)):
+        return False
+    _reregister_relayout(spark, table, loc)
+    return True
 
 
 def _current(work: DataFrame, meta: dict) -> bool:
@@ -349,10 +332,10 @@ def mosaic_via_relayout(
     footprints: DataFrame,
     blocks: DataFrame,
     config: MosaicConfig,
+    fingerprint: str,
     grid: OutputGrid | None = None,
     tile_row_range: tuple[int, int] | None = None,
     tile_keys: DataFrame | None = None,
-    fingerprint: str | None = None,
     grid_hint: OutputGrid | None = None,
 ) -> MosaicResult | None:
     """do_mosaic's storage-side routing (config.relayout_table).
@@ -360,24 +343,24 @@ def mosaic_via_relayout(
     Stitches off the bucketed table when it provably holds this exact
     corpus (footprint fingerprint + tiling geometry match); (re)builds
     the table first when it is absent or stale — that one call is
-    eager, every later call is the zero-Exchange repeated-run path.
-    Returns None when routing cannot apply (caller pinned an explicit
-    grid the table was not built for — the direct dataflow handles it;
-    an auto-build would derive its own grid and silently diverge).
+    eager, every later call is the zero-Exchange repeated-run path,
+    where hot tiles stay unsplit (stitch_from_relayout). Returns None
+    when routing cannot apply (caller pinned an explicit grid the table
+    was not built for — the direct dataflow handles it; an auto-build
+    would derive its own grid and silently diverge).
     ``fingerprint``/``grid_hint`` are pre-aggregated values from
     do_mosaic's single footprint-summary pass (grid_hint is the grid
     the summary DERIVED, as opposed to ``grid``, which the caller
     PINNED)."""
     table = config.relayout_table
-    fp = (
-        fingerprint
-        if fingerprint is not None
-        else footprints_fingerprint(footprints)
-    )
-    if _table_accessible(spark, table):
+    try:
+        attached = _attach(spark, table)
+    except Exception:  # unreadable leftovers: rebuilt below
+        attached = False
+    if attached:
         m, src = _load_meta(spark, table), spark.table(table)
         if (
-            m.get("fingerprint") == fp
+            m.get("fingerprint") == fingerprint
             and int(m["blocksize"]) == config.blocksize
             and int(m.get("src_blocksize", 256)) == config.src_blocksize
             and int(m["min_overview_size"]) == config.min_overview_size
@@ -390,7 +373,7 @@ def mosaic_via_relayout(
         return None
     relayout_to_table(
         spark, footprints, blocks, table, config,
-        grid=grid_hint, fingerprint=fp,
+        grid=grid_hint, fingerprint=fingerprint,
     )
     return stitch_from_relayout(
         spark, table, config, tile_row_range=tile_row_range, tile_keys=tile_keys
@@ -415,14 +398,12 @@ def stitch_from_relayout(
     the shuffle — the cheapest possible re-stitch. ``tile_keys`` (small
     DataFrame of (tile_row, tile_col)) restricts to an explicit tile
     set via a broadcast semi-join, which preserves the bucketed
-    distribution — the incremental path's touched-tile re-stitch."""
+    distribution — the incremental path's touched-tile re-stitch.
+
+    Hot tiles are not split here: the bucketed scan has no Exchange to
+    split them into, so each (band, tile) stays one group of the one
+    stitch kernel."""
     config = config or MosaicConfig()
-    if config.stitch_salt > 1:
-        raise ValueError(
-            "stitch_salt is not supported on the relayout path yet — the "
-            "bucketed layout already removes the stitch shuffle; run "
-            "do_mosaic for the two-stage salted merge"
-        )
     from ..session import ensure_workers_can_import
 
     ensure_workers_can_import(spark)

@@ -230,7 +230,7 @@ def process_batch(
         )
 
         ensure_relayout_table(spark, relayout_table, grid, blocks, config)
-        relayout_append(spark, new_fp, blocks, relayout_table)
+        relayout_append(spark, new_fp, blocks, relayout_table, config)
         res = stitch_from_relayout(
             spark, relayout_table, config, tile_keys=touched
         )

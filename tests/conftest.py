@@ -49,6 +49,26 @@ def fresh_table(spark, table) -> str:
     return table
 
 
+@contextmanager
+def advisory(spark, value):
+    """Run the block with ``spark.sql.adaptive.advisoryPartitionSizeInBytes``
+    at ``value``: the stitch's byte budget, which sizes its partitions
+    and marks a tile hot (plans.grid.advisory_bytes)."""
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(value))
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
+
+
+def arrow_kernels(df) -> int:
+    """Grouped-map Arrow kernels in ``df``'s executed plan: 1 for the
+    one stitch, 2 when hot tiles are split (partial kernel + stitch)."""
+    return df._jdf.queryExecution().executedPlan().toString().count("FlatMapGroupsInArrow")
+
+
 @pytest.fixture
 def py4j_calls():
     """``with py4j_calls() as n:`` counts the py4j commands the block

@@ -5,7 +5,6 @@ Exchange of that many partitions, and a relayout table built without a
 bucket count gets that many buckets and still stitches Exchange-free."""
 
 import re
-from contextlib import contextmanager
 
 from moamosaic_spark.mosaic import MosaicConfig, do_mosaic
 from moamosaic_spark.pixels import decode
@@ -14,9 +13,8 @@ from moamosaic_spark.sources import synth
 from moamosaic_spark.sources.relayout import (
     ensure_relayout_table, relayout_to_table, stitch_from_relayout,
 )
-from tests.conftest import fresh_table, to_blocks, to_footprints
+from tests.conftest import advisory, arrow_kernels, fresh_table, to_blocks, to_footprints
 
-ADVISORY = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
 STITCH_EXCHANGE = re.compile(
     r"Exchange hashpartitioning\(band#\d+, tile_row#\d+, tile_col#\d+, (\d+)\)"
 )
@@ -27,16 +25,6 @@ def _grid(n_px: int, n_bands: int = 1, dtype: str = "uint16") -> OutputGrid:
         x_min=0.0, y_max=0.0, x_res=1.0, y_res=1.0, ncols=n_px, nrows=n_px,
         n_bands=n_bands, nullval=0.0, dtype=dtype, projection="p",
     )
-
-
-@contextmanager
-def _advisory(spark, value):
-    old = spark.conf.get(ADVISORY)
-    spark.conf.set(ADVISORY, value)
-    try:
-        yield
-    finally:
-        spark.conf.set(ADVISORY, old)
 
 
 def _plan(spark, df) -> str:
@@ -63,10 +51,10 @@ def test_stitch_partitions_branches(spark):
     # a tile-row range counts only its own groups: 1 row of 2 tiles
     assert stitch_partitions(spark, _grid(128), 64, tile_row_range=(1, 5)) == 2
     # bytes-bound: 16 groups x 8 KB = 128 KB over 16 KB -> 8 > cores
-    with _advisory(spark, "16k"):
+    with advisory(spark, "16k"):
         assert stitch_partitions(spark, _grid(256), 64) == 8 > cores
     # ... but never more partitions than groups (a group cannot split)
-    with _advisory(spark, "1k"):
+    with advisory(spark, "1k"):
         assert stitch_partitions(spark, _grid(256), 64) == 16
 
 
@@ -88,16 +76,20 @@ def test_direct_stitch_one_exchange_sized_to_cores(spark):
     assert set(got) == set(want.tiles)
     for k, a in got.items():
         assert (a == want.tiles[k]).all(), k
-    # the salted stage 2 goes through the same sized Exchange
-    for cfg in (
-        MosaicConfig(**base),
-        MosaicConfig(**base, stitch_salt=2),
-        MosaicConfig(**base, stitch_salt=2, merge_policy="blend"),
-    ):
-        plan = _plan(spark, do_mosaic(spark, fp, blocks, cfg).stitched)
+    # the split stage 2 goes through the same sized Exchange, sized under
+    # the budget that split it: one 64x64 window makes every seam tile hot
+    stitched = [(do_mosaic(spark, fp, blocks, MosaicConfig(**base)).stitched, 1, n)]
+    with advisory(spark, "8k"):
+        for policy in ("last", "blend"):
+            cfg = MosaicConfig(**base, merge_policy=policy)
+            stitched.append((do_mosaic(spark, fp, blocks, cfg).stitched, 2,
+                             stitch_partitions(spark, res.grid, 64)))
+    for df, kernels, n_k in stitched:
+        assert arrow_kernels(df) == kernels
+        plan = _plan(spark, df)
         below = plan.split("FlatMapGroupsInArrow", 1)[1]
-        assert [int(m) for m in STITCH_EXCHANGE.findall(below)] == [n], plan
-        assert [int(m) for m in STITCH_EXCHANGE.findall(plan)] == [n], plan
+        assert [int(m) for m in STITCH_EXCHANGE.findall(below)] == [n_k], plan
+        assert [int(m) for m in STITCH_EXCHANGE.findall(plan)] == [n_k], plan
 
 
 def test_relayout_buckets_default_to_stitch_partitions(spark):
