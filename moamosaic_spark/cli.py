@@ -20,7 +20,7 @@ Option mapping (reference option -> here):
     --resample       -> --resample near|bilinear|average, for the warp
                         and for the --xres/--yres same-CRS rescale
     --monitorjson    -> --monitorjson
-Extras: --strategy/--cell-size-px/--salt (join physical strategy),
+Extras: --strategy/--cell-size-px (join physical strategy),
 --merge-policy, --batches/--resume (lineage checkpointing),
 --derived hillshade|terrain|basins (gdaldem-style product tables).
 """
@@ -45,7 +45,6 @@ def get_parser() -> argparse.ArgumentParser:
     p.add_argument("--no-overviews", action="store_true")
     p.add_argument("--strategy", choices=["broadcast", "cell"], default="broadcast")
     p.add_argument("--cell-size-px", type=int, default=4096)
-    p.add_argument("--salt", type=int, default=1)
     p.add_argument("--merge-policy", choices=["last", "nearest", "blend"],
                    default="last")
     p.add_argument("--blend-feather", type=int, default=64,
@@ -159,7 +158,6 @@ def main(argv: list[str] | None = None) -> None:
         nullval=args.nullval,
         strategy=args.strategy,
         cell_size_px=args.cell_size_px,
-        salt=args.salt,
         merge_policy=args.merge_policy,
         blend_feather=args.blend_feather,
         with_overviews=not args.no_overviews,

@@ -27,6 +27,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..monitoring import named_action
+from ..plans.grid import advisory_bytes
 from .focal import D8_DIRS, D8_FLAT  # noqa: F401 (D8_FLAT re-exported for callers)
 
 
@@ -156,24 +158,27 @@ def basin_summary(basins: DataFrame) -> DataFrame:
     )
 
 
-def flow_accumulation(
-    edges: DataFrame, max_rounds: int = 48, max_inmem_tree: int = 4_000_000
-) -> DataFrame:
+def flow_accumulation(edges: DataFrame, max_rounds: int = 48) -> DataFrame:
     """Upstream cell count (including self) per cell — the
     ``r.watershed``/``gdaldem`` flow-accumulation product.
 
-    Size-adaptive two-path plan (same results either way):
+    Size-adaptive two-path plan (same results either way), routed by
+    bytes:
 
     * **In-memory trees (the common case).** One pointer-doubling pass
       labels every cell with its basin (tree id); cells then group by
       basin and a per-tree Arrow kernel runs the reverse-topological
-      accumulation over numpy arrays. Real drainage basins are bounded
-      by geography — the whole tree is a few MB of (gid, dst, dist)
-      rows — so one O(|E|) join + one grouped shuffle replaces the
-      O(log tour) distributed ranking rounds. Measured at the 4.19M-
-      cell bench shape (132k trees, largest 13.6k cells): every tree
-      takes this path and the leg drops ~2x.
-    * **Oversized trees (``> max_inmem_tree`` cells).** Continental-
+      accumulation over numpy arrays. A tree takes this path when its
+      kernel-input rows (cells × the fixed row width, 36 B for band,
+      basin, gid, dst, dist) fit the session's byte budget,
+      ``spark.sql.adaptive.advisoryPartitionSizeInBytes``
+      (plans.grid.advisory_bytes): ~1.86 M cells at the default 64 MiB.
+      Real drainage basins are bounded by geography, so one O(|E|)
+      join + one grouped shuffle replaces the O(log tour) distributed
+      ranking rounds. Measured at the 4.19M-cell bench shape (132k
+      trees, largest 13.6k cells): every tree takes this path and the
+      leg drops ~2x.
+    * **Oversized trees (rows over the budget).** Continental-
       river-scale trees that must not land in one task keep the
       previous fully distributed form: a EULER TOUR of the tree (two
       arcs per edge, first-child / next-sibling successors) LIST-RANKED
@@ -189,14 +194,19 @@ def flow_accumulation(
     cell_basins = basins.where(F.col("is_cell")).select(
         "band", "gid", "basin", "dist"
     )
-    labeled = edges.join(cell_basins, ["band", "gid"])
+    labeled = edges.join(cell_basins, ["band", "gid"]).select(
+        "band", "basin", "gid", "dst", "dist"
+    )
     sizes = cell_basins.groupBy("band", "basin").agg(F.count("*").alias("_n"))
+    spark = edges.sparkSession
+    max_cells = advisory_bytes(spark) // labeled._jdf.schema().defaultSize()
     # one tiny driver probe decides routing; with no oversized tree the
     # plan is purely group-and-accumulate
-    biggest = sizes.agg(F.max("_n")).collect()[0][0] or 0
-    if biggest <= max_inmem_tree:
+    with named_action(spark, "moamosaic: tree-size probe"):
+        biggest = sizes.agg(F.max("_n")).collect()[0][0] or 0
+    if biggest <= max_cells:
         return _accumulate_inmem_trees(labeled)
-    big_ids = sizes.where(F.col("_n") > max_inmem_tree).select("band", "basin")
+    big_ids = sizes.where(F.col("_n") > max_cells).select("band", "basin")
     small = labeled.join(big_ids, ["band", "basin"], "left_anti")
     big_edges = (
         labeled.join(big_ids, ["band", "basin"])
@@ -265,9 +275,9 @@ def _accumulate_inmem_trees(labeled: DataFrame) -> DataFrame:
             "is_cell": pa.array(np.concatenate(out_cell), pa.bool_()),
         })
 
-    return labeled.select("band", "basin", "gid", "dst", "dist").groupBy(
-        "band", "basin"
-    ).applyInArrow(acc_tree, "band int, gid long, acc long, is_cell boolean")
+    return labeled.groupBy("band", "basin").applyInArrow(
+        acc_tree, "band int, gid long, acc long, is_cell boolean"
+    )
 
 
 def _flow_accumulation_euler(edges: DataFrame, max_rounds: int = 48) -> DataFrame:

@@ -55,7 +55,6 @@ class MosaicConfig:
     nullval: float | None = None       # default: from priority-0 input
     strategy: str = "broadcast"        # 'broadcast' | 'cell'
     cell_size_px: int = 4096
-    salt: int = 1
     check_projections: bool = True
     check_blocks: bool = False         # integrity prepass over the blocks table
     with_overviews: bool = True
@@ -64,11 +63,6 @@ class MosaicConfig:
     # contributor's source edge — nodata-aware, seams fade)
     merge_policy: str = "last"
     blend_feather: int = 64            # feather width (px) for 'blend'
-    # incremental sink partition count: touched-tile rewrites replace a
-    # whole `part=` partition, so each partition holds ~1/sink_parts of
-    # the mosaic. Size it so one partition is a bounded rewrite at the
-    # target tile count (an Iceberg MERGE sink removes the trade-off).
-    sink_parts: int = 16
     # storage-side relayout routing (sources/relayout.py): when set,
     # do_mosaic stitches off this bucketed work table whenever it holds
     # EXACTLY this corpus (footprint fingerprint + geometry match, see
@@ -312,10 +306,9 @@ def _assign(
     tiles: DataFrame, footprints: DataFrame, grid: OutputGrid, config: MosaicConfig
 ) -> DataFrame:
     """The spatial join under ``config.strategy``; only the 'cell'
-    strategy takes the cell size, salt and tile size."""
+    strategy takes the cell size and tile size."""
     kw = (
-        {"cell_size_px": config.cell_size_px, "salt": config.salt,
-         "blocksize": config.blocksize}
+        {"cell_size_px": config.cell_size_px, "blocksize": config.blocksize}
         if config.strategy == "cell"
         else {}
     )
@@ -386,7 +379,7 @@ def _stitch_tail(
     the relayout path. ``work`` arrives already distributed by (band,
     tile) — the direct path's one Exchange, or a bucketed scan — and
     holds a placeholder row per output (band, tile) (_with_placeholders).
-    The one stitch kernel also composes the salted path's partials."""
+    The one stitch kernel also composes the split hot tiles' partials."""
     fn = make_stitch_fn_arrow(grid, levels, config.merge_policy,
                               feather=config.blend_feather)
     stitched = work.groupBy("band", "tile_row", "tile_col").applyInArrow(fn, STITCH_SCHEMA)
@@ -430,15 +423,6 @@ def do_mosaic(
     ``blocks`` pixels may be binary (packed uint16) or ``array<int>``;
     the latter is packed once on entry (pixels.ingest)."""
     config = config or MosaicConfig()
-    blocks = ingest(blocks)
-    if config.merge_policy not in ("last", "nearest", "blend"):
-        raise ValueError(
-            f"unknown merge_policy {config.merge_policy!r} "
-            "(expected 'last', 'nearest' or 'blend')"
-        )
-    from .session import ensure_workers_can_import
-
-    ensure_workers_can_import(spark)
     routable = config.relayout_table is not None
     # ONE footprint probe covers validation + grid derivation + the
     # relayout fingerprint
@@ -449,6 +433,37 @@ def do_mosaic(
     )
     if config.check_projections:
         _check_projection_row(row)
+    return _mosaic_from_row(
+        spark, footprints, blocks, config, row, grid, tile_row_range, tile_keys
+    )
+
+
+def _mosaic_from_row(
+    spark: SparkSession,
+    footprints: DataFrame,
+    blocks: DataFrame,
+    config: MosaicConfig,
+    row,
+    grid: OutputGrid | None = None,
+    tile_row_range: tuple[int, int] | None = None,
+    tile_keys: DataFrame | None = None,
+) -> MosaicResult:
+    """do_mosaic below its footprint probe: ``row`` is that probe's row
+    (_summary_row; with the fingerprint when ``config.relayout_table``
+    is set), or None when do_mosaic skipped it. A caller that mosaics
+    one corpus in many pruned runs (resumable_mosaic) probes once and
+    hands the row to every run, so no run re-probes, and the hot-tile
+    gate reads the row's ``n_inputs``."""
+    blocks = ingest(blocks)
+    if config.merge_policy not in ("last", "nearest", "blend"):
+        raise ValueError(
+            f"unknown merge_policy {config.merge_policy!r} "
+            "(expected 'last', 'nearest' or 'blend')"
+        )
+    from .session import ensure_workers_can_import
+
+    ensure_workers_can_import(spark)
+    routable = config.relayout_table is not None
     if grid is not None:
         check_nullval(grid.nullval)
     else:

@@ -261,20 +261,6 @@ def morton_expr(cx, cy):
     return spread(cx).bitwiseOR(F.shiftleft(spread(cy), 1)).alias("cell_id")
 
 
-def cell_coords_expr(x_world, y_world, cell_size: float, x_origin: float, y_origin: float):
-    """World coords -> integer cell coords on a fixed cell grid anchored at
-    (x_origin, y_origin); y grows downward (raster convention)."""
-    cx = F.floor((x_world - F.lit(x_origin)) / F.lit(cell_size)).cast("long")
-    cy = F.floor((F.lit(y_origin) - y_world) / F.lit(cell_size)).cast("long")
-    return cx, cy
-
-
-def with_cell_id(df: DataFrame, x_col: str, y_col: str, cell_size: float,
-                 x_origin: float, y_origin: float) -> DataFrame:
-    cx, cy = cell_coords_expr(F.col(x_col), F.col(y_col), cell_size, x_origin, y_origin)
-    return df.withColumn("cell_id", morton_expr(cx, cy))
-
-
 def global_pixel_index(pos, blocksize: int, g_ncols: int,
                        tile_row=None, tile_col=None, xsize=None):
     """Column expression: global row-major pixel index (r * g_ncols + c)

@@ -13,13 +13,14 @@ strategies producing identical rows:
   footprint dim table fits in memory (the common mosaic case).
 * ``cell`` — both sides are assigned S2/H3-style Z-order cell ids
   (plans/grid.py) of a fixed cell grid; the join is a shuffled **equi-join
-  on cell_id** with the exact box predicate as residual, deduplicated on
-  (tile, media_ref). This is the 10^12-document scale path: shuffle
+  on cell_id** with the exact box predicate as residual; each (tile,
+  media_ref) pair comes out once. This is the 10^12-document scale path: shuffle
   volume is O(tiles + footprint-cell covers), never O(tiles × files).
-  Hot cells (many overlapping footprints) can additionally be salted:
-  the footprint side replicates each cell cover ``salt`` ways and tiles
-  pick a deterministic salt, splitting one hot cell's tile stream across
-  ``salt`` reducers.
+  A hot cell (many overlapping footprints) is not split here: its cost
+  is its output rows, and those land in (band, tile) groups the stitch
+  already splits by bytes (mosaic._hot_runs). Salting the cell keys
+  only replicated the covers and shuffled every output row once more:
+  4x slower on 20k footprints stacked in one cell (PLANS.md).
 
 Output columns:
     tile_row, tile_col, top, left, ysize, xsize   — the output tile
@@ -132,7 +133,6 @@ def assign_inputs_cell(
     footprints: DataFrame,
     grid: OutputGrid,
     cell_size_px: int = 4096,
-    salt: int = 1,
     blocksize: int | None = None,
 ) -> DataFrame:
     """Cell-keyed scale strategy.
@@ -141,9 +141,9 @@ def assign_inputs_cell(
     size, so we key a tile by the cell containing its top-left corner and
     explode footprints by one extra cell of margin — every
     tile/footprint intersection shares the tile's key cell). Equi-join on
-    cell_id, exact box predicate as residual. With ``salt > 1`` the
-    footprint covers are replicated per salt value and tiles hash to one
-    salt, splitting hot cells across reducers.
+    cell_id, exact box predicate as residual. ``sequence()`` emits each
+    covered cell once per footprint and a tile keys one cell, so every
+    (tile, footprint) pair comes out once.
     """
     cell_size = cell_size_px * grid.x_res
     t = tiles.withColumn(
@@ -166,26 +166,8 @@ def assign_inputs_cell(
         pad_px = cell_size_px  # conservative when tile size unknown
     pad = pad_px * grid.x_res
     fp = _footprint_cell_covers(footprints, grid, cell_size, pad)
-
-    if salt > 1:
-        fp = fp.withColumn("_salt", F.explode(F.sequence(F.lit(0), F.lit(salt - 1))))
-        t = t.withColumn(
-            "_salt", F.pmod(F.hash(F.col("tile_row"), F.col("tile_col")), F.lit(salt))
-        )
-        join_keys = ["cell_id", "_salt"]
-    else:
-        join_keys = ["cell_id"]
-
-    joined = t.join(fp.alias("f"), on=join_keys, how="inner")
-    out = _select_assignment(joined, grid)
-    # a footprint cover may share >1 cell with... tiles key one cell only,
-    # but padded covers can duplicate (tile-cell, footprint) pairs when the
-    # padded footprint spans the same cell once — sequence() emits each cell
-    # once per footprint, so no duplicates arise; keep a safety distinct on
-    # the key pair for the salted path where replication is explicit.
-    if salt > 1:
-        out = out.dropDuplicates(["tile_row", "tile_col", "media_ref"])
-    return out
+    joined = t.join(fp.alias("f"), on="cell_id", how="inner")
+    return _select_assignment(joined, grid)
 
 
 def filter_by_polygons(

@@ -39,32 +39,61 @@ from ..sources.docs import dense_global_rank, media_first_seen
 from .lineage import read_parquet_if_exists as _read_parquet_if_exists
 
 
+# The sink's partition count: a touched-tile rewrite replaces a whole
+# `part=` partition (part = tile_row mod SINK_PARTS), so each partition
+# holds ~1/SINK_PARTS of the mosaic (an Iceberg MERGE sink removes the
+# trade-off).
+SINK_PARTS = 16
+
+
 def _state_path(out_path: str) -> str:
     return f"{out_path}/footprints_seen"
 
 
-def _check_sink_parts(spark: SparkSession, out_path: str, sink_parts: int) -> None:
+def _check_sink_parts(spark: SparkSession, out_path: str) -> None:
     """The sink partition modulus is GEOMETRY: tile_row 7 lives in
-    part=7 at sink_parts=16 but part=2 at 5, and the merge emulation
-    only rewrites partitions present in the current batch — resuming an
-    existing sink with a different modulus would leave the old copies
-    as stale duplicates. Persist the modulus on first write and refuse
-    a mismatch (rebuild the sink to change it)."""
+    part=7 at a modulus of 16 but part=2 at 5, and the merge emulation
+    only rewrites partitions present in the current batch — resuming a
+    sink written with another modulus would leave the old copies as
+    stale duplicates. Persist SINK_PARTS on first write and refuse a
+    sink that records another (rebuild it to resume)."""
     path = f"{out_path}/_sink_meta"
     meta = _read_parquet_if_exists(spark, path)
     if meta is None:
         spark.createDataFrame(
-            [(int(sink_parts),)], "sink_parts int"
+            [(SINK_PARTS,)], "sink_parts int"
         ).write.mode("overwrite").parquet(path)
         return
     prev = meta.collect()[0].sink_parts
-    if int(prev) != int(sink_parts):
+    if int(prev) != SINK_PARTS:
         raise ValueError(
             f"sink at {out_path} was written with sink_parts={int(prev)}; "
-            f"resuming with sink_parts={int(sink_parts)} would strand stale "
-            "tile copies in the old part= partitions — keep the original "
-            "value or rebuild the sink"
+            f"resuming with sink_parts={SINK_PARTS} would strand stale "
+            "tile copies in the old part= partitions — rebuild the sink"
         )
+
+
+def _rewrite_parts(spark: SparkSession, path: str, rows: DataFrame, keys: DataFrame) -> None:
+    """Row-level MERGE emulation over a `part=`-partitioned parquet sink
+    (an Iceberg sink does this natively): write ``rows`` (the new
+    versions of the (tile_row, tile_col) ``keys``) and rewrite only the
+    partitions they land in, carrying over those partitions' other
+    rows. Dynamic partition overwrite alone would drop untouched tiles
+    that share a partition with touched ones."""
+    existing = _read_parquet_if_exists(spark, path)
+    if existing is not None:
+        keep = existing.join(keys, on=["tile_row", "tile_col"], how="left_anti").join(
+            rows.select("part").distinct(), on="part", how="left_semi"
+        )
+        # materialize before overwriting the path we just read from
+        rows = rows.unionByName(keep.select(*rows.columns)).localCheckpoint(eager=True)
+    (
+        rows.repartitionByRange("band", "tile_row", "tile_col")
+        .sortWithinPartitions("band", "tile_row", "tile_col")
+        .write.mode("overwrite")
+        .partitionBy("part")
+        .parquet(path)
+    )
 
 
 def read_seen(spark: SparkSession, out_path: str) -> DataFrame | None:
@@ -87,7 +116,7 @@ def _dilate_keys(keys: DataFrame) -> DataFrame:
     ).distinct()
 
 
-def _update_derived_focal(spark, out_path, touched, config, grid) -> int:
+def _update_derived_focal(spark, out_path, touched, grid) -> int:
     """Incrementally maintain a derived hillshade product: a focal
     output tile depends only on its 3x3 tile neighborhood, so the
     invalidation ring of a batch is touched ⊕ 1 and its recompute
@@ -119,28 +148,13 @@ def _update_derived_focal(spark, out_path, touched, config, grid) -> int:
         nullval=int(grid.nullval),
     )
     recomputed = hs.join(ring, ["tile_row", "tile_col"], "left_semi").withColumn(
-        "part", F.pmod(F.col("tile_row"), F.lit(int(config.sink_parts)))
+        "part", F.pmod(F.col("tile_row"), F.lit(SINK_PARTS))
     )
-    out = recomputed
-    if existing is not None:
-        keep = existing.join(
-            ring, on=["tile_row", "tile_col"], how="left_anti"
-        ).join(out.select("part").distinct(), on="part", how="left_semi")
-        out = out.unionByName(keep.select(*out.columns))
-    out = out.localCheckpoint(eager=True)
-    (
-        out.repartitionByRange("band", "tile_row", "tile_col")
-        .sortWithinPartitions("band", "tile_row", "tile_col")
-        .write.mode("overwrite")
-        .partitionBy("part")
-        .parquet(path)
-    )
-    # report RECOMPUTED hillshade tiles only: the union above also
-    # carries the untouched rows of rewritten `part=` partitions, which
-    # would overstate the per-batch derived work
-    return out.join(
-        ring.select("tile_row", "tile_col"), ["tile_row", "tile_col"], "left_semi"
-    ).count()
+    _rewrite_parts(spark, path, recomputed, ring)
+    # report RECOMPUTED hillshade tiles only, counted from the written
+    # files: a rewritten `part=` partition also carries untouched rows,
+    # which would overstate the per-batch derived work
+    return spark.read.parquet(path).join(ring, ["tile_row", "tile_col"], "left_semi").count()
 
 
 def process_batch(
@@ -176,7 +190,7 @@ def process_batch(
             "combined with sink_table (native catalog MERGE) yet"
         )
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    _check_sink_parts(spark, out_path, config.sink_parts)
+    _check_sink_parts(spark, out_path)
 
     # drop already-seen refs BEFORE assigning priorities (count-based
     # offsets collide after any batch mixing seen and unseen refs), and
@@ -236,15 +250,14 @@ def process_batch(
         )
     else:
         res = do_mosaic(spark, all_fp, blocks, config, grid=grid, tile_keys=touched)
-    part_of = F.pmod(F.col("tile_row"), F.lit(int(config.sink_parts)))
-    out_tiles = res.tiles.withColumn("part", part_of)
+    out_tiles = res.tiles.withColumn("part", F.pmod(F.col("tile_row"), F.lit(SINK_PARTS)))
     n = out_tiles.count()
 
     # Sink routing (catalog.py seam): with ``sink_table`` set AND the
     # Iceberg runtime on the classpath, the touched tiles go through a
     # real row-level MERGE INTO and the parquet emulation is skipped.
-    # Jars absent (this sandbox) or sink_table unset: the emulation
-    # below runs — identical results, partition rewrites instead of
+    # Jars absent or sink_table unset: the emulation (_rewrite_parts)
+    # runs — identical results, partition rewrites instead of
     # row-level commits.
     merged_natively = False
     if sink_table is not None:
@@ -252,32 +265,10 @@ def process_batch(
 
         merged_natively = merge_touched_tiles(spark, out_tiles, sink_table)
     if not merged_natively:
-        # Row-level MERGE emulation over a partitioned parquet sink (an
-        # Iceberg sink does this natively): rewrite only the partitions
-        # containing touched tiles, carrying over their untouched rows.
-        # Dynamic partition overwrite alone would drop untouched tiles
-        # that share a partition with touched ones.
-        existing = _read_parquet_if_exists(spark, f"{out_path}/tiles")
-        if existing is not None:
-            keep = (
-                existing.join(touched, on=["tile_row", "tile_col"], how="left_anti")
-                .join(
-                    out_tiles.select("part").distinct(), on="part", how="left_semi"
-                )
-            )
-            out_tiles = out_tiles.unionByName(keep.select(*out_tiles.columns))
-            # materialize before overwriting the path we just read from
-            out_tiles = out_tiles.localCheckpoint(eager=True)
-        (
-            out_tiles.repartitionByRange("band", "tile_row", "tile_col")
-            .sortWithinPartitions("band", "tile_row", "tile_col")
-            .write.mode("overwrite")
-            .partitionBy("part")
-            .parquet(f"{out_path}/tiles")
-        )
+        _rewrite_parts(spark, f"{out_path}/tiles", out_tiles, touched)
     n_derived = 0
     if derived_focal:
-        n_derived = _update_derived_focal(spark, out_path, touched, config, grid)
+        n_derived = _update_derived_focal(spark, out_path, touched, grid)
     # State commit LAST: only once the tiles (and any derived product)
     # are durably in the sink do the batch's refs count as seen. A
     # failure anywhere above replays the whole batch (state unchanged

@@ -23,13 +23,12 @@ overwrite), making resume idempotent.
 
 from __future__ import annotations
 
-import dataclasses
 import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..mosaic import MosaicConfig, _check_projection_row, _summary_row, do_mosaic
+from ..mosaic import MosaicConfig, _check_projection_row, _mosaic_from_row, _summary_row
 from ..plans.grid import grid_from_row, n_blocks
 
 
@@ -116,9 +115,10 @@ def resumable_mosaic(
         grid = _grid_from_meta(m)
         blocksize = int(m["blocksize"])
     else:
-        # one footprint probe: the grid, and the projection agreement
-        # (batch-invariant, so the per-batch pruned plans skip it)
-        row = _summary_row(footprints)
+        # one footprint probe: the grid, the projection agreement and
+        # the input count of the hot-tile gate (batch-invariant, so the
+        # per-batch pruned plans take this row instead of re-probing)
+        row = _summary_row(footprints, with_fingerprint=config.relayout_table is not None)
         if config.check_projections:
             _check_projection_row(row)
         grid = grid_from_row(row, config.nullval)
@@ -149,8 +149,6 @@ def resumable_mosaic(
 
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
 
-    batch_config = dataclasses.replace(config, check_projections=False)
-
     from pyspark.sql import Observation
 
     ran, skipped = 0, 0
@@ -167,11 +165,11 @@ def resumable_mosaic(
             from ..sources.relayout import stitch_from_relayout
 
             res = stitch_from_relayout(
-                spark, relayout_table, batch_config, tile_row_range=(lo, hi)
+                spark, relayout_table, config, tile_row_range=(lo, hi)
             )
         else:
-            res = do_mosaic(
-                spark, footprints, blocks, batch_config, grid=grid,
+            res = _mosaic_from_row(
+                spark, footprints, blocks, config, row, grid=grid,
                 tile_row_range=(lo, hi),
             )
         obs = Observation()

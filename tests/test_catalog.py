@@ -55,8 +55,7 @@ def test_incremental_sink_table_ignored_without_jars(spark, tmp_path):
     rasters = synth.golden_pair(128, 128)
     docs, fp, blocks = synth.corpus_to_spark(spark, rasters)
     meta = footprints_from_docs(docs, fp.drop("priority"))
-    cfg = MosaicConfig(blocksize=64, src_blocksize=256, min_overview_size=64,
-                       sink_parts=4)
+    cfg = MosaicConfig(blocksize=64, src_blocksize=256, min_overview_size=64)
     out = str(tmp_path / "sink")
     r = process_batch(docs, 0, spark, meta, blocks, out, cfg,
                       sink_table="moa_iceberg_sink_absent")
@@ -186,8 +185,7 @@ def test_process_batch_routes_to_native_merge(spark, tmp_path, monkeypatch):
     rasters = synth.golden_pair(128, 128)
     docs, fp, blocks = synth.corpus_to_spark(spark, rasters)
     meta = footprints_from_docs(docs, fp.drop("priority"))
-    cfg = MosaicConfig(blocksize=64, src_blocksize=256, min_overview_size=64,
-                       sink_parts=4)
+    cfg = MosaicConfig(blocksize=64, src_blocksize=256, min_overview_size=64)
     out = str(tmp_path / "native_sink")
     r = inc.process_batch(docs, 0, spark, meta, blocks, out, cfg,
                           sink_table="ice.db.tiles")

@@ -25,7 +25,7 @@ CASES = {
     [
         ("broadcast", {}),
         ("cell", {"cell_size_px": 256}),
-        ("cell", {"cell_size_px": 256, "salt": 4}),
+        ("cell", {"cell_size_px": 128, "blocksize": 128}),
     ],
 )
 def test_join_matches_nested_loop_oracle(spark, case, strategy, kw):

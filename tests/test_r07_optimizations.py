@@ -15,6 +15,7 @@ mechanisms directly:
 
 import glob
 import os
+from contextlib import nullcontext
 
 import numpy as np
 
@@ -25,7 +26,7 @@ from moamosaic_spark.functions import similarity as S
 from moamosaic_spark.schema import FOOTPRINTS_SCHEMA
 from moamosaic_spark.sources import synth
 from moamosaic_spark.sources.relayout import _table_location, relayout_to_table
-from tests.conftest import to_blocks, to_footprints
+from tests.conftest import advisory, to_blocks, to_footprints
 
 
 def test_chunk_clip_access_pattern_invariants(spark):
@@ -127,27 +128,34 @@ def test_connected_components_paths_agree(spark):
 
 
 def test_flow_accumulation_paths_agree(spark):
-    """flow_accumulation routes trees by size: in-memory kernel for
-    bounded trees, Euler tour + list ranking for oversized ones. Both
-    paths (and the mixed routing) must produce identical rows."""
-    from pyspark.sql import functions as F
-
+    """flow_accumulation routes trees by bytes: a tree whose kernel-input
+    rows (36 B per cell) fit the byte budget
+    (spark.sql.adaptive.advisoryPartitionSizeInBytes) folds in the
+    in-memory kernel, a larger one takes the Euler tour + list ranking.
+    Each routing is forced by lowering the budget, and all three must
+    produce identical rows."""
     from moamosaic_spark.functions.hydro import flow_accumulation
 
     # two trees: a 40-cell chain into a virtual outlet (gid 1000, no
-    # own edge row) and a 3-level binary-ish tree rooted at a sink
+    # own edge row) and a 7-cell binary-ish tree rooted at a sink
     rows = [(1, i, i + 1) for i in range(39)] + [(1, 39, 1000)]
     rows += [(1, 100, 100)]  # sink root
     rows += [(1, 101, 100), (1, 102, 100), (1, 103, 101), (1, 104, 101),
              (1, 105, 102), (1, 106, 103)]
     edges = spark.createDataFrame(rows, "band int, gid long, dst long")
 
-    def rowset(df):
-        return {(r.band, r.gid, r.acc, r.is_cell) for r in df.collect()}
+    def routed(budget=None):
+        """(rows, root node of the plan) of flow_accumulation at
+        ``budget``: the Euler path is a Union onto the in-memory kernel."""
+        with advisory(spark, budget) if budget else nullcontext():
+            df = flow_accumulation(edges)
+        root = df._jdf.queryExecution().analyzed().nodeName()
+        return {(r.band, r.gid, r.acc, r.is_cell) for r in df.collect()}, root
 
-    inmem = rowset(flow_accumulation(edges))  # default: all in-memory
-    euler = rowset(flow_accumulation(edges, max_inmem_tree=0))  # all Euler
-    mixed = rowset(flow_accumulation(edges, max_inmem_tree=10))  # chain big, tree small
+    inmem, inmem_root = routed()         # default 64 MiB: all in-memory
+    euler, euler_root = routed(36)       # one cell's row: both trees Euler
+    mixed, mixed_root = routed(36 * 10)  # chain (40) Euler, tree (7) in-memory
+    assert (inmem_root, euler_root, mixed_root) == ("FlatMapGroupsInArrow", "Union", "Union")
     assert inmem == euler == mixed
     by_gid = {g: a for (_, g, a, _) in inmem}
     assert by_gid[0] == 1 and by_gid[39] == 40  # chain head / foot

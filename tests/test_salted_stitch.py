@@ -38,11 +38,13 @@ def tiles_of_row(r):
 
 
 def tiles_of(res):
+    """{(band, tile_row, tile_col): array} of a result or a tile table."""
+    tiles = getattr(res, "tiles", res)
     return {
         (r.band, r.tile_row, r.tile_col): decode(r.pixels).reshape(
             r.ysize, r.xsize
         )
-        for r in res.tiles.collect()
+        for r in tiles.collect()
     }
 
 
@@ -312,6 +314,29 @@ def test_split_branches_through_the_budget(spark, sql_executions, case):
     for k in got:
         np.testing.assert_array_equal(got[k], want.tiles[k], err_msg=f"tile {k}")
     fp.unpersist(), blocks.unpersist()
+
+
+def test_resumable_batches_gate_on_the_run_probe(spark, tmp_path, sql_executions):
+    """A resumable run probes its footprints once, and each batch's
+    hot-tile gate reads that probe's input count: on grid3x3 the gate
+    stays closed, so a fresh 3-batch run makes 7 driver actions — the
+    footprint probe, then per batch the tile write and the lineage
+    append. Batches that ran their own hot-tile probe made 10."""
+    from moamosaic_spark.streaming.lineage import resumable_mosaic
+
+    rasters = synth.grid3x3(150, 150)
+    fp = to_footprints(spark, synth.footprints_pdf(rasters))
+    blocks = to_blocks(spark, synth.blocks_pdf(rasters, 256))
+    cfg = MosaicConfig(blocksize=64, src_blocksize=256, with_overviews=False)
+    out = str(tmp_path / "resume_probe")
+    with sql_executions() as n:
+        r = resumable_mosaic(spark, fp, blocks, out, cfg, n_batches=3)
+    assert (r["batches_run"], n[0]) == (3, 7), (r, n[0])
+    want = synth.oracle(rasters, blocksize=64, min_overview_size=9999)
+    got = tiles_of(spark.read.parquet(f"{out}/tiles"))
+    assert set(got) == set(want.tiles)
+    for k in got:
+        np.testing.assert_array_equal(got[k], want.tiles[k], err_msg=f"tile {k}")
 
 
 def test_hot_tiles_unsplit_on_relayout_route(spark):
