@@ -367,12 +367,6 @@ def zonal_stats(
     )
 
 
-LABEL_WORK_SCHEMA = (
-    "kind int, gid long, value int, n_px long, minr long, minc long, "
-    "maxr long, maxc long, min_gidx long, grow long, gcol long"
-)
-
-
 def _label_tile_runs(arr, nullval):
     """Local 4-connected equal-value labeling of one tile via row runs
     + union-find over runs (the standard two-pass CCL, vectorized run
@@ -438,115 +432,130 @@ def _label_tile_runs(arr, nullval):
     return roots, runs, run_of_px
 
 
+def _tile_gids(arr, nullval, g0r, g0c, W):
+    """One tile's regions in the global id space, shared by the
+    ``label_regions`` and ``region_outlines`` kernels: the local
+    labeling above, each run's gid, and the tile's O(perimeter) border
+    rows for ``_with_region_ids``.
+
+    A run's gid is its region's min global pixel index: unique across
+    tiles (pixel sets are disjoint), free of per-tile id arithmetic
+    that could overflow on remainder-absorbing edge tiles, and already
+    canonical, so the cross-tile CC's min id is the final region_id.
+    Border rows are the valid pixels of the four tile edges (np.unique
+    dedups the corners). Array ops only — no loop over regions or
+    pixels. Returns (runs, run_gid, run_of_px, (gid, value, grow,
+    gcol))."""
+    import numpy as np
+
+    roots, runs, run_of_px = _label_tile_runs(arr, nullval)
+    ys, xs = arr.shape
+    root_gid = np.full(roots.size, np.iinfo(np.int64).max)
+    np.minimum.at(root_gid, roots, (g0r + runs[:, 0]) * W + g0c + runs[:, 1])
+    run_gid = root_gid[roots]
+    flat = arr.ravel()
+    edge = np.unique(np.concatenate([
+        np.arange(xs, dtype=np.int64),                   # top row
+        (ys - 1) * xs + np.arange(xs, dtype=np.int64),   # bottom row
+        np.arange(ys, dtype=np.int64) * xs,              # left col
+        np.arange(ys, dtype=np.int64) * xs + xs - 1,     # right col
+    ]))
+    edge = edge[flat[edge] != nullval]
+    border = (
+        run_gid[run_of_px[edge]], flat[edge].astype(np.int64),
+        g0r + edge // xs, g0c + edge % xs,
+    )
+    return runs, run_gid, run_of_px, border
+
+
+LABEL_WORK_SCHEMA = (
+    "band int, kind int, gid long, value int, n_px long, minr long, "
+    "minc long, maxr long, maxc long, grow long, gcol long"
+)
+
+
 def make_label_work_fn(W: int, bs: int, nullval: int):
-    """The per-tile labeling kernel of ``label_regions`` (run-based
-    union-find partials + O(perimeter) border rows), exposed at module
-    level so the perimeter-scaling microbench can drive it on in-memory
-    batches without a Spark plan around it."""
+    """The per-tile labeling kernel of ``label_regions``: one row per
+    region of the tile (kind 0: gid, value, pixel count, bbox) plus its
+    border rows (kind 1), all array-shaped (``_tile_gids``; the per-
+    region roll-up is one sort + reduceat). Exposed at module level so
+    the perimeter-scaling microbench can drive it on in-memory batches
+    without a Spark plan around it."""
     import numpy as np
     import pandas as pd
 
+    from ..pixels import decode
+
+    cols = [c.split()[0] for c in LABEL_WORK_SCHEMA.split(", ")]
+
     def work(batches):
         for pdf in batches:
-            out = []
-            border_frames = []
+            frames = []
             for t in pdf.itertuples(index=False):
-                ysz, xsz = int(t.ysize), int(t.xsize)
-                arr = np.asarray(t.pixels, dtype=np.int32).reshape(ysz, xsz)
-                roots, runs, run_of_px = _label_tile_runs(arr, nullval)
-                if roots.size == 0:
-                    continue
+                arr = decode(t.pixels).reshape(int(t.ysize), int(t.xsize))
                 g0r, g0c = int(t.tile_row) * bs, int(t.tile_col) * bs
-                # per-root partials (aggregate runs by root); the gid
-                # IS the root's min global pixel index — globally
-                # unique (pixel sets are disjoint) with no per-tile id
-                # arithmetic to overflow on remainder-absorbing edge
-                # tiles, and already the canonical region id, so the
-                # CC's min-cluster-id is directly the final region_id
-                gid_of_root = np.zeros(roots.size, dtype=np.int64)
-                for root in np.unique(roots):
-                    m = roots == root
-                    rr, rc0, rc1, rv = runs[m, 0], runs[m, 1], runs[m, 2], runs[m, 3]
-                    min_gidx = int(((g0r + rr) * W + g0c + rc0).min())
-                    gid_of_root[int(root)] = min_gidx
-                    out.append({
-                        "kind": 0, "gid": min_gidx, "value": int(rv[0]),
-                        "n_px": int((rc1 - rc0).sum()),
-                        "minr": g0r + int(rr.min()), "minc": g0c + int(rc0.min()),
-                        "maxr": g0r + int(rr.max()), "maxc": g0c + int(rc1.max()) - 1,
-                        "min_gidx": min_gidx,
-                        "grow": 0, "gcol": 0,
-                    })
-                # border pixels (4 edges), labeled with their root gid —
-                # fully array-shaped: np.unique on flat indices dedups
-                # corners, the gid lookup is one fancy index, and the
-                # rows land as ONE DataFrame, so the kernel does no
-                # per-pixel Python work anywhere (O(perimeter) arrays)
-                bflat = np.unique(np.concatenate([
-                    np.arange(xsz, dtype=np.int64),                    # top row
-                    (ysz - 1) * xsz + np.arange(xsz, dtype=np.int64),  # bottom
-                    np.arange(ysz, dtype=np.int64) * xsz,              # left col
-                    np.arange(ysz, dtype=np.int64) * xsz + xsz - 1,    # right
-                ]))
-                bval = arr.ravel()[bflat]
-                keep = bval != nullval
-                bflat, bval = bflat[keep], bval[keep]
-                if bflat.size:
-                    bgid = gid_of_root[roots[run_of_px[bflat]]]
-                    z = np.zeros(bflat.size, dtype=np.int64)
-                    border_frames.append(pd.DataFrame({
-                        "kind": np.ones(bflat.size, dtype=np.int64),
-                        "gid": bgid,
-                        "value": bval.astype(np.int64),
-                        "n_px": z, "minr": z, "minc": z, "maxr": z,
-                        "maxc": z, "min_gidx": z,
-                        "grow": g0r + bflat // xsz,
-                        "gcol": g0c + bflat % xsz,
-                    }))
-            cols = [
-                "kind", "gid", "value", "n_px", "minr", "minc", "maxr", "maxc",
-                "min_gidx", "grow", "gcol",
-            ]
-            frames = [pd.DataFrame(out, columns=cols)] + border_frames
-            yield pd.concat(frames, ignore_index=True) if border_frames else frames[0]
-
+                runs, run_gid, _, (bgid, bval, grow, gcol) = _tile_gids(
+                    arr, nullval, g0r, g0c, W)
+                if runs.size == 0:
+                    continue
+                order = np.argsort(run_gid, kind="stable")
+                g, (rr, c0, c1, v) = run_gid[order], runs[order].T
+                first = np.flatnonzero(np.r_[True, g[1:] != g[:-1]])
+                z = np.zeros(first.size, np.int64)
+                frames.append(pd.DataFrame({
+                    "band": int(t.band), "kind": z, "gid": g[first],
+                    "value": v[first], "n_px": np.add.reduceat(c1 - c0, first),
+                    "minr": g0r + np.minimum.reduceat(rr, first),
+                    "minc": g0c + np.minimum.reduceat(c0, first),
+                    "maxr": g0r + np.maximum.reduceat(rr, first),
+                    "maxc": g0c + np.maximum.reduceat(c1, first) - 1,
+                    "grow": z, "gcol": z,
+                }))
+                z = np.zeros(bgid.size, np.int64)
+                frames.append(pd.DataFrame({
+                    "band": int(t.band), "kind": z + 1, "gid": bgid,
+                    "value": bval, "n_px": z, "minr": z, "minc": z,
+                    "maxr": z, "maxc": z, "grow": grow, "gcol": gcol,
+                }))
+            yield (pd.concat(frames, ignore_index=True)[cols] if frames
+                   else pd.DataFrame(columns=cols))
 
     return work
 
 
-def _merge_border_gids(borders: DataFrame) -> DataFrame:
+def _with_region_ids(rows: DataFrame, borders: DataFrame) -> DataFrame:
     """Cross-tile gid merge shared by label_regions / region_outlines:
-    join border-pixel rows (gid, value, grow, gcol) against themselves
-    on down/right adjacency with equal value, then run the alternating
-    star connected-components over the resulting gid pairs. Returns
-    (doc_id=gid, cluster_id) — cluster_id is the min gid of the merged
-    region, which (gids being min global pixel indices) IS the
-    canonical region_id."""
+    join border rows (band, gid, value, grow, gcol) against themselves
+    on down/right adjacency with equal band and value, run the
+    alternating-star connected-components over the resulting gid pairs
+    — node ids are (band, gid), so bands never merge — and add
+    ``region_id`` to ``rows`` (keyed by band, gid): the min gid of the
+    merged region, which (gids being min global pixel indices) IS the
+    canonical region_id; a gid on no cross-tile edge keeps its own."""
     from .dedup import connected_components
 
-    b2 = borders.select(
-        F.col("gid").alias("gid_b"), F.col("value").alias("value_b"),
-        F.col("grow").alias("grow_b"), F.col("gcol").alias("gcol_b"),
-    )
+    b2 = borders.select(*[F.col(c).alias(f"{c}_b") for c in borders.columns])
+    same = (F.col("band_b") == F.col("band")) & (F.col("value_b") == F.col("value"))
     down = borders.join(
-        b2,
-        (F.col("grow_b") == F.col("grow") + 1)
-        & (F.col("gcol_b") == F.col("gcol"))
-        & (F.col("value_b") == F.col("value")),
-    )
+        b2, same & (F.col("grow_b") == F.col("grow") + 1) & (F.col("gcol_b") == F.col("gcol")))
     right = borders.join(
-        b2,
-        (F.col("gcol_b") == F.col("gcol") + 1)
-        & (F.col("grow_b") == F.col("grow"))
-        & (F.col("value_b") == F.col("value")),
-    )
+        b2, same & (F.col("gcol_b") == F.col("gcol") + 1) & (F.col("grow_b") == F.col("grow")))
     edges = (
         down.unionByName(right)
         .where(F.col("gid") != F.col("gid_b"))
-        .select("gid", "gid_b")
+        .select(
+            F.struct("band", "gid").alias("u"),
+            F.struct("band", F.col("gid_b").alias("gid")).alias("v"),
+        )
         .distinct()
     )
-    return connected_components(edges, "gid", "gid_b")
+    cc = connected_components(edges, "u", "v").select(
+        F.col("doc_id.band").alias("band"), F.col("doc_id.gid").alias("gid"),
+        F.col("cluster_id.gid").alias("_root"),
+    )
+    return rows.join(cc, on=["band", "gid"], how="left").withColumn(
+        "region_id", F.coalesce(F.col("_root"), F.col("gid"))
+    ).drop("_root")
 
 
 def label_regions(
@@ -562,37 +571,32 @@ def label_regions(
     that resolves duplicate clusters, then a partial-algebra roll-up.
 
     Scale shape: the pixel payload is touched ONCE (one mapInPandas
-    over tiles); everything after operates on per-root partial rows and
-    border-pixel rows (O(perimeter), not O(area)), so a region spanning
-    thousands of tiles merges through the O(|E|)-per-round CC, never by
-    moving pixels.
+    over tiles, packed by pixels.ingest first); everything after
+    operates on per-region partial rows and border-pixel rows
+    (O(perimeter), not O(area)), so a region spanning thousands of
+    tiles merges through the O(|E|)-per-round CC, never by moving
+    pixels. Each band is labeled on its own (band = 1 when the column
+    is absent).
 
-    Returns (region_id, value, n_px, min_row, min_col, max_row,
+    Returns (band, region_id, value, n_px, min_row, min_col, max_row,
     max_col) with ``region_id`` = the region's minimum global pixel
     index (row * grid_ncols + col) — canonical across any tiling.
     """
+    from ..pixels import ingest
+
     work = make_label_work_fn(int(grid.ncols), int(blocksize), nullval)
+    band = F.col("band") if "band" in tiles.columns else F.lit(1)
+    w = ingest(tiles.select(
+        band.cast("int").alias("band"), "tile_row", "tile_col", "ysize", "xsize", "pixels"
+    )).mapInPandas(work, LABEL_WORK_SCHEMA).localCheckpoint(eager=True)
 
-    w = tiles.select(
-        "tile_row", "tile_col", "ysize", "xsize", "pixels"
-    ).mapInPandas(work, LABEL_WORK_SCHEMA).localCheckpoint(eager=True)
-
-    partials = w.where(F.col("kind") == 0)
-    borders = w.where(F.col("kind") == 1).select("gid", "value", "grow", "gcol")
-    cc = _merge_border_gids(borders)
-    merged = partials.join(
-        cc.withColumnRenamed("doc_id", "gid"), on="gid", how="left"
-    ).withColumn("_region", F.coalesce(F.col("cluster_id"), F.col("gid")))
-    return (
-        merged.groupBy("_region")
-        .agg(
-            F.min("min_gidx").cast("long").alias("region_id"),
-            F.first("value").cast("int").alias("value"),
-            F.sum("n_px").cast("long").alias("n_px"),
-            F.min("minr").cast("long").alias("min_row"),
-            F.min("minc").cast("long").alias("min_col"),
-            F.max("maxr").cast("long").alias("max_row"),
-            F.max("maxc").cast("long").alias("max_col"),
-        )
-        .drop("_region")
+    borders = w.where(F.col("kind") == 1).select("band", "gid", "value", "grow", "gcol")
+    merged = _with_region_ids(w.where(F.col("kind") == 0), borders)
+    return merged.groupBy("band", "region_id").agg(
+        F.first("value").cast("int").alias("value"),
+        F.sum("n_px").cast("long").alias("n_px"),
+        F.min("minr").cast("long").alias("min_row"),
+        F.min("minc").cast("long").alias("min_col"),
+        F.max("maxr").cast("long").alias("max_row"),
+        F.max("maxc").cast("long").alias("max_col"),
     )

@@ -7,10 +7,14 @@ regions; this module emits each region's boundary RINGS — one outer
 ring plus any holes — as canonical vertex sequences, fully
 distributed:
 
-1. **Halo exchange** (one shuffle, O(perimeter) strip rows): every
-   tile sends its 4 border lines + 4 corner pixels to its neighbors,
-   so each tile can evaluate boundary cracks and turn decisions on its
-   seams without seeing neighbor tiles' pixel payloads.
+1. **Halo exchange** — focal's, reused as is (``focal._emit_fragments``
+   with radius 1; one shuffle, O(perimeter) strip rows): every tile
+   sends its 4 border lines + 4 corner pixels to its neighbors as
+   JVM-side slices of its packed payload, keyed by band, so each tile
+   can evaluate boundary cracks and turn decisions on its seams
+   without seeing neighbor tiles' pixel payloads. One
+   ``applyInArrow`` group per (band, tile) gets its nullval-padded
+   array from ``focal._assemble_arrow``.
 2. **Per-tile crack tracing, vectorized** (one pixel pass): boundary
    *edges* are the unit pixel-sides where the interior value changes,
    oriented interior-on-RIGHT (outer rings clockwise in screen
@@ -26,8 +30,11 @@ distributed:
    pass: gids merge via the border-row CC, rings form as cycles in the
    segment->successor permutation — found with the identical
    alternating-star connected-components over (seg_key, succ_key)
-   pairs, O(|segments|) rows per round.
-4. **Per-ring assembly**: one ``applyInPandas`` group per ring walks
+   pairs, O(|segments|) rows per round. Both id spaces are keyed by
+   (band, id), so bands never merge.
+4. **Per-ring assembly** (the module's only pandas group — per ring,
+   after the halo exchange has done its work): one ``applyInPandas``
+   group per ring walks
    its (collapsed) segments in successor order — O(#turns) per ring,
    never O(perimeter pixels) — merges collinear seam joints, and
    canonicalizes: vertices rotated to start at the lexicographically
@@ -67,58 +74,15 @@ _INT_C = [0, -1, -1, 0]
 _EXT_R = [-1, 0, 0, -1]
 _EXT_C = [0, 0, -1, -1]
 
-HALO_SCHEMA = (
-    "tile_row int, tile_col int, part int, ysize int, xsize int, "
-    "pixels array<int>"
-)
-
 OUTLINE_WORK_SCHEMA = (
-    "kind int, seg_key long, succ_key long, gid long, value int, "
-    "fr long, fc long, tr long, tc long, n_edges int"
+    "band int, kind int, seg_key long, succ_key long, gid long, value int, "
+    "fr long, fc long, n_edges int"
 )
 
 RING_SCHEMA = (
-    "region_id long, start_r long, start_c long, n_vertices int, "
+    "band int, region_id long, start_r long, start_c long, n_vertices int, "
     "is_hole int, perim long, ring_hash string"
 )
-
-
-def make_halo_emit_fn():
-    """mapInPandas kernel: re-key every tile's border strips to the
-    neighbor tiles that need them as halo, alongside the tile's own
-    core row. O(perimeter) strip payload per tile."""
-    import numpy as np
-    import pandas as pd
-
-    def emit(batches):
-        for pdf in batches:
-            rows = []
-            for t in pdf.itertuples(index=False):
-                arr = np.asarray(t.pixels, np.int32).reshape(int(t.ysize), int(t.xsize))
-                tr, tc = int(t.tile_row), int(t.tile_col)
-                ys, xs = arr.shape
-                rows.append((tr, tc, 0, ys, xs, arr.ravel().tolist()))
-                strips = [
-                    (tr + 1, tc, 1, arr[-1, :]),      # their top halo
-                    (tr - 1, tc, 2, arr[0, :]),       # their bottom halo
-                    (tr, tc + 1, 3, arr[:, -1]),      # their left halo
-                    (tr, tc - 1, 4, arr[:, 0]),       # their right halo
-                    (tr + 1, tc + 1, 5, arr[-1:, -1].ravel()),  # up-left px
-                    (tr + 1, tc - 1, 6, arr[-1:, 0].ravel()),   # up-right px
-                    (tr - 1, tc + 1, 7, arr[:1, -1].ravel()),   # down-left px
-                    (tr - 1, tc - 1, 8, arr[:1, 0].ravel()),    # down-right px
-                ]
-                for dtr, dtc, part, data in strips:
-                    if dtr < 0 or dtc < 0:
-                        continue
-                    rows.append((dtr, dtc, part, ys, xs, data.tolist()))
-            yield pd.DataFrame(
-                rows,
-                columns=["tile_row", "tile_col", "part", "ysize", "xsize",
-                         "pixels"],
-            )
-
-    return emit
 
 
 def _tile_edges(H, nullval):
@@ -150,94 +114,46 @@ def _tile_edges(H, nullval):
     return a, b, d, val, int_flat
 
 
-def make_outline_work_fn(W: int, nrows: int, bs: int, nullval: int):
-    """The per-tile tracing kernel: assemble the halo, enumerate
-    boundary edges, resolve every edge's successor from the 2x2 block
-    at its end vertex (right-turn preference), collapse collinear runs
-    to segments, and emit segment rows (kind 0) plus border-pixel rows
-    (kind 1, for the cross-tile gid merge). Pure array ops — no loop
-    over pixels or edges."""
+def make_outline_work_fn(W: int, bs: int, nullval: int):
+    """The per-tile tracing kernel, grouped by (band, tile) over focal's
+    halo fragments: assemble the padded tile (``_assemble_arrow``),
+    enumerate boundary edges, resolve every edge's successor from the
+    2x2 block at its end vertex (right-turn preference), collapse
+    collinear runs to segments, and emit segment rows (kind 0) plus
+    border-pixel rows (kind 1, for the cross-tile gid merge) as one
+    Arrow table. Pure array ops — no loop over pixels or edges."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
 
-    from .geometry import _label_tile_runs
+    from .focal import _assemble_arrow
+    from .geometry import _tile_gids
 
+    schema = to_arrow_schema(_parse_datatype_string(OUTLINE_WORK_SCHEMA))
     vstride = W + 2  # vertex grid is (nrows+1) x (ncols+1)
 
     def encode(gr, gc, d):
         return (gr * vstride + gc) * 4 + d
 
-    def work(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        tr, tc = int(key[0]), int(key[1])
-        core = pdf[pdf["part"] == 0]
-        if core.empty:
-            return pd.DataFrame(
-                columns=["kind", "seg_key", "succ_key", "gid", "value",
-                         "fr", "fc", "tr", "tc", "n_edges"])
-        ct = core.iloc[0]
-        ys, xs = int(ct.ysize), int(ct.xsize)
-        H = np.full((ys + 2, xs + 2), nullval, np.int32)
-        H[1:-1, 1:-1] = np.asarray(ct.pixels, np.int32).reshape(ys, xs)
-        for s in pdf[pdf["part"] != 0].itertuples(index=False):
-            data = np.asarray(s.pixels, np.int32)
-            p = int(s.part)
-            if p == 1:
-                H[0, 1:1 + data.size] = data
-            elif p == 2:
-                H[-1, 1:1 + data.size] = data
-            elif p == 3:
-                H[1:1 + data.size, 0] = data
-            elif p == 4:
-                H[1:1 + data.size, -1] = data
-            elif p == 5:
-                H[0, 0] = data[0]
-            elif p == 6:
-                H[0, -1] = data[0]
-            elif p == 7:
-                H[-1, 0] = data[0]
-            elif p == 8:
-                H[-1, -1] = data[0]
-        arr = H[1:-1, 1:-1]
+    def work(key, tbl):
+        got = _assemble_arrow(tbl, nullval)
+        if got is None:  # off-grid fragments: no center tile
+            return schema.empty_table()
+        band, tr, tc = (int(k.as_py() if hasattr(k, "as_py") else k) for k in key)
+        _, _, H = got
         g0r, g0c = tr * bs, tc * bs
-
-        roots, runs, run_of_px = _label_tile_runs(arr, nullval)
-        frames = []
-        cols = ["kind", "seg_key", "succ_key", "gid", "value",
-                "fr", "fc", "tr", "tc", "n_edges"]
-        if roots.size == 0:
-            return pd.DataFrame(columns=cols)
-
-        gid_of_root = np.zeros(roots.size, dtype=np.int64)
-        for root in np.unique(roots):
-            m = roots == root
-            rr, rc0 = runs[m, 0], runs[m, 1]
-            gid_of_root[int(root)] = int(((g0r + rr) * W + g0c + rc0).min())
-
-        # border-pixel rows for the cross-tile gid merge (same shape
-        # as the label_regions border machinery)
-        bflat = np.unique(np.concatenate([
-            np.arange(xs, dtype=np.int64),
-            (ys - 1) * xs + np.arange(xs, dtype=np.int64),
-            np.arange(ys, dtype=np.int64) * xs,
-            np.arange(ys, dtype=np.int64) * xs + xs - 1,
-        ]))
-        bval = arr.ravel()[bflat]
-        keep = bval != nullval
-        bflat, bval = bflat[keep], bval[keep]
-        if bflat.size:
-            z = np.zeros(bflat.size, dtype=np.int64)
-            frames.append(pd.DataFrame({
-                "kind": np.ones(bflat.size, np.int64),
-                "seg_key": z, "succ_key": z,
-                "gid": gid_of_root[roots[run_of_px[bflat]]],
-                "value": bval.astype(np.int64),
-                "fr": g0r + bflat // xs, "fc": g0c + bflat % xs,
-                "tr": z, "tc": z, "n_edges": z,
-            }))
+        _, run_gid, run_of_px, (bgid, bval, grow, gcol) = _tile_gids(
+            H[1:-1, 1:-1], nullval, g0r, g0c, W)
+        z = np.zeros(bgid.size, np.int64)
+        parts = [{
+            "kind": z + 1, "seg_key": z, "succ_key": z, "gid": bgid,
+            "value": bval, "fr": grow, "fc": gcol, "n_edges": z,
+        }]
 
         a, b, d, val, int_flat = _tile_edges(H, nullval)
         if a.size:
-            gid = gid_of_root[roots[run_of_px[int_flat]]]
+            gid = run_gid[run_of_px[int_flat]]
             ga, gb = g0r + a, g0c + b
             key_arr = encode(ga, gb, d)
             # successor: end vertex + [right, straight, left] preference
@@ -274,19 +190,17 @@ def make_outline_work_fn(W: int, nrows: int, bs: int, nullval: int):
                           & (succ_s[:-1] == key_s[1:]))
             first = np.flatnonzero(start)
             last = np.r_[first[1:], a.size] - 1
-            er_s = ga_s[last] + np.take(_DR, d_s[last])
-            ec_s = gb_s[last] + np.take(_DC, d_s[last])
-            frames.append(pd.DataFrame({
+            parts.append({
                 "kind": np.zeros(first.size, np.int64),
                 "seg_key": key_s[first], "succ_key": succ_s[last],
                 "gid": gid_s[first], "value": val_s[first],
                 "fr": ga_s[first], "fc": gb_s[first],
-                "tr": er_s, "tc": ec_s,
                 "n_edges": (last - first + 1),
-            }))
-        if not frames:
-            return pd.DataFrame(columns=cols)
-        return pd.concat(frames, ignore_index=True)[cols]
+            })
+        cols = {c: np.concatenate([p[c] for p in parts]) for c in parts[0]}
+        n = cols["kind"].size
+        return pa.Table.from_pydict(
+            {"band": np.full(n, band, np.int32), **cols}, schema=schema)
 
     return work
 
@@ -333,6 +247,7 @@ def _assemble_rings(pdf: pd.DataFrame) -> pd.DataFrame:
     ring_hash = hashlib.md5(
         ";".join(f"{r},{c}" for r, c in keep).encode()).hexdigest()[:16]
     return pd.DataFrame([{
+        "band": int(pdf["band"].iloc[0]),
         "region_id": int(pdf["region_id"].iloc[0]),
         "start_r": keep[0][0], "start_c": keep[0][1],
         "n_vertices": len(keep),
@@ -350,49 +265,49 @@ def region_outlines(
 ) -> DataFrame:
     """Distributed boundary-ring extraction for 4-connected
     equal-value regions (see module docstring for the plan shape).
+    Each band is traced on its own (band = 1 when the column is
+    absent); ``array<int>`` tiles are packed on entry (pixels.ingest,
+    inside focal's fragment emitter).
 
-    Returns (region_id, ring_idx, is_hole, n_vertices, perim,
+    Returns (band, region_id, ring_idx, is_hole, n_vertices, perim,
     start_r, start_c, ring_hash): ``region_id`` matches
     ``label_regions`` (min global pixel index); ``ring_idx`` 0 is the
     outer ring, holes follow ordered by canonical start vertex;
     ``ring_hash`` is the md5 of the canonical vertex sequence."""
     from .dedup import connected_components
-    from .geometry import _merge_border_gids
+    from .focal import _emit_fragments
+    from .geometry import _with_region_ids
 
-    W = int(grid.ncols)
-    halo = tiles.select(
-        "tile_row", "tile_col", "ysize", "xsize", "pixels"
-    ).mapInPandas(make_halo_emit_fn(), HALO_SCHEMA)
-    work = make_outline_work_fn(W, int(grid.nrows), int(blocksize), nullval)
-    w = halo.groupBy("tile_row", "tile_col").applyInPandas(
+    work = make_outline_work_fn(int(grid.ncols), int(blocksize), nullval)
+    w = _emit_fragments(tiles).groupBy("band", "tile_row", "tile_col").applyInArrow(
         work, OUTLINE_WORK_SCHEMA
     ).localCheckpoint(eager=True)
 
     borders = w.where(F.col("kind") == 1).select(
-        "gid", "value", F.col("fr").alias("grow"), F.col("fc").alias("gcol"))
-    gid_cc = _merge_border_gids(borders)
-    segs = w.where(F.col("kind") == 0).join(
-        gid_cc.withColumnRenamed("doc_id", "gid"), on="gid", how="left"
-    ).withColumn("region_id", F.coalesce(F.col("cluster_id"), F.col("gid")))
+        "band", "gid", "value", F.col("fr").alias("grow"), F.col("fc").alias("gcol"))
+    segs = _with_region_ids(w.where(F.col("kind") == 0), borders)
 
+    # rings are the cycles of the segment -> successor permutation;
+    # (band, seg_key) node ids keep bands apart, and a ring's key is
+    # its min seg_key
     ring_cc = connected_components(
-        segs.select("seg_key", F.col("succ_key").alias("succ")),
-        "seg_key", "succ",
-    ).withColumnRenamed("doc_id", "seg_key") \
-     .withColumnRenamed("cluster_id", "ring_id")
-    ringed = segs.join(ring_cc, on="seg_key", how="left").withColumn(
-        "ring_id", F.coalesce(F.col("ring_id"), F.col("seg_key")))
+        segs.select(F.struct("band", "seg_key").alias("u"),
+                    F.struct("band", F.col("succ_key").alias("seg_key")).alias("v")),
+        "u", "v",
+    ).select(F.col("doc_id.band").alias("band"), F.col("doc_id.seg_key").alias("seg_key"),
+             F.col("cluster_id.seg_key").alias("ring_key"))
+    ringed = segs.join(ring_cc, on=["band", "seg_key"], how="left").withColumn(
+        "ring_key", F.coalesce(F.col("ring_key"), F.col("seg_key")))
 
     rings = ringed.select(
-        "ring_id", "region_id", "seg_key", "succ_key",
-        "fr", "fc", "n_edges",
-    ).groupBy("ring_id").applyInPandas(_assemble_rings, RING_SCHEMA)
+        "band", "ring_key", "region_id", "seg_key", "succ_key", "fr", "fc", "n_edges",
+    ).groupBy("band", "ring_key").applyInPandas(_assemble_rings, RING_SCHEMA)
 
-    win = Window.partitionBy("region_id").orderBy(
+    win = Window.partitionBy("band", "region_id").orderBy(
         "is_hole", "start_r", "start_c")
     return rings.withColumn(
         "ring_idx", (F.row_number().over(win) - 1).cast("int")
     ).select(
-        "region_id", "ring_idx", "is_hole", "n_vertices", "perim",
+        "band", "region_id", "ring_idx", "is_hole", "n_vertices", "perim",
         "start_r", "start_c", "ring_hash",
     )

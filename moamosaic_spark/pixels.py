@@ -2,7 +2,8 @@
 
 Every pixel payload of the engine (the ``blocks`` table, the work
 relation and relayout table feeding the stitch, the stitch output,
-reprojected blocks, focal halo fragments) is ONE ``binary`` value:
+reprojected blocks, the halo fragments shared by the focal and region
+kernels, the tiles ``label_regions`` labels) is ONE ``binary`` value:
 row-major uint16 little-endian, 2 bytes/px (SURVEY §7.4: the uint16
 rasters the reference targets). Half the bytes of an int32 array on
 every scan, shuffle and spill, and one flat buffer across the Python
@@ -17,7 +18,9 @@ This module owns:
 * ``ingest``, the ONE place an ``array<int>`` payload is accepted: it
   passes a binary column through and packs an integer-array column once,
   JVM-side, with the range-guarded ``pack_u2``. Every public entry that
-  takes pixels calls it first, so nothing below sees a second layout;
+  takes pixels calls it first, so nothing below sees a second layout
+  (the stitch, reproject, focal/terrain and region kernels all read
+  payloads through ``decode`` / ``decode_column``);
 * the JVM-side column expressions (pack/unpack/repeat) used at
   generation and correctness-query boundaries, never in the hot path.
 

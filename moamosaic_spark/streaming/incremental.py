@@ -251,7 +251,6 @@ def process_batch(
     else:
         res = do_mosaic(spark, all_fp, blocks, config, grid=grid, tile_keys=touched)
     out_tiles = res.tiles.withColumn("part", F.pmod(F.col("tile_row"), F.lit(SINK_PARTS)))
-    n = out_tiles.count()
 
     # Sink routing (catalog.py seam): with ``sink_table`` set AND the
     # Iceberg runtime on the classpath, the touched tiles go through a
@@ -266,6 +265,10 @@ def process_batch(
         merged_natively = merge_touched_tiles(spark, out_tiles, sink_table)
     if not merged_natively:
         _rewrite_parts(spark, f"{out_path}/tiles", out_tiles, touched)
+    # every (band, touched tile) is one group of the stitch (its
+    # placeholder row), so the small key set counts the tiles written
+    # without running the stitch again for a count()
+    n = touched.count() * grid.n_bands
     n_derived = 0
     if derived_focal:
         n_derived = _update_derived_focal(spark, out_path, touched, grid)

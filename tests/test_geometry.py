@@ -290,6 +290,32 @@ def test_label_regions_cross_tile_merge(spark):
     }, got
 
 
+def test_label_regions_bands_stay_apart(spark):
+    """A 900-px square present in both bands of one tile relation is
+    two regions of 900 px, one per band — never one of 1800."""
+    import numpy as np
+
+    from moamosaic_spark.functions.geometry import label_regions
+    from moamosaic_spark.plans.grid import OutputGrid
+
+    grid = OutputGrid(x_min=0.0, y_max=40.0, x_res=1.0, y_res=1.0,
+                      ncols=40, nrows=40, n_bands=2, nullval=0,
+                      dtype="uint16", projection="EPSG:32756")
+    full = np.zeros((40, 40), np.int32)
+    full[5:35, 5:35] = 3       # crosses both seams
+    rows = []
+    for band in (1, 2):
+        for tr in range(2):
+            for tc in range(2):
+                sub = full[tr * 20:(tr + 1) * 20, tc * 20:(tc + 1) * 20]
+                rows.append((band, tr, tc, 20, 20, [int(x) for x in sub.ravel()]))
+    tiles = spark.createDataFrame(
+        rows, "band int, tile_row int, tile_col int, ysize int, xsize int, "
+              "pixels array<int>")
+    got = sorted(tuple(r) for r in label_regions(tiles, grid, 20).collect())
+    assert got == [(b, 5 * 40 + 5, 3, 900, 5, 5, 34, 34) for b in (1, 2)], got
+
+
 def test_zonal_stats_both_layouts(spark):
     """zonal_stats over hand-built tiles: per-zone count/sum/min/max
     with the null mask applied, identical for binary mosaic payloads
@@ -490,13 +516,14 @@ def test_label_border_emission_scales_with_perimeter():
     import pandas as pd
 
     from moamosaic_spark.functions.geometry import make_label_work_fn
+    from moamosaic_spark.pixels import encode
 
     work = make_label_work_fn(100000, 512, 0)
 
     def tile(ysz, xsz):
         return pd.DataFrame([{
-            "tile_row": 0, "tile_col": 0, "ysize": ysz, "xsize": xsz,
-            "pixels": np.ones(ysz * xsz, dtype=np.int32),
+            "band": 1, "tile_row": 0, "tile_col": 0, "ysize": ysz, "xsize": xsz,
+            "pixels": encode(np.ones(ysz * xsz, dtype=np.int32)),
         }])
 
     square, thin = tile(512, 512), tile(8, 32768)

@@ -345,3 +345,31 @@ def test_derived_focal_backfills_on_activation(spark, tmp_path):
     assert set(got) == set(full)
     for k in full:
         np.testing.assert_array_equal(got[k], full[k], err_msg=f"tile {k}")
+
+
+def test_batch_stitches_once(spark, tmp_path):
+    """A micro-batch runs the stitch kernel in ONE driver action, the
+    sink's write: tiles_written comes from the small touched-key set,
+    not from a count() that stitches the tiles again."""
+    rasters = synth.golden_pair(128, 128)
+    fp_meta = to_footprints(spark, synth.footprints_pdf(rasters))
+    blocks = to_blocks(spark, synth.blocks_pdf(rasters, 64))
+    docs_pdf = synth.documents_pdf(rasters)
+    cfg = MosaicConfig(blocksize=64, src_blocksize=64, with_overviews=False)
+    out = str(tmp_path / "inc_once")
+    b0 = to_documents(spark, docs_pdf.iloc[:len(docs_pdf) // 2])
+
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+
+    def executions():
+        bus.waitUntilEmpty()
+        execs = store.executionsList()
+        return [execs.apply(i) for i in range(execs.size())]
+
+    before = max((e.executionId() for e in executions()), default=-1)
+    r0 = process_batch(b0, 0, spark, fp_meta, blocks, out, cfg)
+    plans = [e.physicalPlanDescription() for e in executions()
+             if e.executionId() > before]
+    assert sum("FlatMapGroupsInArrow" in p for p in plans) == 1, len(plans)
+    assert r0["tiles_written"] == spark.read.parquet(f"{out}/tiles").count() > 0

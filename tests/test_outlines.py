@@ -67,8 +67,9 @@ def _engine_of(spark, full, bs):
     grid = OutputGrid(x_min=0.0, y_max=float(H), x_res=1.0, y_res=1.0,
                       ncols=W, nrows=H, n_bands=1, nullval=0,
                       dtype="uint16", projection="EPSG:32756")
-    df = region_outlines(_tiles_of(spark, full, bs), grid, bs)
-    return sorted(tuple(r) for r in df.collect())
+    rows = region_outlines(_tiles_of(spark, full, bs), grid, bs).collect()
+    assert {r.band for r in rows} <= {1}  # no band column: band 1
+    return sorted(tuple(r)[1:] for r in rows)
 
 
 def test_donut_hole_crosses_tiles(spark):
@@ -151,3 +152,31 @@ def test_perimeter_accounting(spark):
     e = _engine_of(spark, f, 10)
     # outer 14x14 square: 56 cracks; hole 4x4: 16 cracks
     assert [(x[4], x[2]) for x in e] == [(56, 0), (16, 1)]
+
+
+def test_bands_trace_separately(spark):
+    """Two bands over the same tiles are traced on their own: band 1's
+    donut keeps one outer ring of perimeter 120 (not four seam-split
+    rings) plus its hole, and band 2's stripe is not dropped."""
+    donut = np.zeros((40, 40), np.int32)
+    donut[5:35, 5:35] = 3
+    donut[12:28, 12:28] = 0
+    stripe = np.zeros((40, 40), np.int32)
+    stripe[18:22, :] = 4
+    rows = []
+    for band, full in ((1, donut), (2, stripe)):
+        for tr in range(2):
+            for tc in range(2):
+                sub = full[tr * 20:(tr + 1) * 20, tc * 20:(tc + 1) * 20]
+                rows.append((band, tr, tc, 20, 20, [int(x) for x in sub.ravel()]))
+    tiles = spark.createDataFrame(
+        rows, "band int, tile_row int, tile_col int, ysize int, xsize int, "
+              "pixels array<int>")
+    grid = OutputGrid(x_min=0.0, y_max=40.0, x_res=1.0, y_res=1.0,
+                      ncols=40, nrows=40, n_bands=2, nullval=0,
+                      dtype="uint16", projection="EPSG:32756")
+    got = sorted(tuple(r) for r in region_outlines(tiles, grid, 20).collect())
+    want = sorted([(1,) + t for t in _truth_of(donut)]
+                  + [(2,) + t for t in _truth_of(stripe)])
+    assert got == want
+    assert [(x[0], x[3], x[5]) for x in got] == [(1, 0, 120), (1, 1, 64), (2, 0, 88)]

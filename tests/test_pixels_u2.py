@@ -237,10 +237,13 @@ def test_pixel_format_lives_in_one_module():
     """Fence for the one-format design: the payload's numpy dtype, the
     layout test and the per-layout schema twins must not reappear
     outside pixels.py — every other module goes through its names
-    (PIXEL_TYPE, PIXEL_BYTES, decode/encode, ingest). driver_contract.py
-    needs no exemption: its SQL strings never spell the dtype."""
+    (PIXEL_TYPE, PIXEL_BYTES, decode/encode, ingest). Nor may a kernel
+    read a payload as an integer array (``np.asarray(row.pixels, ...)``
+    is the array<int> layout; a packed payload goes through decode).
+    driver_contract.py needs no exemption: its SQL strings never spell
+    the dtype."""
     pkg = pathlib.Path(__file__).resolve().parents[1] / "moamosaic_spark"
-    banned = re.compile(r"<u2|pixels_are_binary|\w+_SCHEMA_U2\b")
+    banned = re.compile(r"<u2|pixels_are_binary|\w+_SCHEMA_U2\b|asarray\(.*\.pixels\b")
     hits = [
         f"{path.relative_to(pkg)}:{i}: {line.strip()}"
         for path in sorted(pkg.rglob("*.py"))
@@ -257,6 +260,9 @@ def test_array_input_out_of_range_raises(spark, bad):
     pack_u2: a value outside uint16 fails the job instead of wrapping,
     at every entry that takes pixels."""
     from moamosaic_spark.functions.focal import focal_stats
+    from moamosaic_spark.functions.geometry import label_regions
+    from moamosaic_spark.functions.outlines import region_outlines
+    from moamosaic_spark.plans.grid import OutputGrid
     from moamosaic_spark.reproject import resample_blocks
 
     rasters = synth.golden_pair(64, 64)
@@ -278,6 +284,32 @@ def test_array_input_out_of_range_raises(spark, bad):
     )
     with pytest.raises(Exception, match="outside uint16"):
         focal_stats(tiles).collect()
+    grid = OutputGrid(x_min=0.0, y_max=64.0, x_res=1.0, y_res=1.0,
+                      ncols=64, nrows=64, n_bands=1, nullval=0,
+                      dtype="uint16", projection="EPSG:32756")
+    for region_fn in (label_regions, region_outlines):
+        with pytest.raises(Exception, match="outside uint16"):
+            region_fn(tiles, grid, 32).collect()
+
+
+def test_region_family_reads_packed_tiles(spark):
+    """label_regions and region_outlines over the mosaic's own packed
+    tiles equal the same calls on their array<int> twin (packed on
+    entry by the ingest adaptor)."""
+    from moamosaic_spark.functions.geometry import label_regions
+    from moamosaic_spark.functions.outlines import region_outlines
+
+    rasters = synth.golden_pair(64, 64)
+    fp, bl = _fp_blocks(spark, rasters, sbs=32)
+    res = do_mosaic(spark, fp, bl, MosaicConfig(blocksize=32, src_blocksize=32,
+                                                with_overviews=False))
+    packed = res.tiles
+    assert packed.schema["pixels"].dataType == T.BinaryType()
+    twin = packed.withColumn("pixels", unpack_u2(F.col("pixels")))
+    for region_fn in (label_regions, region_outlines):
+        got = sorted(tuple(r) for r in region_fn(packed, res.grid, 32).collect())
+        want = sorted(tuple(r) for r in region_fn(twin, res.grid, 32).collect())
+        assert got and got == want, region_fn.__name__
 
 
 @pytest.mark.parametrize("route", ["direct", "relayout"])
