@@ -23,3 +23,9 @@ per-row Python anywhere.
 __version__ = "0.1.0"
 
 from .mosaic import MosaicConfig, do_mosaic  # noqa: F401
+from . import session as _session
+
+# once per Python worker process: every later task's import-cache
+# invalidation then skips the archive sub-directories and the jar
+if _session.on_worker():
+    _session.prune_import_caches()

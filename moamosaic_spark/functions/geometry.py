@@ -302,7 +302,8 @@ def zonal_stats(
     xsize, pixels; ``array<int>`` pixels are packed on entry by
     pixels.ingest); ``zone_tiles`` is a zone-id
     raster on the SAME tiling (rasterize_polygons output, zone ids as
-    burn values, 0 = no zone). Scale shape: equi-join on the tile key
+    burn values, 0 = no zone; ``array<int>`` ids, or packed u2 when the
+    ids fit, e.g. after pixels.ingest). Scale shape: equi-join on the tile key
     (zones touch few tiles; mosaic tiles stream), one vectorized
     numpy partial per joined tile via mapInPandas (np.bincount over
     zone ids — no per-pixel Python), then a tiny final aggregation
@@ -311,13 +312,16 @@ def zonal_stats(
     import numpy as np
     import pandas as pd
 
-    from ..pixels import decode, ingest
+    from ..pixels import PIXEL_TYPE, decode, ingest
 
     tiles = ingest(tiles)
     # a multi-band tile relation (MosaicResult.tiles) carries one row
     # per (band, tile): keep band in the group key so bands never mix
     # silently; single-band inputs without the column get band = 1
     band_col = F.col("band") if "band" in tiles.columns else F.lit(1)
+    # zone ids above the packed range stay array<int>: read each layout
+    # as what it is
+    packed_zones = zone_tiles.schema["pixels"].dataType == PIXEL_TYPE
     joined = tiles.select(
         band_col.cast("int").alias("band"),
         "tile_row", "tile_col", F.col("pixels").alias("px_payload"),
@@ -334,7 +338,9 @@ def zonal_stats(
             out = []
             for r in pdf.itertuples(index=False):
                 px = decode(r.px_payload).astype(np.int64)
-                zones = np.asarray(r.zone_payload, dtype=np.int64)
+                zones = (
+                    decode(r.zone_payload) if packed_zones else np.asarray(r.zone_payload)
+                ).astype(np.int64)
                 m = (zones > 0) & (px != nullval)
                 if not m.any():
                     continue

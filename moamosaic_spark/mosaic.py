@@ -532,32 +532,65 @@ def write_mosaic(result: MosaicResult, path: str, partitions: int | None = None)
     The stitched relation feeds three sinks (tiles, overviews, stats);
     persisting it makes the scan+join+stitch run ONCE — the single-pass
     stats+pyramids property the reference gained in v1.0.1
-    (docs/releasenotes.md:12-15)."""
+    (docs/releasenotes.md:12-15). The sinks do not depend on each other,
+    so they run concurrently, one driver thread each, over the persisted
+    relation: the block manager lets one task compute each cached block
+    while the others wait for it. A failing sink raises here once every
+    sink has finished."""
     persisted = result.stitched is not None
     if persisted:
         result.stitched.persist()
     try:
-        _write_mosaic_sinks(result, path, partitions)
+        _run_concurrently(result.tiles.sparkSession, _mosaic_sinks(result, path, partitions))
     finally:
         if persisted:
             result.stitched.unpersist()
 
 
-def _write_mosaic_sinks(result: MosaicResult, path: str, partitions: int | None) -> None:
+def _mosaic_sinks(result: MosaicResult, path: str, partitions: int | None) -> list:
+    """The writes of write_mosaic, one callable per output table."""
     t = result.tiles
     if partitions:
         t = t.repartitionByRange(partitions, "band", "tile_row", "tile_col")
     else:
         t = t.repartitionByRange("band", "tile_row", "tile_col")
-    t.sortWithinPartitions("band", "tile_row", "tile_col").write.mode("overwrite").parquet(
-        f"{path}/tiles"
-    )
+    sinks = [
+        lambda: t.sortWithinPartitions("band", "tile_row", "tile_col")
+        .write.mode("overwrite").parquet(f"{path}/tiles")
+    ]
     if result.levels:
         o = result.overviews.repartitionByRange("level", "band", "tile_row", "tile_col")
-        o.sortWithinPartitions("level", "band", "tile_row", "tile_col").write.mode(
-            "overwrite"
-        ).parquet(f"{path}/overviews")
-    result.stats.coalesce(1).write.mode("overwrite").parquet(f"{path}/stats")
+        sinks.append(
+            lambda: o.sortWithinPartitions("level", "band", "tile_row", "tile_col")
+            .write.mode("overwrite").parquet(f"{path}/overviews")
+        )
+    sinks.append(
+        lambda: result.stats.coalesce(1).write.mode("overwrite").parquet(f"{path}/stats")
+    )
+    return sinks
+
+
+def _run_concurrently(spark: SparkSession, writes: list) -> None:
+    """Run ``writes`` on one thread each and raise the first failure (in
+    list order) once all have finished. Each thread starts with a copy
+    of the caller's job group, description and tags
+    (``inheritable_thread_target``), so its jobs are traced and
+    cancelled with the caller's; a copy each, because a write sets its
+    SQL execution id in its thread's properties."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
+
+    def inherit(w):
+        wrap = inheritable_thread_target(spark)
+        # with pinned threads off (PYSPARK_PIN_THREAD=false) there is
+        # nothing to copy, and pyspark hands the session back
+        return w if wrap is spark else wrap(w)
+
+    with ThreadPoolExecutor(len(writes)) as pool:
+        futures = [pool.submit(inherit(w)) for w in writes]
+    for f in futures:
+        f.result()
 
 
 def write_derived(

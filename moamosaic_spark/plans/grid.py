@@ -144,11 +144,13 @@ def stitch_partitions(
                             ceil(stitch bytes / advisoryPartitionSizeInBytes)))
 
     Every task that reaches the kernel pays a fixed Python-worker
-    set-up before its first group (importlib cache invalidation over
-    the worker's zip path — ~0.3 s per task on 4 cores, against ~5 ms of
-    kernel per 1024² tile), so a task per core, each folding many
-    groups, is the cheapest shape; the bytes term keeps a task's input
-    bounded as the mosaic grows. The stitch bytes are estimated as the
+    set-up before its first group: ~10 ms per task on 4 cores of
+    importlib cache invalidation once the worker's import caches are
+    pruned (session.prune_import_caches; 0.15-0.22 s before), plus the
+    task's own scheduling and Arrow framing, against ~5 ms of kernel per
+    1024² tile. So a task per core, each folding many groups, is the
+    cheapest shape; the bytes term keeps a task's input bounded as the
+    mosaic grows. The stitch bytes are estimated as the
     output canvas (groups x blocksize² x pixels.PIXEL_BYTES): every
     contributor pixel lands in exactly one group, so the input is that
     times the mean overlap depth. ``tile_row_range=(lo, hi)`` counts

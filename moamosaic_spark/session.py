@@ -8,11 +8,25 @@ Tuned for the stitch workload: tile rows are ~64KB-4MB each, so Arrow
 batches are capped at a small record count to bound executor memory
 (SURVEY.md §7.5), and AQE is on for skew splitting and shuffle
 coalescing.
+
+Worker side: PySpark calls ``importlib.invalidate_caches()`` at the
+start of every Python task, and that re-reads the central directory of
+every zip importer the worker holds: one per imported sub-package of
+``pyspark.zip`` and two for the ``spark-core`` jar. The package's first
+import in a worker process prunes those caches once
+(``prune_import_caches``). Measured on 4 cores (PySpark 4.1.2, Python
+3.11, ``local[4]``), median per task: 150-217 ms before the prune,
+9-11 ms after; a 48-task identity ``mapInArrow`` that imports the
+package fell from 2.75-3.02 s to 0.94-0.96 s.
 """
 
 from __future__ import annotations
 
+import os
+import sys
 import tempfile
+import zipfile
+import zipimport
 from pathlib import Path
 
 from pyspark.sql import SparkSession
@@ -56,8 +70,6 @@ def package_zip(pkg_dir: Path, out_dir: Path) -> Path:
     written under a temp name unique to this process, then renamed, so
     concurrent writers never see each other's partial file."""
     import hashlib
-    import os
-    import zipfile
 
     sources = sorted(pkg_dir.rglob("*.py"))
     h = hashlib.sha256(str(pkg_dir).encode())
@@ -99,3 +111,46 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()
+
+
+def prune_import_caches() -> None:
+    """Drop the zip importers that make ``importlib.invalidate_caches()``
+    slow, keeping every module importable.
+
+    - Importers for a sub-directory of an archive (one per imported
+      package inside a zip) leave ``sys.path_importer_cache``: that is a
+      pure cache, and the path hook rebuilds an entry from zipimport's
+      own directory cache when an import needs it again.
+    - Archives on ``sys.path`` that hold no Python (a jar) leave
+      ``sys.path`` and the cache: nothing can be imported from them.
+
+    Archives with Python (this package's zip, ``pyspark.zip``, py4j)
+    stay on ``sys.path``. On clean paths this changes nothing."""
+    cache = sys.path_importer_cache
+    for entry, finder in list(cache.items()):
+        if isinstance(finder, zipimport.zipimporter) and finder.prefix:
+            del cache[entry]
+    for entry in list(sys.path):
+        if os.path.isfile(entry) and zipfile.is_zipfile(entry) and not _holds_python(entry):
+            sys.path.remove(entry)
+            cache.pop(entry, None)
+
+
+def _holds_python(archive: str) -> bool:
+    """Whether ``archive`` has a module in it; an archive that cannot be
+    read is kept, as it would be without the prune."""
+    try:
+        with zipfile.ZipFile(archive) as z:
+            return any(n.endswith((".py", ".pyc")) for n in z.namelist())
+    except (OSError, zipfile.BadZipFile):
+        return True
+
+
+def on_worker() -> bool:
+    """True inside a PySpark Python worker (set before a task's
+    function is unpickled, so before this package's first import)."""
+    try:
+        from pyspark import SparkFiles
+    except ImportError:
+        return False
+    return bool(getattr(SparkFiles, "_is_running_on_worker", False))

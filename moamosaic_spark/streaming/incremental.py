@@ -79,7 +79,12 @@ def _rewrite_parts(spark: SparkSession, path: str, rows: DataFrame, keys: DataFr
     versions of the (tile_row, tile_col) ``keys``) and rewrite only the
     partitions they land in, carrying over those partitions' other
     rows. Dynamic partition overwrite alone would drop untouched tiles
-    that share a partition with touched ones."""
+    that share a partition with touched ones.
+
+    ``rows`` (a stitch) is computed once, up front: the range
+    partitioner's sampling job, the shuffle below it and the ``part``
+    set of the carried-over rows would each run its plan again."""
+    rows = rows.localCheckpoint(eager=True)
     existing = _read_parquet_if_exists(spark, path)
     if existing is not None:
         keep = existing.join(keys, on=["tile_row", "tile_col"], how="left_anti").join(

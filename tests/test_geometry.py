@@ -358,6 +358,36 @@ def test_zonal_stats_both_layouts(spark):
         assert got == want, (schema, got)
 
 
+def test_zonal_stats_packed_zone_tiles(spark):
+    """A packed zone raster (``ingest`` of the array<int> one) gives the
+    same per-zone rows as the array<int> zones; ids above the packed
+    range still work as array<int>."""
+    from moamosaic_spark.functions.geometry import zonal_stats
+    from moamosaic_spark.pixels import ingest
+
+    tiles = spark.createDataFrame(
+        [(1, 0, 0, 2, 2, [10, 20, 0, 40]), (1, 0, 1, 2, 2, [1, 2, 3, 4]),
+         (2, 0, 0, 2, 2, [5, 6, 7, 8])],
+        "band int, tile_row int, tile_col int, ysize int, xsize int, pixels array<int>")
+
+    def zones(ids):
+        return spark.createDataFrame(
+            [(0, 0, 2, 2, ids[:4]), (0, 1, 2, 2, ids[4:])],
+            "tile_row int, tile_col int, ysize int, xsize int, pixels array<int>")
+
+    def rows(zt):
+        return sorted(tuple(r) for r in zonal_stats(tiles, zt, nullval=0).collect())
+
+    ids = [1, 1, 2, 65535, 0, 2, 2, 65535]
+    want = rows(zones(ids))
+    assert want == [(1, 1, 2, 30, 10, 20), (1, 2, 2, 5, 2, 3), (1, 65535, 2, 44, 4, 40),
+                    (2, 1, 2, 11, 5, 6), (2, 2, 1, 7, 7, 7), (2, 65535, 1, 8, 8, 8)]
+    assert rows(ingest(zones(ids))) == want
+    big = [1, 1, 2, 70000, 0, 2, 2, 70000]
+    assert rows(zones(big)) == [r[:1] + (70000,) + r[2:] if r[1] == 65535 else r
+                                for r in want]
+
+
 def test_rasterize_remainder_strip_and_out_of_grid(spark):
     """The last tile absorbs sub-blocksize remainders: a polygon lying
     wholly in the absorbed strip must still burn (the raw floor tile id

@@ -373,3 +373,34 @@ def test_batch_stitches_once(spark, tmp_path):
              if e.executionId() > before]
     assert sum("FlatMapGroupsInArrow" in p for p in plans) == 1, len(plans)
     assert r0["tiles_written"] == spark.read.parquet(f"{out}/tiles").count() > 0
+
+
+def test_batch_computes_its_tiles_once(spark, tmp_path, monkeypatch):
+    """Each micro-batch computes its stitched tiles once: an observation
+    on the rows handed to the tile sink counts every (band, touched
+    tile) once, in the first batch (the sink's range partitioner samples
+    its input) and in a later one (the carried-over rows are chosen by
+    the new rows' ``part`` set)."""
+    from pyspark.sql import Observation, functions as F
+
+    from moamosaic_spark.streaming import incremental
+
+    rasters = synth.golden_pair(128, 128)
+    fp_meta = to_footprints(spark, synth.footprints_pdf(rasters))
+    blocks = to_blocks(spark, synth.blocks_pdf(rasters, 64))
+    docs_pdf = synth.documents_pdf(rasters)
+    cfg = MosaicConfig(blocksize=64, src_blocksize=64, with_overviews=False)
+    out = str(tmp_path / "inc_rows_once")
+    half = len(docs_pdf) // 2
+    rewrite = incremental._rewrite_parts
+    for batch_id, docs in enumerate((docs_pdf.iloc[:half], docs_pdf.iloc[half:])):
+        obs = Observation(f"out_tiles_{batch_id}")
+        monkeypatch.setattr(
+            incremental, "_rewrite_parts",
+            lambda s, path, rows, keys: rewrite(
+                s, path, rows.observe(obs, F.count(F.lit(1)).alias("rows")), keys),
+        )
+        r = process_batch(to_documents(spark, docs), batch_id, spark, fp_meta,
+                          blocks, out, cfg)
+        assert r["tiles_written"] > 0
+        assert obs.get["rows"] == r["tiles_written"], (batch_id, obs.get, r)
