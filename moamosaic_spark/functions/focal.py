@@ -118,26 +118,6 @@ def _emit_fragments(tiles: DataFrame, radius: int = 1) -> DataFrame:
             data.alias("frag"),
         )
 
-    # radius guard rides the always-present self fragment: assert_true
-    # yields NULL when the predicate holds, so coalesce routes through
-    # it without changing the payload
-    guard = F.coalesce(
-        F.assert_true(
-            (ys >= R) & (xs >= R),
-            F.concat(
-                F.lit(f"halo radius {R} exceeds tile dimensions "),
-                ys.cast("string"), F.lit("x"), xs.cast("string"),
-            ),
-        ).cast("binary"),
-        px,
-    )
-    # contiguous slices of THIS tile that the neighbor at (+dy,+dx)
-    # pads with: whole payload, last R rows, first R rows
-    three = F.array(
-        frag_s(0, 0, 0, ys, xs, guard),
-        frag_s(1, 0, 0, r_, xs, px.substr((ys - R) * xs2 + 1, xs2 * R)),
-        frag_s(-1, 0, 0, r_, xs, px.substr(F.lit(1), xs2 * R)),
-    )
     f = F.col("f")
     proj = [
         "band",
@@ -147,36 +127,60 @@ def _emit_fragments(tiles: DataFrame, radius: int = 1) -> DataFrame:
         f.fysize.alias("fysize"), f.fxsize.alias("fxsize"),
         f.frag.alias("frag"),
     ]
-    jvm = src.select(
-        "band", "tile_row", "tile_col", F.explode(three).alias("f")
-    ).select(*proj)
 
-    # strided regions, one output row per source row: side strips span
-    # every row; the top/bottom R-row bands additionally feed the four
-    # corners (their slices are the SAME substr as the side strips).
-    # TWO-LEVEL slicing (the unpack_u2 lesson): exploding the full
-    # payload once per source row would drag O(tile) bytes through the
-    # generate per emitted row (O(tile * rows) churn — observed as GC
-    # death at 1024^2 tiles); instead cut the payload into contiguous
-    # KROWS-row bands first (fan-out ~16, one substr each), then slice
-    # rows off the small band payload — two linear passes total.
+    # ONE generate chain over src for all nine regions (the
+    # _contributor_chunks lesson: a union of two arms reads src, and
+    # runs an unmaterialized input's whole plan, once per arm). Row
+    # bi = -1 carries the whole payload for the contiguous regions;
+    # rows bi >= 0 carry the payload's KROWS-row bands for the strided
+    # ones. TWO-LEVEL slicing (the unpack_u2 lesson): exploding the
+    # full payload once per source row would drag O(tile) bytes through
+    # the generate per emitted row (O(tile * rows) churn — observed as
+    # GC death at 1024^2 tiles); instead cut the payload into
+    # contiguous KROWS-row bands first (fan-out ~16, one substr each),
+    # then slice rows off the small band payload — two linear passes.
     KROWS = 64
-    nb = F.ceil(ys / KROWS).cast("int")
-    bt = F.col("bi") * KROWS
-    bn = F.least(F.lit(KROWS), ys - bt)
+    bi = F.col("bi")
+    bt = bi * KROWS
+    bn = F.when(bi < 0, 1).otherwise(F.least(F.lit(KROWS), ys - bt))
     bands_rel = src.select(
         "band", "tile_row", "tile_col", "ysize", "xsize",
-        F.explode(F.sequence(F.lit(0), nb - 1)).alias("bi"),
+        F.explode(F.sequence(F.lit(-1), F.ceil(ys / KROWS).cast("int") - 1)).alias("bi"),
         "pixels",
     ).select(
-        "band", "tile_row", "tile_col", "ysize", "xsize",
+        "band", "tile_row", "tile_col", "ysize", "xsize", "bi",
         bt.alias("bt"), bn.alias("bn"),
-        px.substr(bt * xs2 + 1, bn * xs2).alias("bpx"),
+        F.when(bi < 0, px).otherwise(px.substr(bt * xs2 + 1, bn * xs2)).alias("bpx"),
     )
+    bpx = F.col("bpx")
+
+    # contiguous slices of THIS tile that the neighbor at (+dy,+dx)
+    # pads with: whole payload, last R rows, first R rows. The radius
+    # guard rides the self fragment: assert_true yields NULL when the
+    # predicate holds, so coalesce routes through it without changing
+    # the payload
+    guard = F.coalesce(
+        F.assert_true(
+            (ys >= R) & (xs >= R),
+            F.concat(
+                F.lit(f"halo radius {R} exceeds tile dimensions "),
+                ys.cast("string"), F.lit("x"), xs.cast("string"),
+            ),
+        ).cast("binary"),
+        bpx,
+    )
+    three = F.array(
+        frag_s(0, 0, 0, ys, xs, guard),
+        frag_s(1, 0, 0, r_, xs, bpx.substr((ys - R) * xs2 + 1, xs2 * R)),
+        frag_s(-1, 0, 0, r_, xs, bpx.substr(F.lit(1), xs2 * R)),
+    )
+    # strided regions, one output row per source row: side strips span
+    # every row; the top/bottom R-row bands additionally feed the four
+    # corners (their slices are the SAME substr as the side strips)
     j = F.col("j")
     rr = F.col("bt") + j
-    right = F.col("bpx").substr((j * xs + xs - R) * PIXEL_BYTES + 1, F.lit(PIXEL_BYTES * R))
-    left = F.col("bpx").substr(j * xs * PIXEL_BYTES + 1, F.lit(PIXEL_BYTES * R))
+    right = bpx.substr((j * xs + xs - R) * PIXEL_BYTES + 1, F.lit(PIXEL_BYTES * R))
+    left = bpx.substr(j * xs * PIXEL_BYTES + 1, F.lit(PIXEL_BYTES * R))
     sides = F.array(
         frag_s(0, F.lit(1), rr, 1, R, right),
         frag_s(0, F.lit(-1), rr, 1, R, left),
@@ -185,18 +189,19 @@ def _emit_fragments(tiles: DataFrame, radius: int = 1) -> DataFrame:
         F.when(rr < R, frag_s(-1, F.lit(1), rr, 1, R, right)),
         F.when(rr < R, frag_s(-1, F.lit(-1), rr, 1, R, left)),
     )
-    strips = (
+    return (
         bands_rel.select(
-            "band", "tile_row", "tile_col", "ysize", "xsize", "bt", "bn", "bpx",
+            "band", "tile_row", "tile_col", "ysize", "xsize", "bi", "bt", "bpx",
             F.explode(F.sequence(F.lit(0), F.col("bn") - 1)).alias("j"),
         )
         .select(
             "band", "tile_row", "tile_col",
-            F.explode(F.filter(sides, lambda x: x.isNotNull())).alias("f"),
+            F.explode(
+                F.when(bi < 0, three).otherwise(F.filter(sides, lambda x: x.isNotNull()))
+            ).alias("f"),
         )
         .select(*proj)
     )
-    return jvm.unionByName(strips)
 
 
 _STRIP_BASES = {

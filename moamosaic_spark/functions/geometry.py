@@ -286,7 +286,7 @@ def make_burn_fn(x_min: float, y_max: float, x_res: float, y_res: float):
     return burn
 
 
-ZONAL_PARTIAL_SCHEMA = (
+ZONAL_PARTS_SCHEMA = (
     "band int, zone int, n_px long, val_sum long, val_min int, val_max int"
 )
 
@@ -364,7 +364,7 @@ def zonal_stats(
                 columns=["band", "zone", "n_px", "val_sum", "val_min", "val_max"],
             )
 
-    part = joined.mapInPandas(partials, ZONAL_PARTIAL_SCHEMA)
+    part = joined.mapInPandas(partials, ZONAL_PARTS_SCHEMA)
     return part.groupBy("band", "zone").agg(
         F.sum("n_px").cast("long").alias("n_px"),
         F.sum("val_sum").cast("long").alias("val_sum"),

@@ -35,11 +35,11 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from .plans import grid as gridmod
 from .plans.grid import OutputGrid, make_tile_relation, overview_levels
 from .plans.spatial_join import assign_inputs
-from .operators.stitch import make_partial_fn_arrow, make_stitch_fn_arrow
+from .operators.stitch import check_merge_policy, make_stitch_kernel
 from .operators.stats import finalize_stats
 from .monitoring import named_action
 from .pixels import PIXEL_BYTES, PIXEL_MAX, ingest
-from .schema import PARTIAL_SCHEMA, STITCH_SCHEMA
+from .schema import STITCH_SCHEMA
 
 
 class MoaProjectionError(Exception):
@@ -70,7 +70,7 @@ class MosaicConfig:
     # Exchange. Absent/stale table: it is (re)built first, which makes
     # that do_mosaic call eager (one write action). An explicit grid
     # that mismatches the table falls back to the direct path silently
-    # — results are identical either way. Hot tiles stay unsplit here.
+    # — results are identical either way.
     relayout_table: str | None = None
     # bucket count of a table built by that routing; None -> one per
     # core, sized like the direct stitch (plans.grid.stitch_partitions)
@@ -102,8 +102,7 @@ def _summary_row(footprints: DataFrame, with_fingerprint: bool = False):
     fingerprint (guide §5: collects are full driver round trips; batch
     them). The alignment check needs the priority-first input's origin
     on every row, so that struct is a window over the (small) dim
-    table, and the aggregate reads ``first`` off the same column.
-    ``n_inputs`` gates the hot-tile split (do_mosaic)."""
+    table, and the aggregate reads ``first`` off the same column."""
     def misaligned(c: str, res: str) -> str:
         # isAligned (reproj.py:117-127): |round(d/res) - d/res| >= 1e-4
         factor = f"(abs({c} - _first.{c}) / _first.{res})"
@@ -114,7 +113,6 @@ def _summary_row(footprints: DataFrame, with_fingerprint: bool = False):
         "min(x_res) != max(x_res) OR min(y_res) != max(y_res) AS bad_res",
         f"bool_or({misaligned('x0', 'x_res')} OR {misaligned('y0', 'y_res')}) AS bad_align",
         *gridmod.extent_cols(first="any_value(_first)"),
-        "count(*) AS n_inputs",
     ]
     if with_fingerprint:
         from .sources.relayout import fingerprint_agg_cols
@@ -224,7 +222,7 @@ def _contributor_chunks(assignments: DataFrame, blocks: DataFrame, src_bs: int) 
     #     measured ~5 MB/s — 200x below memcpy). Wide chunks keep their
     #     full width (clipping a few edge columns would rebuild the
     #     whole chunk to save almost nothing) and the stitch kernel's
-    #     existing clamp (operators/stitch.py _fold_arrow_group) drops
+    #     existing clamp (operators/stitch.py _TileFold.add) drops
     #     the spare columns on paste. Measured on the bench corpus:
     #     216 MB shipped vs 210 MB under the full per-pixel clip (+3%)
     #     at ~5x less clip CPU.
@@ -321,50 +319,11 @@ def _work_relation(
     blocks: DataFrame,
     grid: OutputGrid,
     config: MosaicConfig,
-    split_budget: int | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """(assignments, work) of every route: tiles -> spatial join
-    (_assign) -> contributor chunks. With a ``split_budget`` (bytes), one
-    named action looks for hot tiles (_hot_runs); if there is one, stage
-    1 of the two-stage merge the reference cannot split folds each
-    (band, tile, run) into a partial row (make_partial_fn_arrow). The one
-    stitch kernel composes those with the cold rows, which carry null
-    partial canvases (a union on PARTIAL_SCHEMA)."""
-    assignments = runs = _assign(tiles, footprints, grid, config)
-    if split_budget is not None:
-        with named_action(tiles.sparkSession, "moamosaic: hot-tile probe"):
-            runs = _hot_runs(assignments, split_budget)
-            if runs.where("_run IS NOT NULL").isEmpty():
-                runs = assignments
-    work = _contributor_chunks(runs, blocks, config.src_blocksize)
-    if runs is assignments:
-        return assignments, work
-    hot = work.where("_run IS NOT NULL").groupBy("band", "tile_row", "tile_col", "_run")
-    cold = work.where("_run IS NULL").selectExpr(*(
-        f"CAST(NULL AS array<bigint>) AS {c}" if c in ("wsum", "wvsum") else f"`{c}`"
-        for c in PARTIAL_SCHEMA.fieldNames()
-    ))
-    return assignments, hot.applyInArrow(
-        make_partial_fn_arrow(grid, config.merge_policy, config.blend_feather), PARTIAL_SCHEMA
-    ).unionByName(cold)
-
-
-def _hot_runs(assignments: DataFrame, budget: int) -> DataFrame:
-    """``assignments`` plus ``_run``, null on cold tiles. A tile is hot
-    when its contributors' clamped read windows exceed ``budget`` bytes
-    in sum; its contributors then fall into contiguous priority runs of
-    ``budget // largest window`` (at most the budget's bytes)."""
-    tile = "OVER (PARTITION BY tile_row, tile_col"
-    return assignments.selectExpr(
-        "*",
-        "CAST(least(in_top + in_ysize, src_nrows) - greatest(in_top, 0) AS BIGINT)"
-        f" * (least(in_left + in_xsize, src_ncols) - greatest(in_left, 0)) * {PIXEL_BYTES} AS _b",
-    ).selectExpr(
-        "*",
-        f"CASE WHEN sum(_b) {tile}) > {budget} THEN CAST((row_number() {tile} "
-        f"ORDER BY priority, media_ref) - 1) DIV greatest(1, {budget} DIV max(_b) {tile})) "
-        "AS INT) END AS _run",
-    ).drop("_b")
+    (_assign) -> contributor chunks."""
+    assignments = _assign(tiles, footprints, grid, config)
+    return assignments, _contributor_chunks(assignments, blocks, config.src_blocksize)
 
 
 def _stitch_tail(
@@ -379,9 +338,9 @@ def _stitch_tail(
     the relayout path. ``work`` arrives already distributed by (band,
     tile) — the direct path's one Exchange, or a bucketed scan — and
     holds a placeholder row per output (band, tile) (_with_placeholders).
-    The one stitch kernel also composes the split hot tiles' partials."""
-    fn = make_stitch_fn_arrow(grid, levels, config.merge_policy,
-                              feather=config.blend_feather)
+    The one stitch kernel folds each group's Arrow batches as they come,
+    so no group, however many contributors it has, is held whole."""
+    fn = make_stitch_kernel(grid, levels, config.merge_policy, config.blend_feather)
     stitched = work.groupBy("band", "tile_row", "tile_col").applyInArrow(fn, STITCH_SCHEMA)
     return MosaicResult(
         grid=grid,
@@ -423,6 +382,7 @@ def do_mosaic(
     ``blocks`` pixels may be binary (packed uint16) or ``array<int>``;
     the latter is packed once on entry (pixels.ingest)."""
     config = config or MosaicConfig()
+    check_merge_policy(config.merge_policy)
     routable = config.relayout_table is not None
     # ONE footprint probe covers validation + grid derivation + the
     # relayout fingerprint
@@ -452,14 +412,8 @@ def _mosaic_from_row(
     (_summary_row; with the fingerprint when ``config.relayout_table``
     is set), or None when do_mosaic skipped it. A caller that mosaics
     one corpus in many pruned runs (resumable_mosaic) probes once and
-    hands the row to every run, so no run re-probes, and the hot-tile
-    gate reads the row's ``n_inputs``."""
+    hands the row to every run, so no run re-probes."""
     blocks = ingest(blocks)
-    if config.merge_policy not in ("last", "nearest", "blend"):
-        raise ValueError(
-            f"unknown merge_policy {config.merge_policy!r} "
-            "(expected 'last', 'nearest' or 'blend')"
-        )
     from .session import ensure_workers_can_import
 
     ensure_workers_can_import(spark)
@@ -501,21 +455,10 @@ def _mosaic_from_row(
     tiles = _restrict_tiles(
         make_tile_relation(spark, grid, config.blocksize), tile_row_range, tile_keys
     )
-    # the hot-tile gate: no tile can exceed the byte budget when every
-    # input's window in the largest tile (< (blocksize * 5/4)² px) fits.
-    # 'nearest' is never split: a partial cannot carry its arg-min state.
-    budget = gridmod.advisory_bytes(spark)
-    bs = config.blocksize
-    closed = config.merge_policy == "nearest" or (
-        row is not None and row["n_inputs"] * (bs + bs // 4) ** 2 * PIXEL_BYTES <= budget
-    )
-    assignments, work = _work_relation(
-        tiles, footprints, blocks, grid, config, split_budget=None if closed else budget
-    )
+    assignments, work = _work_relation(tiles, footprints, blocks, grid, config)
     # the stitch's ONE Exchange, sized to the cluster: a task per core
     # folds many groups, so the per-task Python set-up is paid
     # ~defaultParallelism times instead of once per shuffle partition.
-    # The placeholders join after the split: they never enter stage 1.
     n_parts = gridmod.stitch_partitions(spark, grid, config.blocksize, tile_row_range)
     work = _with_placeholders(work, tiles, grid.n_bands)
     return _stitch_tail(

@@ -1,20 +1,31 @@
 """The stitch kernel: per-(band, tile) grouped Arrow UDF that replays the
-reference's read-side padding, ordered overlap-resolution merge,
-single-pass statistics partials, and pyramid subsampling in ONE pass.
+reference's read-side padding, overlap-resolution merge, single-pass
+statistics partials, and pyramid subsampling in ONE pass.
+
+The merge is a fold over the group's Arrow record batches, one batch at
+a time and in any order: the survey's ``MERGE_LAST_NON_NULL(block ORDER
+BY source_priority)`` as an aggregate with bounded state. A group's rows
+reach the kernel in shuffle-read order, and a batch boundary can fall
+inside a contributor, so the fold never relies on row order. Its state
+is the tile canvas plus a per-pixel int32 priority plane; a Python task
+holds one Arrow batch and that state at a time, whatever the group's
+size (Spark's batch caps, session.ENGINE_CONF, bound the batch).
 
 Reference semantics replicated exactly:
 
-* read-window clamp + null padding — mosaic.py:258-273
-* "last non-null wins" ordered merge — mosaic.py:663-689. The fold is
-  re-based on a null canvas: starting from ``np.full(nullval)`` and
-  overwriting non-null pixels of inputs[0], inputs[1], ... in priority
-  order is pixel-identical to the reference's "start from inputs[0] then
-  overwrite" (inputs[0]'s null pixels stay null either way). This
-  re-basing is what lets contributors with fully-degenerate windows be
-  dropped before the shuffle.
+* read-window clamp + null padding — mosaic.py:258-273. Each source
+  chunk is clamped and pasted straight into its part of the tile; the
+  padding is the pixels no chunk reaches.
+* "last non-null wins" merge — mosaic.py:663-689. A non-null pixel wins
+  when its priority is >= the plane's, so the fold ends at the
+  highest-priority non-null value in any arrival order. Starting from a
+  null canvas is pixel-identical to the reference's "start from
+  inputs[0] then overwrite" (inputs[0]'s null pixels stay null either
+  way), which is what lets contributors with fully-degenerate windows
+  be dropped before the shuffle.
 * contributor window-shape guard — mosaic.py:586-593 (rows sharing a
-  priority must agree on their window geometry; mismatch raises instead
-  of silently pasting through the wrong window)
+  priority must agree on their window geometry, across batches too;
+  mismatch raises instead of silently pasting through the wrong window)
 * stats partials (count/sum/ssq/min/max over non-null, float64 algebra)
   — mosaic.py:758-777
 * pyramid fragments ``arr[lvl//2::lvl, lvl//2::lvl]`` written at
@@ -23,18 +34,17 @@ Reference semantics replicated exactly:
 * a block no input covers is pure nullval, with no read or merge —
   mosaic.py:351-359: its group holds only its placeholder row
 
+A chunk is identified by (priority, b_top, b_left) and folds once: a
+chunk replayed by an interrupted ``relayout_append`` is a duplicate row,
+and 'blend' sums would otherwise count its weights twice.
+
 All pixel math is numpy over Arrow-delivered batches; the only Python
 loop is per source *chunk* (a ~64K-pixel array), never per pixel/row.
-
-The split stitch (hot tiles: contributors' bytes over the stitch byte
-budget, mosaic._hot_runs) has one kernel per stage, shared by the
-'last' and 'blend' merge policies: ``make_partial_fn_arrow`` folds a
-priority run into one PARTIAL_SCHEMA row, and ``make_stitch_fn_arrow``
-— the same kernel as the unsplit stitch — composes the partials. One fold implementation
-(`_fold_arrow_group`) serves all of them.
 """
 
 from __future__ import annotations
+
+from typing import Iterator, Tuple
 
 import numpy as np
 import pyarrow as pa
@@ -43,21 +53,35 @@ from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..pixels import PIXEL_DTYPE, decode_column, encode_column
 from ..plans.grid import OutputGrid, overview_shape
-from ..schema import PARTIAL_SCHEMA, STITCH_SCHEMA
+from ..schema import STITCH_SCHEMA
 
-# the Arrow forms of the Spark relations the kernels emit
+# the Arrow form of the Spark relation the kernel emits
 ARROW_STITCH_SCHEMA = to_arrow_schema(STITCH_SCHEMA)
-ARROW_PARTIAL_SCHEMA = to_arrow_schema(PARTIAL_SCHEMA)
 
-_WINDOW_COLS = (
-    "top", "left", "ysize", "xsize", "priority",
-    "in_top", "in_left", "in_ysize", "in_xsize",
-    "src_ncols", "src_nrows", "b_top", "b_left", "b_ysize", "b_xsize",
-)
+MERGE_POLICIES = ("last", "nearest", "blend")
+
+# a contributor's window: rows sharing a priority must agree on these
+_GEOMETRY = ("in_top", "in_left", "in_ysize", "in_xsize", "src_nrows", "src_ncols")
+
+
+def check_merge_policy(policy: str) -> None:
+    """Raise ValueError naming a merge policy the stitch does not know;
+    callers run it before any driver action."""
+    if policy not in MERGE_POLICIES:
+        raise ValueError(
+            f"unknown merge_policy {policy!r} (expected 'last', 'nearest' or 'blend')"
+        )
+
+
+def _priority_plane(ysize: int, xsize: int):
+    """Per-pixel priority of the value the canvas holds; below every
+    int32 priority until a non-null pixel lands."""
+    return np.full((ysize, xsize), np.iinfo(np.int32).min, dtype=np.int32)
 
 
 def _nearest_state(ysize: int, xsize: int):
-    return np.full((ysize, xsize), np.inf)
+    """(priority plane, best distance-squared) for policy='nearest'."""
+    return _priority_plane(ysize, xsize), np.full((ysize, xsize), np.inf)
 
 
 def _blend_state(ysize: int, xsize: int, feather: int):
@@ -75,26 +99,37 @@ def _blend_state(ysize: int, xsize: int, feather: int):
 
 def _policy_state(policy: str, ysize: int, xsize: int, feather: int):
     if policy == "last":
-        return None
+        return _priority_plane(ysize, xsize)
     if policy == "nearest":
         return _nearest_state(ysize, xsize)
-    if policy == "blend":
-        return _blend_state(ysize, xsize, feather)
-    raise ValueError(
-        f"unknown merge_policy {policy!r} (expected 'last', 'nearest' or 'blend')"
-    )
+    return _blend_state(ysize, xsize, feather)
+
+
+def _state_view(policy: str, state, region):
+    """The part of ``state`` under the canvas ``region``."""
+    if policy == "last":
+        return state[region]
+    if policy == "nearest":
+        return tuple(a[region] for a in state)
+    wsum, wvsum, feather = state
+    return wsum[region], wvsum[region], feather
 
 
 def _apply_window(canvas, win, nullval, policy, best, in_top, in_left,
-                  src_nrows, src_ncols):
-    """Fold one contributor window into the canvas.
+                  src_nrows, src_ncols, priority):
+    """Fold one contributor window of priority ``priority`` into the
+    canvas, in any order relative to the other windows. ``canvas`` and
+    ``best`` (the policy state, _policy_state) may be views of a region
+    of the tile; ``win`` has the region's shape and its pixel (0, 0) is
+    source pixel (``in_top``, ``in_left``).
 
-    policy='last': last non-null wins (reference mosaic.py:683-689).
+    policy='last': the highest-priority non-null pixel wins (reference
+    mosaic.py:683-689); ``best`` is the priority plane.
     policy='nearest': kNN nearest-source tie-breaking (north-star
     extension, NOT in the reference): a non-null pixel wins if its
     source raster's center is nearer (in output pixels) than the
-    current holder's; equal distance falls back to last-wins. ``best``
-    carries the per-pixel best distance-squared state.
+    current holder's; equal distance falls back to the higher
+    priority. ``best`` is (priority plane, distance-squared plane).
     policy='blend': nodata-aware EDGE-BLENDING (north-star extension):
     overlapping non-null pixels are feathered — each contributor
     weighs in by its pixel's distance to its own source edge (clamped
@@ -105,31 +140,36 @@ def _apply_window(canvas, win, nullval, policy, best, in_top, in_left,
     """
     non_null = win != nullval
     if policy == "last":
-        canvas[non_null] = win[non_null]
+        non_null &= best <= priority
+        np.copyto(canvas, win, where=non_null)
+        np.copyto(best, priority, where=non_null)
         return
     if policy == "blend":
         wsum, wvsum, feather = best
         # distance of each window pixel to its SOURCE's nearest edge
-        # (source row of window row r is in_top + r); padded
-        # out-of-extent pixels are null and masked out anyway
+        # (source row of window row r is in_top + r)
         sr = in_top + np.arange(win.shape[0], dtype=np.int64)
         sc = in_left + np.arange(win.shape[1], dtype=np.int64)
         dr = np.minimum(sr + 1, src_nrows - sr)
         dc = np.minimum(sc + 1, src_ncols - sc)
         w = np.clip(np.minimum(dr[:, None], dc[None, :]), 1, int(feather))
-        wsum[non_null] += w[non_null]
-        wvsum[non_null] += w[non_null] * win[non_null].astype(np.int64)
+        np.add(wsum, w, out=wsum, where=non_null)
+        np.add(wvsum, w * win, out=wvsum, where=non_null)
         return
-    # source center in tile-local pixel coords: source col 0 sits at
-    # tile-local col -in_left (in_left is the tile's left in src coords)
+    plane, dist_best = best
+    # source center in window coords: source col 0 sits at window col
+    # -in_left
     cy = -in_top + (src_nrows - 1) / 2.0
     cx = -in_left + (src_ncols - 1) / 2.0
     rr = np.arange(win.shape[0])[:, None] - cy
     cc = np.arange(win.shape[1])[None, :] - cx
     dist = rr * rr + cc * cc
-    mask = non_null & (dist <= best)
-    canvas[mask] = win[mask]
-    best[mask] = dist[mask]
+    mask = non_null & (
+        (dist < dist_best) | ((dist == dist_best) & (priority >= plane))
+    )
+    np.copyto(canvas, win, where=mask)
+    np.copyto(dist_best, dist, where=mask)
+    np.copyto(plane, priority, where=mask)
 
 
 def _finalize_policy(canvas, policy, best) -> None:
@@ -146,215 +186,127 @@ def _finalize_policy(canvas, policy, best) -> None:
         ).astype(canvas.dtype)
 
 
-def _extract_arrow_group(tbl: pa.Table):
-    """Column arrays, the pixel payloads (element offsets, uint16
-    values) and the indices of the rows that carry a payload of one
-    Arrow group, zero-copy where the types allow: placeholder rows are
-    skipped by index, never filtered out by copying the payloads."""
-    pix = tbl.column("pixels").combine_chunks()
-    cols = {name: tbl.column(name).to_numpy(zero_copy_only=False) for name in _WINDOW_COLS}
-    offsets, values = decode_column(pix)
-    return cols, offsets, values, np.flatnonzero(pix.is_valid())
+class _TileFold:
+    """The merge state of one (band, tile): the canvas, the policy
+    state, the window of every priority seen (the shape guard) and the
+    chunks already folded (duplicates fold once)."""
 
+    def __init__(self, first: pa.RecordBatch, nullval: int, policy: str, feather: int,
+                 key: tuple):
+        self.top, self.left, ysize, xsize = (
+            int(first.column(c)[0].as_py()) for c in ("top", "left", "ysize", "xsize")
+        )
+        self.canvas = np.full((ysize, xsize), nullval, dtype=PIXEL_DTYPE)
+        self.state = _policy_state(policy, ysize, xsize, feather)
+        self.nullval, self.policy, self.key = nullval, policy, key
+        self.windows: dict = {}
+        self.seen: set = set()
 
-def _check_run_geometry(cols, idxs, key):
-    """Reference shape guard (mosaic.py:586-593): every row of a
-    priority run must describe the same contributor window — otherwise
-    two sources share a priority and pixels would be pasted through the
-    wrong geometry. Raise instead of corrupting."""
-    r0 = idxs[0]
-    for ri in idxs[1:]:
-        for c in ("in_top", "in_left", "in_ysize", "in_xsize", "src_nrows", "src_ncols"):
-            if cols[c][ri] != cols[c][r0]:
+    def add(self, batch: pa.RecordBatch) -> None:
+        """Fold the rows of ``batch`` that carry a payload; placeholder
+        rows (null ``pixels``) are skipped by index, and the payloads
+        are read zero-copy from the Arrow buffers."""
+        pix = batch.column("pixels")
+        rows = np.flatnonzero(pix.is_valid().to_numpy(zero_copy_only=False))
+        if rows.size == 0:
+            return
+        offsets, values = decode_column(pix)
+        cols = {
+            c: batch.column(c).to_numpy(zero_copy_only=False)
+            for c in ("priority", "b_top", "b_left", "b_ysize", "b_xsize", *_GEOMETRY)
+        }
+        for ri in rows:
+            prio = int(cols["priority"][ri])
+            geo = tuple(int(cols[c][ri]) for c in _GEOMETRY)
+            if self.windows.setdefault(prio, geo) != geo:
                 raise ValueError(
-                    f"window geometry mismatch within priority "
-                    f"{int(cols['priority'][r0])} at group {key}: two sources "
-                    f"share a priority (priorities must be unique per source)"
+                    f"window geometry mismatch within priority {prio} at group "
+                    f"{self.key}: two sources share a priority (priorities must "
+                    f"be unique per source)"
                 )
-
-
-def _fold_arrow_group(cols, offsets, values, rows, canvas, nullval, policy, best, key):
-    """The ordered merge over the payload ``rows`` of one Arrow group:
-    for each contiguous priority run (one contributor), clamp + pad +
-    paste its chunks into a window, then fold the window into the
-    canvas. Shared by the full stitch and the split stitch's stage-1 merge."""
-    order = rows[np.argsort(cols["priority"][rows], kind="stable")]
-    n = len(order)
-    i = 0
-    while i < n:
-        j = i
-        prio = cols["priority"][order[i]]
-        idxs = []
-        while j < n and cols["priority"][order[j]] == prio:
-            idxs.append(order[j])
-            j += 1
-        i = j
-        _check_run_geometry(cols, idxs, key)
-        r0 = idxs[0]
-        in_top, in_left = int(cols["in_top"][r0]), int(cols["in_left"][r0])
-        in_ys, in_xs = int(cols["in_ysize"][r0]), int(cols["in_xsize"][r0])
-        src_nrows, src_ncols = int(cols["src_nrows"][r0]), int(cols["src_ncols"][r0])
-        # clamp (mosaic.py:258-263)
-        top1, left1 = max(in_top, 0), max(in_left, 0)
-        bottom1 = min(in_top + in_ys, src_nrows)
-        right1 = min(in_left + in_xs, src_ncols)
-        if bottom1 <= top1 or right1 <= left1:
-            continue
-        # padded window (mosaic.py:268-273)
-        win = np.full((in_ys, in_xs), nullval, dtype=PIXEL_DTYPE)
-        row_off, col_off = max(0, -in_top), max(0, -in_left)
-        for ri in idxs:
             b_top, b_left = int(cols["b_top"][ri]), int(cols["b_left"][ri])
+            if (prio, b_top, b_left) in self.seen:
+                continue
+            self.seen.add((prio, b_top, b_left))
+            in_top, in_left, in_ys, in_xs, src_nrows, src_ncols = geo
             b_ys, b_xs = int(cols["b_ysize"][ri]), int(cols["b_xsize"][ri])
-            rt, rb = max(b_top, top1), min(b_top + b_ys, bottom1)
-            cl, cr = max(b_left, left1), min(b_left + b_xs, right1)
+            # the chunk's part of the clamped read window (mosaic.py:258-263)
+            rt = max(b_top, in_top, 0)
+            rb = min(b_top + b_ys, in_top + in_ys, src_nrows)
+            cl = max(b_left, in_left, 0)
+            cr = min(b_left + b_xs, in_left + in_xs, src_ncols)
             if rb <= rt or cr <= cl:
                 continue
             arr = values[offsets[ri]: offsets[ri + 1]].reshape(b_ys, b_xs)
-            win[
-                row_off + (rt - top1): row_off + (rb - top1),
-                col_off + (cl - left1): col_off + (cr - left1),
-            ] = arr[rt - b_top: rb - b_top, cl - b_left: cr - b_left]
-        _apply_window(canvas, win, nullval, policy, best,
-                      in_top, in_left, src_nrows, src_ncols)
+            region = np.s_[rt - in_top: rb - in_top, cl - in_left: cr - in_left]
+            _apply_window(
+                self.canvas[region], arr[rt - b_top: rb - b_top, cl - b_left: cr - b_left],
+                self.nullval, self.policy, _state_view(self.policy, self.state, region),
+                rt, cl, src_nrows, src_ncols, prio,
+            )
 
 
 def _key_ints(key) -> tuple:
     return tuple(int(k.as_py() if hasattr(k, "as_py") else k) for k in key)
 
 
-def make_stitch_fn_arrow(
-    grid: OutputGrid, levels: list[int], policy: str = "last", binary: bool = True,
-    feather: int = 64,
+def make_stitch_kernel(
+    grid: OutputGrid, levels: list[int], policy: str = "last", feather: int = 64,
 ):
-    """The applyInArrow kernel for groupBy(band, tile_row, tile_col):
-    reads pixel payloads zero-copy from the Arrow binary buffers and
-    emits one batched binary column — no pandas object-column churn.
-    ``binary`` must be True (payloads are always packed uint16, see
-    pixels.py); it stays only for callers that still pass it.
+    """The applyInArrow kernel for groupBy(band, tile_row, tile_col), in
+    PySpark's iterator form: it folds the group's record batches one at
+    a time (_TileFold) and yields the tile, its stats partials and its
+    pyramid fragments as one batch. Payloads are read zero-copy from
+    the Arrow binary buffers and emitted as one batched binary column.
 
     Every output (band, tile) is a group: it holds the tile's
     placeholder row (mosaic._with_placeholders; null ``pixels``), and
     only rows with a payload fold. A group with no such row is a tile
     no input covers: it emits the null canvas, ``px_count`` 0 and its
-    pyramid fragments.
-
-    It is also stage 2 of the split stitch. A group whose input has a
-    ``wsum`` column (PARTIAL_SCHEMA) folds its rows with non-null
-    ``pixels`` as contributors — raw cold rows and 'last' partials —
-    and adds the canvases of its rows with non-null ``wsum`` ('blend'
-    partials) into the blend state before finalize. Finalize is the same
-    exact integer half-up division either way, so split == unsplit
-    bit-for-bit."""
-    if not binary:
-        raise ValueError("binary must be True: packed uint16 is the only pixel layout")
-    import pyarrow.compute as pc
-
+    pyramid fragments."""
+    check_merge_policy(policy)
     nullval = int(grid.nullval)
     ov_shapes = {lvl: overview_shape(grid.nrows, grid.ncols, lvl) for lvl in levels}
 
-    def stitch(key: tuple, tbl: pa.Table) -> pa.Table:
+    def stitch(
+        key: Tuple[pa.Scalar, ...], batches: Iterator[pa.RecordBatch]
+    ) -> Iterator[pa.RecordBatch]:
         band, tile_row, tile_col = _key_ints(key)
-        top, left, ysize, xsize = (
-            int(tbl.column(c)[0].as_py()) for c in ("top", "left", "ysize", "xsize")
-        )
-        canvas = np.full((ysize, xsize), nullval, dtype=PIXEL_DTYPE)
-        best = _policy_state(policy, ysize, xsize, feather)
-        cols, offsets, values, rows = _extract_arrow_group(tbl)
-        _fold_arrow_group(cols, offsets, values, rows, canvas, nullval, policy, best,
-                          (band, tile_row, tile_col))
-        parts = None
-        if "wsum" in tbl.column_names:
-            parts = tbl.filter(pc.is_valid(tbl.column("wsum")))
-        if parts is not None and parts.num_rows:
-            _add_blend_partials(best, parts)
-        _finalize_policy(canvas, policy, best)
-        rows = [_base_row(band, tile_row, tile_col, top, left, canvas, nullval)]
-        rows.extend(
-            _pyramid_rows(band, tile_row, tile_col, top, left, canvas, levels, ov_shapes)
-        )
-        return _rows_to_arrow(rows, ARROW_STITCH_SCHEMA)
+        fold = None
+        for batch in batches:
+            if batch.num_rows == 0:
+                continue
+            if fold is None:
+                fold = _TileFold(batch, nullval, policy, feather, (band, tile_row, tile_col))
+            fold.add(batch)
+        canvas = fold.canvas
+        _finalize_policy(canvas, policy, fold.state)
+        rows = [_base_row(band, tile_row, tile_col, fold.top, fold.left, canvas, nullval)]
+        rows.extend(_pyramid_rows(
+            band, tile_row, tile_col, fold.top, fold.left, canvas, levels, ov_shapes
+        ))
+        yield from _rows_to_arrow(rows, ARROW_STITCH_SCHEMA).to_batches()
 
     return stitch
 
 
-def _add_blend_partials(best, parts: pa.Table) -> None:
-    """Add each 'blend' partial's (wsum, wvsum) box into the tile's
-    blend state at the box's offset (in_top = -r0, in_left = -c0)."""
-    geo = {
-        c: parts.column(c).to_numpy(zero_copy_only=False)
-        for c in ("in_top", "in_left", "src_nrows", "src_ncols")
-    }
-    for name, acc in (("wsum", best[0]), ("wvsum", best[1])):
-        arr = parts.column(name).combine_chunks()
-        off, val = arr.offsets.to_numpy(), arr.values.to_numpy(zero_copy_only=False)
-        for i in range(parts.num_rows):
-            r0, c0 = -int(geo["in_top"][i]), -int(geo["in_left"][i])
-            h, w = int(geo["src_nrows"][i]), int(geo["src_ncols"][i])
-            acc[r0: r0 + h, c0: c0 + w] += val[off[i]: off[i + 1]].reshape(h, w)
+def make_stitch_fn_arrow(
+    grid: OutputGrid, levels: list[int], policy: str = "last", binary: bool = True,
+    feather: int = 64,
+):
+    """The stitch kernel in table form, ``fn(key, tbl) -> pa.Table``, for
+    callers that hold a whole group in memory: the same fold
+    (make_stitch_kernel) over the table's record batches. ``binary``
+    must be True (payloads are always packed uint16, see pixels.py); it
+    stays only for callers that still pass it."""
+    if not binary:
+        raise ValueError("binary must be True: packed uint16 is the only pixel layout")
+    kernel = make_stitch_kernel(grid, levels, policy, feather)
 
+    def stitch(key: tuple, tbl: pa.Table) -> pa.Table:
+        return pa.Table.from_batches(kernel(key, tbl.to_batches()), ARROW_STITCH_SCHEMA)
 
-def make_partial_fn_arrow(grid: OutputGrid, policy: str = "last", feather: int = 64):
-    """Stage-1 kernel of the SPLIT stitch, for groupBy(band, tile_row,
-    tile_col, run): fold a contiguous-priority run of a hot tile's
-    contributors, then emit ONE PARTIAL_SCHEMA row covering the bounding
-    box of what the run wrote (not the whole tile — partially covered
-    tiles would otherwise inflate the stage-2 shuffle) — no row when it
-    wrote nothing: the tile's placeholder keeps its stage-2 group.
-
-    Correctness (SURVEY.md §7.5 "ordered merge under salting"):
-
-    * 'last': the per-pixel fold op(a,b) = (b if b != nullval else a) is
-      associative, so partial canvases built over contiguous priority
-      ranges and composed in run order (priority = run id) equal
-      the unsplit fold exactly. The box is the written pixels
-      (``canvas != nullval``) and rides in ``pixels``.
-    * 'blend': a per-pixel SUM of (weight, weight*value) over non-null
-      contributors — commutative and associative — so each run emits
-      the box of its integer (wsum, wvsum) canvases (``wsum > 0``) and
-      stage 2 adds them in any order; ``pixels`` is null.
-
-    'nearest' carries per-pixel arg-min state a partial cannot
-    decompose; do_mosaic never splits its tiles."""
-    nullval = int(grid.nullval)
-
-    def partial(key: tuple, tbl: pa.Table) -> pa.Table:
-        band, tile_row, tile_col, run = _key_ints(key)
-        cols, offsets, values, rows = _extract_arrow_group(tbl)
-        top, left = int(cols["top"][0]), int(cols["left"][0])
-        ysize, xsize = int(cols["ysize"][0]), int(cols["xsize"][0])
-        canvas = np.full((ysize, xsize), nullval, dtype=PIXEL_DTYPE)
-        best = _policy_state(policy, ysize, xsize, feather)
-        _fold_arrow_group(cols, offsets, values, rows, canvas, nullval, policy, best,
-                          (band, tile_row, tile_col, run))
-        # bounding box of written pixels
-        written = canvas != nullval if best is None else best[0] > 0
-        nn_rows = np.flatnonzero(written.any(axis=1))
-        nn_cols = np.flatnonzero(written.any(axis=0))
-        if nn_rows.size == 0:
-            return ARROW_PARTIAL_SCHEMA.empty_table()
-        r0, r1 = int(nn_rows[0]), int(nn_rows[-1]) + 1
-        c0, c1 = int(nn_cols[0]), int(nn_cols[-1]) + 1
-        box = np.s_[r0:r1, c0:c1]
-        row = {
-            "tile_row": tile_row, "tile_col": tile_col, "band": band,
-            "top": top, "left": left, "ysize": ysize, "xsize": xsize,
-            "priority": run,
-            # window geometry: the bbox as a synthetic source placed so
-            # that src px (0,0) lands at tile-local (r0, c0):
-            # in_top = -r0 => pad offset row_off = r0; clamp keeps the
-            # bbox extent because src dims == bbox dims.
-            "in_top": -r0, "in_left": -c0,
-            "in_ysize": ysize, "in_xsize": xsize,
-            "src_nrows": r1 - r0, "src_ncols": c1 - c0,
-            "b_top": 0, "b_left": 0, "b_ysize": r1 - r0, "b_xsize": c1 - c0,
-            "pixels": canvas[box].ravel() if best is None else None,
-            "wsum": None if best is None else best[0][box].ravel(),
-            "wvsum": None if best is None else best[1][box].ravel(),
-        }
-        return _rows_to_arrow([row], ARROW_PARTIAL_SCHEMA)
-
-    return partial
+    return stitch
 
 
 def _rows_to_arrow(rows: list[dict], schema: pa.Schema) -> pa.Table:

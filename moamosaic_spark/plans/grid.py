@@ -167,8 +167,8 @@ def stitch_partitions(
 
 
 def advisory_bytes(spark: SparkSession) -> int:
-    """``spark.sql.adaptive.advisoryPartitionSizeInBytes`` in bytes: the one
-    stitch byte budget, for its partitions and hot tiles (mosaic._hot_runs)."""
+    """``spark.sql.adaptive.advisoryPartitionSizeInBytes`` in bytes: the
+    stitch's byte budget, which sizes its partitions (stitch_partitions)."""
     return spark.sparkContext._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
         spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
     )

@@ -18,7 +18,7 @@ strategies producing identical rows:
   volume is O(tiles + footprint-cell covers), never O(tiles × files).
   A hot cell (many overlapping footprints) is not split here: its cost
   is its output rows, and those land in (band, tile) groups the stitch
-  already splits by bytes (mosaic._hot_runs). Salting the cell keys
+  folds one Arrow batch at a time (operators/stitch.py). Salting the cell keys
   only replicated the covers and shuffled every output row once more:
   4x slower on 20k footprints stacked in one cell (PLANS.md).
 

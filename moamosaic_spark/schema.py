@@ -97,28 +97,6 @@ STITCH_SCHEMA = T.StructType(
     ]
 )
 
-# salted-stitch stage-1 output: one row per (tile, priority bucket),
-# placed as a synthetic contributor covering the box of what the bucket
-# wrote; it re-enters the stitch kernel. A 'last' partial carries that
-# box in ``pixels``; a 'blend' partial carries the box's int64 (weight
-# sum, weighted value sum) canvases in ``wsum``/``wvsum`` and a null
-# ``pixels``. Cold (unsalted) rows ride along with null ``wsum``/``wvsum``.
-PARTIAL_SCHEMA = T.StructType(
-    [
-        T.StructField(name, T.IntegerType())
-        for name in (
-            "tile_row", "tile_col", "band", "top", "left", "ysize", "xsize",
-            "priority", "in_top", "in_left", "in_ysize", "in_xsize",
-            "src_ncols", "src_nrows", "b_top", "b_left", "b_ysize", "b_xsize",
-        )
-    ]
-    + [
-        T.StructField("pixels", PIXEL_TYPE),
-        T.StructField("wsum", T.ArrayType(T.LongType())),
-        T.StructField("wvsum", T.ArrayType(T.LongType())),
-    ]
-)
-
 STATS_SCHEMA = T.StructType(
     [
         T.StructField("band", T.IntegerType()),

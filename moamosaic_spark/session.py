@@ -5,9 +5,12 @@ pixel arrays across the Python<->JVM boundary as Arrow batches — numpy
 values are rejected by the legacy row path).
 
 Tuned for the stitch workload: tile rows are ~64KB-4MB each, so Arrow
-batches are capped at a small record count to bound executor memory
+batches are capped at 256 records AND at 64 MiB, whichever comes first
 (SURVEY.md §7.5), and AQE is on for skew splitting and shuffle
-coalescing.
+coalescing. The stitch kernel folds a (band, tile) group one Arrow batch
+at a time (operators/stitch.py), so a stitch task's Python memory is one
+batch (<= 64 MiB, or one row when a single row is larger) plus the tile
+canvas and its merge state, however many inputs stack on the tile.
 
 Worker side: PySpark calls ``importlib.invalidate_caches()`` at the
 start of every Python task, and that re-reads the central directory of
@@ -38,6 +41,9 @@ ENGINE_CONF = {
     # old 64 (measured ~10% off the stitch wall; guide §4.2 — keep
     # batches large enough for vectorization to pay off)
     "spark.sql.execution.arrow.maxRecordsPerBatch": "256",
+    # ... and at most 64 MiB a batch: the bound on a stitch task's
+    # Python memory beside the canvas, whatever a tile's input count
+    "spark.sql.execution.arrow.maxBytesPerBatch": str(64 * 1024 * 1024),
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",

@@ -264,9 +264,9 @@ def relayout_append(
     """Append the work rows of NEW footprints into an existing bucketed
     relayout table (same grid, tiling and bucket spec — from the table
     meta; ``config`` supplies the join strategy). Replaying an append
-    after a crash duplicates rows; the stitch is idempotent under
-    duplicates (a duplicate row re-pastes the same pixels within its
-    priority run), so resume semantics hold — compact by re-running
+    after a crash duplicates rows; the stitch folds a chunk once per
+    (priority, b_top, b_left), so every merge policy is idempotent
+    under duplicates and resume semantics hold — compact by re-running
     relayout_to_table when growth matters."""
     m = _load_meta(spark, table)
     grid = _grid_from_meta(m)
@@ -343,8 +343,8 @@ def mosaic_via_relayout(
     Stitches off the bucketed table when it provably holds this exact
     corpus (footprint fingerprint + tiling geometry match); (re)builds
     the table first when it is absent or stale — that one call is
-    eager, every later call is the zero-Exchange repeated-run path,
-    where hot tiles stay unsplit (stitch_from_relayout). Returns None
+    eager, every later call is the zero-Exchange repeated-run path
+    (stitch_from_relayout). Returns None
     when routing cannot apply (caller pinned an explicit grid the table
     was not built for — the direct dataflow handles it; an auto-build
     would derive its own grid and silently diverge).
@@ -398,11 +398,7 @@ def stitch_from_relayout(
     the shuffle — the cheapest possible re-stitch. ``tile_keys`` (small
     DataFrame of (tile_row, tile_col)) restricts to an explicit tile
     set via a broadcast semi-join, which preserves the bucketed
-    distribution — the incremental path's touched-tile re-stitch.
-
-    Hot tiles are not split here: the bucketed scan has no Exchange to
-    split them into, so each (band, tile) stays one group of the one
-    stitch kernel."""
+    distribution — the incremental path's touched-tile re-stitch."""
     config = config or MosaicConfig()
     from ..session import ensure_workers_can_import
 

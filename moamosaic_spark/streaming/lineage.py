@@ -29,6 +29,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..mosaic import MosaicConfig, _check_projection_row, _mosaic_from_row, _summary_row
+from ..operators.stitch import check_merge_policy
 from ..plans.grid import grid_from_row, n_blocks
 
 
@@ -106,6 +107,7 @@ def resumable_mosaic(
     Returns {"run_id", "batches_run", "batches_skipped", "grid"}.
     """
     config = config or MosaicConfig()
+    check_merge_policy(config.merge_policy)
     run_id = run_id or uuid.uuid4().hex[:12]
 
     if relayout_table is not None:
@@ -115,9 +117,9 @@ def resumable_mosaic(
         grid = _grid_from_meta(m)
         blocksize = int(m["blocksize"])
     else:
-        # one footprint probe: the grid, the projection agreement and
-        # the input count of the hot-tile gate (batch-invariant, so the
-        # per-batch pruned plans take this row instead of re-probing)
+        # one footprint probe: the grid and the projection agreement
+        # (batch-invariant, so the per-batch pruned plans take this row
+        # instead of re-probing)
         row = _summary_row(footprints, with_fingerprint=config.relayout_table is not None)
         if config.check_projections:
             _check_projection_row(row)

@@ -53,8 +53,25 @@ def fresh_table(spark, table) -> str:
 def advisory(spark, value):
     """Run the block with ``spark.sql.adaptive.advisoryPartitionSizeInBytes``
     at ``value``: the stitch's byte budget, which sizes its partitions
-    and marks a tile hot (plans.grid.advisory_bytes)."""
-    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    (plans.grid.advisory_bytes)."""
+    with conf(spark, "spark.sql.adaptive.advisoryPartitionSizeInBytes", value):
+        yield
+
+
+@contextmanager
+def small_batches(spark, rows: int = 2):
+    """Run the block with ``spark.sql.execution.arrow.maxRecordsPerBatch``
+    at ``rows`` (1-3 for the stitch tests): every (band, tile) group of
+    more than ``rows`` rows then reaches the stitch kernel in many Arrow
+    batches, split at arbitrary rows. Spark reads the cap when a job
+    runs, so collect inside the block."""
+    with conf(spark, "spark.sql.execution.arrow.maxRecordsPerBatch", rows):
+        yield
+
+
+@contextmanager
+def conf(spark, key, value):
+    """Run the block with the session conf ``key`` at ``value``."""
     old = spark.conf.get(key)
     spark.conf.set(key, str(value))
     try:
@@ -64,8 +81,8 @@ def advisory(spark, value):
 
 
 def arrow_kernels(df) -> int:
-    """Grouped-map Arrow kernels in ``df``'s executed plan: 1 for the
-    one stitch, 2 when hot tiles are split (partial kernel + stitch)."""
+    """Grouped-map Arrow kernels in ``df``'s executed plan: the stitch is
+    one."""
     return df._jdf.queryExecution().executedPlan().toString().count("FlatMapGroupsInArrow")
 
 

@@ -175,10 +175,13 @@ def test_blend_is_nodata_aware(spark):
     assert (arr[10:20, 10:20] == 100).all()
 
 
-def test_unknown_merge_policy_raises(spark):
+def test_unknown_merge_policy_raises(spark, sql_executions):
+    """An unknown policy raises before any driver action: the footprint
+    probe does not run."""
     rasters = synth.grid3x3(60, 60)
     fp = to_footprints(spark, synth.footprints_pdf(rasters))
     blocks = to_blocks(spark, synth.blocks_pdf(rasters, 256))
-    with pytest.raises(ValueError, match="merge_policy"):
+    with sql_executions() as n, pytest.raises(ValueError, match="merge_policy"):
         do_mosaic(spark, fp, blocks,
                   MosaicConfig(merge_policy="average", with_overviews=False))
+    assert n[0] == 0

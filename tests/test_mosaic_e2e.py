@@ -155,7 +155,7 @@ def test_remainder_tiling_edge(spark):
 def test_hot_cell_salted(spark):
     """Twelve stacked inputs in one join cell through the cell join. The
     join has no salt: a hot cell's cost is its output rows, which the
-    stitch splits by bytes (test_salted_stitch.py)."""
+    stitch folds one Arrow batch at a time (test_salted_stitch.py)."""
     want, got = run_case(spark, synth.hot_cell(12), strategy="cell", cell_size_px=256)
     check_tiles_equal(want, got)
     check_stats_equal(want, got)

@@ -107,18 +107,18 @@ def test_u2_gap_and_salted(spark):
     for k, a in tiles.items():
         np.testing.assert_array_equal(a, want.tiles[k])
 
-    # two-stage split merge over packed partials: a budget of four 64x64
-    # windows makes the 12-deep stack's tiles hot
-    from tests.test_salted_stitch import WINDOW, split_mosaic
+    # the 12-deep stack's packed payloads, streamed into the stitch in
+    # Arrow batches of two rows
+    from tests.conftest import small_batches
 
     rasters = synth.hot_cell(12, 128, 128)
     want = synth.oracle(rasters, blocksize=64, min_overview_size=9999)
     fp, bl = _fp_blocks(spark, rasters)
-    res = split_mosaic(
-        spark, fp, bl,
-        MosaicConfig(blocksize=64, src_blocksize=256, with_overviews=False), 4 * WINDOW,
+    res = do_mosaic(
+        spark, fp, bl, MosaicConfig(blocksize=64, src_blocksize=256, with_overviews=False)
     )
-    tiles = _tiles_of(res)
+    with small_batches(spark, 2):
+        tiles = _tiles_of(res)
     assert set(tiles) == set(want.tiles)
     for k, a in tiles.items():
         np.testing.assert_array_equal(a, want.tiles[k])

@@ -4,7 +4,7 @@ the one-line-trap zones of SURVEY.md §7.5."""
 import numpy as np
 from hypothesis import given, settings, strategies as st
 
-from moamosaic_spark.operators.stitch import _apply_window, _nearest_state
+from moamosaic_spark.operators.stitch import _apply_window, _nearest_state, _policy_state
 from moamosaic_spark.plans.grid import block_edges, n_blocks, overview_shape
 from moamosaic_spark.sources.synth import _tiling_loop
 
@@ -41,9 +41,10 @@ def test_overview_shape_equals_stride(nr, nc, p):
 )
 @settings(max_examples=150, deadline=None)
 def test_last_policy_fold_equals_sequential_paste(seed, n_contrib, size):
-    """The re-based fold (null canvas + overwrite non-null in order)
-    equals the reference fold (start from inputs[0], overwrite later
-    non-null) — the equivalence the stitch kernel relies on
+    """The re-based fold (null canvas + a non-null pixel wins at a
+    priority >= the plane's), run in a SHUFFLED order, equals the
+    reference fold (start from inputs[0], overwrite later non-null in
+    priority order) — the equivalence the stitch kernel relies on
     (operators/stitch.py docstring)."""
     rng = np.random.default_rng(seed)
     nullval = 0
@@ -51,10 +52,11 @@ def test_last_policy_fold_equals_sequential_paste(seed, n_contrib, size):
         rng.integers(0, 4, size=(size, size)).astype(np.int32) * rng.integers(1, 100)
         for _ in range(n_contrib)
     ]
-    # engine fold
+    # engine fold: window i has priority i, folded in arrival order
     canvas = np.full((size, size), nullval, dtype=np.int32)
-    for w in wins:
-        _apply_window(canvas, w, nullval, "last", None, 0, 0, size, size)
+    plane = _policy_state("last", size, size, 0)
+    for i in rng.permutation(n_contrib):
+        _apply_window(canvas, wins[i], nullval, "last", plane, 0, 0, size, size, int(i))
     # reference fold (mosaic.py:683-689 verbatim semantics)
     ref = wins[0].copy()
     for w in wins[1:]:
@@ -82,7 +84,7 @@ def test_nearest_policy_is_order_insensitive_without_ties(seed, size):
         best = _nearest_state(size, size)
         for idx in order:
             win, it, il = contribs[idx]
-            _apply_window(canvas, win, nullval, "nearest", best, it, il, size, size)
+            _apply_window(canvas, win, nullval, "nearest", best, it, il, size, size, idx)
         out.append(canvas)
     dists = []
     for win, it, il in contribs:
@@ -96,6 +98,62 @@ def test_nearest_policy_is_order_insensitive_without_ties(seed, size):
     if not ties:
         np.testing.assert_array_equal(out[0], out[1])
         np.testing.assert_array_equal(out[0], out[2])
+
+
+@given(
+    seed=st.integers(0, 2**32 - 1),
+    n_contrib=st.integers(1, 5),
+    policy=st.sampled_from(["last", "nearest", "blend"]),
+)
+@settings(max_examples=120, deadline=None)
+def test_stitch_fold_is_free_of_row_order_batching_and_duplicates(seed, n_contrib, policy):
+    """The stitch kernel folds a group's rows in any order, cut into
+    Arrow batches anywhere, with some chunks delivered twice (a replayed
+    append), to the same output as the priority-sorted group in one
+    batch — for every merge policy. Contributors overlap the tile at
+    random offsets, with sparse priorities and null runs; their
+    geometry is equal, so nearest-distance ties occur."""
+    import pyarrow as pa
+
+    from moamosaic_spark.operators.stitch import make_stitch_kernel
+    from moamosaic_spark.plans.grid import OutputGrid
+
+    rng = np.random.default_rng(seed)
+    size, cb = 24, 10  # tile px, source chunk px
+    grid = OutputGrid(x_min=0.0, y_max=0.0, x_res=1.0, y_res=1.0, ncols=size,
+                      nrows=size, n_bands=1, nullval=0, dtype="uint16", projection="p")
+    rows = []
+    for prio in rng.choice(1000, size=n_contrib, replace=False):
+        nr, nc = (int(v) for v in rng.integers(size // 2, 2 * size, size=2))
+        in_top, in_left = (int(v) for v in rng.integers(-size // 2, size, size=2))
+        src = rng.integers(1, 500, size=(nr, nc)).astype("<u2")
+        src[rng.random((nr, nc)) < 0.3] = 0
+        for bt in range(0, nr, cb):
+            for bl in range(0, nc, cb):
+                chunk = src[bt: bt + cb, bl: bl + cb]
+                rows.append(dict(
+                    top=0, left=0, ysize=size, xsize=size, priority=int(prio),
+                    in_top=in_top, in_left=in_left, in_ysize=size, in_xsize=size,
+                    src_nrows=nr, src_ncols=nc, b_top=bt, b_left=bl,
+                    b_ysize=chunk.shape[0], b_xsize=chunk.shape[1], pixels=chunk.tobytes(),
+                ))
+    placeholder = dict(rows[0], priority=None, pixels=None)
+
+    def batches(rs, cuts):
+        tbl = pa.Table.from_pylist(rs)
+        edges = [0, *sorted(cuts), len(rs)]
+        return [tbl.slice(a, b - a).to_batches()[0] for a, b in zip(edges, edges[1:]) if b > a]
+
+    kernel = make_stitch_kernel(grid, [4], policy, feather=3)
+    ordered = sorted(rows, key=lambda r: r["priority"]) + [placeholder]
+    want = pa.Table.from_batches(kernel((1, 0, 0), batches(ordered, [])))
+
+    dups = [rows[i] for i in rng.choice(len(rows), size=len(rows) // 3)]
+    shuffled = [placeholder, *rows, *dups]
+    shuffled = [shuffled[i] for i in rng.permutation(len(shuffled))]
+    cuts = rng.choice(len(shuffled), size=min(len(shuffled), 6), replace=False)
+    got = pa.Table.from_batches(kernel((1, 0, 0), batches(shuffled, cuts)))
+    assert got.equals(want)
 
 
 # ---------------------------------------------------------------------------

@@ -185,3 +185,33 @@ def test_relayout_writes_one_file_per_bucket(spark, tmp_path):
     assert 0 < len(data_files) <= n_buckets, (
         f"{len(data_files)} data files for {n_buckets} buckets: {data_files}"
     )
+
+
+def test_halo_emitter_reads_its_input_once(spark):
+    """focal._emit_fragments emits all nine halo regions from ONE
+    generate chain over its input: an unmaterialized tile relation (here
+    the lazy tiles of a do_mosaic) runs its plan once. A pass-through
+    tap on the input counts the rows read with an accumulator — a union
+    of two emitter arms over the input reads every row twice. (An
+    Observation cannot show this: Spark reports one of the two
+    same-named metric nodes, not their sum.)"""
+    from pyspark.sql import functions as F
+
+    from moamosaic_spark.functions.focal import _emit_fragments
+    from moamosaic_spark.mosaic import do_mosaic
+
+    rasters = synth.golden_pair(96, 96)
+    fp = to_footprints(spark, synth.footprints_pdf(rasters))
+    blocks = to_blocks(spark, synth.blocks_pdf(rasters, 256))
+    tiles = do_mosaic(spark, fp, blocks, MosaicConfig(blocksize=32, with_overviews=False)).tiles
+    n_tiles = tiles.count()
+    read = spark.sparkContext.accumulator(0)
+
+    def tap(batches):
+        for b in batches:
+            read.add(b.num_rows)
+            yield b
+
+    frags = _emit_fragments(tiles.mapInArrow(tap, tiles.schema))
+    assert frags.agg(F.count(F.lit(1))).collect()[0][0] > 9 * n_tiles
+    assert read.value == n_tiles

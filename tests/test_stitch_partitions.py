@@ -76,13 +76,14 @@ def test_direct_stitch_one_exchange_sized_to_cores(spark):
     assert set(got) == set(want.tiles)
     for k, a in got.items():
         assert (a == want.tiles[k]).all(), k
-    # the split stage 2 goes through the same sized Exchange, sized under
-    # the budget that split it: one 64x64 window makes every seam tile hot
+    # a small budget (one 64x64 window) re-sizes that one Exchange and
+    # adds no kernel: a tile's inputs above the budget still fold in
+    # the one stitch, one Arrow batch at a time
     stitched = [(do_mosaic(spark, fp, blocks, MosaicConfig(**base)).stitched, 1, n)]
     with advisory(spark, "8k"):
         for policy in ("last", "blend"):
             cfg = MosaicConfig(**base, merge_policy=policy)
-            stitched.append((do_mosaic(spark, fp, blocks, cfg).stitched, 2,
+            stitched.append((do_mosaic(spark, fp, blocks, cfg).stitched, 1,
                              stitch_partitions(spark, res.grid, 64)))
     for df, kernels, n_k in stitched:
         assert arrow_kernels(df) == kernels
