@@ -12,13 +12,17 @@ Reference phases -> Spark stages:
                                           once per relation: tile relation
                                           + cell-keyed/broadcast spatial join
   domosaic (threads + queue + cache)   -> ONE shuffle (a partition per
-                                          core) into
+                                          core, each a contiguous tile
+                                          range: plans.grid.range_id) into
                                           groupBy(band, tile).applyInArrow
   null block (mosaic.py:351-359)       -> a group holding only the tile's
                                           placeholder row (one per band and
                                           tile): the same kernel emits it
   stats / pyramids (single pass)       -> emitted by the same kernel
-  ordered write                        -> repartitionByRange + sorted sink
+  ordered write                        -> the stitch's own partitions,
+                                          sorted within each: part file i
+                                          holds tile range i, no second
+                                          exchange
 
 The reader threads, block queue, block cache and per-file countdown of
 the reference (structures.py:141-242) all dissolve into the shuffle: the
@@ -207,68 +211,37 @@ def _contributor_chunks(assignments: DataFrame, blocks: DataFrame, src_bs: int) 
         f"CAST((right1 - 1) / {src_bs} AS INT))) AS b_col",
     )
     joined = a.join(blocks, on=["media_ref", "b_row", "b_col"], how="inner")
-    # Clip each chunk to its tile's read window JVM-side BEFORE the big
+    # Clip each chunk to its tile's read rows JVM-side BEFORE the big
     # shuffle (the predicate/projection-pushdown analog of the reference's
-    # windowed ReadAsArray, mosaic.py:264): chunks straddling a tile edge
-    # would otherwise ship ~2x their useful bytes to the stitch stage.
-    #
-    # Clip by ACCESS PATTERN (the focal emitter's lesson, guide §1.2):
-    #   * row-range clip — rows are contiguous in the row-major payload,
-    #     so it is ONE substr per chunk; always applied.
-    #   * column clip — strided. A thin kept strip (width <= half the
-    #     chunk) is emitted as one ROW PER SOURCE ROW, each a single
-    #     codegen'd substr: linear in the strip bytes, no
-    #     interpreted per-element lambda (the previous hex-join bridge
-    #     measured ~5 MB/s — 200x below memcpy). Wide chunks keep their
-    #     full width (clipping a few edge columns would rebuild the
-    #     whole chunk to save almost nothing) and the stitch kernel's
-    #     existing clamp (operators/stitch.py _TileFold.add) drops
-    #     the spare columns on paste. Measured on the bench corpus:
-    #     216 MB shipped vs 210 MB under the full per-pixel clip (+3%)
-    #     at ~5x less clip CPU.
+    # windowed ReadAsArray, mosaic.py:264): rows are contiguous in the
+    # row-major payload, so the clip is ONE codegen'd substr per chunk,
+    # and every chunk crosses the shuffle as ONE row. Columns are not
+    # clipped: a column clip is strided, and the stitch kernel's clamp
+    # (operators/stitch.py _TileFold.add) drops the spare columns on
+    # paste. Each row is one Python iteration in the kernel, so rows
+    # cost more than the spare bytes: on the bench corpus the shuffle
+    # carries 196 rows and 22.0 MB, against 6,312 rows (6,144 of them
+    # one-row strips) and 20.4 MB under a per-row strip clip.
     rt = "greatest(b_top, top1)"
     rb = "least(b_top + b_ysize, bottom1)"
-    cl = "greatest(b_left, left1)"
-    cr = "least(b_left + b_xsize, right1)"
-    cols_untouched = f"({cl} = b_left AND {cr} = b_left + b_xsize)"
-    col_clip = f"(NOT {cols_untouched} AND ({cr} - {cl}) * 2 <= b_xsize)"
     row_clipped = (
         f"substr(pixels, ({rt} - b_top) * b_xsize * {PIXEL_BYTES} + 1, "
         f"({rb} - {rt}) * b_xsize * {PIXEL_BYTES})"
     )
-    # interior chunks (the vast majority at production tile sizes) pass
-    # through untouched; row-only clips are one contiguous slice
-    untouched = f"({rt} = b_top AND {rb} = b_top + b_ysize AND {cols_untouched})"
-    # ONE subtree: a conditional generate fans thin-strip chunks out to
-    # their per-row slices (_sr = source row) and passes every other
-    # chunk through once (_sr null) — a where/union split here would
-    # duplicate the whole join subtree (blocks scanned and joined twice
-    # per action; observed in the physical plan)
-    alive = joined.where(f"{rb} > {rt} AND {cr} > {cl}").selectExpr(
-        "*",
-        f"explode(CASE WHEN {col_clip} THEN sequence({rt}, {rb} - 1) "
-        "ELSE array(CAST(NULL AS INT)) END) AS _sr",
+    # chunks inside the tile's rows (the vast majority at production
+    # tile sizes) pass through untouched
+    untouched = f"({rt} = b_top AND {rb} = b_top + b_ysize)"
+    alive = joined.where(
+        f"{rb} > {rt} AND least(b_left + b_xsize, right1) > greatest(b_left, left1)"
     )
-    src_off = f"((_sr - b_top) * b_xsize + ({cl} - b_left))"
-    strip_px = f"substr(pixels, {src_off} * {PIXEL_BYTES} + 1, ({cr} - {cl}) * {PIXEL_BYTES})"
     # one withColumns: every expression binds to the ORIGINAL chunk
-    # geometry columns (sequential withColumn would rebind cl/cr to
-    # already-replaced b_left/b_xsize)
-    strip = "_sr IS NOT NULL"
-    return (
-        alive.withColumns({
-            name: F.expr(f"CASE WHEN {strip} THEN {strip_v} ELSE {chunk_v} END")
-            for name, strip_v, chunk_v in (
-                ("pixels", strip_px,
-                 f"CASE WHEN {untouched} THEN pixels ELSE {row_clipped} END"),
-                ("b_xsize", f"{cr} - {cl}", "b_xsize"),
-                ("b_left", cl, "b_left"),
-                ("b_ysize", "1", f"{rb} - {rt}"),
-                ("b_top", "_sr", rt),
-            )
-        })
-        .drop("top1", "left1", "bottom1", "right1", "_sr")
-    )
+    # geometry columns (sequential withColumn would rebind rt/rb to the
+    # already-replaced b_top/b_ysize)
+    return alive.withColumns({
+        "pixels": F.expr(f"CASE WHEN {untouched} THEN pixels ELSE {row_clipped} END"),
+        "b_ysize": F.expr(f"{rb} - {rt}"),
+        "b_top": F.expr(rt),
+    }).drop("top1", "left1", "bottom1", "right1")
 
 
 def _with_placeholders(work: DataFrame, tiles: DataFrame, n_bands: int) -> DataFrame:
@@ -335,13 +308,18 @@ def _stitch_tail(
     blocksize: int,
 ) -> MosaicResult:
     """The stitch and everything after it, shared by the direct path and
-    the relayout path. ``work`` arrives already distributed by (band,
-    tile) — the direct path's one Exchange, or a bucketed scan — and
-    holds a placeholder row per output (band, tile) (_with_placeholders).
-    The one stitch kernel folds each group's Arrow batches as they come,
-    so no group, however many contributors it has, is held whole."""
+    the relayout path. ``work`` arrives already distributed by its tile
+    range ``_rid`` (plans.grid.range_id) — the direct path's one
+    Exchange, or a bucketed scan — and holds a placeholder row per
+    output (band, tile) (_with_placeholders). Grouping by ``_rid`` too
+    lets that distribution satisfy the groupBy, so partition i of the
+    stitch output is tile range i: the sinks write it as it is. The one
+    stitch kernel folds each group's Arrow batches as they come, so no
+    group, however many contributors it has, is held whole."""
     fn = make_stitch_kernel(grid, levels, config.merge_policy, config.blend_feather)
-    stitched = work.groupBy("band", "tile_row", "tile_col").applyInArrow(fn, STITCH_SCHEMA)
+    stitched = work.groupBy("_rid", "band", "tile_row", "tile_col").applyInArrow(
+        fn, STITCH_SCHEMA
+    )
     return MosaicResult(
         grid=grid,
         levels=levels,
@@ -459,18 +437,25 @@ def _mosaic_from_row(
     # the stitch's ONE Exchange, sized to the cluster: a task per core
     # folds many groups, so the per-task Python set-up is paid
     # ~defaultParallelism times instead of once per shuffle partition.
+    # Partition i is tile range i, so the sinks need no exchange.
     n_parts = gridmod.stitch_partitions(spark, grid, config.blocksize, tile_row_range)
-    work = _with_placeholders(work, tiles, grid.n_bands)
+    work = _with_placeholders(work, tiles, grid.n_bands).selectExpr(
+        "*", gridmod.range_id(grid, config.blocksize, n_parts, tile_row_range)
+    )
     return _stitch_tail(
-        work.repartition(n_parts, "band", "tile_row", "tile_col"),
-        assignments, grid, levels, config, config.blocksize,
+        work.repartition(n_parts, "_rid"), assignments, grid, levels, config,
+        config.blocksize,
     )
 
 
-def write_mosaic(result: MosaicResult, path: str, partitions: int | None = None) -> None:
-    """Ordered sink (O2/S6): deterministic row-major tile order via range
-    partitioning + in-partition sort — the distributed form of the
-    reference's strictly ordered single-writer loop (mosaic.py:337-375).
+def write_mosaic(result: MosaicResult, path: str) -> None:
+    """Ordered sink (O2/S6): deterministic row-major tile order — the
+    distributed form of the reference's strictly ordered single-writer
+    loop (mosaic.py:337-375). The stitch's partitions are already its
+    contiguous tile ranges in order (plans.grid.range_id), so each sink
+    only sorts within a partition and writes: part file i holds tile
+    range i, and no sink shuffles. An overview file holds every level
+    of its tile range, sorted by (level, band, tile_row, tile_col).
 
     The stitched relation feeds three sinks (tiles, overviews, stats);
     persisting it makes the scan+join+stitch run ONCE — the single-pass
@@ -484,27 +469,21 @@ def write_mosaic(result: MosaicResult, path: str, partitions: int | None = None)
     if persisted:
         result.stitched.persist()
     try:
-        _run_concurrently(result.tiles.sparkSession, _mosaic_sinks(result, path, partitions))
+        _run_concurrently(result.tiles.sparkSession, _mosaic_sinks(result, path))
     finally:
         if persisted:
             result.stitched.unpersist()
 
 
-def _mosaic_sinks(result: MosaicResult, path: str, partitions: int | None) -> list:
+def _mosaic_sinks(result: MosaicResult, path: str) -> list:
     """The writes of write_mosaic, one callable per output table."""
-    t = result.tiles
-    if partitions:
-        t = t.repartitionByRange(partitions, "band", "tile_row", "tile_col")
-    else:
-        t = t.repartitionByRange("band", "tile_row", "tile_col")
     sinks = [
-        lambda: t.sortWithinPartitions("band", "tile_row", "tile_col")
+        lambda: result.tiles.sortWithinPartitions("band", "tile_row", "tile_col")
         .write.mode("overwrite").parquet(f"{path}/tiles")
     ]
     if result.levels:
-        o = result.overviews.repartitionByRange("level", "band", "tile_row", "tile_col")
         sinks.append(
-            lambda: o.sortWithinPartitions("level", "band", "tile_row", "tile_col")
+            lambda: result.overviews.sortWithinPartitions("level", "band", "tile_row", "tile_col")
             .write.mode("overwrite").parquet(f"{path}/overviews")
         )
     sinks.append(

@@ -4,8 +4,8 @@ accumulators emitted by the stitch kernel.
 Same algebra as the reference StatsAccumulator (mosaic.py:746-794):
 mean = sum/count, variance = ssq/count - mean^2 clamped at 0 (the
 negative-rounding guard at mosaic.py:791), stddev = sqrt(variance).
-Spark's hash-aggregate partial+final is the distributed form of the
-reference's incremental single-pass accumulation.
+The per-tile partials are the distributed form of the reference's
+incremental single-pass accumulation; one task folds them.
 """
 
 from __future__ import annotations
@@ -16,12 +16,21 @@ from pyspark.sql import DataFrame, functions as F
 def finalize_stats(stitch_out: DataFrame) -> DataFrame:
     """Per-band stats from level-0 stitch rows.
 
+    The reduce has no Exchange: one task (``coalesce(1)``) reads the
+    five partial columns of every level-0 row and aggregates them, so
+    that task holds at most tiles x bands rows of five numbers (a
+    million 1024² tiles: ~40 MB of partials). Read it over a persisted
+    stitch, as write_mosaic does: the task then reads cached rows, and
+    the stitch runs in its own tasks. Over an unpersisted stitch the
+    one task also runs the stitch.
+
     Bands with zero non-null pixels get null min/max/mean/stddev and
     count 0 (reference skips writing metadata when count==0,
     mosaic.py:389).
     """
     agg = (
         stitch_out.where("level = 0")
+        .coalesce(1)
         .groupBy("band")
         .agg(*[F.expr(e) for e in (
             "sum(px_count) AS count",

@@ -253,9 +253,11 @@ def _key_ints(key) -> tuple:
 def make_stitch_kernel(
     grid: OutputGrid, levels: list[int], policy: str = "last", feather: int = 64,
 ):
-    """The applyInArrow kernel for groupBy(band, tile_row, tile_col), in
-    PySpark's iterator form: it folds the group's record batches one at
-    a time (_TileFold) and yields the tile, its stats partials and its
+    """The applyInArrow kernel for groupBy(..., band, tile_row, tile_col)
+    (the stitch also groups by its tile range first, mosaic._stitch_tail;
+    the kernel reads the last three key fields), in PySpark's iterator
+    form: it folds the group's record batches one at a time (_TileFold)
+    and yields the tile, its stats partials and its
     pyramid fragments as one batch. Payloads are read zero-copy from
     the Arrow binary buffers and emitted as one batched binary column.
 
@@ -271,7 +273,7 @@ def make_stitch_kernel(
     def stitch(
         key: Tuple[pa.Scalar, ...], batches: Iterator[pa.RecordBatch]
     ) -> Iterator[pa.RecordBatch]:
-        band, tile_row, tile_col = _key_ints(key)
+        band, tile_row, tile_col = _key_ints(key[-3:])
         fold = None
         for batch in batches:
             if batch.num_rows == 0:

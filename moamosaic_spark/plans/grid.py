@@ -19,6 +19,7 @@ driver.
 
 from __future__ import annotations
 
+import functools
 import math
 from dataclasses import dataclass
 
@@ -164,6 +165,64 @@ def stitch_partitions(
     est_bytes = groups * blocksize * blocksize * PIXEL_BYTES
     return min(groups, max(spark.sparkContext.defaultParallelism,
                            math.ceil(est_bytes / advisory_bytes(spark))))
+
+
+_M32 = 0xFFFFFFFF
+
+
+def spark_hash_int(v: int) -> int:
+    """Spark's ``hash(v)`` of an INT value: Murmur3 x86_32 ``hashInt``
+    with seed 42, the hash behind ``repartition(n, col)`` and
+    ``bucketBy(n, col)`` (partition = ``pmod(hash(v), n)``)."""
+    def rotl(x: int, r: int) -> int:
+        return ((x << r) | (x >> (32 - r))) & _M32
+
+    k = rotl((v & _M32) * 0xCC9E2D51 & _M32, 15) * 0x1B873593 & _M32
+    h = (rotl(42 ^ k, 13) * 5 + 0xE6546B64) & _M32
+    h ^= 4  # the input length in bytes
+    h = (h ^ (h >> 16)) * 0x85EBCA6B & _M32
+    h = (h ^ (h >> 13)) * 0xC2B2AE35 & _M32
+    h ^= h >> 16
+    return h - (1 << 32) if h >> 31 else h
+
+
+@functools.lru_cache(maxsize=64)
+def range_values(n: int) -> tuple[int, ...]:
+    """``n`` distinct ints whose Spark hash partition among ``n`` is
+    their index: ``pmod(hash(range_values(n)[i]), n) == i``. The first
+    int that lands in each still-empty partition takes it (about
+    n·ln n hashes)."""
+    vals: list = [None] * n
+    left, v = n, 0
+    while left:
+        i = spark_hash_int(v) % n
+        if vals[i] is None:
+            vals[i], left = v, left - 1
+        v += 1
+    return tuple(vals)
+
+
+def range_id(
+    grid: OutputGrid,
+    blocksize: int,
+    n: int,
+    tile_row_range: tuple[int, int] | None = None,
+) -> str:
+    """The SQL column ``_rid``: cuts the row-major (band, tile_row,
+    tile_col) order of the tiles a run covers (the half-open
+    ``tile_row_range``, as in stitch_partitions) into ``n`` contiguous
+    ranges whose sizes differ by at most one, and names range *i* by
+    ``range_values(n)[i]``. So ``repartition(n, "_rid")`` and
+    ``bucketBy(n, "_rid")`` both put range *i* in partition/bucket *i*:
+    partition order is tile order, with no sampling."""
+    nb_r, nb_c = n_blocks(grid.nrows, blocksize), n_blocks(grid.ncols, blocksize)
+    lo, hi = (0, nb_r) if tile_row_range is None else (
+        max(int(tile_row_range[0]), 0), min(int(tile_row_range[1]), nb_r))
+    rows = max(1, hi - lo)
+    total = grid.n_bands * rows * nb_c
+    idx = f"((CAST(band AS BIGINT) - 1) * {rows} + tile_row - {lo}) * {nb_c} + tile_col"
+    vals = ", ".join(map(str, range_values(n)))
+    return f"element_at(array({vals}), CAST(({idx}) * {n} DIV {total} AS INT) + 1) AS _rid"
 
 
 def advisory_bytes(spark: SparkSession) -> int:

@@ -4,10 +4,13 @@ The mosaic's one wide shuffle moves every contributing pixel into its
 (band, tile) group. When the same corpus is stitched repeatedly —
 different merge policies, incremental re-merges, pyramid rebuilds,
 resumed runs — that shuffle can be paid ONCE: materialize the
-join+clip output ("work relation") as a table **bucketed by the stitch
-group keys**. Spark's bucketed scan then satisfies the grouped-map
-operator's ClusteredDistribution directly: the stitch plan contains NO
-Exchange (verified in tests; only an in-partition Sort remains).
+join+clip output ("work relation") as a table **bucketed by its tile
+range** ``_rid`` (plans.grid.range_id): bucket i holds the i-th
+contiguous range of the row-major (band, tile_row, tile_col) order.
+The stitch groups by ``_rid`` too, so Spark's bucketed scan satisfies
+the grouped-map operator's ClusteredDistribution directly: the stitch
+plan contains NO Exchange (verified in tests; only an in-partition Sort
+remains), and its partition i, tile range i, is what the sinks write.
 
 This is the table-world analog of pre-tiled raster inputs, and the
 concrete form of "partition the storage by spatial cell" from BENCH.md.
@@ -39,7 +42,8 @@ from ..mosaic import (
 )
 from ..pixels import PIXEL_TYPE, ingest
 from ..plans.grid import (
-    OutputGrid, make_output_grid, make_tile_relation, overview_levels, stitch_partitions,
+    OutputGrid, make_output_grid, make_tile_relation, overview_levels, range_id,
+    stitch_partitions,
 )
 from ..schema import FOOTPRINTS_SCHEMA
 
@@ -110,26 +114,34 @@ def relayout_to_table(
     for t in (table, f"{table}_meta"):
         spark.sql(f"DROP TABLE IF EXISTS {t}")
         _drop_stale_location(spark, t)
-    _write_bucketed(_with_placeholders(work, tiles, grid.n_bands), table, n_buckets,
-                    "overwrite")
+    work = _with_placeholders(work, tiles, grid.n_bands)
+    _write_bucketed(_with_range_id(work, grid, config.blocksize, n_buckets), table,
+                    n_buckets, "overwrite")
     _write_meta(spark, table, grid, config, n_buckets, fingerprint)
     return grid
 
 
+def _with_range_id(work: DataFrame, grid: OutputGrid, blocksize: int, n_buckets: int):
+    """``work`` plus its tile range ``_rid`` among ``n_buckets`` ranges
+    of the whole grid (plans.grid.range_id): the bucket key."""
+    return work.selectExpr("*", range_id(grid, blocksize, n_buckets))
+
+
 def _write_bucketed(work: DataFrame, table: str, n_buckets: int, mode: str) -> None:
-    """Write work rows into ``table`` bucketed and sorted by the stitch
-    group keys. Repartition on the bucket key first: without it every
-    write task holds rows of most buckets and emits one file per (task,
+    """Write work rows (with their ``_rid``, _with_range_id) into
+    ``table`` bucketed by ``_rid`` and sorted by it and the stitch group
+    keys. Repartition on the bucket key first: without it every write
+    task holds rows of most buckets and emits one file per (task,
     bucket) pair — hundreds of tiny files whose create/commit overhead
     dominates the build and whose open overhead taxes every later
     bucketed scan (guide §6: small files hurt twice). Hash-partitioned
     n_buckets ways, each task writes exactly its own bucket: n_buckets
     files total."""
     (
-        work.repartition(n_buckets, "band", "tile_row", "tile_col")
+        work.repartition(n_buckets, "_rid")
         .write.mode(mode)
-        .bucketBy(n_buckets, "band", "tile_row", "tile_col")
-        .sortBy("band", "tile_row", "tile_col")
+        .bucketBy(n_buckets, "_rid")
+        .sortBy("_rid", "band", "tile_row", "tile_col")
         .saveAsTable(table)
     )
 
@@ -159,7 +171,7 @@ def _write_meta(
         nullval=grid.nullval, dtype=grid.dtype, projection=grid.projection,
         blocksize=config.blocksize, min_overview_size=config.min_overview_size,
         n_buckets=n_buckets, src_blocksize=config.src_blocksize,
-        fingerprint=fingerprint, placeholders=True,
+        fingerprint=fingerprint, placeholders=True, range_buckets=True,
     )
     spark.createDataFrame([(json.dumps(meta),)], "meta string").write.mode(
         "overwrite"
@@ -217,10 +229,13 @@ def _reregister_relayout(spark: SparkSession, table: str, loc: str) -> None:
     df = spark.read.parquet(loc)
     ddl = ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields)
     nb = int(m.get("n_buckets", 64))
+    # an older layout keeps its own bucket spec: _current then rejects it
+    keys = ["band", "tile_row", "tile_col"]
+    by, order = (["_rid"], ["_rid", *keys]) if m.get("range_buckets") else (keys, keys)
     spark.sql(
         f"CREATE TABLE {table} ({ddl}) USING parquet "
-        f"CLUSTERED BY (band, tile_row, tile_col) "
-        f"SORTED BY (band, tile_row, tile_col) INTO {nb} BUCKETS "
+        f"CLUSTERED BY ({', '.join(by)}) "
+        f"SORTED BY ({', '.join(order)}) INTO {nb} BUCKETS "
         f"LOCATION '{os.path.abspath(loc)}'"
     )
 
@@ -249,8 +264,9 @@ def ensure_relayout_table(
     no_footprints = spark.createDataFrame([], FOOTPRINTS_SCHEMA)
     _, empty = _work_relation(tiles, no_footprints, ingest(blocks).limit(0), grid, config)
     n_buckets = _bucket_count(spark, grid, config, n_buckets)
-    _write_bucketed(_with_placeholders(empty, tiles, grid.n_bands), table, n_buckets,
-                    "overwrite")
+    empty = _with_placeholders(empty, tiles, grid.n_bands)
+    _write_bucketed(_with_range_id(empty, grid, config.blocksize, n_buckets), table,
+                    n_buckets, "overwrite")
     _write_meta(spark, table, grid, config, n_buckets)
 
 
@@ -263,11 +279,11 @@ def relayout_append(
 ) -> None:
     """Append the work rows of NEW footprints into an existing bucketed
     relayout table (same grid, tiling and bucket spec — from the table
-    meta; ``config`` supplies the join strategy). Replaying an append
-    after a crash duplicates rows; the stitch folds a chunk once per
-    (priority, b_top, b_left), so every merge policy is idempotent
-    under duplicates and resume semantics hold — compact by re-running
-    relayout_to_table when growth matters."""
+    meta, which fixes each row's ``_rid``; ``config`` supplies the join
+    strategy). Replaying an append after a crash duplicates rows; the
+    stitch folds a chunk once per (priority, b_top, b_left), so every
+    merge policy is idempotent under duplicates and resume semantics
+    hold — compact by re-running relayout_to_table when growth matters."""
     m = _load_meta(spark, table)
     grid = _grid_from_meta(m)
     config = dataclasses.replace(
@@ -276,7 +292,9 @@ def relayout_append(
     )
     tiles = make_tile_relation(spark, grid, config.blocksize)
     _, work = _work_relation(tiles, footprints_new, ingest(blocks), grid, config)
-    _write_bucketed(work, table, int(m.get("n_buckets", 64)), "append")
+    n_buckets = int(m.get("n_buckets", 64))
+    _write_bucketed(_with_range_id(work, grid, config.blocksize, n_buckets), table,
+                    n_buckets, "append")
 
 
 def _drop_stale_location(spark: SparkSession, table: str) -> None:
@@ -313,10 +331,16 @@ def _attach(spark: SparkSession, table: str) -> bool:
 def _current(work: DataFrame, meta: dict) -> bool:
     """Whether a relayout table has this version's layout — a schema
     and meta read, no job: packed pixels (tables built from
-    ``array<int>`` blocks by older versions hold none) and a placeholder
+    ``array<int>`` blocks by older versions hold none), a placeholder
     row per (band, tile) (the meta's ``placeholders`` mark; without
-    those rows a tile no input covers would be missing)."""
-    return meta.get("placeholders") is True and work.schema["pixels"].dataType == PIXEL_TYPE
+    those rows a tile no input covers would be missing) and buckets
+    that are tile ranges (the ``range_buckets`` mark; buckets hashed on
+    the tile key would need an Exchange before the ordered sinks)."""
+    return (
+        meta.get("placeholders") is True
+        and meta.get("range_buckets") is True
+        and work.schema["pixels"].dataType == PIXEL_TYPE
+    )
 
 
 def _grid_from_meta(m: dict) -> OutputGrid:
@@ -408,7 +432,8 @@ def stitch_from_relayout(
     if not _current(src, m):
         raise ValueError(
             f"relayout table {table!r} was built by an older version (array<int> "
-            "pixels or no placeholder rows); rebuild it with relayout_to_table"
+            "pixels, no placeholder rows or no tile-range buckets); rebuild it "
+            "with relayout_to_table"
         )
     return _stitch_table(src, m, config, tile_row_range, tile_keys)
 
@@ -428,7 +453,7 @@ def _stitch_table(
         if config.with_overviews
         else []
     )
-    # the bucketed scan already distributes by (band, tile): no Exchange
+    # the bucketed scan already distributes by tile range: no Exchange
     work = _restrict_tiles(src, tile_row_range, tile_keys)
     assignments = (
         work.where("media_ref IS NOT NULL")

@@ -179,9 +179,10 @@ def resumable_mosaic(
             res.tiles.withColumn("batch", F.lit(b))
             .observe(obs, F.count(F.lit(1)).alias("n"))
         )
+        # the batch's stitch partitions are already its tile ranges in
+        # order (plans.grid.range_id): sort within them, no exchange
         (
-            batch_tiles.repartitionByRange("band", "tile_row", "tile_col")
-            .sortWithinPartitions("band", "tile_row", "tile_col")
+            batch_tiles.sortWithinPartitions("band", "tile_row", "tile_col")
             .write.mode("overwrite")
             .partitionBy("batch")
             .parquet(f"{out_path}/tiles")

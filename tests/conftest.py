@@ -137,3 +137,27 @@ def sql_executions(spark):
         n[0] = last_id() - before
 
     return counting
+
+
+@pytest.fixture
+def spark_jobs(spark):
+    """``with spark_jobs() as n:`` puts the number of Spark jobs the
+    block ran into ``n[0]``: the growth of the highest job id in the
+    status store, read once the listener bus has delivered every event.
+    With adaptive execution each shuffle map stage is a job of its own,
+    so an extra exchange shows here."""
+    sc = spark.sparkContext._jsc.sc()
+
+    def last_id():
+        sc.listenerBus().waitUntilEmpty()
+        jobs = sc.statusStore().jobsList(None)
+        return max((jobs.apply(i).jobId() for i in range(jobs.size())), default=-1)
+
+    @contextmanager
+    def counting():
+        n = [0]
+        before = last_id()
+        yield n
+        n[0] = last_id() - before
+
+    return counting

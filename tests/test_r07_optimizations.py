@@ -5,9 +5,9 @@ existing suites (golden-pair mosaics, the driver-contract oracle
 battery, neardup-vs-crossjoin); these tests pin the NEW internal
 mechanisms directly:
 
-* the access-pattern chunk clip in ``mosaic._contributor_chunks``
-  (narrow column clips become per-row strips, wide ones ship full
-  width, interior chunks pass through — all in ONE join subtree);
+* the row clip in ``mosaic._contributor_chunks`` (every chunk ships
+  as one full-width row, row-clipped or passed through — all in ONE
+  join subtree);
 * the GEMM re-rank's zero-norm / NaN semantics in
   ``similarity.neardup_pairs``;
 * the one-file-per-bucket relayout write.
@@ -30,12 +30,13 @@ from tests.conftest import advisory, to_blocks, to_footprints
 
 
 def test_chunk_clip_access_pattern_invariants(spark):
-    """src_bs=64 chunks against blocksize=96 tiles force all three clip
-    branches: chunks fully inside a tile (untouched), chunks straddling
-    a tile edge with a thin kept strip (<= half width -> one row per
-    source row), and row-range clips. Every emitted payload must match
-    its advertised geometry exactly — the stitch kernel pastes by
-    (b_top, b_left, b_ysize, b_xsize) and trusts the byte count."""
+    """src_bs=64 chunks against blocksize=96 tiles: chunks fully inside
+    a tile (untouched), chunks straddling a tile's top or bottom edge
+    (row-clipped) and chunks straddling a side edge. Every chunk is one
+    row at its whole width — the stitch kernel's clamp drops the
+    columns outside the tile — and every emitted payload must match its
+    advertised geometry exactly: the kernel pastes by (b_top, b_left,
+    b_ysize, b_xsize) and trusts the byte count."""
     rasters = synth.grid3x3(150, 150)
     fp = spark.createDataFrame(synth.footprints_pdf(rasters), schema=FOOTPRINTS_SCHEMA)
     blocks = to_blocks(spark, synth.blocks_pdf(rasters, 64))
@@ -45,24 +46,26 @@ def test_chunk_clip_access_pattern_invariants(spark):
     assignments = assign_inputs(tiles, fp, grid, strategy="broadcast")
     work = _contributor_chunks(assignments, blocks, 64)
 
-    rows = work.select("b_top", "b_left", "b_ysize", "b_xsize", "pixels").collect()
+    rows = work.select(
+        "b_top", "b_left", "b_ysize", "b_xsize", "pixels", "in_left", "in_xsize"
+    ).collect()
     assert rows, "empty work relation"
-    strips = full_width = 0
+    row_clipped = side_straddling = 0
     for r in rows:
         assert len(bytes(r.pixels)) == r.b_ysize * r.b_xsize * 2, (
             f"payload/geometry mismatch at ({r.b_top},{r.b_left}) "
             f"{r.b_ysize}x{r.b_xsize}: {len(bytes(r.pixels))} bytes"
         )
-        if r.b_ysize == 1 and r.b_xsize < 64:
-            # narrow column clip: emitted per-row, width <= half a chunk
-            assert r.b_xsize * 2 <= 64
-            strips += 1
-        if r.b_xsize == 64:
-            full_width += 1
-    assert strips, "no thin-strip rows emitted (narrow clip branch untested)"
-    assert full_width, "no full-width chunks (pass-through branch untested)"
+        # one row per chunk, at the chunk's whole width (the last chunk
+        # column of a 150-px raster is 22 px wide)
+        assert r.b_left % 64 == 0 and r.b_xsize == min(64, 150 - r.b_left), r
+        row_clipped += r.b_ysize < min(64, 150 - r.b_top // 64 * 64)
+        # the tile's read window, in source columns
+        side_straddling += r.b_left < r.in_left or r.b_left + r.b_xsize > r.in_left + r.in_xsize
+    assert row_clipped, "no row-clipped chunks (row clip untested)"
+    assert side_straddling, "no chunk straddles a tile's side edge (clamp untested)"
 
-    # the conditional generate must stay ONE subtree: the plan has
+    # the clip must stay ONE subtree: the plan has
     # exactly two joins (tiles x broadcast footprints, then the blocks
     # equi-join); a where/union split around the clip would duplicate
     # both of them per action

@@ -324,6 +324,54 @@ def test_unmarked_relayout_table_rejected_and_rebuilt(spark):
         spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
+def test_hash_bucketed_relayout_table_rejected_and_rebuilt(spark, tmp_path):
+    """A relayout table laid out by an older version — bucketed by the
+    tile key (band, tile_row, tile_col), no ``_rid`` column, no
+    ``range_buckets`` mark in its meta — is never stitched: its buckets
+    are not tile ranges, so the sinks' parts would come out of order.
+    stitch_from_relayout raises the "older version" error naming it;
+    do_mosaic's routing rebuilds it with range buckets, and the output
+    equals the oracle."""
+    import json
+
+    import pytest
+
+    from moamosaic_spark.mosaic import write_mosaic
+    from moamosaic_spark.sources.relayout import _load_meta
+    from tests.conftest import fresh_table
+
+    rasters = synth.grid3x3(150, 150)
+    fp = to_footprints(spark, synth.footprints_pdf(rasters))
+    blocks = to_blocks(spark, synth.blocks_pdf(rasters, 256))
+    cfg = MosaicConfig(blocksize=64, src_blocksize=256, with_overviews=False)
+    table = fresh_table(spark, "work_hashed")
+    relayout_to_table(spark, fp, blocks, table, cfg, n_buckets=4)
+    m = _load_meta(spark, table)
+    del m["range_buckets"]
+    old = spark.table(table).drop("_rid").localCheckpoint(eager=True)
+    key = ["band", "tile_row", "tile_col"]
+    (old.repartition(4, *key).write.mode("overwrite").bucketBy(4, *key)
+     .sortBy(*key).saveAsTable(table))
+    spark.createDataFrame([(json.dumps(m),)], "meta string").write.mode(
+        "overwrite").saveAsTable(f"{table}_meta")
+
+    with pytest.raises(ValueError, match="work_hashed.*older version"):
+        stitch_from_relayout(spark, table, cfg)
+
+    res = do_mosaic(spark, fp, blocks, MosaicConfig(
+        blocksize=64, src_blocksize=256, with_overviews=False, relayout_table=table))
+    assert _load_meta(spark, table)["range_buckets"] is True
+    assert "_rid" in spark.table(table).columns
+    write_mosaic(res, str(tmp_path))
+    want = synth.oracle(rasters, blocksize=64, min_overview_size=9999)
+    got = {(r.band, r.tile_row, r.tile_col): decode(r.pixels).reshape(r.ysize, r.xsize)
+           for r in spark.read.parquet(str(tmp_path / "tiles")).collect()}
+    assert set(got) == set(want.tiles)
+    for k, a in got.items():
+        np.testing.assert_array_equal(a, want.tiles[k], err_msg=str(k))
+    fresh_table(spark, table)
+
+
 def _stitched_rows(res) -> dict:
     """Every stitched row (tiles and fragments), bytes and stats."""
     return {

@@ -129,3 +129,42 @@ def test_resume_from_relayout(spark, tmp_path, corpus):
     assert set(tiles.keys()) == set(want.tiles.keys())
     for key, arr in tiles.items():
         np.testing.assert_array_equal(arr, want.tiles[key], err_msg=f"tile {key}")
+
+
+@pytest.mark.parametrize("route,per_batch", [("direct", 5), ("relayout", 3)])
+def test_batches_write_with_no_range_shuffle(spark, tmp_path, corpus, spark_jobs,
+                                             route, per_batch):
+    """A batch writes its stitch partitions as they are: they are its
+    tile ranges in order. One batch's jobs (a 3-batch run minus a
+    1-batch run, halved): 3 off a relayout table (meta read, tile write,
+    lineage append) and 5 direct (the tile write also runs the joins'
+    broadcasts and the stitch's map stage); each was 2 more when a
+    batch range-sampled and re-exchanged its tiles. Every batch's part
+    files, read in part order, hold strictly increasing tile keys."""
+    import pyarrow.parquet as pq
+
+    from moamosaic_spark.sources.relayout import relayout_to_table
+    from tests.conftest import fresh_table
+
+    fp, blocks, want, cfg = corpus
+    table = None
+    if route == "relayout":
+        table = fresh_table(spark, "work_batch_jobs")
+        relayout_to_table(spark, fp, blocks, table, cfg, n_buckets=8)
+    jobs = {}
+    for n_batches in (1, 3):
+        out = tmp_path / f"b{n_batches}"
+        with spark_jobs() as n:
+            resumable_mosaic(spark, fp, blocks, str(out), cfg, n_batches=n_batches,
+                             relayout_table=table)
+        jobs[n_batches] = n[0]
+        for batch in out.joinpath("tiles").glob("batch=*"):
+            files = sorted(batch.glob("part-*"), key=lambda p: int(p.name.split("-")[1]))
+            keys = [(r["band"], r["tile_row"], r["tile_col"])
+                    for f in files for r in pq.read_table(f).to_pylist()]
+            assert keys and all(a < b for a, b in zip(keys, keys[1:])), (batch, keys)
+    assert (jobs[3] - jobs[1]) / 2 == per_batch, jobs
+    tiles = _read_tiles(spark, str(tmp_path / "b3"))
+    assert set(tiles) == set(want.tiles)
+    if table:
+        fresh_table(spark, table)

@@ -63,7 +63,7 @@ def test_concurrent_sinks_write_the_sequential_bytes(spark, golden, tmp_path):
     res = _mosaic(spark, golden)
     res.stitched.persist()
     try:
-        for write in _mosaic_sinks(res, str(tmp_path / "sequential"), None):
+        for write in _mosaic_sinks(res, str(tmp_path / "sequential")):
             write()
     finally:
         res.stitched.unpersist()

@@ -15,9 +15,7 @@ from moamosaic_spark.sources.relayout import (
 )
 from tests.conftest import advisory, arrow_kernels, fresh_table, to_blocks, to_footprints
 
-STITCH_EXCHANGE = re.compile(
-    r"Exchange hashpartitioning\(band#\d+, tile_row#\d+, tile_col#\d+, (\d+)\)"
-)
+STITCH_EXCHANGE = re.compile(r"Exchange hashpartitioning\(_rid#\d+, (\d+)\)")
 
 
 def _grid(n_px: int, n_bands: int = 1, dtype: str = "uint16") -> OutputGrid:

@@ -83,6 +83,6 @@ def test_stitched_plan_one_kernel_no_gap_path(spark, route):
         fresh_table(spark, "work_plan")
     else:
         stitch_exchange = re.findall(
-            r"Exchange hashpartitioning\(band#\d+, tile_row#\d+, tile_col#\d+", plan
+            r"Exchange hashpartitioning\(_rid#\d+", plan
         )
         assert len(stitch_exchange) == 1, plan
