@@ -21,7 +21,8 @@ Option mapping (reference option -> here):
                         and for the --xres/--yres same-CRS rescale
     --monitorjson    -> --monitorjson
 Extras: --strategy/--cell-size-px (join physical strategy),
---merge-policy, --batches/--resume (lineage checkpointing),
+--merge-policy, --batches/--relayout-table (resumable batches, and the
+bucketed work table both routes stitch off),
 --derived hillshade|terrain|basins (gdaldem-style product tables).
 """
 
@@ -54,9 +55,9 @@ def get_parser() -> argparse.ArgumentParser:
     p.add_argument("--relayout-table", default=None,
                    help="bucketed work table (sources/relayout.py): built on "
                         "first use (pays the wide shuffle once), then every "
-                        "run over the same corpus and tiling stitches off it "
-                        "with no Exchange; a stale table is rebuilt — the "
-                        "repeated-run production pattern")
+                        "run or batch over the same corpus and tiling "
+                        "stitches off it with no Exchange; a stale table is "
+                        "rebuilt — the repeated-run production pattern")
     p.add_argument("--rebuild-relayout", action="store_true",
                    help="force re-materializing --relayout-table")
     p.add_argument("--out-epsg", type=int, default=None,
@@ -81,10 +82,6 @@ def main(argv: list[str] | None = None) -> None:
     args = parser.parse_args(argv)
     if not args.docs and not args.footprints:
         parser.error("one of --docs / --footprints is required")
-    if args.relayout_table and args.batches > 1:
-        parser.error("--relayout-table and --batches are exclusive "
-                     "(use incremental_mosaic_stream(relayout_table=) "
-                     "for batched runs over a relayout)")
     if args.derived and args.batches > 1:
         # validated up front: the old post-run check threw away a
         # potentially hours-long batched mosaic before erroring
@@ -165,6 +162,12 @@ def main(argv: list[str] | None = None) -> None:
     )
 
     with mon.ctx("domosaic"):
+        if args.relayout_table and args.rebuild_relayout:
+            from .sources.relayout import relayout_to_table
+
+            relayout_to_table(spark, fp, blocks, args.relayout_table, cfg)
+        # both routes stitch off cfg.relayout_table, and the first run
+        # or batch (re)builds it when it is absent or stale
         if args.batches > 1:
             from .streaming.lineage import resumable_mosaic
 
@@ -173,13 +176,6 @@ def main(argv: list[str] | None = None) -> None:
             )
             print(json.dumps({k: v for k, v in info.items() if k != "grid"}))
         else:
-            if args.relayout_table and args.rebuild_relayout:
-                from .sources.relayout import relayout_to_table
-
-                relayout_to_table(spark, fp, blocks, args.relayout_table, cfg)
-            # do_mosaic routes through cfg.relayout_table: it stitches off
-            # the table when it holds exactly this corpus and tiling, and
-            # (re)builds it first when it is absent or stale
             res = do_mosaic(spark, fp, blocks, cfg)
             write_mosaic(res, args.out)
 

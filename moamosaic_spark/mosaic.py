@@ -67,14 +67,13 @@ class MosaicConfig:
     # contributor's source edge — nodata-aware, seams fade)
     merge_policy: str = "last"
     blend_feather: int = 64            # feather width (px) for 'blend'
-    # storage-side relayout routing (sources/relayout.py): when set,
-    # do_mosaic stitches off this bucketed work table whenever it holds
-    # EXACTLY this corpus (footprint fingerprint + geometry match, see
-    # mosaic_via_relayout) — the repeated-run path with zero stitch
-    # Exchange. Absent/stale table: it is (re)built first, which makes
-    # that do_mosaic call eager (one write action). An explicit grid
-    # that mismatches the table falls back to the direct path silently
-    # — results are identical either way.
+    # the one relayout switch (sources/relayout.py): do_mosaic and each
+    # resumable_mosaic batch stitch off this bucketed work table whenever
+    # it holds EXACTLY this corpus (mosaic_via_relayout) — zero stitch
+    # Exchange — and (re)build it first, eagerly, when absent or stale;
+    # an explicit grid that mismatches it runs the direct path. An
+    # incremental mosaic (process_batch) accumulates its micro-batches
+    # in it instead (a stream table); each kind refuses the other.
     relayout_table: str | None = None
     # bucket count of a table built by that routing; None -> one per
     # core, sized like the direct stitch (plans.grid.stitch_partitions)
@@ -395,7 +394,6 @@ def _mosaic_from_row(
     from .session import ensure_workers_can_import
 
     ensure_workers_can_import(spark)
-    routable = config.relayout_table is not None
     if grid is not None:
         check_nullval(grid.nullval)
     else:
@@ -405,20 +403,12 @@ def _mosaic_from_row(
     if config.check_blocks:
         validate_blocks(footprints, blocks)
 
-    if routable:
-        # storage-side fast path: stitch off the bucketed relayout when
-        # the table carries exactly this corpus; (re)build it when not.
-        # Returns None only when routing cannot apply (explicit grid
-        # mismatch) — then the direct dataflow below runs as usual.
-        from .sources.relayout import footprints_fingerprint, mosaic_via_relayout
+    if config.relayout_table is not None:
+        # storage-side fast path; None only on an explicit grid mismatch
+        from .sources.relayout import mosaic_via_relayout
 
         res = mosaic_via_relayout(
-            spark, footprints, blocks, config,
-            grid=grid, tile_row_range=tile_row_range, tile_keys=tile_keys,
-            fingerprint=footprints_fingerprint(footprints, row=row),
-            grid_hint=(
-                gridmod.grid_from_row(row, config.nullval) if grid is None else None
-            ),
+            spark, footprints, blocks, config, row, grid, tile_row_range, tile_keys
         )
         if res is not None:
             return res
@@ -541,6 +531,14 @@ def write_derived(
     if unknown:
         raise ValueError(f"unknown derived products: {sorted(unknown)}")
 
+    # the configured blocksize (MosaicResult.blocksize): row-0 tiles of a
+    # raster one tile-row tall absorb the remainder, so inferring it is a
+    # fallback for hand-built results only
+    if result.blocksize is not None:
+        bs = int(result.blocksize)
+    else:
+        bs = int(t.where(F.col("tile_row") == 0).agg(F.max("ysize")).collect()[0][0])
+
     out: dict = {}
     terr = None
     if {"terrain", "basins"} & set(products):
@@ -549,35 +547,32 @@ def write_derived(
         ).localCheckpoint(eager=False)
 
     spark = tiles.sparkSession
+    n = gridmod.stitch_partitions(spark, g, bs)
 
-    def sink(df, name, order):
-        df.repartitionByRange(*order).sortWithinPartitions(*order).write.mode(
-            "overwrite"
-        ).parquet(f"{path}/{name}")
+    def sink(df, name, rid, order):
+        # the ranges are cut on the driver (plans.grid): no sampling
+        # job, which would compute df once more before its shuffle
+        df.selectExpr("*", rid).repartition(n, "_rid").sortWithinPartitions(
+            *order
+        ).drop("_rid").write.mode("overwrite").parquet(f"{path}/{name}")
         # count from the written files — re-counting df would re-run
         # the whole derived computation
         out[name] = spark.read.parquet(f"{path}/{name}").count()
 
     key = ["band", "tile_row", "tile_col"]
+    tile_rid = gridmod.range_id(g, bs, n)
     for p in products:
         if p == "hillshade":
             sink(hillshade(tiles, xres=g.x_res, yres=g.y_res,
-                           nullval=int(g.nullval)), p, key)
+                           nullval=int(g.nullval)), p, tile_rid, key)
         elif p == "terrain":
-            sink(terr, p, key)
+            sink(terr, p, tile_rid, key)
         elif p == "basins":
-            # configured blocksize, threaded through MosaicResult: a
-            # shape inferred from row-0 tiles is wrong for rasters one
-            # tile-row tall (the absorbed remainder makes row 0 taller/
-            # shorter than the configured blocksize, silently skewing
-            # every global pixel id). Inference remains only as a
-            # fallback for hand-built results.
-            if result.blocksize is not None:
-                bs = int(result.blocksize)
-            else:
-                bs = int(t.where(F.col("tile_row") == 0)
-                         .agg(F.max("ysize")).collect()[0][0])
             edges = d8_edges(terr, g_ncols=int(g.ncols), blocksize=bs)
+            cells = g.nrows * g.ncols
             sink(flow_basins(edges).where(F.col("is_cell")).select(
-                "band", "gid", "basin", "dist"), p, ["band", "gid"])
+                "band", "gid", "basin", "dist"), p,
+                gridmod.dense_range_id(
+                    f"(CAST(band AS BIGINT) - 1) * {cells} + gid", g.n_bands * cells, n),
+                ["band", "gid"])
     return out

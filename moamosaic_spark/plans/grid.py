@@ -219,8 +219,13 @@ def range_id(
     lo, hi = (0, nb_r) if tile_row_range is None else (
         max(int(tile_row_range[0]), 0), min(int(tile_row_range[1]), nb_r))
     rows = max(1, hi - lo)
-    total = grid.n_bands * rows * nb_c
     idx = f"((CAST(band AS BIGINT) - 1) * {rows} + tile_row - {lo}) * {nb_c} + tile_col"
+    return dense_range_id(idx, grid.n_bands * rows * nb_c, n)
+
+
+def dense_range_id(idx: str, total: int, n: int) -> str:
+    """range_id's cut of any dense SQL index ``idx`` in [0, ``total``)
+    into ``n`` ranges (write_derived's basins cut their pixel ids)."""
     vals = ", ".join(map(str, range_values(n)))
     return f"element_at(array({vals}), CAST(({idx}) * {n} DIV {total} AS INT) + 1) AS _rid"
 

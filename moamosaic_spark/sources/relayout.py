@@ -42,8 +42,8 @@ from ..mosaic import (
 )
 from ..pixels import PIXEL_TYPE, ingest
 from ..plans.grid import (
-    OutputGrid, make_output_grid, make_tile_relation, overview_levels, range_id,
-    stitch_partitions,
+    OutputGrid, grid_from_row, make_output_grid, make_tile_relation, overview_levels,
+    range_id, stitch_partitions,
 )
 from ..schema import FOOTPRINTS_SCHEMA
 
@@ -164,7 +164,9 @@ def _bucket_count(
 def _write_meta(
     spark: SparkSession, table: str, grid: OutputGrid, config: MosaicConfig,
     n_buckets: int, fingerprint: str | None = None,
-) -> None:
+) -> dict:
+    """Store and return the meta: a corpus table (relayout_to_table)
+    carries its fingerprint, a stream table (ensure_relayout_table) None."""
     meta = dict(
         x_min=grid.x_min, y_max=grid.y_max, x_res=grid.x_res, y_res=grid.y_res,
         ncols=grid.ncols, nrows=grid.nrows, n_bands=grid.n_bands,
@@ -176,6 +178,7 @@ def _write_meta(
     spark.createDataFrame([(json.dumps(meta),)], "meta string").write.mode(
         "overwrite"
     ).saveAsTable(f"{table}_meta")
+    return meta
 
 
 def _table_location(spark: SparkSession, table: str) -> str | None:
@@ -247,19 +250,33 @@ def ensure_relayout_table(
     blocks: DataFrame,
     config: MosaicConfig,
     n_buckets: int | None = None,
-) -> None:
-    """Create a bucketed work table pinned to ``grid`` if it does not
-    exist yet, holding only the placeholder row of every (band, tile) —
-    the incremental mosaic appends each micro-batch's work rows into it
-    (relayout_append) and stitches touched tiles with no Exchange. The
-    schema is derived from a zero-row run of the join+clip plan over
-    ``blocks``. The bucket count defaults as in relayout_to_table.
+) -> dict:
+    """Return the meta of the stream table ``table``, first created
+    pinned to ``grid`` if it does not exist yet, holding only the
+    placeholder row of every (band, tile) — the incremental mosaic
+    (process_batch, ``config.relayout_table``) appends each micro-batch's
+    work rows into it (relayout_append) and stitches touched tiles with
+    no Exchange. The schema is derived from a zero-row run of the
+    join+clip plan over ``blocks``. The bucket count defaults as in
+    relayout_to_table.
 
     Files that survived a session restart are re-attached (_attach),
     never truncated: they are the accumulated incremental state, and
-    the seen-refs checkpoint would prevent re-appending them."""
+    the seen-refs checkpoint would prevent re-appending them. An
+    existing table that is a corpus table (relayout_to_table), of an
+    older version, or pinned to another grid or blocksize raises a
+    ValueError: the touched keys and the stitch would use other tilings."""
     if _attach(spark, table):
-        return
+        m = _load_meta(spark, table)
+        if not _current(spark.table(table), m):
+            raise ValueError(_older_version(table))
+        if (m.get("fingerprint") is not None or _grid_from_meta(m) != grid
+                or int(m["blocksize"]) != config.blocksize):
+            raise ValueError(
+                f"relayout table {table!r} is not this stream's: it holds a corpus "
+                "(relayout_to_table) or another grid or blocksize"
+            )
+        return m
     tiles = make_tile_relation(spark, grid, config.blocksize)
     no_footprints = spark.createDataFrame([], FOOTPRINTS_SCHEMA)
     _, empty = _work_relation(tiles, no_footprints, ingest(blocks).limit(0), grid, config)
@@ -267,7 +284,7 @@ def ensure_relayout_table(
     empty = _with_placeholders(empty, tiles, grid.n_bands)
     _write_bucketed(_with_range_id(empty, grid, config.blocksize, n_buckets), table,
                     n_buckets, "overwrite")
-    _write_meta(spark, table, grid, config, n_buckets)
+    return _write_meta(spark, table, grid, config, n_buckets)
 
 
 def relayout_append(
@@ -356,52 +373,59 @@ def mosaic_via_relayout(
     footprints: DataFrame,
     blocks: DataFrame,
     config: MosaicConfig,
-    fingerprint: str,
+    row,
     grid: OutputGrid | None = None,
     tile_row_range: tuple[int, int] | None = None,
     tile_keys: DataFrame | None = None,
-    grid_hint: OutputGrid | None = None,
 ) -> MosaicResult | None:
-    """do_mosaic's storage-side routing (config.relayout_table).
+    """The relayout routing of do_mosaic and resumable_mosaic
+    (config.relayout_table; ``row`` is their footprint probe,
+    mosaic._summary_row, with the fingerprint).
 
     Stitches off the bucketed table when it provably holds this exact
     corpus (footprint fingerprint + tiling geometry match); (re)builds
     the table first when it is absent or stale — that one call is
     eager, every later call is the zero-Exchange repeated-run path
-    (stitch_from_relayout). Returns None
-    when routing cannot apply (caller pinned an explicit grid the table
-    was not built for — the direct dataflow handles it; an auto-build
-    would derive its own grid and silently diverge).
-    ``fingerprint``/``grid_hint`` are pre-aggregated values from
-    do_mosaic's single footprint-summary pass (grid_hint is the grid
-    the summary DERIVED, as opposed to ``grid``, which the caller
-    PINNED)."""
+    (stitch_from_relayout); a resumable run's first batch builds the
+    whole grid's table. Returns None when routing cannot apply (caller
+    pinned an explicit ``grid`` the table was not built for — the
+    direct dataflow handles it; an auto-build would derive its own grid
+    and silently diverge). A stream table (ensure_relayout_table) raises
+    a ValueError: a rebuild would drop its accumulated rows."""
     table = config.relayout_table
+    fingerprint = footprints_fingerprint(footprints, row=row)
     try:
         attached = _attach(spark, table)
     except Exception:  # unreadable leftovers: rebuilt below
         attached = False
     if attached:
         m, src = _load_meta(spark, table), spark.table(table)
+        if m.get("fingerprint") is None:
+            raise ValueError(f"relayout table {table!r} is a stream table "
+                             "(ensure_relayout_table): a rebuild would drop its rows")
         if (
-            m.get("fingerprint") == fingerprint
+            m["fingerprint"] == fingerprint
             and int(m["blocksize"]) == config.blocksize
             and int(m.get("src_blocksize", 256)) == config.src_blocksize
             and int(m["min_overview_size"]) == config.min_overview_size
             and (grid is None or _grid_from_meta(m) == grid)
             and _current(src, m)
         ):
-            # the meta read above is the route's one read of it
             return _stitch_table(src, m, config, tile_row_range, tile_keys)
     if grid is not None:
         return None
     relayout_to_table(
         spark, footprints, blocks, table, config,
-        grid=grid_hint, fingerprint=fingerprint,
+        grid=grid_from_row(row, config.nullval), fingerprint=fingerprint,
     )
     return stitch_from_relayout(
         spark, table, config, tile_row_range=tile_row_range, tile_keys=tile_keys
     )
+
+
+def _older_version(table: str) -> str:
+    return (f"relayout table {table!r} was built by an older version (array<int> "
+            "pixels, no placeholder rows or no tile-range buckets); rebuild it")
 
 
 def stitch_from_relayout(
@@ -419,22 +443,16 @@ def stitch_from_relayout(
     ``tile_row_range=(lo, hi)`` restricts the stitch to a tile-row
     range; the predicate lands in the bucketed SCAN (PushedFilters), so
     a resumable batch off a relayout reads only its own rows AND skips
-    the shuffle — the cheapest possible re-stitch. ``tile_keys`` (small
-    DataFrame of (tile_row, tile_col)) restricts to an explicit tile
-    set via a broadcast semi-join, which preserves the bucketed
-    distribution — the incremental path's touched-tile re-stitch."""
+    the shuffle — the cheapest possible re-stitch, also for a caller
+    without the corpus at hand. ``tile_keys`` (small DataFrame of
+    (tile_row, tile_col)) restricts to an explicit tile set via a
+    broadcast semi-join, which preserves the bucketed distribution —
+    the incremental path's touched-tile re-stitch."""
     config = config or MosaicConfig()
-    from ..session import ensure_workers_can_import
-
-    ensure_workers_can_import(spark)
     src = spark.table(table)
     m = _load_meta(spark, table)
     if not _current(src, m):
-        raise ValueError(
-            f"relayout table {table!r} was built by an older version (array<int> "
-            "pixels, no placeholder rows or no tile-range buckets); rebuild it "
-            "with relayout_to_table"
-        )
+        raise ValueError(_older_version(table))
     return _stitch_table(src, m, config, tile_row_range, tile_keys)
 
 
@@ -447,6 +465,9 @@ def _stitch_table(
 ) -> MosaicResult:
     """stitch_from_relayout's plan over the table ``src`` and its
     already-read meta ``m``: no action."""
+    from ..session import ensure_workers_can_import
+
+    ensure_workers_can_import(src.sparkSession)
     grid = _grid_from_meta(m)
     levels = (
         overview_levels(grid.nrows, grid.ncols, int(m["min_overview_size"]))

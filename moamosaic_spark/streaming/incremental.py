@@ -170,20 +170,20 @@ def process_batch(
     blocks: DataFrame,
     out_path: str,
     config: MosaicConfig,
-    relayout_table: str | None = None,
     sink_table: str | None = None,
     derived_focal: bool = False,
 ) -> dict:
     """One micro-batch of the incremental mosaic (foreachBatch body).
 
-    ``relayout_table``: accumulate each batch's work rows in a bucketed
-    relayout table (sources/relayout.py) and stitch the touched tiles
-    off it with NO Exchange — the wide shuffle is paid once per NEW
-    pixel, never re-paid when later batches re-stitch a touched tile
+    ``config.relayout_table``: accumulate each batch's work rows in a
+    bucketed stream table (sources/relayout.py) and stitch the touched
+    tiles off it with NO Exchange — the wide shuffle is paid once per
+    NEW pixel, never re-paid when later batches re-stitch a touched tile
     from all sources seen so far. The table is created on first use,
-    pinned to the full-catalog grid. A crash-replayed batch re-appends
-    its rows; the stitch is idempotent under duplicate contributor rows
-    (same priority run re-pastes the same pixels)."""
+    pinned to the full-catalog grid; a table of another kind, grid or
+    blocksize raises (ensure_relayout_table). A crash-replayed batch
+    re-appends its rows; the stitch is idempotent under duplicate
+    contributor rows (same priority run re-pastes the same pixels)."""
     if derived_focal and sink_table is not None:
         # the derived product reads its inputs back from the parquet
         # tile sink, which the native Iceberg MERGE path does not
@@ -243,16 +243,14 @@ def process_batch(
         .select("tile_row", "tile_col")
         .distinct()
     )
-    if relayout_table is not None:
-        from ..sources.relayout import (
-            ensure_relayout_table, relayout_append, stitch_from_relayout,
-        )
+    table = config.relayout_table
+    if table is not None:
+        from ..sources.relayout import _stitch_table, ensure_relayout_table, relayout_append
 
-        ensure_relayout_table(spark, relayout_table, grid, blocks, config)
-        relayout_append(spark, new_fp, blocks, relayout_table, config)
-        res = stitch_from_relayout(
-            spark, relayout_table, config, tile_keys=touched
-        )
+        m = ensure_relayout_table(spark, table, grid, blocks, config)
+        relayout_append(spark, new_fp, blocks, table, config)
+        # stitch_from_relayout on the meta read above
+        res = _stitch_table(spark.table(table), m, config, None, touched)
     else:
         res = do_mosaic(spark, all_fp, blocks, config, grid=grid, tile_keys=touched)
     out_tiles = res.tiles.withColumn("part", F.pmod(F.col("tile_row"), F.lit(SINK_PARTS)))
@@ -297,7 +295,6 @@ def incremental_mosaic_stream(
     config: MosaicConfig | None = None,
     checkpoint: str | None = None,
     trigger_available_now: bool = True,
-    relayout_table: str | None = None,
     sink_table: str | None = None,
     derived_focal: bool = False,
 ):
@@ -305,12 +302,12 @@ def incremental_mosaic_stream(
 
     ``docs_stream`` is a streaming DF with the documents schema (e.g.
     ``spark.readStream.schema(DOCUMENTS_SCHEMA).parquet(dir)``).
-    ``relayout_table`` routes each batch through the bucketed work table
-    (see process_batch). ``sink_table`` names a catalog table for the
-    tile sink: with the Iceberg runtime present each batch commits via
-    MERGE INTO; absent, the parquet emulation at ``out_path`` is used
-    regardless (catalog.py capability probe). Returns the
-    StreamingQuery.
+    ``config.relayout_table`` routes each batch through a bucketed
+    stream table (see process_batch). ``sink_table`` names a catalog
+    table for the tile sink: with the Iceberg runtime present each
+    batch commits via MERGE INTO; absent, the parquet emulation at
+    ``out_path`` is used regardless (catalog.py capability probe).
+    Returns the StreamingQuery.
     """
     config = config or MosaicConfig()
     checkpoint = checkpoint or f"{out_path}/_checkpoint"
@@ -318,8 +315,7 @@ def incremental_mosaic_stream(
     def fb(batch_docs: DataFrame, batch_id: int) -> None:
         process_batch(
             batch_docs, batch_id, spark, footprint_meta, blocks, out_path, config,
-            relayout_table=relayout_table, sink_table=sink_table,
-            derived_focal=derived_focal,
+            sink_table=sink_table, derived_focal=derived_focal,
         )
 
     writer = docs_stream.writeStream.foreachBatch(fb).option(

@@ -19,6 +19,10 @@ output-side filtering would re-stitch everything every batch). Each
 batch's output lands in its own sink partition (`batch=K/`) —
 re-running a batch overwrites only that partition (dynamic partition
 overwrite), making resume idempotent.
+
+With ``MosaicConfig.relayout_table`` set, batches route as do_mosaic
+does: the first one builds the table if it is absent or stale, and each
+batch's range predicate lands in its bucketed scan (no join, no Exchange).
 """
 
 from __future__ import annotations
@@ -88,18 +92,15 @@ def resumable_mosaic(
     n_batches: int = 8,
     run_id: str | None = None,
     fail_after: int | None = None,
-    relayout_table: str | None = None,
 ) -> dict:
     """Run the mosaic in ``n_batches`` idempotent row-range batches with
     lineage checkpointing; re-invocation with the same ``out_path``
     resumes, skipping completed batches.
 
-    ``relayout_table`` (optional): stitch each batch off a bucketed
-    relayout table (sources/relayout.py) instead of the live
-    join+shuffle plan — the range predicate lands in the bucketed scan
-    and the stitch has no Exchange, making resume batches the cheapest
-    possible re-stitch. ``footprints``/``blocks`` may be None in that
-    mode; the grid comes from the relayout metadata.
+    With ``config.relayout_table`` set, each batch stitches off that
+    bucketed table (sources/relayout.py) — no join, no Exchange, the
+    cheapest possible re-stitch; the first batch to run (re)builds it
+    when it is absent or holds another corpus or tiling.
 
     ``fail_after`` (testing hook) raises after that many batches,
     simulating a killed run.
@@ -110,22 +111,14 @@ def resumable_mosaic(
     check_merge_policy(config.merge_policy)
     run_id = run_id or uuid.uuid4().hex[:12]
 
-    if relayout_table is not None:
-        from ..sources.relayout import _grid_from_meta, _load_meta
-
-        m = _load_meta(spark, relayout_table)
-        grid = _grid_from_meta(m)
-        blocksize = int(m["blocksize"])
-    else:
-        # one footprint probe: the grid and the projection agreement
-        # (batch-invariant, so the per-batch pruned plans take this row
-        # instead of re-probing)
-        row = _summary_row(footprints, with_fingerprint=config.relayout_table is not None)
-        if config.check_projections:
-            _check_projection_row(row)
-        grid = grid_from_row(row, config.nullval)
-        blocksize = config.blocksize
-    nb_r = n_blocks(grid.nrows, blocksize)
+    # one footprint probe: the grid, the projection agreement and the
+    # relayout fingerprint (batch-invariant, so the per-batch pruned
+    # plans take this row instead of re-probing)
+    row = _summary_row(footprints, with_fingerprint=config.relayout_table is not None)
+    if config.check_projections:
+        _check_projection_row(row)
+    grid = grid_from_row(row, config.nullval)
+    nb_r = n_blocks(grid.nrows, config.blocksize)
     n_batches = min(n_batches, nb_r)
 
     # A lineage row from a run with a different n_batches describes
@@ -163,17 +156,9 @@ def resumable_mosaic(
         lo = b * nb_r // n_batches
         hi = (b + 1) * nb_r // n_batches
         t0 = time.time()
-        if relayout_table is not None:
-            from ..sources.relayout import stitch_from_relayout
-
-            res = stitch_from_relayout(
-                spark, relayout_table, config, tile_row_range=(lo, hi)
-            )
-        else:
-            res = _mosaic_from_row(
-                spark, footprints, blocks, config, row, grid=grid,
-                tile_row_range=(lo, hi),
-            )
+        res = _mosaic_from_row(
+            spark, footprints, blocks, config, row, tile_row_range=(lo, hi)
+        )
         obs = Observation()
         batch_tiles = (
             res.tiles.withColumn("batch", F.lit(b))

@@ -10,7 +10,7 @@ import pytest
 from moamosaic_spark.cli import main
 from moamosaic_spark.pixels import decode
 from moamosaic_spark.sources import synth
-from tests.conftest import to_blocks, to_footprints
+from tests.conftest import fresh_table, to_blocks, to_footprints
 
 
 @pytest.fixture()
@@ -137,12 +137,34 @@ def test_cli_relayout_reuse(spark, staged):
     spark.sql(f"DROP TABLE IF EXISTS {table}_meta")
 
 
-def test_cli_relayout_batches_exclusive(staged):
-    with pytest.raises(SystemExit):
-        main([
-            "--footprints", str(staged / "fp"), "--blocks", str(staged / "blocks"),
-            "-o", str(staged / "x"), "--relayout-table", "t", "--batches", "3",
-        ])
+def test_cli_relayout_batches(spark, staged):
+    """--relayout-table with --batches: the first batched run builds the
+    table, a second leaves its files unchanged, and both outputs equal
+    the oracle. --rebuild-relayout re-materializes it on this route too."""
+    table = fresh_table(spark, "cli_relayout_batches_t")
+    base = [
+        "--footprints", str(staged / "fp"), "--blocks", str(staged / "blocks"),
+        "-b", "64", "--src-blocksize", "64", "--no-overviews",
+        "--relayout-table", table, "--batches", "3",
+    ]
+    outs = [str(staged / "out_rb1"), str(staged / "out_rb2")]
+    files = []
+    for out in outs:
+        main(base + ["-o", out])
+        files.append(sorted(spark.table(table).inputFiles()))
+    assert files[0] == files[1]  # reused, not rebuilt
+    want = synth.oracle(synth.grid3x3(150, 150), blocksize=64, min_overview_size=9999)
+    for out in outs:
+        got = {
+            (r.band, r.tile_row, r.tile_col): decode(r.pixels).reshape(r.ysize, r.xsize)
+            for r in _canvas(spark, out)
+        }
+        assert set(got) == set(want.tiles)
+        for k, arr in got.items():
+            np.testing.assert_array_equal(arr, want.tiles[k], err_msg=f"tile {k}")
+    main(base + ["--rebuild-relayout", "-o", str(staged / "out_rb3")])
+    assert sorted(spark.table(table).inputFiles()) != files[0]
+    fresh_table(spark, table)
 
 
 def test_cli_derived_products(spark, staged):

@@ -2,6 +2,8 @@
 produce the same tiles as a single batch run, with priority preserved
 across batches and idempotent re-writes."""
 
+import dataclasses
+
 import numpy as np
 
 from moamosaic_spark.mosaic import MosaicConfig
@@ -110,17 +112,17 @@ def test_incremental_over_relayout_table(spark, tmp_path):
     half = len(docs_pdf) // 2
     b0 = to_documents(spark, docs_pdf.iloc[:half])
     b1 = to_documents(spark, docs_pdf.iloc[half:])
-    r0 = process_batch(b0, 0, spark, fp_meta, blocks, out, cfg,
-                       relayout_table="work_inc")
+    r0 = process_batch(b0, 0, spark, fp_meta, blocks, out,
+                       dataclasses.replace(cfg, relayout_table="work_inc"))
     assert r0["new_refs"] > 0
-    r1 = process_batch(b1, 1, spark, fp_meta, blocks, out, cfg,
-                       relayout_table="work_inc")
+    r1 = process_batch(b1, 1, spark, fp_meta, blocks, out,
+                       dataclasses.replace(cfg, relayout_table="work_inc"))
     assert r1["new_refs"] > 0
     check_covered_tiles(spark, out, want)
 
     # duplicate delivery: state already has the refs -> no-op
-    r2 = process_batch(b1, 2, spark, fp_meta, blocks, out, cfg,
-                       relayout_table="work_inc")
+    r2 = process_batch(b1, 2, spark, fp_meta, blocks, out,
+                       dataclasses.replace(cfg, relayout_table="work_inc"))
     assert r2["new_refs"] == 0
     check_covered_tiles(spark, out, want)
 
@@ -181,7 +183,8 @@ def test_relayout_survives_catalog_restart(spark, tmp_path):
     half = len(docs_pdf) // 2
     b0 = to_documents(spark, docs_pdf.iloc[:half])
     b1 = to_documents(spark, docs_pdf.iloc[half:])
-    process_batch(b0, 0, spark, fp_meta, blocks, out, cfg, relayout_table=table)
+    process_batch(b0, 0, spark, fp_meta, blocks, out,
+                  dataclasses.replace(cfg, relayout_table=table))
 
     # simulate restart: copy warehouse dirs aside, DROP (deletes the
     # originals), restore the copies -> files exist, catalog forgot them
@@ -191,7 +194,8 @@ def test_relayout_survives_catalog_restart(spark, tmp_path):
         shutil.move(f"{wh}/{t}__saved", f"{wh}/{t}")
 
     # next batch must see batch-0's accumulated work rows
-    process_batch(b1, 1, spark, fp_meta, blocks, out, cfg, relayout_table=table)
+    process_batch(b1, 1, spark, fp_meta, blocks, out,
+                  dataclasses.replace(cfg, relayout_table=table))
     check_covered_tiles(spark, out, want)
 
 
@@ -220,7 +224,8 @@ def test_relayout_restart_with_db_qualified_table(spark, tmp_path):
     half = len(docs_pdf) // 2
     b0 = to_documents(spark, docs_pdf.iloc[:half])
     b1 = to_documents(spark, docs_pdf.iloc[half:])
-    process_batch(b0, 0, spark, fp_meta, blocks, out, cfg, relayout_table=table)
+    process_batch(b0, 0, spark, fp_meta, blocks, out,
+                  dataclasses.replace(cfg, relayout_table=table))
 
     for t in (table, f"{table}_meta"):
         tloc = _table_location(spark, t)
@@ -228,7 +233,8 @@ def test_relayout_restart_with_db_qualified_table(spark, tmp_path):
         spark.sql(f"DROP TABLE {t}")
         shutil.move(f"{tloc}__saved", tloc)
 
-    process_batch(b1, 1, spark, fp_meta, blocks, out, cfg, relayout_table=table)
+    process_batch(b1, 1, spark, fp_meta, blocks, out,
+                  dataclasses.replace(cfg, relayout_table=table))
     check_covered_tiles(spark, out, want)
     for t in (table, f"{table}_meta"):
         spark.sql(f"DROP TABLE IF EXISTS {t}")

@@ -3,6 +3,7 @@ payloads end to end — mosaic, overviews, gap tiles, salted stitch,
 relayout — with ``array<int>`` accepted only at the ingest adaptor
 (pixels.ingest), which must give byte-identical results."""
 
+import dataclasses
 import pathlib
 import re
 
@@ -197,9 +198,9 @@ def test_u2_streaming_incremental_over_relayout(spark, tmp_path):
         .parquet(str(src))
     )
     q = incremental_mosaic_stream(
-        spark, stream, fp, blocks, out, cfg,
+        spark, stream, fp, blocks, out,
+        dataclasses.replace(cfg, relayout_table="work_u2_inc"),
         checkpoint=str(tmp_path / "ck_u2_rl"),
-        relayout_table="work_u2_inc",
     )
     q.awaitTermination(300)
 

@@ -2,6 +2,8 @@
 completed batches, and the resumed output is pixel-identical to an
 uninterrupted run."""
 
+import dataclasses
+
 import numpy as np
 import pytest
 
@@ -115,13 +117,13 @@ def test_resume_from_relayout(spark, tmp_path, corpus):
     relayout_to_table(spark, fp, blocks, "work_resume", cfg, n_buckets=8)
     out = str(tmp_path / "mosaic_rl")
 
+    rl_cfg = dataclasses.replace(cfg, relayout_table="work_resume")
     with pytest.raises(RuntimeError, match="simulated failure"):
         resumable_mosaic(
-            spark, None, None, out, cfg, n_batches=4, fail_after=2,
-            relayout_table="work_resume",
+            spark, fp, blocks, out, rl_cfg, n_batches=4, fail_after=2,
         )
     r = resumable_mosaic(
-        spark, None, None, out, cfg, n_batches=4, relayout_table="work_resume"
+        spark, fp, blocks, out, rl_cfg, n_batches=4
     )
     assert r["batches_skipped"] == 2 and r["batches_run"] == 2
 
@@ -155,8 +157,9 @@ def test_batches_write_with_no_range_shuffle(spark, tmp_path, corpus, spark_jobs
     for n_batches in (1, 3):
         out = tmp_path / f"b{n_batches}"
         with spark_jobs() as n:
-            resumable_mosaic(spark, fp, blocks, str(out), cfg, n_batches=n_batches,
-                             relayout_table=table)
+            resumable_mosaic(spark, fp, blocks, str(out),
+                             dataclasses.replace(cfg, relayout_table=table),
+                             n_batches=n_batches)
         jobs[n_batches] = n[0]
         for batch in out.joinpath("tiles").glob("batch=*"):
             files = sorted(batch.glob("part-*"), key=lambda p: int(p.name.split("-")[1]))
