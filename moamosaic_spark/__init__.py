@@ -8,7 +8,7 @@ dataflow over tables:
       -> media footprints (broadcastable dim table)
       -> global extent aggregate            (ref mosaic.py:429-456)
       -> remainder-absorbing tiling          (ref mosaic.py:459-487)
-      -> cell-keyed spatial join             (ref mosaic.py:501-535)
+      -> tile-keyed spatial join             (ref mosaic.py:501-535)
       -> grouped Arrow stitch: pad + ordered last-non-null merge
          + single-pass stats partials + pyramid fragments
                                              (ref mosaic.py:227-283,663-689,

@@ -20,8 +20,7 @@ Option mapping (reference option -> here):
     --resample       -> --resample near|bilinear|average, for the warp
                         and for the --xres/--yres same-CRS rescale
     --monitorjson    -> --monitorjson
-Extras: --strategy/--cell-size-px (join physical strategy),
---merge-policy, --batches/--relayout-table (resumable batches, and the
+Extras: --merge-policy, --batches/--relayout-table (resumable batches, and the
 bucketed work table both routes stitch off),
 --derived hillshade|terrain|basins (gdaldem-style product tables).
 """
@@ -44,8 +43,6 @@ def get_parser() -> argparse.ArgumentParser:
     p.add_argument("--nullval", type=float, default=None)
     p.add_argument("--minoverviewsize", type=int, default=1024)
     p.add_argument("--no-overviews", action="store_true")
-    p.add_argument("--strategy", choices=["broadcast", "cell"], default="broadcast")
-    p.add_argument("--cell-size-px", type=int, default=4096)
     p.add_argument("--merge-policy", choices=["last", "nearest", "blend"],
                    default="last")
     p.add_argument("--blend-feather", type=int, default=64,
@@ -93,7 +90,6 @@ def main(argv: list[str] | None = None) -> None:
     mon = Monitoring()
     spark = get_spark(args.master, app_name="moamosaic-spark-cli")
     mon.set_param("blocksize", args.blocksize)
-    mon.set_param("strategy", args.strategy)
 
     with mon.ctx("read_inputs"):
         blocks = spark.read.parquet(args.blocks)
@@ -153,8 +149,6 @@ def main(argv: list[str] | None = None) -> None:
         src_blocksize=args.src_blocksize,
         min_overview_size=args.minoverviewsize,
         nullval=args.nullval,
-        strategy=args.strategy,
-        cell_size_px=args.cell_size_px,
         merge_policy=args.merge_policy,
         blend_feather=args.blend_feather,
         with_overviews=not args.no_overviews,

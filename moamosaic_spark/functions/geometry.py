@@ -175,9 +175,7 @@ def rasterize_polygons(
     import numpy as np
     import pandas as pd
 
-    from ..plans.grid import make_tile_relation
-
-    from ..plans.grid import n_blocks
+    from ..plans.grid import explode_tile_cover, make_tile_relation
 
     tiles = make_tile_relation(spark, grid, blocksize)
     poly = F.col(poly_col)
@@ -186,43 +184,20 @@ def rasterize_polygons(
     tile_w = float(grid.x_res) * blocksize
     tile_h = float(grid.y_res) * blocksize
     x_min, y_max = float(grid.x_min), float(grid.y_max)
-    # clamp BOTH ends of the cover ranges into the real tile-id space:
-    # the last tile absorbs sub-blocksize remainders (n_blocks), so a
-    # raw floor(extent / blocksize) can name a nonexistent tile id and
-    # silently drop a polygon lying in the absorbed strip; and an
-    # out-of-grid polygon would otherwise make sequence() DESCEND and
-    # explode junk covers (worst case millions of rows for a
-    # mis-projected input). Clamped, an out-of-grid polygon costs one
-    # edge-tile cover row that the exact residual below rejects.
-    max_r, max_c = n_blocks(grid.nrows, blocksize) - 1, n_blocks(grid.ncols, blocksize) - 1
-
-    def _clamp(c, hi):
-        return F.least(F.greatest(c, F.lit(0)), F.lit(hi))
-
-    covers = (
+    # the bounding box's first and last tile; explode_tile_cover clamps
+    # them into the real tile-id space
+    covers = explode_tile_cover(
         polys.select(
             poly.alias("_poly"),
             F.col(value_col).cast("int").alias("_value"),
             F.col(priority_col).cast("int").alias("_prio"),
-            _clamp(F.floor((F.array_min(xs) - x_min) / tile_w).cast("int"),
-                   max_c).alias("_c0"),
-            _clamp(F.floor((F.array_max(xs) - x_min) / tile_w).cast("int"),
-                   max_c).alias("_c1"),
-            _clamp(F.floor((y_max - F.array_max(ys)) / tile_h).cast("int"),
-                   max_r).alias("_r0"),
-            _clamp(F.floor((y_max - F.array_min(ys)) / tile_h).cast("int"),
-                   max_r).alias("_r1"),
-        )
-        .select(
-            "_poly", "_value", "_prio",
-            F.explode(F.sequence(F.col("_r0"), F.col("_r1"))).alias("tile_row"),
-            F.col("_c0"), F.col("_c1"),
-        )
-        .select(
-            "_poly", "_value", "_prio", "tile_row",
-            F.explode(F.sequence(F.col("_c0"), F.col("_c1"))).alias("tile_col"),
-        )
-    )
+            F.floor((F.array_min(xs) - x_min) / tile_w).cast("int").alias("_c0"),
+            F.floor((F.array_max(xs) - x_min) / tile_w).cast("int").alias("_c1"),
+            F.floor((y_max - F.array_max(ys)) / tile_h).cast("int").alias("_r0"),
+            F.floor((y_max - F.array_min(ys)) / tile_h).cast("int").alias("_r1"),
+        ),
+        grid, blocksize, "_r0", "_r1", "_c0", "_c1",
+    ).drop("_r0", "_r1", "_c0", "_c1")
     cand = covers.join(tiles, on=["tile_row", "tile_col"], how="inner")
     tx_lo = x_min + F.col("left") * grid.x_res
     tx_hi = x_min + (F.col("left") + F.col("xsize")) * grid.x_res

@@ -2,7 +2,7 @@
 contain them (point ∈ [start, end)), per key.
 
 Spark plans a raw inequality join as BroadcastNestedLoopJoin (or worse);
-this is the 1-D analog of the engine's cell-keyed spatial join: every
+this is the 1-D analog of the engine's tile-keyed spatial join: every
 interval explodes to the time buckets it overlaps, every point keys the
 ONE bucket containing it, the join is an equi-join on (key, bucket)
 with the exact containment predicate as residual. A (point, interval)

@@ -10,7 +10,8 @@ Reference phases -> Spark stages:
   analysis (grid/tiles/join/worklist)  -> Catalyst logical plan, written
                                           as SQL strings the JVM parses
                                           once per relation: tile relation
-                                          + cell-keyed/broadcast spatial join
+                                          + tile-keyed spatial join (footprint
+                                          tile covers ⋈ tiles)
   domosaic (threads + queue + cache)   -> ONE shuffle (a partition per
                                           core, each a contiguous tile
                                           range: plans.grid.range_id) into
@@ -38,7 +39,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .plans import grid as gridmod
 from .plans.grid import OutputGrid, make_tile_relation, overview_levels
-from .plans.spatial_join import assign_inputs
+from .plans.spatial_join import assign_inputs, check_strategy
 from .operators.stitch import check_merge_policy, make_stitch_kernel
 from .operators.stats import finalize_stats
 from .monitoring import named_action
@@ -57,6 +58,7 @@ class MosaicConfig:
     src_blocksize: int = 256           # chunk size of the blocks fact table
     min_overview_size: int = 1024
     nullval: float | None = None       # default: from priority-0 input
+    # accepted for old callers; the one spatial join ignores both
     strategy: str = "broadcast"        # 'broadcast' | 'cell'
     cell_size_px: int = 4096
     check_projections: bool = True
@@ -78,6 +80,9 @@ class MosaicConfig:
     # bucket count of a table built by that routing; None -> one per
     # core, sized like the direct stitch (plans.grid.stitch_partitions)
     relayout_buckets: int | None = None
+
+    def __post_init__(self):
+        check_strategy(self.strategy)
 
 
 @dataclass
@@ -166,7 +171,8 @@ def validate_blocks(footprints: DataFrame, blocks: DataFrame) -> None:
         on=["media_ref", "band"],
         how="left_anti",
     )
-    got = missing.limit(5).collect()
+    with named_action(footprints.sparkSession, "moamosaic: block integrity check"):
+        got = missing.limit(5).collect()
     if got:
         refs = ", ".join(f"{r.media_ref}/b{r.band}" for r in got)
         raise ValueError(f"blocks table missing pixel data for: {refs} ...")
@@ -272,19 +278,6 @@ def _restrict_tiles(
     return df
 
 
-def _assign(
-    tiles: DataFrame, footprints: DataFrame, grid: OutputGrid, config: MosaicConfig
-) -> DataFrame:
-    """The spatial join under ``config.strategy``; only the 'cell'
-    strategy takes the cell size and tile size."""
-    kw = (
-        {"cell_size_px": config.cell_size_px, "blocksize": config.blocksize}
-        if config.strategy == "cell"
-        else {}
-    )
-    return assign_inputs(tiles, footprints, grid, strategy=config.strategy, **kw)
-
-
 def _work_relation(
     tiles: DataFrame,
     footprints: DataFrame,
@@ -293,8 +286,8 @@ def _work_relation(
     config: MosaicConfig,
 ) -> tuple[DataFrame, DataFrame]:
     """(assignments, work) of every route: tiles -> spatial join
-    (_assign) -> contributor chunks."""
-    assignments = _assign(tiles, footprints, grid, config)
+    (assign_inputs) -> contributor chunks."""
+    assignments = assign_inputs(tiles, footprints, grid, blocksize=config.blocksize)
     return assignments, _contributor_chunks(assignments, blocks, config.src_blocksize)
 
 
@@ -537,7 +530,8 @@ def write_derived(
     if result.blocksize is not None:
         bs = int(result.blocksize)
     else:
-        bs = int(t.where(F.col("tile_row") == 0).agg(F.max("ysize")).collect()[0][0])
+        with named_action(t.sparkSession, "moamosaic: derived blocksize probe"):
+            bs = int(t.where(F.col("tile_row") == 0).agg(F.max("ysize")).collect()[0][0])
 
     out: dict = {}
     terr = None
@@ -557,7 +551,8 @@ def write_derived(
         ).drop("_rid").write.mode("overwrite").parquet(f"{path}/{name}")
         # count from the written files — re-counting df would re-run
         # the whole derived computation
-        out[name] = spark.read.parquet(f"{path}/{name}").count()
+        with named_action(spark, f"moamosaic: derived count {name}"):
+            out[name] = spark.read.parquet(f"{path}/{name}").count()
 
     key = ["band", "tile_row", "tile_col"]
     tile_rid = gridmod.range_id(g, bs, n)

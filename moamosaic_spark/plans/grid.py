@@ -7,9 +7,11 @@ Replicates, as declarative Spark relations:
 * block decomposition (tiling) — ref mosaic.py:459-487 (the ``blocksize//4``
   remainder-absorption rule is replicated exactly; see :func:`n_blocks`)
 * overview-level plan          — ref mosaic.py:646-658
-* cell index                   — S2/H3-style space-filling-curve ids used as
-  the shuffle key of the spatial join (Morton/Z-order interleave; the
-  reference has no such index — its join is a nested loop, mosaic.py:501-535)
+* tile cover                   — a shape exploded to the (tile_row,
+  tile_col) keys its bounds cover, the equi-join key of the spatial join
+  and of the rasterize burn (the reference's join is a nested loop,
+  mosaic.py:501-535)
+* cell index                   — S2/H3-style Morton/Z-order cell ids
 
 Everything here is pure column arithmetic — no UDFs, fully
 whole-stage-codegen'd, and the tile relation is generated distributed via
@@ -274,6 +276,37 @@ def make_tile_relation(
         f"ELSE {grid.nrows - (nb_r - 1) * bs} END AS INT) AS ysize",
         f"CAST(CASE WHEN tile_col < {nb_c - 1} THEN {bs} "
         f"ELSE {grid.ncols - (nb_c - 1) * bs} END AS INT) AS xsize",
+    )
+
+
+def explode_tile_cover(
+    df: DataFrame,
+    grid: OutputGrid,
+    blocksize: int,
+    first_row: str,
+    last_row: str,
+    first_col: str,
+    last_col: str,
+) -> DataFrame:
+    """Each row of ``df`` once per tile of its cover: the inclusive tile
+    index ranges [first_row, last_row] x [first_col, last_col] (SQL
+    expressions over ``df``'s columns), as the INT ``tile_row`` and
+    ``tile_col`` keys of the tile relation (make_tile_relation).
+
+    Both ends are clamped into the real tile-id space: the last tile
+    absorbs sub-blocksize remainders (n_blocks), so a raw index past it
+    would drop a shape in the absorbed strip; and a shape outside the
+    grid would make ``sequence()`` descend and explode junk covers
+    (millions of rows for a mis-projected input). Clamped, it costs one
+    edge-tile row that the caller's exact residual rejects."""
+    def cover(first: str, last: str, n: int) -> str:
+        ends = (f"CAST(least(greatest({e}, 0), {n - 1}) AS INT)" for e in (first, last))
+        return f"explode(sequence({', '.join(ends)}))"
+
+    return df.selectExpr(
+        "*", f"{cover(first_row, last_row, n_blocks(grid.nrows, blocksize))} AS tile_row"
+    ).selectExpr(
+        "*", f"{cover(first_col, last_col, n_blocks(grid.ncols, blocksize))} AS tile_col"
     )
 
 

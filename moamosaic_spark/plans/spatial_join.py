@@ -5,22 +5,20 @@ block's bounds in the file's pixel coordinates (affine forward + inverse,
 int(round(...)) with banker's rounding — structures.py:72-99) and keeps
 pairs passing the open-interval box-intersection test
 (mosaic.py:519-520). Its implementation is a driver-side O(blocks×files)
-nested loop; here it is a declarative Spark join with two physical
-strategies producing identical rows:
+nested loop; here it is one declarative Spark equi-join:
 
-* ``broadcast`` — footprints broadcast to every executor; Catalyst plans a
-  BroadcastNestedLoopJoin over the residual predicate. Right whenever the
-  footprint dim table fits in memory (the common mosaic case).
-* ``cell`` — both sides are assigned S2/H3-style Z-order cell ids
-  (plans/grid.py) of a fixed cell grid; the join is a shuffled **equi-join
-  on cell_id** with the exact box predicate as residual; each (tile,
-  media_ref) pair comes out once. This is the 10^12-document scale path: shuffle
-  volume is O(tiles + footprint-cell covers), never O(tiles × files).
-  A hot cell (many overlapping footprints) is not split here: its cost
-  is its output rows, and those land in (band, tile) groups the stitch
-  folds one Arrow batch at a time (operators/stitch.py). Salting the cell keys
-  only replicated the covers and shuffled every output row once more:
-  4x slower on 20k footprints stacked in one cell (PLANS.md).
+* each footprint explodes to the output tiles (tile_row, tile_col) its
+  pixel extent covers — a superset of the pairs the box test keeps, the
+  tile-aligned layout of *Raptor* (VLDB 2019);
+* that cover hash-joins the tile relation on (tile_row, tile_col), with
+  the exact box predicate as residual. Each (tile, media_ref) pair comes
+  out once.
+
+Work is O(tiles + footprint-tile covers), never O(tiles × files), and a
+restricted tile relation (a row range, a touched-tile key set) restricts
+the join. A hot tile (many overlapping footprints) is not split here:
+its cost is its output rows, and those land in (band, tile) groups the
+stitch folds one Arrow batch at a time (operators/stitch.py).
 
 Output columns:
     tile_row, tile_col, top, left, ysize, xsize   — the output tile
@@ -33,7 +31,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from .grid import OutputGrid, morton_expr, sql_double
+from .grid import OutputGrid, explode_tile_cover, morton_expr, sql_double
 
 
 def _file_coords(grid: OutputGrid, fp_prefix: str = "f.") -> dict[str, str]:
@@ -84,23 +82,15 @@ def _select_assignment(joined: DataFrame, grid: OutputGrid) -> DataFrame:
     )
 
 
-def assign_inputs_broadcast(
-    tiles: DataFrame, footprints: DataFrame, grid: OutputGrid
-) -> DataFrame:
-    """Broadcast strategy: footprints to every executor, residual-only join."""
-    joined = tiles.crossJoin(F.broadcast(footprints.alias("f")))
-    return _select_assignment(joined, grid)
-
-
 def _footprint_cell_covers(
     footprints: DataFrame, grid: OutputGrid, cell_size: float, pad: float
 ) -> DataFrame:
-    """Explode each footprint to the set of cells its (padded) bounds cover.
+    """Explode each footprint to the set of Z-order cells its (padded)
+    bounds cover — the cell index of the ``cell_covers`` query.
 
     Cell grid is anchored at the output grid's top-left corner; cell
     coords -> Z-order cell_id via plans.grid.morton_expr. ``pad`` (world
-    units) widens the cover so that any tile whose key cell merely touches
-    the footprint is still matched by the equi-join.
+    units) widens the cover on every side.
     """
     x_lo = F.col("x0") - F.lit(pad) - F.lit(grid.x_min)
     x_hi = F.col("x0") + F.col("ncols") * F.col("x_res") + F.lit(pad) - F.lit(grid.x_min)
@@ -128,46 +118,29 @@ def _footprint_cell_covers(
     )
 
 
-def assign_inputs_cell(
-    tiles: DataFrame,
-    footprints: DataFrame,
-    grid: OutputGrid,
-    cell_size_px: int = 4096,
-    blocksize: int | None = None,
+def _footprint_tile_covers(
+    footprints: DataFrame, grid: OutputGrid, blocksize: int
 ) -> DataFrame:
-    """Cell-keyed scale strategy.
+    """Explode each footprint to the output tiles its half-open pixel
+    extent covers: output columns [floor((x0 - x_min) / x_res),
+    ceil((x0 + ncols * f.x_res - x_min) / x_res)), likewise rows, cut
+    into tile indices (clamped by plans.grid.explode_tile_cover).
 
-    Each tile lands in exactly ONE cell (cells are sized >= the max tile
-    size, so we key a tile by the cell containing its top-left corner and
-    explode footprints by one extra cell of margin — every
-    tile/footprint intersection shares the tile's key cell). Equi-join on
-    cell_id, exact box predicate as residual. ``sequence()`` emits each
-    covered cell once per footprint and a tile keys one cell, so every
-    (tile, footprint) pair comes out once.
-    """
-    cell_size = cell_size_px * grid.x_res
-    t = tiles.withColumn(
-        "cell_id",
-        morton_expr(
-            F.floor(F.col("left") * F.lit(grid.x_res) / F.lit(cell_size)).cast("long"),
-            F.floor(F.col("top") * F.lit(grid.y_res) / F.lit(cell_size)).cast("long"),
-        ),
+    A superset of the residual's hits: ``_select_assignment`` keeps a
+    pair only if the tile overlaps the footprint by more than half a
+    source pixel on both axes."""
+    x_min, x_res = sql_double(grid.x_min), sql_double(grid.x_res)
+    y_max, y_res = sql_double(grid.y_max), sql_double(grid.y_res)
+    px0 = f"floor((x0 - {x_min}) / {x_res})"
+    px1 = f"ceil((x0 + ncols * x_res - {x_min}) / {x_res})"
+    py0 = f"floor(({y_max} - y0) / {y_res})"
+    py1 = f"ceil(({y_max} - y0 + nrows * y_res) / {y_res})"
+    bs = int(blocksize)
+    return explode_tile_cover(
+        footprints, grid, bs,
+        f"floor({py0} / {bs})", f"floor(({py1} - 1) / {bs})",
+        f"floor({px0} / {bs})", f"floor(({px1} - 1) / {bs})",
     )
-    # Margin: a tile's far corner extends at most (max tile extent) past
-    # its key-cell anchor (the tile's top-left), so padding footprint
-    # covers by exactly that + rounding slop guarantees every
-    # intersecting tile's key cell is covered. The max tile extent under
-    # the remainder-absorbing rule is blocksize + blocksize//4 - 1
-    # (grid.py:n_blocks). A loose pad costs join-candidate blowup
-    # (candidates scale with pad^2), so keep it tight.
-    if blocksize is not None:
-        pad_px = blocksize + blocksize // 4 + 2
-    else:
-        pad_px = cell_size_px  # conservative when tile size unknown
-    pad = pad_px * grid.x_res
-    fp = _footprint_cell_covers(footprints, grid, cell_size, pad)
-    joined = t.join(fp.alias("f"), on="cell_id", how="inner")
-    return _select_assignment(joined, grid)
 
 
 def filter_by_polygons(
@@ -196,20 +169,39 @@ def filter_by_polygons(
     return a.where(keep).drop("poly")
 
 
+STRATEGIES = ("broadcast", "cell")
+
+
+def check_strategy(strategy: str) -> None:
+    """Raise ValueError on a join strategy name that was never accepted.
+    Every accepted name plans the same one join."""
+    if strategy not in STRATEGIES:
+        raise ValueError(f"unknown join strategy: {strategy}")
+
+
 def assign_inputs(
     tiles: DataFrame,
     footprints: DataFrame,
     grid: OutputGrid,
     strategy: str = "broadcast",
     polygons: DataFrame | None = None,
-    **kw,
+    *,
+    blocksize: int,
+    cell_size_px: int | None = None,
 ) -> DataFrame:
-    if strategy == "broadcast":
-        out = assign_inputs_broadcast(tiles, footprints, grid)
-    elif strategy == "cell":
-        out = assign_inputs_cell(tiles, footprints, grid, **kw)
-    else:
-        raise ValueError(f"unknown join strategy: {strategy}")
+    """J1: the (tile, footprint) pairs of ``tiles`` (a tile relation of
+    ``grid`` at ``blocksize``, possibly restricted) that the reference's
+    nested loop keeps, with the tile's bounds in source pixels.
+
+    Footprints explode to the tiles they cover (_footprint_tile_covers)
+    and equi-join ``tiles`` on (tile_row, tile_col); the exact box
+    predicate is the residual. ``strategy`` and ``cell_size_px`` are
+    accepted for old callers and select nothing."""
+    check_strategy(strategy)
+    covers = _footprint_tile_covers(footprints, grid, blocksize)
+    out = _select_assignment(
+        tiles.join(covers.alias("f"), on=["tile_row", "tile_col"]), grid
+    )
     if polygons is not None:
         out = filter_by_polygons(out, polygons, grid)
     return out

@@ -295,12 +295,13 @@ def relayout_append(
     config: MosaicConfig | None = None,
 ) -> None:
     """Append the work rows of NEW footprints into an existing bucketed
-    relayout table (same grid, tiling and bucket spec — from the table
-    meta, which fixes each row's ``_rid``; ``config`` supplies the join
-    strategy). Replaying an append after a crash duplicates rows; the
-    stitch folds a chunk once per (priority, b_top, b_left), so every
-    merge policy is idempotent under duplicates and resume semantics
-    hold — compact by re-running relayout_to_table when growth matters."""
+    relayout table (same grid, tiling, chunk size and bucket spec — from
+    the table meta, which fixes each row's ``_rid`` and overrides
+    ``config``'s blocksize and src_blocksize). Replaying an append
+    after a crash duplicates rows; the stitch folds a chunk once per
+    (priority, b_top, b_left), so every merge policy is idempotent under
+    duplicates and resume semantics hold — compact by re-running
+    relayout_to_table when growth matters."""
     m = _load_meta(spark, table)
     grid = _grid_from_meta(m)
     config = dataclasses.replace(

@@ -34,7 +34,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..mosaic import MosaicConfig, _assign, do_mosaic
+from ..mosaic import MosaicConfig, do_mosaic
+from ..plans.spatial_join import assign_inputs
 from ..sources.docs import dense_global_rank, media_first_seen
 from .lineage import read_parquet_if_exists as _read_parquet_if_exists
 
@@ -239,7 +240,7 @@ def process_batch(
     # tile relation is pruned BELOW the stitch kernel.
     tiles_rel = make_tile_relation(spark, grid, config.blocksize)
     touched = (
-        _assign(tiles_rel, new_fp, grid, config)
+        assign_inputs(tiles_rel, new_fp, grid, blocksize=config.blocksize)
         .select("tile_row", "tile_col")
         .distinct()
     )

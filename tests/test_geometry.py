@@ -172,11 +172,11 @@ def test_polygon_clipped_assignment(spark):
 
     base = {
         (r.tile_row, r.tile_col)
-        for r in assign_inputs(tiles, fp, grid).collect()
+        for r in assign_inputs(tiles, fp, grid, blocksize=32).collect()
     }
     clipped = {
         (r.tile_row, r.tile_col)
-        for r in assign_inputs(tiles, fp, grid, polygons=polys).collect()
+        for r in assign_inputs(tiles, fp, grid, polygons=polys, blocksize=32).collect()
     }
     assert clipped < base, "octagon must drop some bbox-only tiles"
 

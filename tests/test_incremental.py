@@ -79,9 +79,9 @@ def test_streaming_wrapper(spark, tmp_path):
 
 
 def test_two_batches_cell_strategy(spark, tmp_path):
-    """Incremental micro-batches under the cell-keyed join strategy
-    (the touched-tile join and the pruned full run both route through
-    assign_inputs_cell)."""
+    """Incremental micro-batches with the accepted ``strategy="cell"``
+    config: it plans the one spatial join (the touched-tile join and the
+    pruned full run), with the same tiles."""
     rasters, fp_meta, blocks, docs_pdf, want, cfg = make_corpus(spark)
     import dataclasses
 

@@ -1,7 +1,7 @@
 """End-to-end mosaic: per-pixel equality vs the independent numpy oracle
 (the Spark port of the reference's Fulltest.test_sameProjection,
-tests.py:69-106), plus stats, pyramid, gap-fill, multi-band, and both
-join strategies."""
+tests.py:69-106), plus stats, pyramid, gap-fill, multi-band, and every
+accepted join strategy value (all plan the one spatial join)."""
 
 import numpy as np
 import pytest
@@ -153,9 +153,10 @@ def test_remainder_tiling_edge(spark):
 
 
 def test_hot_cell_salted(spark):
-    """Twelve stacked inputs in one join cell through the cell join. The
-    join has no salt: a hot cell's cost is its output rows, which the
-    stitch folds one Arrow batch at a time (test_salted_stitch.py)."""
+    """Twelve inputs stacked on the same tiles, with the accepted
+    ``strategy="cell"`` config. The join has no salt: a hot tile's cost
+    is its output rows, which the stitch folds one Arrow batch at a time
+    (test_salted_stitch.py)."""
     want, got = run_case(spark, synth.hot_cell(12), strategy="cell", cell_size_px=256)
     check_tiles_equal(want, got)
     check_stats_equal(want, got)

@@ -137,7 +137,7 @@ def test_u2_halves_shuffle_payload_bytes(spark):
         fp, bl = _fp_blocks(spark, rasters, as_array=as_array)
         grid = make_output_grid(fp, None)
         tiles = make_tile_relation(spark, grid, 64)
-        asg = assign_inputs(tiles, fp, grid, strategy="broadcast")
+        asg = assign_inputs(tiles, fp, grid, strategy="broadcast", blocksize=64)
         work = _contributor_chunks(asg, ingest(bl), 256)
         r = work.agg(
             F.sum(pixel_count(F.col("pixels"))).alias("n_px"),

@@ -43,7 +43,7 @@ def test_chunk_clip_access_pattern_invariants(spark):
 
     grid = make_output_grid(fp, None)
     tiles = make_tile_relation(spark, grid, 96)
-    assignments = assign_inputs(tiles, fp, grid, strategy="broadcast")
+    assignments = assign_inputs(tiles, fp, grid, strategy="broadcast", blocksize=96)
     work = _contributor_chunks(assignments, blocks, 64)
 
     rows = work.select(

@@ -460,25 +460,26 @@ def test_table_form_equals_spark_output(spark):
     ) == PythonEvalType.SQL_GROUPED_MAP_ARROW_ITER_UDF
 
 
+def _executions(spark):
+    """The SQL executions in the status store, once the bus is drained."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    return [execs.apply(i) for i in range(execs.size())]
+
+
+def last_id(spark):
+    return max((e.executionId() for e in _executions(spark)), default=-1)
+
+
+def descriptions_after(spark, last):
+    return [e.description() for e in _executions(spark) if e.executionId() > last]
+
+
 def test_driver_actions_are_named(spark):
     """Every driver action of a lazy do_mosaic carries a job description
     — the footprint probe, the relayout meta read — and the caller's own
     description is restored afterwards. A tiny byte budget adds no
     action."""
-    store = spark._jsparkSession.sharedState().statusStore()
-    bus = spark.sparkContext._jsc.sc().listenerBus()
-
-    def descriptions_after(last):
-        bus.waitUntilEmpty()
-        execs = store.executionsList()
-        got = [execs.apply(i) for i in range(execs.size())]
-        return [e.description() for e in got if e.executionId() > last]
-
-    def last_id():
-        bus.waitUntilEmpty()
-        execs = store.executionsList()
-        return execs.last().executionId() if execs.nonEmpty() else -1
-
     rasters = synth.hot_cell(20, 128, 128)
     fp, blocks = corpus(spark, rasters)
     table = fresh_table(spark, "work_named")
@@ -490,15 +491,43 @@ def test_driver_actions_are_named(spark):
     sc.setJobDescription("caller span")
     try:
         with advisory(spark, 5 * WINDOW):
-            before = last_id()
+            before = last_id(spark)
             do_mosaic(spark, fp, blocks, cfg)
-            direct = descriptions_after(before)
-            before = last_id()
+            direct = descriptions_after(spark, before)
+            before = last_id(spark)
             do_mosaic(spark, fp, blocks, relayout_cfg)
-            relayout = descriptions_after(before)
+            relayout = descriptions_after(spark, before)
         assert sc.getLocalProperty("spark.job.description") == "caller span"
     finally:
         sc.setLocalProperty("spark.job.description", None)
     assert direct == ["moamosaic: footprint probe"]
     assert relayout == ["moamosaic: footprint probe", f"moamosaic: relayout meta {table}"]
     fresh_table(spark, table)
+
+
+def test_mosaic_module_actions_are_named(spark, tmp_path):
+    """The block integrity check of a ``check_blocks=True`` run, and
+    write_derived's blocksize fallback and per-product counts, carry
+    their job descriptions."""
+    import dataclasses
+
+    from moamosaic_spark.mosaic import write_derived
+
+    rasters = synth.grid3x3(96, 96)
+    fp, blocks = corpus(spark, rasters)
+    cfg = MosaicConfig(blocksize=64, src_blocksize=256, with_overviews=False,
+                       check_blocks=True)
+    before = last_id(spark)
+    res = do_mosaic(spark, fp, blocks, cfg)
+    assert descriptions_after(spark, before) == [
+        "moamosaic: footprint probe", "moamosaic: block integrity check",
+    ]
+    hand_built = dataclasses.replace(res, blocksize=None)
+    before = last_id(spark)
+    write_derived(hand_built, str(tmp_path / "derived"), ["hillshade", "terrain"])
+    named = [d for d in descriptions_after(spark, before) if d.startswith("moamosaic:")]
+    assert named == [
+        "moamosaic: derived blocksize probe",
+        "moamosaic: derived count hillshade",
+        "moamosaic: derived count terrain",
+    ]

@@ -1,9 +1,11 @@
 """The public surface, pinned: MosaicConfig's fields and the CLI's
 flags. A removed knob must not come back unnoticed (the hot-tile split
-is chosen from measured bytes, not from a ``stitch_salt``; the cell
-join has no ``salt``; the incremental sink's partition count is the
-constant ``streaming.incremental.SINK_PARTS``), and a new one must be
-added here on purpose."""
+is chosen from measured bytes, not from a ``stitch_salt``; the join
+has no ``salt`` and no ``--strategy``/``--cell-size-px`` flags, as one
+spatial join is planned whatever ``MosaicConfig.strategy`` says; the
+incremental sink's partition count is the constant
+``streaming.incremental.SINK_PARTS``), and a new one must be added
+here on purpose."""
 
 import dataclasses
 
@@ -19,7 +21,7 @@ CONFIG_FIELDS = [
 CLI_FLAGS = {
     "-h", "--help", "--docs", "--footprints", "--blocks", "-o", "--out",
     "-b", "--blocksize", "--src-blocksize", "--nullval", "--minoverviewsize",
-    "--no-overviews", "--strategy", "--cell-size-px", "--merge-policy",
+    "--no-overviews", "--merge-policy",
     "--blend-feather", "--batches", "--relayout-table", "--rebuild-relayout",
     "--out-epsg", "--xres", "--yres", "--resample", "--derived", "--monitorjson",
     "--master",
@@ -35,5 +37,5 @@ def test_mosaic_config_fields():
 
 def test_cli_flags():
     flags = {o for a in get_parser()._actions for o in a.option_strings}
-    assert not {"--stitch-salt", "--salt"} & flags
+    assert not {"--stitch-salt", "--salt", "--strategy", "--cell-size-px"} & flags
     assert flags == CLI_FLAGS
